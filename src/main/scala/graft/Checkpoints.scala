@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Lineage cuts for iterative operators ([[graft.ops.Graph.pageRank]],
   * [[graft.llm.Dedup.connectedComponents]]), conf-gated between the
@@ -38,63 +38,6 @@ object Checkpoints {
     * `localCheckpoint(eager)`. Lazy cuts (`eager = false`) still keep
     * the plan tree one-round deep; materialization happens at the
     * caller's next action in either mode. */
-  /** Operators that iterate in a cloned `newSession()` (private
-    * SQLConf for shuffle-parallelism sizing) must carry the caller's
-    * checkpoint choice into the clone — `newSession` starts from
-    * context defaults, not the parent's runtime conf. */
-  def propagate(from: org.apache.spark.sql.SparkSession,
-      to: org.apache.spark.sql.SparkSession): Unit = {
-    to.conf.set(ReliableKey, from.conf.get(ReliableKey, "false"))
-    from.conf.getOption(DirKey).foreach(to.conf.set(DirKey, _))
-    // the staging-base override must ride along too: the local-mode
-    // checkpoint fallback (and any staged store touched from inside
-    // the clone) resolves Staging.dir against the CLONE's conf
-    from.conf.getOption("spark.graft.staging.dir")
-      .foreach(to.conf.set("spark.graft.staging.dir", _))
-  }
-
-  /** Cloned-session scope for BOUNDED-SLICE pin queries (the
-    * `*_exact` DuckDB pins): their working set is a constant by
-    * construction (a literal `id < N` slice plus a fixed plant set —
-    * it never grows with the corpus), yet under the session default
-    * every one of their ~dozens of AQE stage-jobs schedules
-    * `spark.sql.shuffle.partitions` (= cpu count on the harness)
-    * tasks over a few thousand rows — pure task-dispatch overhead
-    * that GROWS with core count (the round-17 scaling block measured
-    * q_dedup_banded_exact 3× SLOWER at 32 cores than at 8). The same
-    * device the iterative operators use ([[graft.llm.Dedup
-    * .connectedComponents]], [[graft.ops.Graph]]): a cloned session
-    * (same SparkContext, private SQLConf) with parallelism sized to
-    * the DATA — a bounded slice is one/few partitions at any corpus
-    * scale, which is exactly what AQE would coalesce to by size —
-    * and the result rebound to the caller's session on the way out
-    * (row order preserved: createDataFrame over the computed RDD
-    * keeps partition order, so a sorted pin output stays sorted). */
-  object BoundedPin {
-    def apply(origin: org.apache.spark.sql.SparkSession, partitions: Int = 4)(
-        body: org.apache.spark.sql.SparkSession => DataFrame): DataFrame = {
-      val clone = origin.newSession()
-      Checkpoints.propagate(origin, clone)
-      clone.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-      val out = body(clone)
-      origin.createDataFrame(out.rdd, out.schema)
-    }
-
-    /** Ferry a (small, origin-planned) frame into the pin session with
-      * its lineage cut: the slice derivation runs ONCE at the caller's
-      * full scan parallelism; everything downstream plans in the
-      * clone. The ferried RDD is coalesced to the pin parallelism —
-      * a bounded slice left at scan partitioning would otherwise leak
-      * core-count-scaled task counts into every downstream stage (a
-      * ferried frame also loses size statistics, so an inequality
-      * self-join over it plans as a CartesianProduct whose task count
-      * is the PRODUCT of the input partition counts). */
-    def ferry(clone: org.apache.spark.sql.SparkSession, df: DataFrame): DataFrame = {
-      val par = clone.conf.get("spark.sql.shuffle.partitions").toInt
-      Checkpoints.cut(clone.createDataFrame(df.rdd.coalesce(par), df.schema))
-    }
-  }
-
   def cut(df: DataFrame, eager: Boolean = true): DataFrame =
     if (reliable(df)) {
       val s = df.sparkSession
@@ -120,4 +63,90 @@ object Checkpoints {
       }
       df.checkpoint(eager)
     } else df.localCheckpoint(eager)
+
+  /** The one rebind: `df`'s computed rows as a frame bound to `to`.
+    * Row order within and across partitions is kept, so a sorted
+    * result stays sorted. */
+  def rebind(to: SparkSession, df: DataFrame): DataFrame =
+    to.createDataFrame(df.rdd, df.schema)
+
+  /** Cloned-session scope: the one implementation of "clone the
+    * session, carry conf, size parallelism, rebind in and out" for
+    * every iterative, streaming and bounded-slice operator.
+    *
+    * Why a clone: these operators run many small jobs (fixpoint
+    * rounds, micro-batches, Lloyd's steps, a bounded pin's stages)
+    * over frames far smaller than the corpus. Under the session
+    * default every such job schedules `spark.sql.shuffle.partitions`
+    * (= the cpu count on the harness) tasks over a few thousand rows:
+    * pure task-dispatch overhead that GROWS with core count (rounds
+    * measured ~40% of connectedComponents' wall, and the round-17
+    * scaling block measured a bounded pin 3× slower at 32 cores than
+    * at 8). The clone shares the SparkContext and block manager but
+    * owns its SQLConf, so parallelism is sized to the data without
+    * touching the caller's session: concurrent queries on it never
+    * plan under the wrong width.
+    *
+    *  - Clone: `newSession()` starts from context defaults, not the
+    *    caller's runtime conf, so the keys in [[Scope.Carried]] ride
+    *    along: the checkpoint choice and directory ([[cut]] reads them
+    *    off the clone), the staging base ([[Staging.dir]] resolves
+    *    against the clone) and the typed-aggregate fallback threshold.
+    *  - Size: [[sizeTo]] applies [[Scope.dataSized]], one partition per
+    *    64k rows with a floor of 4 — four at harness scale, thousands
+    *    at billion-row scale. Operators whose work is not row-shaped
+    *    set an explicit count with [[partitions]].
+    *  - Rebind: [[in]] moves a caller-planned frame into the clone
+    *    (its derivation still plans once, under the caller's
+    *    session); [[out]] binds the result back to the caller. */
+  final class Scope private (val origin: SparkSession) {
+    val session: SparkSession = origin.newSession()
+    Scope.Carried.foreach(k => origin.conf.getOption(k).foreach(session.conf.set(k, _)))
+
+    def in(df: DataFrame): DataFrame = rebind(session, df)
+    def out(df: DataFrame): DataFrame = rebind(origin, df)
+    def sizeTo(rows: Long): Unit = partitions(Scope.dataSized(rows))
+    def partitions(n: Long): Unit =
+      session.conf.set("spark.sql.shuffle.partitions", n.toString)
+  }
+
+  object Scope {
+    val Carried: Seq[String] = Seq(ReliableKey, DirKey, "spark.graft.staging.dir",
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold")
+
+    def dataSized(rows: Long): Long = math.max(4L, rows / 65536L)
+
+    def apply(origin: SparkSession): Scope = new Scope(origin)
+
+    def apply(origin: SparkSession, partitions: Long): Scope = {
+      val scope = new Scope(origin)
+      scope.partitions(partitions)
+      scope
+    }
+  }
+
+  /** Scope for BOUNDED-SLICE pin queries (the `*_exact` DuckDB pins):
+    * their working set is a constant by construction (a literal
+    * `id < N` slice plus a fixed plant set — it never grows with the
+    * corpus), so a few partitions serve it at any corpus scale —
+    * exactly what AQE would coalesce to by size. */
+  object BoundedPin {
+    def apply(origin: SparkSession, partitions: Int = 4)(
+        body: SparkSession => DataFrame): DataFrame = {
+      val scope = Scope(origin, partitions)
+      scope.out(body(scope.session))
+    }
+
+    /** Ferry a (small, origin-planned) frame into the pin session with
+      * its lineage cut: the slice derivation runs ONCE at the caller's
+      * full scan parallelism; everything downstream plans in the
+      * clone. The ferried frame is coalesced to the pin parallelism —
+      * a bounded slice left at scan partitioning would otherwise leak
+      * core-count-scaled task counts into every downstream stage (a
+      * ferried frame also loses size statistics, so an inequality
+      * self-join over it plans as a CartesianProduct whose task count
+      * is the PRODUCT of the input partition counts). */
+    def ferry(clone: SparkSession, df: DataFrame): DataFrame =
+      cut(rebind(clone, df.coalesce(clone.conf.get("spark.sql.shuffle.partitions").toInt)))
+  }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: write `.explain("formatted")` of named queries to files —
   * the plans/rNN before/after evidence the optimization rounds commit.
@@ -15,16 +14,7 @@ object ProbePlan {
     val outDir = args(0); val suffix = args(1); val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "10000000")
-      // application-sized codegen class cache — see Bench.scala's note
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.streaming.forceDeleteTempCheckpointLocation", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>

@@ -83,7 +83,7 @@ object Tables {
     * (path, size, mtime) of every LEAF file, recursive, field- and
     * record-delimited. None → not memoizable (missing path or
     * non-local scheme) — caller loads fresh. */
-  private def signature(path: String): Option[String] = {
+  private[graft] def signature(path: String): Option[String] = {
     if (path.contains("://") && !path.startsWith("file:")) return None
     val root = new java.io.File(path.stripPrefix("file:"))
     if (!root.exists()) return None
@@ -92,8 +92,12 @@ object Tables {
     // mtime when a leaf file is rewritten, so the fingerprint
     // must list the leaves (ADVICE r17)
     val sb = new StringBuilder
+    // symlinked directories are followed, but each real directory is
+    // listed once: a symlink cycle would otherwise recurse without end
+    val listed = scala.collection.mutable.Set.empty[String]
     def walk(f: java.io.File): Boolean = {
       if (f.isDirectory) {
+        if (!listed.add(f.getCanonicalPath)) return true
         val kids = Option(f.listFiles()).getOrElse(return false)
         kids.sortBy(_.getName).forall(walk)
       } else {

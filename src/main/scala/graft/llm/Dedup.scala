@@ -654,25 +654,12 @@ object Dedup {
       maxIter: Int = 100): DataFrame = {
     // Iteration parallelism is sized to the LABEL table, not the
     // session default: every round is ~a dozen scheduled jobs over a
-    // frame of #vertices rows, so at harness scale 32-partition
-    // rounds are pure task-scheduling overhead (~40% of the query's
-    // wall-clock). One partition per 64k vertices, floor 4 — the
-    // same rule yields thousands of partitions at billion-vertex
-    // scale, where it matters. The override lives in a CLONED session
-    // (same SparkContext, private SQLConf) so concurrent queries on
-    // the caller's session never plan under the wrong parallelism;
-    // the iterated frames are rebound into the clone via their RDDs
-    // (already materialized — every round localCheckpoints anyway)
-    // and the result is rebound to the caller's session on the way
-    // out.
-    val origin = edges.sparkSession
+    // frame of #vertices rows ([[graft.Checkpoints.Scope]]). The
+    // iterated frames are already materialized (every round cuts
+    // lineage anyway), so rebinding them costs no recompute.
     val nV = vertices.count()
-    val iterPar = math.max(4L, nV / 65536L).toString
-    val spark = origin.newSession()
-    graft.Checkpoints.propagate(origin, spark)
-    spark.conf.set("spark.sql.shuffle.partitions", iterPar)
-    def rebind(s: SparkSession, df: DataFrame): DataFrame =
-      s.createDataFrame(df.rdd, df.schema)
+    val scope = graft.Checkpoints.Scope(edges.sparkSession)
+    scope.sizeTo(nV)
     // materialize the (possibly expensive) edge derivation ONCE —
     // every round joins this frame, and without the checkpoint each
     // round would recompute the whole upstream edge plan (the
@@ -681,7 +668,7 @@ object Dedup {
     // reliable checkpoint() under graft.checkpoint.reliable (cluster
     // mode — survives executor loss mid-iteration)
     val und = graft.Checkpoints.cut(
-      rebind(spark, edges.select(col("src"), col("dst"))
+      scope.in(edges.select(col("src"), col("dst"))
         .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))))
     // TINY-GRAPH FAST PATH — the broadcast-join analog for CC: when
     // the (already materialized) doubled edge list and the vertex set
@@ -698,10 +685,10 @@ object Dedup {
     // message, a dst outside it receives none). Cap conf-gated for
     // cluster tuning; 64k ids ≈ 1 MB of longs on the driver, the
     // same order as a default broadcast relation.
-    val localCap = origin.conf.get("spark.graft.cc.localCap", "65536").toLong
+    val localCap = scope.origin.conf.get("spark.graft.cc.localCap", "65536").toLong
     val nE2 = und.count()
     if (nV <= localCap && nE2 <= 2 * localCap) {
-      val vs = rebind(spark, vertices.select(col("id"))).collect()
+      val vs = scope.in(vertices.select(col("id"))).collect()
         .map(_.getLong(0))
       val idx = scala.collection.mutable.LongMap.empty[Int]
       vs.zipWithIndex.foreach { case (v, i) => idx(v) = i }
@@ -736,10 +723,10 @@ object Dedup {
           org.apache.spark.sql.types.LongType, nullable = false),
         org.apache.spark.sql.types.StructField("label",
           org.apache.spark.sql.types.LongType, nullable = false)))
-      return origin.createDataFrame(
-        origin.sparkContext.parallelize(rows, 1), schema)
+      return scope.origin.createDataFrame(
+        scope.origin.sparkContext.parallelize(rows, 1), schema)
     }
-    var labels = graft.Checkpoints.cut(rebind(spark, vertices.select(col("id")))
+    var labels = graft.Checkpoints.cut(scope.in(vertices.select(col("id")))
       .select(col("id"), col("id").as("label")))
     // convergence via the monotone invariant: labels only ever
     // decrease, so the propagation has fixpointed iff Σlabels is
@@ -777,7 +764,7 @@ object Dedup {
     }
     var prevSum = Long.MinValue
     var curSum = labelSum(labels) match {
-      case None => return rebind(origin, labels)
+      case None => return scope.out(labels)
       case Some(x) => x
     }
     var i = 0
@@ -788,7 +775,7 @@ object Dedup {
       curSum = labelSum(labels).get // non-empty here: checked above
       i += 1
     }
-    rebind(origin, labels)
+    scope.out(labels)
   }
 
   /** (doc_id, distinct-word-set) projection shared by the clustering

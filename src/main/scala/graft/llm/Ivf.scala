@@ -64,26 +64,16 @@ object Ivf {
     }
   }
 
-  /** Rebind the bounded training sample into a CLONED session whose
-    * shuffle parallelism matches the SAMPLE size, not the corpus
-    * session's default: every Lloyd's round is a job over ≤sampleN
-    * rows, and at 32 map + 32 reduce tasks per round the 10+ training
-    * rounds of the composed indexes were pure task-scheduling
-    * overhead (the same sizing rule as connectedComponents/pageRank —
-    * one partition per ~512 sample rows, floor 4). Determinism is
-    * untouched: per-cluster sums fold in ascending vec_id order
-    * INSIDE the aggregate (sort_array), so partitioning never reaches
-    * the arithmetic (pinned in IvfPqTrainingSpec). */
+  /** Rebind the bounded training sample into a cloned session
+    * ([[graft.Checkpoints.Scope]]) sized to the SAMPLE, not the corpus:
+    * every Lloyd's round is a job over ≤sampleN rows, so one partition
+    * per ~512 sample rows, floor 4. Determinism is untouched: per-cluster
+    * sums fold in ascending vec_id order INSIDE the aggregate
+    * (sort_array), so partitioning never reaches the arithmetic (pinned
+    * in IvfPqTrainingSpec). */
   private[llm] def sampleSession(sample: DataFrame, sampleN: Int): DataFrame = {
-    val origin = sample.sparkSession
-    val clone = origin.newSession()
     val p = math.max(4, sampleN / 512)
-    clone.conf.set("spark.sql.shuffle.partitions", p.toString)
-    // aggregation-behavior conf the typed/ordered aggregates rely on
-    // rides along (newSession starts from context defaults)
-    origin.conf.getOption("spark.sql.objectHashAggregate.sortBased.fallbackThreshold")
-      .foreach(clone.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", _))
-    clone.createDataFrame(sample.repartition(p).rdd, sample.schema)
+    graft.Checkpoints.Scope(sample.sparkSession, p).in(sample.repartition(p))
   }
 
   /** Distributed Lloyd's k-means on a deterministic bounded sample. */

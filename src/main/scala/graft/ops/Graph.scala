@@ -276,7 +276,7 @@ object Graph {
     val origin = edges.sparkSession
     pageRankIterates(edges, iters) match {
       case None => emptyRanks(origin)
-      case Some(iterates) => rebind(origin, iterates.last)
+      case Some(iterates) => graft.Checkpoints.rebind(origin, iterates.last)
     }
   }
 
@@ -292,14 +292,11 @@ object Graph {
     pageRankIterates(edges, iters) match {
       case None => emptyRanks(origin).select(col("v"), lit(0).as("iter"), col("r"))
       case Some(iterates) =>
-        rebind(origin, iterates.zipWithIndex.map { case (df, i) =>
+        graft.Checkpoints.rebind(origin, iterates.zipWithIndex.map { case (df, i) =>
           df.select(col("v"), lit(i).as("iter"), col("r"))
         }.reduce(_.unionByName(_)))
     }
   }
-
-  private def rebind(s: org.apache.spark.sql.SparkSession, df: DataFrame): DataFrame =
-    s.createDataFrame(df.rdd, df.schema)
 
   private def emptyRanks(origin: SparkSession): DataFrame = {
     import org.apache.spark.sql.types._
@@ -313,22 +310,19 @@ object Graph {
     * to the internal cloned session). None for the empty graph. */
   private def pageRankIterates(
       edges: DataFrame, iters: Int): Option[Seq[DataFrame]] = {
-    val origin = edges.sparkSession
-    val spark = origin.newSession()
-    graft.Checkpoints.propagate(origin, spark)
+    val scope = graft.Checkpoints.Scope(edges.sparkSession)
     // materialize the (possibly expensive) edge derivation once; the
     // derivation itself still plans under the caller's session.
     // Lineage cuts go through graft.Checkpoints: localCheckpoint by
     // default, reliable checkpoint() under graft.checkpoint.reliable
     // (cluster mode — survives executor loss mid-iteration)
-    val e = graft.Checkpoints.cut(rebind(spark, edges.select(col("src"), col("dst"))))
+    val e = graft.Checkpoints.cut(scope.in(edges.select(col("src"), col("dst"))))
     val deg = e.groupBy("src").agg(count(lit(1)).as("d"))
     val nV = deg.count()
     // empty graph: no vertices means no ranks (and division by nV
     // below would throw)
     if (nV == 0L) return None
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.max(4L, nV / 65536L).toString)
+    scope.sizeTo(nV)
     // LAZY checkpoints from here down: they still cut the lineage (so
     // the plan tree stays one-round deep and analysis cost is linear
     // in rounds), but nothing materializes until the caller's single
@@ -633,17 +627,12 @@ object Graph {
     * full-table form keeps the one-action plan and the per-round
     * shuffle is still vertex-bounded. */
   def bfs(edges: DataFrame, sources: DataFrame, iters: Int): DataFrame = {
-    val origin = edges.sparkSession
-    val spark = origin.newSession()
-    graft.Checkpoints.propagate(origin, spark)
-    def rebind(s: SparkSession, df: DataFrame): DataFrame =
-      s.createDataFrame(df.rdd, df.schema)
-    val e = graft.Checkpoints.cut(rebind(spark, edges.select(col("src"), col("dst"))))
+    val scope = graft.Checkpoints.Scope(edges.sparkSession)
+    val e = graft.Checkpoints.cut(scope.in(edges.select(col("src"), col("dst"))))
     val nV = e.select(col("src")).distinct().count()
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.max(4L, nV / 65536L).toString)
+    scope.sizeTo(nV)
     var dist = graft.Checkpoints.cut(
-      rebind(spark, sources.select(col("v"))).distinct()
+      scope.in(sources.select(col("v"))).distinct()
         .select(col("v"), lit(0L).as("dist")),
       eager = false)
     for (_ <- 1 to iters) {
@@ -653,7 +642,7 @@ object Graph {
         dist.unionAll(relaxed).groupBy("v").agg(min(col("dist")).as("dist")),
         eager = false)
     }
-    rebind(origin, dist)
+    scope.out(dist)
   }
 
   /** INCREMENTAL bounded BFS — absorb a delta edge batch against the
@@ -678,18 +667,15 @@ object Graph {
     * anti-joined against the state). */
   def incrementalBfs(histEdges: DataFrame, deltaEdges: DataFrame,
       newSources: DataFrame, stateDist: DataFrame, iters: Int): DataFrame = {
-    val origin = deltaEdges.sparkSession
-    val spark = origin.newSession()
-    graft.Checkpoints.propagate(origin, spark)
+    val scope = graft.Checkpoints.Scope(deltaEdges.sparkSession)
     val dE = graft.Checkpoints.cut(
-      rebind(spark, deltaEdges.select(col("src"), col("dst"))))
+      scope.in(deltaEdges.select(col("src"), col("dst"))))
     val hE = graft.Checkpoints.cut(
-      rebind(spark, histEdges.select(col("src"), col("dst"))))
+      scope.in(histEdges.select(col("src"), col("dst"))))
     val state = graft.Checkpoints.cut(
-      rebind(spark, stateDist.select(col("v"), col("dist"))))
+      scope.in(stateDist.select(col("v"), col("dist"))))
     val nV = state.count()
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.max(4L, nV / 65536L).toString)
+    scope.sizeTo(nV)
     val unionE = hE.unionByName(dE)
     def strictlyBetter(cand: DataFrame, base: DataFrame): DataFrame =
       cand.join(base.withColumnRenamed("dist", "d_cur"), Seq("v"), "left")
@@ -702,7 +688,7 @@ object Graph {
       .groupBy("v").agg(min(col("dist")).as("dist"))
     var better = graft.Checkpoints.cut(strictlyBetter(
       relaxSeed.unionByName(
-          rebind(spark, newSources.select(col("v"), lit(0L).as("dist"))))
+          scope.in(newSources.select(col("v"), lit(0L).as("dist"))))
         .groupBy("v").agg(min(col("dist")).as("dist")),
       state))
     var frontier = better
@@ -720,7 +706,7 @@ object Graph {
           .groupBy("v").agg(min(col("dist")).as("dist")))
       rounds += 1
     }
-    rebind(origin,
+    scope.out(
       state.unionByName(better).groupBy("v").agg(min(col("dist")).as("dist")))
   }
 
@@ -858,18 +844,13 @@ object Graph {
     * cuts so the plan stays one round deep. The label table is
     * vertex-sized; nothing edge²-shaped exists. */
   def labelProp(edges: DataFrame, iters: Int): DataFrame = {
-    val origin = edges.sparkSession
-    val spark = origin.newSession()
-    graft.Checkpoints.propagate(origin, spark)
-    def rebind(s: org.apache.spark.sql.SparkSession, df: DataFrame): DataFrame =
-      s.createDataFrame(df.rdd, df.schema)
-    val e = graft.Checkpoints.cut(rebind(spark, edges.select(col("src"), col("dst"))))
+    val scope = graft.Checkpoints.Scope(edges.sparkSession)
+    val e = graft.Checkpoints.cut(scope.in(edges.select(col("src"), col("dst"))))
     val verts = graft.Checkpoints.cut(
       e.select(col("src").as("v")).distinct(), eager = false)
     val nV = verts.count()
-    if (nV == 0L) return rebind(origin, verts.select(col("v"), lit(0L).as("label")))
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.max(4L, nV / 65536L).toString)
+    if (nV == 0L) return scope.out(verts.select(col("v"), lit(0L).as("label")))
+    scope.sizeTo(nV)
     var lab = graft.Checkpoints.cut(
       verts.select(col("v"), col("v").as("label")), eager = false)
     for (_ <- 1 to iters) {
@@ -882,24 +863,21 @@ object Graph {
             .as("label")),
         eager = false)
     }
-    rebind(origin, lab)
+    scope.out(lab)
   }
 
   /** Label-prop TRAJECTORY `(v, iter, label)` for iter = 0..iters —
     * the state surface [[incrementalLabelProp]] compares against,
     * mirroring [[pageRankTrajectory]]. */
   def labelPropTrajectory(edges: DataFrame, iters: Int): DataFrame = {
-    val origin = edges.sparkSession
-    val spark = origin.newSession()
-    graft.Checkpoints.propagate(origin, spark)
-    val e = graft.Checkpoints.cut(rebind(spark, edges.select(col("src"), col("dst"))))
+    val scope = graft.Checkpoints.Scope(edges.sparkSession)
+    val e = graft.Checkpoints.cut(scope.in(edges.select(col("src"), col("dst"))))
     val verts = graft.Checkpoints.cut(
       e.select(col("src").as("v")).distinct(), eager = false)
     val nV = verts.count()
-    if (nV == 0L) return rebind(origin,
+    if (nV == 0L) return scope.out(
       verts.select(col("v"), lit(0).as("iter"), lit(0L).as("label")))
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.max(4L, nV / 65536L).toString)
+    scope.sizeTo(nV)
     var lab = graft.Checkpoints.cut(
       verts.select(col("v"), col("v").as("label")), eager = false)
     val iterates = scala.collection.mutable.ArrayBuffer(lab)
@@ -914,7 +892,7 @@ object Graph {
         eager = false)
       iterates += lab
     }
-    rebind(origin, iterates.zipWithIndex.map { case (df, i) =>
+    scope.out(iterates.zipWithIndex.map { case (df, i) =>
       df.select(col("v"), lit(i).as("iter"), col("label"))
     }.reduce(_.unionByName(_)))
   }
@@ -932,14 +910,12 @@ object Graph {
     * trajectory (next round's state). */
   def incrementalLabelProp(histEdges: DataFrame, deltaEdges: DataFrame,
       histTraj: DataFrame, iters: Int): DataFrame = {
-    val origin = deltaEdges.sparkSession
-    val spark = origin.newSession()
-    graft.Checkpoints.propagate(origin, spark)
+    val scope = graft.Checkpoints.Scope(deltaEdges.sparkSession)
     val dE = graft.Checkpoints.cut(
-      rebind(spark, deltaEdges.select(col("src"), col("dst"))))
+      scope.in(deltaEdges.select(col("src"), col("dst"))))
     val hE = graft.Checkpoints.cut(
-      rebind(spark, histEdges.select(col("src"), col("dst"))))
-    val traj0 = rebind(spark, histTraj.select(col("v"), col("iter"), col("label")))
+      scope.in(histEdges.select(col("src"), col("dst"))))
+    val traj0 = scope.in(histTraj.select(col("v"), col("iter"), col("label")))
     // new vertices: trajectory rows seeded with their own id
     val newVerts = dE.select(col("src").as("v")).distinct()
       .join(traj0.filter(col("iter") === 0).select("v"), Seq("v"), "left_anti")
@@ -951,8 +927,7 @@ object Graph {
       traj.filter(col("iter") === i).select(col("v"), col("label"))
     val nV = traj.filter(col("iter") === 0).count()
     require(nV > 0L, "empty history state")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.max(4L, nV / 65536L).toString)
+    scope.sizeTo(nV)
     val unionE = hE.unionByName(dE)
     val fDelta = graft.Checkpoints.cut(dE.select("src").distinct())
     var dirty: Option[DataFrame] = None
@@ -966,7 +941,7 @@ object Graph {
       // next-round value, alongside its out-neighbors
       val candDst = unionE.join(seeds, Seq("src"), "left_semi").select(col("dst"))
         .unionByName(dirty.map(_.select(col("v").as("dst")))
-          .getOrElse(spark.emptyDataFrame.select(lit(0L).as("dst")).limit(0)))
+          .getOrElse(scope.session.emptyDataFrame.select(lit(0L).as("dst")).limit(0)))
       val inE = unionE.join(candDst, Seq("dst"), "left_semi")
       val labPrev = dirty match {
         case None => trajAt(i - 1)
@@ -1208,20 +1183,18 @@ object Graph {
     * (q_pagerank_incremental's oracle is the full recompute). */
   def incrementalPageRank(histEdges: DataFrame, deltaEdges: DataFrame,
       histDeg: DataFrame, histTraj: DataFrame, iters: Int): DataFrame = {
-    val origin = deltaEdges.sparkSession
-    val spark = origin.newSession()
-    graft.Checkpoints.propagate(origin, spark)
+    val scope = graft.Checkpoints.Scope(deltaEdges.sparkSession)
     val dE = graft.Checkpoints.cut(
-      rebind(spark, deltaEdges.select(col("src"), col("dst"))))
+      scope.in(deltaEdges.select(col("src"), col("dst"))))
     // materialize each state surface ONCE: the loop touches edges and
     // degrees every round and the trajectory twice per round — without
     // the cuts each reference would re-run the caller's scan
     val hE = graft.Checkpoints.cut(
-      rebind(spark, histEdges.select(col("src"), col("dst"))))
+      scope.in(histEdges.select(col("src"), col("dst"))))
     val deg0 = graft.Checkpoints.cut(
-      rebind(spark, histDeg.select(col("src"), col("d"))))
+      scope.in(histDeg.select(col("src"), col("d"))))
     val traj = graft.Checkpoints.cut(
-      rebind(spark, histTraj.select(col("v"), col("iter"), col("r"))))
+      scope.in(histTraj.select(col("v"), col("iter"), col("r"))))
     def trajAt(i: Int): DataFrame =
       traj.filter(col("iter") === i).select(col("v"), col("r"))
     // settled-vertex precondition: symmetric edges ⇒ endpoints = srcs
@@ -1233,8 +1206,7 @@ object Graph {
         "for every rank — run the full pageRankTrajectory instead)")
     val nV = deg0.count()
     require(nV > 0L, "empty history state")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.max(4L, nV / 65536L).toString)
+    scope.sizeTo(nV)
     val init = 1000000000000L / nV
     val tele = 15L * init / 100L
     val degDelta = dE.groupBy("src").agg(count(lit(1)).as("dd"))
@@ -1439,10 +1411,8 @@ object Graph {
     * the graph, single digits on bounded-degeneracy co-purchase
     * graphs. */
   def kCore(edges0: DataFrame, k: Int, maxRounds: Int = 32): DataFrame = {
-    val origin = edges0.sparkSession
-    val spark = origin.newSession()
-    graft.Checkpoints.propagate(origin, spark)
-    var e = graft.Checkpoints.cut(rebind(spark, edges0.select(col("u"), col("v"))))
+    val scope = graft.Checkpoints.Scope(edges0.sparkSession)
+    var e = graft.Checkpoints.cut(scope.in(edges0.select(col("u"), col("v"))))
     var n = e.count()
     var round = 0
     var changed = n > 0
@@ -1461,7 +1431,7 @@ object Graph {
     if (changed)
       throw new IllegalStateException(
         s"k-core peeling still shrinking after $maxRounds rounds")
-    rebind(origin, e)
+    scope.out(e)
   }
 
   /** One unrolled peel round, oracle-side: current degrees, the
@@ -1576,10 +1546,8 @@ object Graph {
     * successor join. Per-round lineage cuts like every iterative
     * operator here. */
   def betweenness(edges0: DataFrame, sources: Seq[Long], maxDepth: Int = 12): DataFrame = {
-    val origin = edges0.sparkSession
-    val spark = origin.newSession()
-    graft.Checkpoints.propagate(origin, spark)
-    val eUD = rebind(spark, edges0.select(col("u"), col("v")))
+    val scope = graft.Checkpoints.Scope(edges0.sparkSession)
+    val eUD = scope.in(edges0.select(col("u"), col("v")))
     // directed both ways for traversal
     val e = graft.Checkpoints.cut(
       eUD.select(col("u").as("a"), col("v").as("b"))
@@ -1593,11 +1561,11 @@ object Graph {
     // never above the parent's width; the probe count() is ~free —
     // `e` was just eagerly lineage-cut, so the frame is materialized.
     val m = e.count()
-    val parentWidth = origin.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val parentWidth = scope.origin.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val width = math.max(8L, math.min(parentWidth.toLong,
       sources.length.toLong * m / 1000000L)).toInt
-    spark.conf.set("spark.sql.shuffle.partitions", width.toString)
-    val srcDf = spark.createDataFrame(sources.map(Tuple1(_))).toDF("src")
+    scope.partitions(width)
+    val srcDf = scope.session.createDataFrame(sources.map(Tuple1(_))).toDF("src")
     var visited = graft.Checkpoints.cut(
       srcDf.select(col("src"), col("src").as("v"), lit(0).as("lvl"),
         lit(1L).as("sigma")))
@@ -1681,7 +1649,7 @@ object Graph {
     val out = delta.filter(!col("v").isin(sources: _*))
       .groupBy("v")
       .agg(expr("sum(delta) div 1000").as("btw_milli"))
-    rebind(origin, out)
+    scope.out(out)
   }
 
   /** One forward BFS level of the q_betweenness oracle: expand the
@@ -1806,18 +1774,13 @@ object Graph {
     * vertex-sized shuffle (frontier⋈edges, min-merge with the
     * standing table), cloned session, lazy lineage cuts. */
   def bellmanFord(edges: DataFrame, sources: DataFrame, rounds: Int): DataFrame = {
-    val origin = edges.sparkSession
-    val spark = origin.newSession()
-    graft.Checkpoints.propagate(origin, spark)
-    def rebind(s: SparkSession, df: DataFrame): DataFrame =
-      s.createDataFrame(df.rdd, df.schema)
+    val scope = graft.Checkpoints.Scope(edges.sparkSession)
     val e = graft.Checkpoints.cut(
-      rebind(spark, edges.select(col("src"), col("dst"), col("w"))))
+      scope.in(edges.select(col("src"), col("dst"), col("w"))))
     val nV = e.select(col("src")).distinct().count()
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.max(4L, nV / 65536L).toString)
+    scope.sizeTo(nV)
     var dist = graft.Checkpoints.cut(
-      rebind(spark, sources.select(col("v"))).distinct()
+      scope.in(sources.select(col("v"))).distinct()
         .select(col("v"), lit(0L).as("dist")),
       eager = false)
     for (_ <- 1 to rounds) {
@@ -1827,7 +1790,7 @@ object Graph {
         dist.unionAll(relaxed).groupBy("v").agg(min(col("dist")).as("dist")),
         eager = false)
     }
-    rebind(origin, dist)
+    scope.out(dist)
   }
 
   /** Driver query: cheapest 4-hop paths over the co-purchase graph
@@ -1899,18 +1862,13 @@ object Graph {
     * cloned session, lazy lineage cuts. */
   def temporalReach(edges: DataFrame, sources: DataFrame,
       rounds: Int): DataFrame = {
-    val origin = edges.sparkSession
-    val spark = origin.newSession()
-    graft.Checkpoints.propagate(origin, spark)
-    def rebind(s: SparkSession, df: DataFrame): DataFrame =
-      s.createDataFrame(df.rdd, df.schema)
+    val scope = graft.Checkpoints.Scope(edges.sparkSession)
     val e = graft.Checkpoints.cut(
-      rebind(spark, edges.select(col("src"), col("dst"), col("t"))))
+      scope.in(edges.select(col("src"), col("dst"), col("t"))))
     val nV = e.select(col("src")).distinct().count()
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.max(4L, nV / 65536L).toString)
+    scope.sizeTo(nV)
     var arr = graft.Checkpoints.cut(
-      rebind(spark, sources.select(col("v"))).distinct()
+      scope.in(sources.select(col("v"))).distinct()
         .select(col("v"), lit(0L).as("arr")),
       eager = false)
     for (_ <- 1 to rounds) {
@@ -1921,7 +1879,7 @@ object Graph {
         arr.unionAll(relaxed).groupBy("v").agg(min(col("arr")).as("arr")),
         eager = false)
     }
-    rebind(origin, arr)
+    scope.out(arr)
   }
 
   /** Driver query: earliest-arrival spread over the TEMPORAL
@@ -2002,20 +1960,17 @@ object Graph {
     * broadcast back; 2 rounds = 4 such steps, a fixed shallow plan
     * (no iteration session needed). */
   def hits(edges: DataFrame, rounds: Int): DataFrame = {
-    val origin = edges.sparkSession
     // the pageRank iteration discipline: cloned session with
     // vertex-sized parallelism, a lineage cut after EVERY half-round
     // frame — each normalize references its raw input twice (total +
     // main), so without cuts the plan doubles per half-round (2⁴
     // copies of the edge derivation at rounds = 2; measured 16.7 s →
     // ~3 s at sf0.1)
-    val spark = origin.newSession()
-    graft.Checkpoints.propagate(origin, spark)
+    val scope = graft.Checkpoints.Scope(edges.sparkSession)
     val e = graft.Checkpoints.cut(
-      rebind(spark, edges.select(col("src"), col("dst"))))
+      scope.in(edges.select(col("src"), col("dst"))))
     val nC = e.select(col("src")).distinct().count()
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.max(4L, nC / 65536L).toString)
+    scope.sizeTo(nC)
     val Scale = 1000000L
     def normalize(raw0: DataFrame, idCol: String, vCol: String): DataFrame = {
       // cut the RAW frame only: it is the one referenced twice (total
@@ -2040,7 +1995,7 @@ object Graph {
         e.join(a, "dst").groupBy("src").agg(sum(col("a")).as("h")),
         "src", "h")
     }
-    rebind(origin,
+    scope.out(
       a.select(lit("authority").as("kind"), col("dst").as("id"),
           col("a").as("score"))
         .unionAll(h.select(lit("hub").as("kind"), col("src").as("id"),
@@ -2274,16 +2229,13 @@ object Graph {
     * The seed id is one bounded driver scalar (min vertex — pinned),
     * like [[bfs]]'s vertex count. */
   def personalizedPageRank(edges: DataFrame, iters: Int): DataFrame = {
-    val origin = edges.sparkSession
-    val spark = origin.newSession()
-    graft.Checkpoints.propagate(origin, spark)
+    val scope = graft.Checkpoints.Scope(edges.sparkSession)
     val e = graft.Checkpoints.cut(
-      rebind(spark, edges.select(col("src"), col("dst"))))
+      scope.in(edges.select(col("src"), col("dst"))))
     val deg = e.groupBy("src").agg(count(lit(1)).as("d"))
     val nV = deg.count()
-    if (nV == 0L) return emptyRanks(origin)
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.max(4L, nV / 65536L).toString)
+    if (nV == 0L) return emptyRanks(scope.origin)
+    scope.sizeTo(nV)
     val seedId = e.agg(min(col("src"))).head().getLong(0)
     val M = 1000000000000L
     val ed = graft.Checkpoints.cut(e.join(deg, "src"), eager = false)
@@ -2305,7 +2257,7 @@ object Graph {
               .as("r")),
         eager = false)
     }
-    rebind(origin, pr)
+    scope.out(pr)
   }
 
   /** Driver query: restart-walk similarity to the minimum part id
@@ -3063,17 +3015,12 @@ object Graph {
     * nothing quadratic. Luby's theorem gives O(log n) expected
     * rounds, so the unroll depth is a small constant at any scale. */
   def lubyMis(edges: DataFrame, rounds: Int): DataFrame = {
-    val origin = edges.sparkSession
-    val spark = origin.newSession()
-    graft.Checkpoints.propagate(origin, spark)
-    def rb(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
-    val e = graft.Checkpoints.cut(rb(edges.select(col("src"), col("dst"))))
+    val scope = graft.Checkpoints.Scope(edges.sparkSession)
+    val e = graft.Checkpoints.cut(scope.in(edges.select(col("src"), col("dst"))))
     val verts = graft.Checkpoints.cut(
       e.select(col("src").as("v")).distinct(), eager = false)
     val nV = verts.count()
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.max(4L, nV / 65536L).toString)
+    scope.sizeTo(nV)
     def coin(r: Int): org.apache.spark.sql.Column =
       conv(substring(md5(concat(lit(r.toString), lit(":"),
         col("v").cast("string")).cast("binary")), 1, 12), 16, 10).cast("long")
@@ -3104,7 +3051,7 @@ object Graph {
       .select(col("v"),
         when(col("round_joined").isNotNull, 1L).otherwise(0L).as("in_mis"),
         coalesce(col("round_joined"), lit(0L)).as("round_joined"))
-    rebind(origin, out.join(active.select(col("v"), lit(1L).as("still_active")),
+    scope.out(out.join(active.select(col("v"), lit(1L).as("still_active")),
       Seq("v"), "left"))
   }
 

@@ -180,21 +180,26 @@ object Sketches {
       // corpus contract, so the union coerces nothing and xxhash64
       // sees the same physical longs. Null keys → null hash → skipped
       // by the aggregate, matching COUNT(DISTINCT).
-      val dd = ev.select(col("event_type"), lit(0).as("side"),
+      // both persists are tracked, so the harness's scoped collector
+      // releases them once the result is materialized
+      val handles = new graft.CacheHandles
+      val dd = handles.track(ev.select(col("event_type"), lit(0).as("side"),
           col("user_id").as("k"))
         .unionAll(ev.select(col("event_type"), lit(1).as("side"),
           col("event_id").as("k")))
         .distinct()
-        .persist() // read for the per-shard aggregate AND the global exact row
+        // read for the per-shard aggregate AND the global exact row
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       def h(side: Int) =
         when(col("side") === side && col("k").isNotNull, xxhash64(col("k")))
-      val shards = dd.groupBy("event_type")
+      val shards = handles.track(dd.groupBy("event_type")
         .agg(
           graft.functions.HllAgg.build(h(0), p).as("u_regs"),
           graft.functions.HllAgg.build(h(1), p).as("e_regs"),
           count(when(col("side") === 0, col("k"))).as("exact_users"),
           count(when(col("side") === 1, col("k"))).as("exact_events"))
-        .persist() // the materialized sketch table: read for per-shard rows AND the union row
+        // the materialized sketch table: read for per-shard rows AND the union row
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       def ok(regs: org.apache.spark.sql.Column,
              exact: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
         val est = graft.functions.HllAgg.estimate(regs, p)

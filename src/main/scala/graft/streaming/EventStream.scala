@@ -21,28 +21,19 @@ import graft.{Q, Tables}
   * state is likewise watermark-scoped. State lives in the
   * RocksDB/HDFS-backed state store per shuffle partition, so the
   * 100 TB/day form is the same plan with more partitions.
+  *
+  * Each run plans in a cloned session ([[graft.Checkpoints.Scope]])
+  * with 4 state partitions. Stateful operators fix their state-store
+  * partition count from `spark.sql.shuffle.partitions` at query START,
+  * and every store partition pays a snapshot/commit per micro-batch —
+  * at the harness's stream volumes a cpu-count default is pure
+  * bookkeeping (measured 2-4× of some queries' wall-clock). On a real
+  * deployment this is the knob sized to stream volume, independently
+  * of the batch default. The clone also gives each run its own
+  * StreamingQueryManager + catalog, so memory-sink names can't collide
+  * across overlapping runs.
   */
 object EventStream {
-
-  /** A cloned session (same SparkContext, private SQLConf) with a
-    * narrowed state-partition count for one streaming run. Stateful
-    * operators fix their state-store partition count from
-    * `spark.sql.shuffle.partitions` at query START, and every store
-    * partition pays a snapshot/commit per micro-batch — at the
-    * harness's stream volumes the 32-partition default is pure
-    * bookkeeping (measured 2-4× of some queries' wall-clock). On a
-    * real deployment this is the knob sized to stream volume,
-    * independently of the batch default. Scoping it to a clone keeps
-    * the caller's session conf untouched (concurrent queries keep
-    * their parallelism) and gives each run its own
-    * StreamingQueryManager + catalog, so memory-sink names can't
-    * collide across overlapping runs. */
-  private def narrowedSession(s: org.apache.spark.sql.SparkSession,
-      n: Int): org.apache.spark.sql.SparkSession = {
-    val local = s.newSession()
-    local.conf.set("spark.sql.shuffle.partitions", n.toString)
-    local
-  }
 
   /** Per-application staging dir for a streaming source: the file
     * stream source lists directories, so the harness table is staged
@@ -129,7 +120,7 @@ object EventStream {
         .select("ts", "event_type", "value")
       val stage = stagePath(s, "graft_stream_events")
       ev.write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
+      val local = graft.Checkpoints.Scope(s, 4).session
       val stream = local.readStream.schema(ev.schema).parquet(stage)
       val sink = "graft_stream_window"
       val sq = hourlyCounts(stream)
@@ -168,7 +159,7 @@ object EventStream {
         .select("event_id", "ts", "event_type")
       val stage = stagePath(s, "graft_stream_dedup")
       ev.unionAll(ev).write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
+      val local = graft.Checkpoints.Scope(s, 4).session
       val stream = local.readStream.schema(ev.schema).parquet(stage)
       val sink = "graft_stream_dedup_sink"
       val sq = dedupEvents(stream)
@@ -208,7 +199,7 @@ object EventStream {
       val ev = Tables.load(s, dir, "events").select("ts", "user_id")
       val stage = stagePath(s, "graft_stream_sessions")
       ev.write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
+      val local = graft.Checkpoints.Scope(s, 4).session
       val stream = local.readStream.schema(ev.schema).parquet(stage)
       val sink = "graft_stream_sessions_sink"
       val sq = stream
@@ -266,7 +257,7 @@ object EventStream {
         .select("event_id", "ts", "user_id", "event_type")
       val stage = stagePath(s, "graft_stream_join")
       ev.write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
+      val local = graft.Checkpoints.Scope(s, 4).session
       def src() = local.readStream.schema(ev.schema).parquet(stage)
       val clicks = src().filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id"),
@@ -279,7 +270,7 @@ object EventStream {
       val sink = "graft_stream_join_sink"
       // A stream-stream join keeps FOUR state stores per shuffle
       // partition (keyToNumValues + keyWithIndexToValue per side) —
-      // the heaviest case of the [[narrowedSession]] rationale
+      // the heaviest case for narrowing state partitions (object doc)
       // (~9s of pure store-commit bookkeeping measured at 32).
       val sq = clicks.join(purchases,
           col("user_id") === col("p_user") &&
@@ -325,7 +316,7 @@ object EventStream {
         .select("event_id", "ts", "user_id", "event_type")
       val stage = stagePath(s, "graft_stream_join_outer")
       ev.write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
+      val local = graft.Checkpoints.Scope(s, 4).session
       def src() = local.readStream.schema(ev.schema).parquet(stage)
       val clicks = src().filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id"),
@@ -395,7 +386,7 @@ object EventStream {
         .select("event_id", "ts", "user_id", "event_type")
       val stage = stagePath(s, "graft_stream_join_full")
       ev.write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
+      val local = graft.Checkpoints.Scope(s, 4).session
       def src() = local.readStream.schema(ev.schema).parquet(stage)
       val clicks = src().filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id"),
@@ -485,7 +476,7 @@ object EventStream {
       o.coalesce(1).write.mode("overwrite").text(s"$stageDir/jsonl")
       val part = new java.io.File(s"$stageDir/jsonl").listFiles()
         .filter(_.getName.startsWith("part-")).head
-      val local = narrowedSession(s, 4)
+      val local = graft.Checkpoints.Scope(s, 4).session
       // no .schema(): the source declares the explicit SAM schema
       // itself (a user-supplied one would need supportsExternalMetadata)
       val stream = local.readStream.format("graft.sources.PagedJsonSource")
@@ -585,7 +576,7 @@ object EventStream {
       val ev = Tables.load(s, dir, "events").select("user_id", "ts")
       val stage = stagePath(s, "graft_stream_tmo_sessions")
       ev.write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
+      val local = graft.Checkpoints.Scope(s, 4).session
       val stream = local.readStream.schema(ev.schema).parquet(stage)
         .withWatermark("ts", "2 hours")
         .as[(Long, java.sql.Timestamp)]
@@ -644,7 +635,7 @@ object EventStream {
       val ev = Tables.load(s, dir, "events").select("user_id", "ts")
       val stage = stagePath(s, "graft_stream_state")
       ev.write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
+      val local = graft.Checkpoints.Scope(s, 4).session
       val stream = local.readStream.schema(ev.schema).parquet(stage)
         .as[(Long, java.sql.Timestamp)]
       val sink = "graft_stream_state_sink"
@@ -743,7 +734,7 @@ object EventStream {
         .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"))
       val stage = stagePath(s, "graft_stream_funnel")
       ev.write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
+      val local = graft.Checkpoints.Scope(s, 4).session
       val stream = local.readStream.schema(ev.schema).parquet(stage)
         .as[(Long, String, Long)]
       val sink = "graft_stream_funnel_sink"
@@ -801,7 +792,7 @@ object EventStream {
       val fs = stageP.getFileSystem(s.sparkContext.hadoopConfiguration)
       if (!fs.exists(stageP))
         ev.repartition(8).write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
+      val local = graft.Checkpoints.Scope(s, 4).session
       val writeBatch: (DataFrame, Long) => Unit =
         (batch, id) => batch.write.mode("overwrite").parquet(s"$target/batch=$id")
       def run(): Unit = {
@@ -859,7 +850,7 @@ object EventStream {
       s.range(25)
         .select(concat(lit("{corrupt json line #"), col("id")).as("value"))
         .write.mode("append").text(stage)
-      val local = narrowedSession(s, 4)
+      val local = graft.Checkpoints.Scope(s, 4).session
       val sink = "graft_stream_quarantine_sink"
       val sq = local.readStream
         .schema("c_custkey BIGINT, c_mktsegment STRING, c_acctbal DOUBLE, _corrupt_record STRING")
@@ -899,7 +890,7 @@ object EventStream {
           col("event_type"), col("value"))
       val stage = stagePath(s, "graft_stream_ntz")
       ev.write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
+      val local = graft.Checkpoints.Scope(s, 4).session
       val stream = local.readStream.schema(ev.schema).parquet(stage)
         .withColumn("ts", col("ts").cast("timestamp"))
       val sink = "graft_stream_ntz_window"
@@ -934,7 +925,7 @@ object EventStream {
         .select("ts", "event_type", "value")
       val stage = stagePath(s, "graft_stream_enrich_ev")
       ev.write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
+      val local = graft.Checkpoints.Scope(s, 4).session
       val dim = local.createDataFrame(
         ev.select(col("event_type")).distinct()
           .collect().map(r => r.getString(0))
@@ -1028,7 +1019,7 @@ object EventStream {
       stageOne(ev.filter(!isLate).select("ts", "event_type", "cents"), "b1_ontime", 1000000L)
       stageOne(ev.filter(isLate).select("ts", "event_type", "cents"), "b2_straggler", 2000000L)
       stageOne(horizon.select("ts", "event_type", "cents"), "b3_horizon", 3000000L)
-      val local = narrowedSession(s, 4)
+      val local = graft.Checkpoints.Scope(s, 4).session
       val sink = "graft_stream_late_sink"
       val schema = "ts TIMESTAMP, event_type STRING, cents BIGINT"
       val sq = local.readStream.schema(schema)
@@ -1128,7 +1119,7 @@ object EventStream {
         lit(hotUser).as("user_id"))
       val stage = stagePath(s, "graft_stream_hh")
       ev.unionByName(hot).write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
+      val local = graft.Checkpoints.Scope(s, 4).session
       val sink = "graft_stream_hh_sink"
       val k = 64
       val sq = local.readStream.schema(ev.schema).parquet(stage)
@@ -1205,7 +1196,7 @@ object EventStream {
       // 4 files + maxFilesPerTrigger(1): the digest state MUST absorb
       // several micro-batches, not swallow the backlog in one
       ev.repartition(4).write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
+      val local = graft.Checkpoints.Scope(s, 4).session
       val stream = local.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1").parquet(stage)
       val sink = "graft_stream_quantile"
@@ -1399,7 +1390,7 @@ object EventStream {
       }
       sentinel("z1_flush", 4, System.currentTimeMillis() + 3600000L)
       sentinel("z2_flush", 5, System.currentTimeMillis() + 7200000L)
-      val local = narrowedSession(s, 4)
+      val local = graft.Checkpoints.Scope(s, 4).session
       val stream = local.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1").parquet(stage)
         .withWatermark("ts", "2 hours")
@@ -1462,7 +1453,7 @@ object EventStream {
         .select(col("a.p").as("u"), col("b.p").as("v")).distinct()
       val stage = stagePath(s, "graft_stream_kcore")
       edges.repartition(3).write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
+      val local = graft.Checkpoints.Scope(s, 4).session
       import local.implicits._
       val stream = local.readStream.schema(edges.schema)
         .option("maxFilesPerTrigger", 1).parquet(stage)
@@ -1537,7 +1528,7 @@ object EventStream {
         .filter(col("user_id").isNotNull).select(col("user_id"))
       val stage = stagePath(s, "graft_stream_cms")
       ev.repartition(4).write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
+      val local = graft.Checkpoints.Scope(s, 4).session
       val stream = local.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1").parquet(stage)
       val sink = "graft_stream_cms_sink"
@@ -1643,7 +1634,7 @@ object EventStream {
         (col("o_orderkey") % 7 === 0).as("del"))
       val stage = stagePath(s, "graft_stream_cdc")
       log.repartition(3).write.mode("overwrite").parquet(stage)
-      val local = narrowedSession(s, 4)
+      val local = graft.Checkpoints.Scope(s, 4).session
       val stream = local.readStream.schema(log.schema)
         .option("maxFilesPerTrigger", 1).parquet(stage)
         .as[(Long, Long, Long, Boolean)]

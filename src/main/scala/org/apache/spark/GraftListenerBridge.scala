@@ -1,9 +1,9 @@
 package org.apache.spark
 
-/** Dev-tool bridge into the private[spark] listener bus: lets
-  * [[graft.ProbeJobs]] drain job-end events deterministically instead
-  * of sleeping a fixed interval (ADVICE r17 — a loaded bus dropped
-  * late events from the snapshot, understating jobMs). */
+/** Bridge into the private[spark] listener bus: lets the benchmark
+  * (`perfbench/src/Driver.scala`) drain job and task events
+  * deterministically before it reads a query's trace, instead of
+  * sleeping a fixed interval. */
 object GraftListenerBridge {
   def waitUntilListenerBusEmpty(sc: SparkContext, timeoutMs: Long): Unit =
     sc.listenerBus.waitUntilEmpty(timeoutMs)

@@ -77,23 +77,45 @@ class CheckpointSpec extends SparkSpec {
   }
 
   test("propagate carries checkpoint AND staging conf into a cloned session") {
+    // the one clone scope (Checkpoints.Scope): carry, size, rebind
+    val threshold = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    val width = spark.conf.get("spark.sql.shuffle.partitions")
+    val thresholdBefore = spark.conf.getOption(threshold)
     spark.conf.set(Checkpoints.ReliableKey, "true")
     spark.conf.set(Checkpoints.DirKey, "/tmp/graft_ckpt_probe")
     spark.conf.set("spark.graft.staging.dir", "/tmp/graft_stage_probe")
+    spark.conf.set(threshold, "4242")
     try {
-      val clone = spark.newSession()
-      Checkpoints.propagate(spark, clone)
+      val scope = Checkpoints.Scope(spark)
+      val clone = scope.session
+      assert(clone ne spark)
+      assert(Checkpoints.Scope.Carried.toSet === Set(Checkpoints.ReliableKey,
+        Checkpoints.DirKey, "spark.graft.staging.dir", threshold))
       assert(clone.conf.get(Checkpoints.ReliableKey) === "true")
       assert(clone.conf.get(Checkpoints.DirKey) === "/tmp/graft_ckpt_probe")
+      assert(clone.conf.get(threshold) === "4242")
       // the staging override must ride along: the clone's checkpoint
       // fallback and any staged store it touches resolve against the
       // CLONE's conf (review finding, r17)
       assert(Staging.dir(clone, "probe")
         .startsWith("/tmp/graft_stage_probe/probe_"))
+      // the data-sized rule: one partition per 64k rows, floor 4
+      assert(Seq(0L, 65535L, 1000000L).map(Checkpoints.Scope.dataSized) ===
+        Seq(4L, 4L, 15L))
+      scope.sizeTo(1000000L)
+      assert(clone.conf.get("spark.sql.shuffle.partitions") === "15")
+      assert(spark.conf.get("spark.sql.shuffle.partitions") === width)
+      // rebind in and out; the output keeps the clone's row order
+      val in = scope.in(Seq(3L, 1L, 2L).toDF("v"))
+      assert(in.sparkSession eq clone)
+      val out = scope.out(in.orderBy("v"))
+      assert(out.sparkSession eq spark)
+      assert(out.as[Long].collect().toSeq === Seq(1L, 2L, 3L))
     } finally {
       spark.conf.unset(Checkpoints.ReliableKey)
       spark.conf.unset(Checkpoints.DirKey)
       spark.conf.unset("spark.graft.staging.dir")
+      thresholdBefore.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
     }
   }
 }

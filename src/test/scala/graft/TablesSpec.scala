@@ -116,6 +116,19 @@ class TablesSpec extends SparkSpec {
     }
   }
 
+  test("signature walk survives a symlink cycle and lists each leaf once") {
+    val tbl = java.nio.file.Paths.get(fixtureDir(), "orders.parquet")
+    Files.createDirectories(tbl)
+    Files.write(tbl.resolve("part-0.parquet"), Array[Byte](1, 2, 3))
+    // a directory symlink back to its own parent: following it
+    // unguarded re-lists the same leaf at ever deeper paths
+    Files.createSymbolicLink(tbl.resolve("loop"), tbl)
+    val sig = Tables.signature(tbl.toString)
+    assert(sig.isDefined)
+    assert(sig.get.split('\u0002').toSeq ===
+      Seq(s"$tbl/part-0.parquet\u00013\u0001${tbl.resolve("part-0.parquet").toFile.lastModified}"))
+  }
+
   test("driver corpus: events.ts loads as TIMESTAMP at sf0.001") {
     val got = Tables.load(spark, sf001, "events")
     assert(got.schema("ts").dataType == TimestampType)
