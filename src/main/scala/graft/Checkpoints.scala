@@ -98,9 +98,18 @@ object Checkpoints {
     *    set an explicit count with [[partitions]].
     *  - Rebind: [[in]] moves a caller-planned frame into the clone
     *    (its derivation still plans once, under the caller's
-    *    session); [[out]] binds the result back to the caller. */
+    *    session); [[out]] binds the result back to the caller.
+    *  - Share: the JVM codegen class cache is keyed by (class loader,
+    *    source), and under artifact isolation each clone runs its tasks
+    *    under its own loader, missing the cache even on identical
+    *    source. The clone turns isolation off before its first
+    *    execution (Spark reads the flag once, lazily); streaming's
+    *    clones inherit it. The program adds no artifacts to any
+    *    session, so nothing is lost; an operator that needs
+    *    per-session artifacts must not use the Scope. */
   final class Scope private (val origin: SparkSession) {
     val session: SparkSession = origin.newSession()
+    session.conf.set("spark.sql.artifact.isolation.enabled", "false")
     Scope.Carried.foreach(k => origin.conf.getOption(k).foreach(session.conf.set(k, _)))
 
     def in(df: DataFrame): DataFrame = rebind(session, df)

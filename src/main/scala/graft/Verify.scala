@@ -8,16 +8,18 @@ import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit}
   * SPARK_GRAFT_VERIFY_THREADS) — the per-query cost at sf0.01 is
   * dominated by job-scheduling fixed cost, not data, so overlapping
   * queries cuts the wall clock ~3× without changing any result. Each
-  * worker owns a CLONED session (`newSession()`): shared SparkContext
-  * and block-manager, private SQLConf + temp-view catalog, so
-  * name-registering queries (`contracts`, the SQL-entry views) cannot
-  * collide across threads. Warehouse tables (bucketed-join lifecycle)
-  * live in the shared external catalog but every query writes only
-  * its own table names, and each query runs exactly once. Per-query
-  * determinism is untouched: results never depend on what runs
-  * beside them (md5-derandomized coins, pinned as-of dates — the
-  * SURVEY §5 contract), and cache eviction mid-run only ever causes
-  * recompute of the same values.
+  * worker owns a CLONED session (`Checkpoints.Scope(spark).session`,
+  * the one place the program calls `newSession()`, so workers share
+  * the codegen class cache): shared SparkContext and block-manager,
+  * private SQLConf + temp-view catalog, so name-registering queries
+  * (`contracts`, the SQL-entry views) cannot collide across threads.
+  * Warehouse tables (bucketed-join lifecycle) live in the shared
+  * external catalog but every query writes only its own table names,
+  * and each query runs exactly once. Per-query determinism is
+  * untouched: results never depend on what runs beside them
+  * (md5-derandomized coins, pinned as-of dates — the SURVEY §5
+  * contract), and cache eviction mid-run only ever causes recompute
+  * of the same values.
   */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -69,7 +71,7 @@ object Verify {
     (1 to threads).foreach { _ =>
       pool.submit(new Runnable {
         override def run(): Unit = {
-          val session = spark.newSession()
+          val session = Checkpoints.Scope(spark).session
           var q = queue.poll()
           while (q != null) {
             val heavy = isHeavy(q.name)

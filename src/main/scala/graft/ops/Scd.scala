@@ -290,9 +290,12 @@ object Scd {
     * output files, while the rebuild this replaces re-shuffles every
     * version ever recorded. Preconditions checked, not assumed: the
     * delta carries at most ONE version per (key, valid_from) cell and
-    * strictly advances tx within its cell (counted in-plan; throws). */
+    * strictly advances tx within its cell (counted in-plan; throws).
+    * The delta and touched frames are persisted into `handles`, which
+    * the caller releases once the result is materialized (or the
+    * precondition check has thrown). */
   def absorbCorrections(store: DataFrame, delta: DataFrame,
-      handles: graft.CacheHandles = new graft.CacheHandles): DataFrame = {
+      handles: graft.CacheHandles): DataFrame = {
     // the delta is BATCH-sized and consumed five times (dup check,
     // touch join, reclose, anti-join key set, append); the touched
     // set is batch-sized too and consumed twice (stale check,

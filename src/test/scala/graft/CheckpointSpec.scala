@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 import graft.llm.Dedup
 import graft.ops.Graph
@@ -69,6 +70,24 @@ class CheckpointSpec extends SparkSpec {
         .filter(java.nio.file.Files.isRegularFile(_)).count()
       assert(files > 0, "reliable cut left no files in the checkpoint dir")
     } finally spark.conf.unset(Checkpoints.ReliableKey)
+  }
+
+  test("successive scopes share the codegen class cache; the origin keeps its isolation") {
+    val isolation = "spark.sql.artifact.isolation.enabled"
+    val originIsolation = spark.conf.getOption(isolation)
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // one small group-by per fresh clone; returns the classes it compiled
+    def aggregateInNewScope(): Long = {
+      val clone = Checkpoints.Scope(spark).session
+      val before = compiles
+      clone.range(100000).groupBy((col("id") % 7).as("k"))
+        .agg(sum("id")).collect()
+      compiles - before
+    }
+    aggregateInNewScope()
+    assert(aggregateInNewScope() === 0L,
+      "a second clone recompiled classes the first one already compiled")
+    assert(spark.conf.getOption(isolation) === originIsolation)
   }
 
   test("pageRank returns an empty frame on an empty edge set (no /0)") {
