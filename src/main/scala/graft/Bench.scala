@@ -72,21 +72,7 @@ object Bench {
       graft.llm.Dedup.minhashPairs(docs).count()
       // drop the warmup's persisted shingle/signature frames so they
       // don't occupy cache during the first measured query
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    }
-    // Drop any frames a query persisted so no query's cache taxes its
-    // successors (the dedup/ANN ops persist intermediates that would
-    // otherwise stay pinned for the rest of the session).
-    // catalog.clearCache alone unpersists ASYNCHRONOUSLY — the block
-    // removal then runs inside the next query's measured window
-    // (trivial scan queries alphabetically after the dedup block were
-    // sporadically billed seconds of someone else's cleanup) — so
-    // block on removal and collect the garbage while untimed.
-    def quiesce(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      System.gc()
+      GraftSession.quiesce(spark)
     }
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     // Execute the physical plan and drain every output row. A plain
@@ -109,7 +95,7 @@ object Bench {
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
         None
       }
-      quiesce()
+      GraftSession.quiesce(spark)
       r
     }
     // Single-shot cold timings on this host sporadically absorb a

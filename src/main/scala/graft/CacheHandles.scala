@@ -65,7 +65,7 @@ object CacheHandles {
     * with the data is a scale bug even when today's row count is
     * small). Persists `df`, forces one pass with `count()`, mirrors
     * the handle into the thread's scoped collector (Verify releases
-    * it right after the dump is written; Bench's quiesce() and the
+    * it right after the dump is written; [[GraftSession.quiesce]] and the
     * specs' clearCache cover the rest), and returns the persisted
     * frame. Callers wanting single-partition deterministic order pass
     * `df.coalesce(1).sortWithinPartitions(...)` — the data never

@@ -30,4 +30,19 @@ object GraftSession {
       // dirs behind AND print a best-effort-delete WARN per query
       .config("spark.sql.streaming.forceDeleteTempCheckpointLocation", "true")
       .getOrCreate()
+
+  /** Between two harness queries: drop every frame the last one
+    * persisted, so no query's cache taxes its successors (the
+    * dedup/ANN ops persist intermediates that would otherwise stay
+    * pinned for the rest of the session). catalog.clearCache alone
+    * unpersists ASYNCHRONOUSLY — the block removal then runs inside
+    * the next query's measured window (trivial scan queries
+    * alphabetically after the dedup block were sporadically billed
+    * seconds of someone else's cleanup) — so block on removal and
+    * collect the garbage while untimed. */
+  def quiesce(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    System.gc()
+  }
 }

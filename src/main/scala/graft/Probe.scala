@@ -22,7 +22,7 @@ object Probe {
       } catch { case e: Throwable =>
         println(s"PROBE $n FAILED: ${e.getMessage}")
       }
-      spark.catalog.clearCache()
+      GraftSession.quiesce(spark)
     }
     spark.stop()
   }

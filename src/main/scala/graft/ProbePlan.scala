@@ -25,8 +25,7 @@ object ProbePlan {
         java.nio.file.Paths.get(outDir, s"${n}_$suffix.txt"),
         txt.getBytes("UTF-8"))
       println(s"[plan] $n -> $outDir/${n}_$suffix.txt")
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      GraftSession.quiesce(spark)
     }
     spark.stop()
   }

@@ -143,7 +143,24 @@ object Tables {
   * All staging I/O goes through the Hadoop FileSystem API
   * ([[ready]] resolves the path's own filesystem), so any scheme
   * Spark can write parquet to works unchanged. Precedence: session
-  * conf > environment > local tmpdir. */
+  * conf > environment > local tmpdir.
+  *
+  * STAGED STORES — the one implementation of "build once per
+  * application and corpus, then read" (shared graph/dedup/retrieval
+  * inputs, the incremental operators' history state):
+  *   - one path per (name, key): [[keyed]] keeps a readable slug of
+  *     the key and appends an md5 of the RAW key, so two keys that
+  *     sanitize alike (`/x/sf0.1` vs `/x/sf0_1`) never share a store;
+  *   - built once under a per-path lock ([[once]]): two queries racing
+  *     the same bootstrap cannot double-write one path;
+  *   - ready means the LAST-written artifact's `_SUCCESS` marker, never
+  *     the directory: a build that dies midway leaves the store not
+  *     ready, and the next call rebuilds it (every write is
+  *     mode(overwrite), so re-running a half-finished build is clean);
+  *   - lock order cannot cycle: a store's build may read other stores
+  *     but never itself, so the store graph is acyclic.
+  * Staleness: one application = one corpus snapshot — a store is
+  * never rebuilt while it is ready. */
 object Staging {
   def dir(s: SparkSession, name: String): String = {
     val base = s.conf.getOption("spark.graft.staging.dir")
@@ -153,17 +170,53 @@ object Staging {
     s"$base/${name}_${s.sparkContext.applicationId}"
   }
 
-  /** True iff a bootstrap whose LAST-written parquet artifact lives at
-    * `lastArtifactDir` completed: checks that artifact's _SUCCESS
-    * marker, not the parent state dir — a mid-bootstrap failure (the
-    * first write creates the parent) would otherwise make every later
-    * execution in the application skip the bootstrap and crash on the
-    * missing artifacts. All writes are mode(overwrite), so re-running
-    * a half-finished bootstrap is clean. */
+  /** The store path of (`name`, `key`): injective in the raw key. */
+  def keyed(s: SparkSession, name: String, key: String): String = {
+    val hash = java.security.MessageDigest.getInstance("MD5")
+      .digest(key.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
+    dir(s, s"${name}_${key.replaceAll("[^A-Za-z0-9]", "_")}_$hash")
+  }
+
+  /** True iff the parquet artifact at `lastArtifactDir` was completely
+    * written (its `_SUCCESS` marker exists). */
   def ready(s: SparkSession, lastArtifactDir: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(s"$lastArtifactDir/_SUCCESS")
     p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
   }
+
+  private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** Run `build` unless the store whose LAST-written artifact is
+    * `last` is [[ready]] — under `last`'s lock, so it runs at most once
+    * per application unless it throws. Multi-artifact builds write
+    * `last` after every other artifact. */
+  def once(s: SparkSession, last: String)(build: => Unit): Unit =
+    locks.computeIfAbsent(last, _ => new Object).synchronized {
+      if (!ready(s, last)) build
+    }
+
+  /** A single-frame store: [[once]] writes `plan` to the [[keyed]]
+    * path, then every call reads it back. Frames the plan persists
+    * through the handles it is given are released when the write ends,
+    * thrown or not. */
+  def store(s: SparkSession, name: String, key: String)(
+      plan: CacheHandles => DataFrame): DataFrame = {
+    val path = keyed(s, name, key)
+    once(s, path) {
+      val h = new CacheHandles
+      try plan(h).write.mode("overwrite").parquet(path)
+      finally h.releaseAll()
+    }
+    s.read.parquet(path)
+  }
+
+  /** The history/delta boundary of the incremental operators: rows
+    * with `key` above the cut — the last ~1/8 of the key range — are
+    * "today's delta", the rest is settled history. One min/max job. */
+  def historyCut(df: DataFrame, key: String): Long =
+    df.agg(org.apache.spark.sql.functions.expr(
+      s"max($key) - (max($key) - min($key) + 1) div 8").as("c"))
+      .head().getLong(0)
 }
 
 /** One registered query: Spark builder + optional DuckDB oracle SQL.

@@ -673,8 +673,7 @@ object Curation {
   val curriculumWrite: Q = Q(
     "q_curriculum_write",
     (s, dir) => {
-      val out = graft.Staging.dir(s,
-        "graft_curriculum_layout_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
+      val out = graft.Staging.keyed(s, "graft_curriculum_layout", dir)
       writeCurriculum(curriculumOrdered(s, dir), out, 8)
       s.read.parquet(out)
         .groupBy("bucket")

@@ -227,9 +227,7 @@ object Dbscan {
     (s, dir) => {
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val cut = emb.agg(expr(
-        "max(vec_id) - (max(vec_id) - min(vec_id) + 1) div 8").as("c"))
-        .head().getLong(0)
+      val cut = graft.Staging.historyCut(emb, "vec_id")
       val hist = emb.filter(col("vec_id") <= cut)
       val proto = emb.filter(col("vec_id") === 0).select(col("v")).limit(1)
       val plants = s.range(12)
@@ -237,9 +235,8 @@ object Dbscan {
         .crossJoin(broadcast(proto))
       val delta = emb.filter(col("vec_id") > cut).unionByName(plants)
       val centroids = Ivf.trainCentroidsMemo(s"$dir#dbscan_inc", hist)
-      val stateDir = graft.Staging.dir(s,
-        "graft_dbscan_state_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-      if (!graft.Staging.ready(s, s"$stateDir/pairs")) {
+      val stateDir = graft.Staging.keyed(s, "graft_dbscan_state", dir)
+      graft.Staging.once(s, s"$stateDir/pairs") {
         val histA = hist.withColumn("block",
           Ivf.clusterOf(col("v"), centroids))
         histA.write.mode("overwrite").parquet(s"$stateDir/assign")

@@ -245,9 +245,6 @@ object Dedup {
           (if (mutate) concat(col("text"), lit(" graftplanteddup"))
            else col("text")).as("text")))
 
-  private val minhashStoreLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
   /** Staged PLANTED-MINHASH PAIR STORE: q_dedup_minhash and
     * q_dedup_canonical_minhash verify the IDENTICAL pair list
     * (the planted corpus at the 0.5 threshold) — the
@@ -257,21 +254,10 @@ object Dedup {
     * parquet bit-exactly; both consumers re-assert their own floors
     * on the store read, so a corrupt store still throws. Same
     * staleness contract as [[graft.Staging]]. */
-  def plantedMinhashPairsMemo(s: SparkSession, dir: String): DataFrame = {
-    val path = graft.Staging.dir(s,
-      "graft_mhpairs_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-    val lock = minhashStoreLocks.computeIfAbsent(path, _ => new Object)
-    lock.synchronized {
-      if (!graft.Staging.ready(s, path)) {
-        val handles = new graft.CacheHandles
-        try minhashPairs(withPlanted(t(s, dir, "documents"), mutate = true),
-            handles = handles)
-          .write.mode("overwrite").parquet(path)
-        finally handles.releaseAll()
-      }
-    }
-    s.read.parquet(path)
-  }
+  def plantedMinhashPairsMemo(s: SparkSession, dir: String): DataFrame =
+    graft.Staging.store(s, "graft_mhpairs", dir)(handles =>
+      minhashPairs(withPlanted(t(s, dir, "documents"), mutate = true),
+        handles = handles))
 
   val minhashLsh: Q = Q(
     "q_dedup_minhash",
@@ -548,9 +534,7 @@ object Dedup {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       // deterministic batch boundary: last ~1/8 of documents by id is
       // "today's delta", the rest is settled history
-      val cut = docs.agg(expr(
-        "max(doc_id) - (max(doc_id) - min(doc_id) + 1) div 8").as("c"))
-        .head().getLong(0)
+      val cut = graft.Staging.historyCut(docs, "doc_id")
       def parts(df: DataFrame): DataFrame =
         df.groupBy(md5(col("text").cast("binary")).as("content_hash"))
           .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("dup_cnt"))
@@ -597,13 +581,10 @@ object Dedup {
       // scan job was pure overhead on the warm path.
       val cut = cutCache.getOrElseUpdate(
         s.sparkContext.applicationId + "|" + dir,
-        t(s, dir, "documents").agg(expr(
-          "max(doc_id) - (max(doc_id) - min(doc_id) + 1) div 8").as("c"))
-          .head().getLong(0))
+        graft.Staging.historyCut(t(s, dir, "documents"), "doc_id"))
       val par = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-      val stateDir = graft.Staging.dir(s,
-        "graft_dedup_band_state_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-      if (!graft.Staging.ready(s, s"$stateDir/shingle_sets")) {
+      val stateDir = graft.Staging.keyed(s, "graft_dedup_band_state", dir)
+      graft.Staging.once(s, s"$stateDir/shingle_sets") {
         // first touch per application+corpus: build BOTH state
         // surfaces off one persisted history shingle pass — the band
         // index (16 rows/doc) and the verification shingle-set store
@@ -882,9 +863,8 @@ object Dedup {
   val ccIncremental: Q = Q(
     "q_cc_incremental",
     (s, dir) => {
-      val stateDir = graft.Staging.dir(s,
-        "graft_cc_state_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-      if (!graft.Staging.ready(s, s"$stateDir/labels")) {
+      val stateDir = graft.Staging.keyed(s, "graft_cc_state", dir)
+      graft.Staging.once(s, s"$stateDir/labels") {
         // bootstrap: derive the near-dup graph ONCE, stage labels AND
         // the delta batch — warm runs read state, never re-scoring
         // Jaccard over the corpus (a production delta is an input)
@@ -1154,24 +1134,16 @@ object Dedup {
     (s, dir) => {
       val cut = cutCache.getOrElseUpdate(
         s.sparkContext.applicationId + "|" + dir,
-        t(s, dir, "documents").agg(expr(
-          "max(doc_id) - (max(doc_id) - min(doc_id) + 1) div 8").as("c"))
-          .head().getLong(0))
-      val stateDir = graft.Staging.dir(s,
-        "graft_dedup_simhash_state_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-      if (!graft.Staging.ready(s, stateDir)) {
-        val buildHandles = new graft.CacheHandles
-        simhashSignatures(t(s, dir, "documents")
+        graft.Staging.historyCut(t(s, dir, "documents"), "doc_id"))
+      val state = graft.Staging.store(s, "graft_dedup_simhash_state", dir)(
+        buildHandles => simhashSignatures(t(s, dir, "documents")
           .select(col("doc_id"), col("text")).filter(col("doc_id") <= cut),
-          buildHandles)
-          .write.mode("overwrite").parquet(stateDir)
-        buildHandles.releaseAll()
-      }
+          buildHandles))
       val docs = withPlanted(t(s, dir, "documents"), mutate = false)
       val handles = new graft.CacheHandles
       val deltaSig = simhashSignatures(docs.filter(col("doc_id") > cut), handles)
       val allBands = simhashBands(
-        s.read.parquet(stateDir).unionByName(deltaSig)).alias("l")
+        state.unionByName(deltaSig)).alias("l")
       val deltaBands = simhashBands(deltaSig).alias("r")
       val out = RecallAudit.assertPlantedPairs(
         allBands.join(deltaBands,

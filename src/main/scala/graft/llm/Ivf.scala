@@ -221,26 +221,19 @@ object Ivf {
       val q = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), col("v").as("qv"))
       val par = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-      val cut = emb.agg(expr(
-        "max(vec_id) - (max(vec_id) - min(vec_id) + 1) div 8").as("c"))
-        .head().getLong(0)
+      val cut = graft.Staging.historyCut(emb, "vec_id")
       val hist = emb.filter(col("vec_id") <= cut)
       val centroids = trainCentroidsMemo(s"$dir#annInc", hist)
-      val stateDir = graft.Staging.dir(s,
-        "graft_ivf_postings_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-      val statePath = new org.apache.hadoop.fs.Path(stateDir)
-      val fs = statePath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(statePath))
-        hist.repartition(par)
+      val postings = graft.Staging.store(s, "graft_ivf_postings", dir)(
+        _ => hist.repartition(par)
           .withColumn("cluster", clusterOf(col("v"), centroids))
-          .select("vec_id", "cluster", "v")
-          .write.mode("overwrite").parquet(stateDir)
+          .select("vec_id", "cluster", "v"))
       val planted = q.select((col("query_id") + lit(1000000L)).as("vec_id"),
         col("qv").as("v"))
       val delta = emb.filter(col("vec_id") > cut).unionByName(planted)
         .withColumn("cluster", clusterOf(col("v"), centroids))
         .select("vec_id", "cluster", "v")
-      val assigned = s.read.parquet(stateDir).unionByName(delta)
+      val assigned = postings.unionByName(delta)
       val probes = q.withColumn("cluster",
         explode(probeClusters(col("qv"), centroids, 6)))
       val w = Window.partitionBy("query_id")

@@ -117,12 +117,9 @@ object Retrieval {
     "q_bm25_incremental",
     (s, dir) => {
       val docs = Tables.load(s, dir, "documents")
-      val cut = docs.agg(expr(
-        "max(doc_id) - (max(doc_id) - min(doc_id) + 1) div 8").as("c"))
-        .head().getLong(0)
-      val stateDir = graft.Staging.dir(s,
-        "graft_bm25_state_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-      if (!graft.Staging.ready(s, s"$stateDir/dl")) {
+      val cut = graft.Staging.historyCut(docs, "doc_id")
+      val stateDir = graft.Staging.keyed(s, "graft_bm25_state", dir)
+      graft.Staging.once(s, s"$stateDir/dl") {
         val hist = postings(docs.filter(col("doc_id") <= cut))
         hist.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
           .write.mode("overwrite").parquet(s"$stateDir/tf")
@@ -224,43 +221,29 @@ object Retrieval {
       .select("query_id", "doc_id", "lex_rank")
   }
 
-  private val rankStoreLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** Staging core of the doc-as-query RANKING STORES: both rankers
-    * are pure functions of the corpus, and nine-plus retrieval
-    * queries rebuilt each of them independently (BM25 postings pass /
-    * exact-cosine pass per query) — the [[graft.ops.Graph.coPairs]]
-    * device applied to the retrieval family. Staged once at k = 20
-    * (the family max): rank is a per-query row_number over the FULL
-    * candidate order on both sides, so any smaller caller k is a
-    * prefix FILTER of the staged ranking, row-identical to a direct
-    * smaller-k compute. Rank/id longs round-trip parquet bit-exactly.
-    * Same staleness contract as [[graft.Staging]]. */
-  private def stagedRanking(s: SparkSession, dir: String, name: String)(
-      build: => DataFrame): DataFrame = {
-    val path = graft.Staging.dir(s,
-      s"graft_rank_${name}_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-    val lock = rankStoreLocks.computeIfAbsent(path, _ => new Object)
-    lock.synchronized {
-      if (!graft.Staging.ready(s, path))
-        build.write.mode("overwrite").parquet(path)
-    }
-    s.read.parquet(path)
-  }
+  // The doc-as-query RANKING STORES: both rankers
+  // are pure functions of the corpus, and nine-plus retrieval
+  // queries rebuilt each of them independently (BM25 postings pass /
+  // exact-cosine pass per query) — the [[graft.ops.Graph.coPairs]]
+  // device applied to the retrieval family. Staged once at k = 20
+  // (the family max): rank is a per-query row_number over the FULL
+  // candidate order on both sides, so any smaller caller k is a
+  // prefix FILTER of the staged ranking, row-identical to a direct
+  // smaller-k compute. Rank/id longs round-trip parquet bit-exactly.
+  // Same staleness contract as [[graft.Staging]].
 
   /** Store-backed [[lexRanked]] (k ≤ 20). */
   def lexRankedMemo(s: SparkSession, dir: String, k: Int): DataFrame = {
     require(k <= 20, s"ranking store is staged at k=20, asked $k")
-    stagedRanking(s, dir, "lex20")(
-      lexRanked(s, Tables.load(s, dir, "documents"), 20))
+    graft.Staging.store(s, "graft_rank_lex20", dir)(
+      _ => lexRanked(s, Tables.load(s, dir, "documents"), 20))
       .filter(col("lex_rank") <= k)
   }
 
   /** Store-backed [[denseRanked]] (k ≤ 20). */
   def denseRankedMemo(s: SparkSession, dir: String, k: Int): DataFrame = {
     require(k <= 20, s"ranking store is staged at k=20, asked $k")
-    stagedRanking(s, dir, "dense20")(denseRanked(s, dir, 20))
+    graft.Staging.store(s, "graft_rank_dense20", dir)(_ => denseRanked(s, dir, 20))
       .filter(col("dense_rank") <= k)
   }
 

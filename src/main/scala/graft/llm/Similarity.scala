@@ -445,11 +445,6 @@ object Similarity {
       .orderBy("vec_a", "vec_b")
   }
 
-  /** Per-application locks so two queries racing the SAME pair-store
-    * bootstrap cannot double-write one staging path. */
-  private val pairStoreLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
   /** Staging-backed ε-pair store: the blocked quadratic join is the
     * dominant cost of every dbscan-family query, and three of them
     * (q_dbscan, q_cluster_stability, q_facility_select) run it on the
@@ -467,30 +462,14 @@ object Similarity {
     * one application = one corpus snapshot. */
   def pairStoreMemo(s: org.apache.spark.sql.SparkSession, tag: String,
       minSim: Double, corpus: => DataFrame,
-      centroids: => Array[Array[Double]]): DataFrame = {
-    // the path must be INJECTIVE in (tag, minSim): sanitization alone
-    // can collide two raw tags ("a/b" vs "a_b"), and a caller passing
-    // a different threshold under a colliding name would silently
-    // read pairs computed at the other threshold — so the directory
-    // name carries an md5 of the raw tag plus the exact threshold in
-    // permille (thresholds here are 2-decimal constants)
-    val simKey = math.round(minSim * 1000).toString
-    val tagHash = java.security.MessageDigest.getInstance("MD5")
-      .digest(tag.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-    val path = graft.Staging.dir(s,
-      "graft_pairs_" + tag.replaceAll("[^A-Za-z0-9]", "_") +
-        s"_${tagHash}_s$simKey")
-    val lock = pairStoreLocks.computeIfAbsent(path, _ => new Object)
-    lock.synchronized {
-      if (!graft.Staging.ready(s, path)) {
-        val h = new graft.CacheHandles
-        try clusterNearDupPairs(corpus, centroids, minSim, handles = h)
-          .write.mode("overwrite").parquet(path)
-        finally h.releaseAll()
-      }
-    }
-    s.read.parquet(path)
-  }
+      centroids: => Array[Array[Double]]): DataFrame =
+    // the path must be INJECTIVE in (tag, minSim): a caller passing a
+    // different threshold under the same tag would otherwise silently
+    // read pairs computed at the other threshold — so the store name
+    // carries the exact threshold in permille (thresholds here are
+    // 2-decimal constants)
+    graft.Staging.store(s, s"graft_pairs_s${math.round(minSim * 1000)}", tag)(
+      h => clusterNearDupPairs(corpus, centroids, minSim, handles = h))
 
   /** Driver query for [[clusterNearDupPairs]]: same planted-copy
     * scheme as [[embedDedup]] (5 exact duplicates at ids 1M+), so the
@@ -731,9 +710,7 @@ object Similarity {
     "q_gram_incremental",
     (s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val cut = emb.agg(expr(
-        "max(vec_id) - (max(vec_id) - min(vec_id) + 1) div 8").as("c"))
-        .head().getLong(0)
+      val cut = graft.Staging.historyCut(emb, "vec_id")
       val quant = transform(col("embedding").cast("array<double>"),
         x => round(x * 1000000.0, 0).cast("long"))
       def gramOf(df: DataFrame): DataFrame =
@@ -742,13 +719,8 @@ object Similarity {
           .select(explode(col("g")).as("c"))
           .select(col("c.i").as("i"), col("c.j").as("j"),
             col("c.n").as("n"), col("c.s").as("s"))
-      val stateDir = graft.Staging.dir(s,
-        "graft_gram_state_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-      if (!graft.Staging.ready(s, stateDir)) {
-        gramOf(emb.filter(col("vec_id") <= cut))
-          .write.mode("overwrite").parquet(stateDir)
-      }
-      s.read.parquet(stateDir)
+      graft.Staging.store(s, "graft_gram_state", dir)(
+          _ => gramOf(emb.filter(col("vec_id") <= cut)))
         .unionByName(gramOf(emb.filter(col("vec_id") > cut)))
         .groupBy("i", "j")
         .agg(sum(col("n")).as("n"), sum(col("s")).as("gram_micro2"))

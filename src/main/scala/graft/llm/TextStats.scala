@@ -292,9 +292,6 @@ object TextStats {
       .distinct()
   }
 
-  private val winnowStoreLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
   /** STAGED CORPUS WINNOWING-FINGERPRINT STORE — the winnowing
     * substrate computed ONCE per application and parquet-staged (the
     * [[graft.ops.Graph.coPairs]] / [[graft.llm.Similarity]] staging
@@ -318,18 +315,10 @@ object TextStats {
     * DuckDB oracles recompute the selection from scratch, proving
     * the staging invisible. Same staleness contract as
     * [[graft.Staging]]: one application = one corpus snapshot. */
-  private def winnowStore(s: SparkSession, dir: String): DataFrame = {
-    val path = graft.Staging.dir(s,
-      "graft_winnowfp_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-    val lock = winnowStoreLocks.computeIfAbsent(path, _ => new Object)
-    lock.synchronized {
-      if (!graft.Staging.ready(s, path))
-        winnowSelect(t(s, dir, "documents").select(col("doc_id"), col("text")))
-          .select(col("doc_id"), col("gpos").as("pos"), col("ghash"))
-          .write.mode("overwrite").parquet(path)
-    }
-    s.read.parquet(path)
-  }
+  private def winnowStore(s: SparkSession, dir: String): DataFrame =
+    graft.Staging.store(s, "graft_winnowfp", dir)(
+      _ => winnowSelect(t(s, dir, "documents").select(col("doc_id"), col("text")))
+        .select(col("doc_id"), col("gpos").as("pos"), col("ghash")))
 
   /** Driver query: per-document winnowing census — gram count, window
     * count, selected-fingerprint count, xor digest of the selected
@@ -743,9 +732,6 @@ object TextStats {
       LEFT JOIN perdoc ON perdoc.ed = etot.ed
       ORDER BY eval_doc"""))
 
-  private val evalFpStoreLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
   /** BATCH DECONTAMINATION — the INCREMENTAL direction of
     * [[contamination]], and the operator a production crawl pipeline
     * actually runs per ingest batch: the held-out eval set is FIXED,
@@ -792,25 +778,18 @@ object TextStats {
       val evalDocs = docs.filter(col("doc_id") % 17 === 0)
       val offset = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
       val store = winnowStore(s, dir)
-      val path = graft.Staging.dir(s,
-        "graft_evalfp_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-      val lock = evalFpStoreLocks.computeIfAbsent(path, _ => new Object)
-      lock.synchronized {
-        if (!graft.Staging.ready(s, path)) {
-          val evfp0 = store.filter(col("doc_id") % 17 === 0)
-          val cap = math.max(10L,
-            evfp0.agg(countDistinct(col("doc_id"))).head().getLong(0) / 10L)
-          val rare = evfp0.groupBy("ghash")
-            .agg(countDistinct(col("doc_id")).as("df"))
-            .filter(col("df") <= cap)
-            .select("ghash")
-          evfp0.join(rare, Seq("ghash"), "left_semi")
-            .select(col("doc_id").as("eval_doc"), col("pos").as("pe"),
-              col("ghash"))
-            .write.mode("overwrite").parquet(path)
-        }
+      val evalStore = graft.Staging.store(s, "graft_evalfp", dir) { _ =>
+        val evfp0 = store.filter(col("doc_id") % 17 === 0)
+        val cap = math.max(10L,
+          evfp0.agg(countDistinct(col("doc_id"))).head().getLong(0) / 10L)
+        val rare = evfp0.groupBy("ghash")
+          .agg(countDistinct(col("doc_id")).as("df"))
+          .filter(col("df") <= cap)
+          .select("ghash")
+        evfp0.join(rare, Seq("ghash"), "left_semi")
+          .select(col("doc_id").as("eval_doc"), col("pos").as("pe"),
+            col("ghash"))
       }
-      val evalStore = s.read.parquet(path)
       val srcId = evalDocs
         .orderBy(size(split(trim(col("text")), "\\s+")).desc, col("doc_id").asc)
         .limit(1).select(col("doc_id")).head().getLong(0)

@@ -93,12 +93,6 @@ object Graph {
   private def bk(dir: String, window: String): DataFrame => DataFrame =
     op => checkedBasket(op, s"$dir|$window")
 
-  /** Per-application locks so two queries racing the SAME co-purchase
-    * store bootstrap cannot double-write one staging path (same device
-    * as [[graft.llm.Similarity.pairStoreMemo]]). */
-  private val coStoreLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
   /** STAGED CO-PURCHASE PAIR STORE — the graph family's shared input.
     * Thirteen queries build the identical frame: lineitem windowed to
     * a pinned ship-date slice, distinct (order, part), self-joined on
@@ -155,16 +149,9 @@ object Graph {
       .agg(count(lit(1)).as("co"))
   }
 
-  def coPairs(s: SparkSession, dir: String, window: String): DataFrame = {
-    val path = graft.Staging.dir(s,
-      s"graft_coedges_${window}_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-    val lock = coStoreLocks.computeIfAbsent(path, _ => new Object)
-    lock.synchronized {
-      if (!graft.Staging.ready(s, path))
-        coPairsBuildPlan(s, dir, window).write.mode("overwrite").parquet(path)
-    }
-    s.read.parquet(path)
-  }
+  def coPairs(s: SparkSession, dir: String, window: String): DataFrame =
+    graft.Staging.store(s, s"graft_coedges_$window", dir)(
+      _ => coPairsBuildPlan(s, dir, window))
 
   /** Distinct canonical undirected co-purchase edges `(u, v)`, u < v,
     * from the staged store — the input shape most graph queries use. */
@@ -179,30 +166,22 @@ object Graph {
     * per-level-round demos' sparser slice) are staged separately,
     * same device and staleness contract as [[coPairs]]. Consumers
     * apply their own vertex encodings (2k / 2k+1) on the store scan. */
-  def csPairs(s: SparkSession, dir: String, window: String): DataFrame = {
-    val path = graft.Staging.dir(s,
-      s"graft_csedges_${window}_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-    val lock = coStoreLocks.computeIfAbsent(path, _ => new Object)
-    lock.synchronized {
-      if (!graft.Staging.ready(s, path)) {
-        val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-        val base = t(s, dir, "lineitem")
-        val l = window match {
-          case "all" => base.select(col("l_orderkey"), col("l_suppkey"))
-          case "m1" => base
-            .filter(col("l_shipdate") >= lit("1995-01-01") &&
-              col("l_shipdate") < lit("1995-02-01"))
-            .select(col("l_orderkey"), col("l_suppkey"))
-          case other => throw new IllegalArgumentException(
-            s"unknown customer-supplier window tag '$other'")
-        }
-        l.join(o, col("l_orderkey") === col("o_orderkey"))
-          .select(col("o_custkey").as("c"), col("l_suppkey").as("p")).distinct()
-          .write.mode("overwrite").parquet(path)
+  def csPairs(s: SparkSession, dir: String, window: String): DataFrame =
+    graft.Staging.store(s, s"graft_csedges_$window", dir) { _ =>
+      val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
+      val base = t(s, dir, "lineitem")
+      val l = window match {
+        case "all" => base.select(col("l_orderkey"), col("l_suppkey"))
+        case "m1" => base
+          .filter(col("l_shipdate") >= lit("1995-01-01") &&
+            col("l_shipdate") < lit("1995-02-01"))
+          .select(col("l_orderkey"), col("l_suppkey"))
+        case other => throw new IllegalArgumentException(
+          s"unknown customer-supplier window tag '$other'")
       }
+      l.join(o, col("l_orderkey") === col("o_orderkey"))
+        .select(col("o_custkey").as("c"), col("l_suppkey").as("p")).distinct()
     }
-    s.read.parquet(path)
-  }
 
   /** Staged TEMPORAL co-purchase edges `(u, v, t)` for the pinned 2y
     * window — the (u, v) pair plus the order date (days since
@@ -210,29 +189,21 @@ object Graph {
     * co store can't serve this (it collapsed the order dimension), but
     * the same three-query rebuild argument applies to the temporal
     * family (reach / katz / motifs), so it gets its own store. */
-  def temporalEdges(s: SparkSession, dir: String): DataFrame = {
-    val path = graft.Staging.dir(s,
-      "graft_tedges_2y_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-    val lock = coStoreLocks.computeIfAbsent(path, _ => new Object)
-    lock.synchronized {
-      if (!graft.Staging.ready(s, path)) {
-        val op = t(s, dir, "lineitem")
-          .where(col("l_shipdate") >= lit("1995-01-01").cast("timestamp") &&
-            col("l_shipdate") < lit("1997-01-01").cast("timestamp"))
-          .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-          .transform(bk(dir, "2y"))
-        val ord = t(s, dir, "orders").select(col("o_orderkey").as("o"),
-          datediff(to_date(col("o_orderdate")),
-            lit(java.sql.Date.valueOf("1995-01-01"))).cast("long").as("t"))
-        op.as("a").join(op.as("b"),
-            col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-          .join(ord, "o")
-          .select(col("a.p").as("u"), col("b.p").as("v"), col("t")).distinct()
-          .write.mode("overwrite").parquet(path)
-      }
+  def temporalEdges(s: SparkSession, dir: String): DataFrame =
+    graft.Staging.store(s, "graft_tedges_2y", dir) { _ =>
+      val op = t(s, dir, "lineitem")
+        .where(col("l_shipdate") >= lit("1995-01-01").cast("timestamp") &&
+          col("l_shipdate") < lit("1997-01-01").cast("timestamp"))
+        .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
+        .transform(bk(dir, "2y"))
+      val ord = t(s, dir, "orders").select(col("o_orderkey").as("o"),
+        datediff(to_date(col("o_orderdate")),
+          lit(java.sql.Date.valueOf("1995-01-01"))).cast("long").as("t"))
+      op.as("a").join(op.as("b"),
+          col("a.o") === col("b.o") && col("a.p") < col("b.p"))
+        .join(ord, "o")
+        .select(col("a.p").as("u"), col("b.p").as("v"), col("t")).distinct()
     }
-    s.read.parquet(path)
-  }
 
   /** PageRank (d = 0.85, 5 iterations) over the bipartite
     * customer↔supplier purchase graph: an edge per distinct
@@ -720,9 +691,8 @@ object Graph {
   val shortestPathIncremental: Q = Q(
     "q_bfs_incremental",
     (s, dir) => {
-      val stateDir = graft.Staging.dir(s,
-        "graft_bfs_state_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-      if (!graft.Staging.ready(s, s"$stateDir/dist")) {
+      val stateDir = graft.Staging.keyed(s, "graft_bfs_state", dir)
+      graft.Staging.once(s, s"$stateDir/dist") {
         val und = coEdges(s, dir, "2y")
         val hist = und.filter((col("u") * 131 + col("v")) % 2048 =!= 7)
         val delta = und.filter((col("u") * 131 + col("v")) % 2048 === 7)
@@ -985,9 +955,8 @@ object Graph {
   val labelPropIncremental: Q = Q(
     "q_label_prop_incremental",
     (s, dir) => {
-      val stateDir = graft.Staging.dir(s,
-        "graft_labelprop_state_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-      if (!graft.Staging.ready(s, s"$stateDir/traj")) {
+      val stateDir = graft.Staging.keyed(s, "graft_labelprop_state", dir)
+      graft.Staging.once(s, s"$stateDir/traj") {
         val cs = csPairs(s, dir, "all")
         val hist = cs.filter((col("c") * 131 + col("p")) % 2048 =!= 7)
         val delta = cs.filter((col("c") * 131 + col("p")) % 2048 === 7)
@@ -1296,9 +1265,8 @@ object Graph {
   val pagerankIncremental: Q = Q(
     "q_pagerank_incremental",
     (s, dir) => {
-      val stateDir = graft.Staging.dir(s,
-        "graft_pagerank_state_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-      if (!graft.Staging.ready(s, s"$stateDir/deg")) {
+      val stateDir = graft.Staging.keyed(s, "graft_pagerank_state", dir)
+      graft.Staging.once(s, s"$stateDir/deg") {
         // the `p1 ≠ p2` directed pair counts are the canonical store
         // emitted symmetrically: co(x,y) = co(y,x) = the unordered
         // pair's order count, so the union is row-identical to the

@@ -258,8 +258,7 @@ object Ingest {
   val dsv2Write: Q = Q(
     "q_dsv2_write",
     (s, dir) => {
-      val out = graft.Staging.dir(s,
-        "graft_dsv2_write_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
+      val out = graft.Staging.keyed(s, "graft_dsv2_write", dir)
       // recursive clean: a stale non-empty _staging_<oldQueryId> dir
       // left by a hard-killed prior run would survive a flat delete
       // and then falsely trip the staging-dir audit below

@@ -36,9 +36,6 @@ object Itemsets {
 
   private val big = lit(100000) // slice length bound > any basket size
 
-  private val basketStoreLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
   /** Staged BRAND-BASKET STORE `(l_orderkey, items)` — the shared
     * input all three itemset-family queries build identically
     * (lineitem ⋈ broadcast(part) → per-order sorted distinct brand
@@ -50,23 +47,15 @@ object Itemsets {
     * filters the store by orderkey — baskets are per-order, so
     * filtering staged baskets equals basket-building filtered rows.
     * Same staleness contract as [[graft.Staging]]. */
-  def brandBaskets(s: SparkSession, dir: String): DataFrame = {
-    val path = graft.Staging.dir(s,
-      "graft_baskets_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-    val lock = basketStoreLocks.computeIfAbsent(path, _ => new Object)
-    lock.synchronized {
-      if (!graft.Staging.ready(s, path)) {
-        val part = t(s, dir, "part").select(col("p_partkey"), col("p_brand"))
-        t(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_partkey"))
-          .join(broadcast(part), col("l_partkey") === col("p_partkey"))
-          .groupBy(col("l_orderkey"))
-          .agg(sort_array(collect_set(col("p_brand"))).as("items"))
-          .write.mode("overwrite").parquet(path)
-      }
+  def brandBaskets(s: SparkSession, dir: String): DataFrame =
+    graft.Staging.store(s, "graft_baskets", dir) { _ =>
+      val part = t(s, dir, "part").select(col("p_partkey"), col("p_brand"))
+      t(s, dir, "lineitem")
+        .select(col("l_orderkey"), col("l_partkey"))
+        .join(broadcast(part), col("l_partkey") === col("p_partkey"))
+        .groupBy(col("l_orderkey"))
+        .agg(sort_array(collect_set(col("p_brand"))).as("items"))
     }
-    s.read.parquet(path)
-  }
 
   /** All ordered (a<b) in-row pairs of a sorted array column. */
   private[graft] def pairsOf(items: Column): Column =
@@ -201,9 +190,7 @@ object Itemsets {
       // is the same min/max arithmetic (every lineitem order has a
       // basket row, so the orderkey extremes are preserved)
       val baskets = brandBaskets(s, dir)
-      val cut = baskets.agg(expr(
-        "max(l_orderkey) - (max(l_orderkey) - min(l_orderkey) + 1) div 8").as("c"))
-        .head().getLong(0)
+      val cut = graft.Staging.historyCut(baskets, "l_orderkey")
       val stateDir = graft.Staging.dir(s, "graft_itemset_state")
       countsOf(baskets.filter(col("l_orderkey") <= cut))
         .write.mode("overwrite").parquet(stateDir)

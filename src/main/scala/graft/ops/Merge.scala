@@ -153,9 +153,7 @@ object Merge {
         .select(col("event_type"), col("event_id"), cents.as("cents"))
       // deterministic batch boundary: last ~1/8 of events by id is
       // "today's delta", the rest is settled history
-      val cut = ev.agg(expr(
-        "max(event_id) - (max(event_id) - min(event_id) + 1) div 8").as("c"))
-        .head().getLong(0)
+      val cut = graft.Staging.historyCut(ev, "event_id")
       def parts(df: DataFrame): DataFrame =
         df.groupBy("event_type").agg(
           count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),

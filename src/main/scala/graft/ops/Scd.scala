@@ -367,11 +367,8 @@ object Scd {
         .agg(sum(round(col("o_totalprice") * 100, 0).cast("long")).as("value"))
         .withColumn("tx_from", col("valid_from") + 1)
         .select("key", "valid_from", "tx_from", "value")
-      val storeDir = graft.Staging.dir(s,
-        "graft_bitemporal_store_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-      if (!graft.Staging.ready(s, storeDir))
-        bitemporal(facts).write.mode("overwrite").parquet(storeDir)
-      val base = s.read.parquet(storeDir)
+      val base = graft.Staging.store(s, "graft_bitemporal_store", dir)(
+        _ => bitemporal(facts))
       def corrections(m: Long, txAt: Long, addCents: Long,
           hexPos: Int, pct: Int) =
         facts.filter(col("valid_from") === m &&

@@ -775,7 +775,8 @@ object EventStream {
     * double-processing doubles them) plus the keep-latest row per
     * user (the CDC-merge view), hash-checked against the batch twin.
     *
-    * The source is staged only if absent, so a re-invocation in the
+    * The source is staged once ([[graft.Staging.once]]: a half-written
+    * stage is rebuilt, a complete one kept), so a re-invocation in the
     * same app is a genuine no-op restart (new staged files would look
     * like new data — correct streaming behavior, but then the run
     * would not be testing recovery). */
@@ -788,10 +789,8 @@ object EventStream {
       val stage = stagePath(s, "graft_stream_merge_src")
       val target = stagePath(s, "graft_stream_merge_tgt")
       val ckpt = stagePath(s, "graft_stream_merge_ckpt")
-      val stageP = new org.apache.hadoop.fs.Path(stage)
-      val fs = stageP.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(stageP))
-        ev.repartition(8).write.mode("overwrite").parquet(stage)
+      graft.Staging.once(s, stage)(
+        ev.repartition(8).write.mode("overwrite").parquet(stage))
       val local = graft.Checkpoints.Scope(s, 4).session
       val writeBatch: (DataFrame, Long) => Unit =
         (batch, id) => batch.write.mode("overwrite").parquet(s"$target/batch=$id")

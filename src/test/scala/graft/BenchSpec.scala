@@ -2,8 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the bench total rule: a failed query has no time, so any
-  * failure voids the total instead of counting as 0 s. */
+/** Pins the harness rules: a failed query has no time, so any
+  * failure voids the bench total instead of counting as 0 s; and
+  * Verify's heavy list names only registered queries. */
 class BenchSpec extends AnyFunSuite {
   test("total is the median of the per-pass totals") {
     val passes = Seq(Seq(Some(1.0), Some(2.0)), Seq(Some(5.0), Some(5.0)),
@@ -16,5 +17,10 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.total(Seq(Seq(Some(1.0), None), ok, ok)) === None)
     assert(Bench.total(Seq(ok, ok, Seq(None, Some(2.0)))) === None)
     assert(Bench.total(Seq(Seq(None))) === None)
+  }
+
+  test("every query on Verify's heavy list is registered") {
+    val unknown = Verify.heavySet -- SparkEntry.registry.map(_.name)
+    assert(unknown.isEmpty, s"renamed or removed heavy queries: $unknown")
   }
 }

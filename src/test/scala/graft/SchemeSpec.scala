@@ -105,4 +105,81 @@ class SchemeSpec extends SparkSpec {
       assert(Staging.dir(spark, "x").startsWith(expectedBase))
     }
   }
+
+  /** Runs `body` with the staging base on a fresh graftfs directory, so
+    * every store path is new to this application. */
+  private def withFreshStaging[A](body: => A): A = withGraftFs { base =>
+    spark.conf.set("spark.graft.staging.dir", s"$base/staged")
+    try body finally spark.conf.unset("spark.graft.staging.dir")
+  }
+
+  private def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+    df.collect().map(_.getLong(0)).toSeq.sorted
+
+  test("a store whose build died midway is not ready and is rebuilt") {
+    withFreshStaging {
+      val path = Staging.keyed(spark, "graft_spec_half", "k")
+      var builds = 0
+      // the write job fails on its last row: tasks may have written
+      // part files, and the store directory exists, but no _SUCCESS
+      val err = intercept[Exception] {
+        Staging.store(spark, "graft_spec_half", "k") { _ =>
+          builds += 1
+          spark.range(0, 100, 1, 4).select(
+            when(col("id") === 99, raise_error(lit("build died")))
+              .otherwise(col("id")).as("id"))
+        }
+      }
+      assert(err.getMessage.contains("build died"), err.getMessage)
+      val p = new org.apache.hadoop.fs.Path(path)
+      assert(p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p),
+        "the failed write must leave the store directory behind")
+      assert(!Staging.ready(spark, path))
+      val back = Staging.store(spark, "graft_spec_half", "k") { _ =>
+        builds += 1
+        spark.range(0, 100, 1, 4).toDF("id")
+      }
+      assert(builds === 2)
+      assert(Staging.ready(spark, path))
+      assert(ids(back) === (0L until 100L))
+    }
+  }
+
+  test("store paths are injective in the raw key") {
+    withFreshStaging {
+      // both keys sanitize to the same slug
+      val (k1, k2) = ("/x/sf0.1", "/x/sf0_1")
+      assert(Staging.keyed(spark, "graft_spec_keyed", k1) !=
+        Staging.keyed(spark, "graft_spec_keyed", k2))
+      val a = Staging.store(spark, "graft_spec_keyed", k1)(_ => spark.range(0, 3).toDF("id"))
+      val b = Staging.store(spark, "graft_spec_keyed", k2)(_ => spark.range(10, 12).toDF("id"))
+      assert(ids(a) === Seq(0L, 1L, 2L))
+      assert(ids(b) === Seq(10L, 11L))
+    }
+  }
+
+  test("two threads staging one key build it exactly once") {
+    withFreshStaging {
+      val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val rows = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Long]]()
+      val threads = (1 to 2).map { _ =>
+        new Thread(() => {
+          start.await()
+          rows.add(ids(Staging.store(spark, "graft_spec_race", "k") { _ =>
+            builds.incrementAndGet()
+            // hold the build open so the other thread arrives mid-build
+            Thread.sleep(300)
+            spark.range(0, 5).toDF("id")
+          }))
+        })
+      }
+      threads.foreach(_.start())
+      start.countDown()
+      threads.foreach(_.join(60000))
+      assert(builds.get === 1)
+      assert(rows.size === 2)
+      rows.forEach(r => assert(r === (0L until 5L)))
+    }
+  }
 }
