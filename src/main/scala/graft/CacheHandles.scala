@@ -1,90 +1,77 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
 
-/** Collector for persisted INTERMEDIATE frames whose release must wait
-  * until the caller materializes the returned lazy plan.
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.storage.StorageLevel
+
+/** The one cache lifecycle: the only code that persists a frame, and
+  * the thread's scopes are the only owners that release one.
   *
-  * The dedup/ANN library functions persist mid-pipeline frames
-  * (shingle tables, signatures, cluster assignments) that the
-  * returned DataFrame still references — unpersisting inside the
-  * function would evict the cache before the first job runs. Each
-  * such function takes a `CacheHandles` (defaulting to a fresh,
-  * never-released one) and `track`s every persist; query bodies that
-  * materialize their result in-query (the [[llm.RecallAudit]] floor
-  * asserts) then call [[releaseAll]] so a long-lived application
-  * doesn't accumulate one corpus-sized cache entry per invocation.
-  * Callers that skip release (the ScalaTest suites, ad-hoc use) fall
-  * back to the harness contract: Bench/Verify `clearCache()` after
-  * each query materializes.
-  */
-final class CacheHandles {
-  private val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  /** Register a persisted frame for deferred release; returns it.
-    * Also mirrors the frame into the thread's active [[CacheHandles
-    * .scoped]] collector (if one is open) so a harness can release
-    * everything a query persisted without plumbing handles through
-    * every call signature. */
-  def track(df: DataFrame): DataFrame = synchronized {
-    tracked += df
-    CacheHandles.mirror(df)
-    df
-  }
-
-  /** Unpersist every tracked frame (lazy, safe to call once the
-    * caller's result is materialized) and forget them. */
-  def releaseAll(): Unit = synchronized {
-    tracked.foreach(_.unpersist())
-    tracked.clear()
-  }
-}
-
-/** Thread-scoped collector: `scoped { ... }` releases every frame any
-  * CacheHandles on THIS thread tracked inside the block, regardless of
-  * whether the query body called releaseAll itself (unpersisting an
-  * already-unpersisted frame is a no-op). This is the Verify worker's
-  * per-query cleanup (ADVICE r13: the RW-locked clearCache may never
-  * win its tryLock under a saturated pool, so persisted frames used to
-  * accumulate for the whole run) — clearCache stays as a backstop for
-  * frames persisted OUTSIDE any handles (direct .persist() calls).
-  * Query bodies run single-threaded on their worker, so a plain
-  * ThreadLocal scopes correctly; memoized stores released here simply
-  * recompute on next use (correctness is persist-independent). */
+  * The contract:
+  *   - [[keep]] persists at `MEMORY_AND_DISK` (the one storage-level
+  *     decision) and registers the frame with the innermost [[scoped]]
+  *     block open on THIS thread.
+  *   - [[scoped]] releases everything kept inside it when the block
+  *     ends, returned or thrown. Close it where the result that reads
+  *     those frames has been materialized (a collect, a count, a write,
+  *     an in-query assert) — a lazy plan returned past the close would
+  *     recompute them. A kept frame the block RETURNS is not released:
+  *     it passes to the enclosing scope, so an audit that keeps and
+  *     materializes its result can hand it on while its inputs go.
+  *   - [[seal]] is that hand-on for key-linear OUTPUTS: it keeps the
+  *     body's result, materializes it on the executors (one count,
+  *     never a driver hop), releases what the body kept, and passes
+  *     the result to the enclosing scope.
+  *   - A frame kept with no scope open has no owner; the harness's
+  *     between-query [[GraftSession.quiesce]] releases it. Verify runs
+  *     each query inside [[scoped]], so nothing a query keeps outlives
+  *     its dump.
+  *   - Scopes are per-thread: query bodies run on one thread, and a
+  *     frame kept on another thread (a `Future`) has no owner.
+  *   - Loop-round frames may still be released early with `unpersist()`
+  *     (a no-op when the scope repeats it). Correctness never depends
+  *     on a frame being cached — a released frame recomputes. */
 object CacheHandles {
-  private val active = new ThreadLocal[scala.collection.mutable.ArrayBuffer[DataFrame]]
+  private val open = new ThreadLocal[mutable.ArrayBuffer[Dataset[_]]]
 
-  private def mirror(df: DataFrame): Unit = {
-    val buf = active.get()
-    if (buf != null) buf += df
+  private def own[T](ds: Dataset[T]): Dataset[T] = {
+    val kept = open.get()
+    if (kept != null) kept += ds
+    ds
   }
 
-  /** Materialize a query OUTPUT distributed-side so its persisted
-    * parents can be released — WITHOUT the collect-and-reparallelize
-    * round-trip (VERDICT r14 item 2: a driver hop that grows linearly
-    * with the data is a scale bug even when today's row count is
-    * small). Persists `df`, forces one pass with `count()`, mirrors
-    * the handle into the thread's scoped collector (Verify releases
-    * it right after the dump is written; [[GraftSession.quiesce]] and the
-    * specs' clearCache cover the rest), and returns the persisted
-    * frame. Callers wanting single-partition deterministic order pass
-    * `df.coalesce(1).sortWithinPartitions(...)` — the data never
-    * visits the driver. */
-  def sealOutput(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    mirror(p)
-    p.count()
-    p
-  }
+  /** Persist `ds` at `MEMORY_AND_DISK` and register it with the
+    * innermost open [[scoped]] block on this thread; returns it. */
+  def keep[T](ds: Dataset[T]): Dataset[T] =
+    own(ds.persist(StorageLevel.MEMORY_AND_DISK))
 
+  /** Run `body`, then release every frame kept inside it — except a
+    * kept frame that `body` returns, which passes to the enclosing
+    * scope. */
   def scoped[T](body: => T): T = {
-    val prev = active.get()
-    val buf = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    active.set(buf)
-    try body
+    val outer = open.get()
+    val kept = mutable.ArrayBuffer.empty[Dataset[_]]
+    open.set(kept)
+    var result: Any = null
+    try { result = body; result.asInstanceOf[T] }
     finally {
-      active.set(prev)
-      buf.foreach(df => try df.unpersist() catch { case _: Throwable => () })
+      open.set(outer)
+      kept.foreach {
+        case ds if ds eq result.asInstanceOf[AnyRef] => own(ds)
+        case ds => try ds.unpersist() catch { case _: Throwable => () }
+      }
     }
+  }
+
+  /** Keep the output `body` returns and materialize it on the
+    * executors with one count (never a driver hop), then release what
+    * `body` kept; the output passes to the enclosing scope. Callers
+    * wanting single-partition deterministic order pass
+    * `df.coalesce(1).sortWithinPartitions(...)`. */
+  def seal(body: => DataFrame): DataFrame = scoped {
+    val out = keep(body)
+    out.count()
+    out
   }
 }

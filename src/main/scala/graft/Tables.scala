@@ -196,16 +196,13 @@ object Staging {
     }
 
   /** A single-frame store: [[once]] writes `plan` to the [[keyed]]
-    * path, then every call reads it back. Frames the plan persists
-    * through the handles it is given are released when the write ends,
-    * thrown or not. */
+    * path, then every call reads it back. Frames the plan keeps are
+    * released when the write ends, thrown or not. */
   def store(s: SparkSession, name: String, key: String)(
-      plan: CacheHandles => DataFrame): DataFrame = {
+      plan: => DataFrame): DataFrame = {
     val path = keyed(s, name, key)
     once(s, path) {
-      val h = new CacheHandles
-      try plan(h).write.mode("overwrite").parquet(path)
-      finally h.releaseAll()
+      CacheHandles.scoped(plan.write.mode("overwrite").parquet(path))
     }
     s.read.parquet(path)
   }

@@ -4,7 +4,7 @@ import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
-  * Queries run on a bounded WORKER POOL (default 4, env
+  * Queries run on a bounded WORKER POOL (default 3, env
   * SPARK_GRAFT_VERIFY_THREADS) — the per-query cost at sf0.01 is
   * dominated by job-scheduling fixed cost, not data, so overlapping
   * queries cuts the wall clock ~3× without changing any result. Each
@@ -19,7 +19,12 @@ import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit}
   * untouched: results never depend on what runs beside them
   * (md5-derandomized coins, pinned as-of dates — the SURVEY §5
   * contract), and cache eviction mid-run only ever causes recompute
-  * of the same values.
+  * of the same values. Each query runs inside its worker's
+  * [[CacheHandles.scoped]], so every frame it keeps is released once
+  * its dump is written; after the pool drains, the number of plans
+  * still cached is printed as `[verify] cached plans left: N` (0
+  * unless a frame was kept with no scope open, e.g. off the query's
+  * thread).
   */
 object Verify {
   /** The memory-heavy queries (besides `q_stream_*`) that take the
@@ -60,18 +65,6 @@ object Verify {
     val heavyPermit = new java.util.concurrent.Semaphore(1)
     def isHeavy(name: String): Boolean =
       name.startsWith("q_stream_") || heavySet.contains(name)
-    // Cache hygiene without cross-thread invalidation: catalog
-    // .clearCache() is APPLICATION-wide (the CacheManager is shared
-    // state), so a worker clearing after its own query used to yank
-    // cached plans out from under a query mid-flight on another
-    // thread — observed once as a silently EMPTY q_embedding_drift
-    // dump (r13). Queries hold the READ side of a RW-lock while they
-    // run; a finished worker clears the cache only if the WRITE side
-    // is free AND uncontended (tryLock — no query in flight, no
-    // stall). Clears become quiescent-point-only; between
-    // opportunities, stray persisted frames just accumulate a few
-    // sf0.01-sized MB.
-    val cacheLock = new java.util.concurrent.locks.ReentrantReadWriteLock()
     (1 to threads).foreach { _ =>
       pool.submit(new Runnable {
         override def run(): Unit = {
@@ -81,32 +74,16 @@ object Verify {
             val heavy = isHeavy(q.name)
             if (heavy) heavyPermit.acquire()
             val t0 = System.nanoTime()
-            cacheLock.readLock().lock()
-            // scoped: every frame this query's ops persist through
-            // CacheHandles is released as soon as its dump is written
-            // (unconditional, no lock needed — per-query, this-thread
-            // frames only), so a saturated pool can no longer let
-            // persisted frames accumulate for the whole run. The
-            // RW-locked clearCache below remains the backstop for
-            // direct .persist() calls outside any handles.
+            // scoped: every frame this query keeps is released as soon
+            // as its dump is written — per-query, this-thread frames
+            // only, so no other worker's query loses a cached plan
             try CacheHandles.scoped {
               q.fn(session, sfDir).coalesce(1).write.mode("overwrite")
                 .parquet(s"$outDir/${q.name}")
             }
             catch { case e: Throwable =>
               System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
-            } finally {
-              cacheLock.readLock().unlock()
-              // drop per-query persisted frames (dedup/ANN signature
-              // caches) so no query's cache pressures its successors —
-              // but ONLY at a quiescent point (no reader in flight)
-              if (cacheLock.writeLock().tryLock()) {
-                try session.catalog.clearCache()
-                catch { case _: Throwable => }
-                finally cacheLock.writeLock().unlock()
-              }
-              if (heavy) heavyPermit.release()
-            }
+            } finally if (heavy) heavyPermit.release()
             System.err.println(
               f"[verify-time] ${q.name} ${(System.nanoTime() - t0) / 1e9}%.1fs (${done.incrementAndGet()}/${work.size})")
             q = queue.poll()
@@ -116,6 +93,8 @@ object Verify {
     }
     pool.shutdown()
     pool.awaitTermination(4, TimeUnit.HOURS)
+    System.err.println(
+      s"[verify] cached plans left: ${org.apache.spark.sql.graftbridge.cachedPlans(spark)}")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.CacheHandles.keep
 
 /** One full ALS round (k = 2) on the customer×part implicit-feedback
   * matrix — matrix factorization, the collaborative-filtering
@@ -179,11 +180,9 @@ object Als {
   val alsDescent: Q = Q(
     "q_als_descent",
     (s, dir) => {
-      val r = ratings(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val r = keep(ratings(s, dir))
       val q = itemSeeds(r)
-      val u = solveUsers(r, q)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val u = keep(solveUsers(r, q))
       val qOld = q.select(col("p"), col("q1").as("f1"), col("q2").as("f2"))
       val qNew = solveItems(r, u).select(col("p"),
         col("q1_new_nano").as("g1"), col("q2_new_nano").as("g2"))
@@ -194,8 +193,7 @@ object Als {
       // broadcast subqueries ran the heavy r⋈u⋈factors join twice and
       // re-solved the item step twice (reg_after's solveItems replay).
       // Integer sums of identical terms: values byte-identical.
-      val qj = qOld.join(qNew, Seq("p"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val qj = keep(qOld.join(qNew, Seq("p")))
       val sses = r.join(u, Seq("c")).join(qj, Seq("p"))
         .select(
           (col("r") * lit(1000L) -
@@ -299,10 +297,9 @@ object Als {
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val r = ratings(s, dir)
-      val items = solveItems(r, solveUsers(r, itemSeeds(r)))
+      val items = keep(solveItems(r, solveUsers(r, itemSeeds(r)))
         .select(col("p"), col("q1_new_nano").as("f1"),
-          col("q2_new_nano").as("f2"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          col("q2_new_nano").as("f2")))
       val sampled = items.filter(col("p") % 100 === 0)
         .select(col("p").as("qp"), col("f1").as("a1"), col("f2").as("a2"))
       val out = items.join(broadcast(sampled), col("p") =!= col("qp"))

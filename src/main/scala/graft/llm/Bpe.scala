@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.CacheHandles.keep
 
 /** Distributed BPE (byte-pair-encoding) merge training — the
   * tokenizer-training primitive of every modern LLM data pipeline,
@@ -86,9 +87,8 @@ object Bpe {
       .select(explode(split(trim(col("text")), "\\s+")).as("w"))
       .filter(col("w") =!= "")
       .groupBy("w").agg(count(lit(1)).as("cnt"))
-    var tbl = words
-      .select(col("cnt"), charSyms(col("w")).as("syms"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    var tbl = keep(words
+      .select(col("cnt"), charSyms(col("w")).as("syms")))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
     try {
       for (round <- 1 to k) {
@@ -113,7 +113,7 @@ object Bpe {
               val next = graft.Checkpoints.cut(
                 tbl.withColumn("syms", applyMerge(col("syms"), l, r)))
               tbl.unpersist()
-              tbl = next.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+              tbl = keep(next)
             }
         }
       }
@@ -248,7 +248,7 @@ object Bpe {
       val words = docs
         .select(col("doc_id"), explode(split(trim(col("text")), "\\s+")).as("w"))
         .filter(col("w") =!= "")
-      val enc = merges
+      val enc = keep(merges
         .foldLeft(words.groupBy("w").agg(count(lit(1)).as("cnt"))
           .withColumn("syms", charSyms(col("w")))) {
           case (df, (l, r, _)) => df.withColumn("syms", applyMerge(col("syms"), l, r))
@@ -256,8 +256,7 @@ object Bpe {
         .select(col("w"), col("cnt"),
           size(col("syms")).cast("long").as("n_bpe"),
           length(col("w")).cast("long").as("n_chars"),
-          (concat_ws("", col("syms")) === col("w")).as("roundtrip_ok"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          (concat_ws("", col("syms")) === col("w")).as("roundtrip_ok")))
       try {
         val chk = enc.agg(
           sum(when(!col("roundtrip_ok")
@@ -272,13 +271,12 @@ object Bpe {
         if (chk.getLong(1) == 0)
           throw new IllegalStateException(
             "BPE encode degraded: no vocabulary word was compressed by any merge")
-        val out = words.join(enc.select("w", "n_bpe", "n_chars"), "w")
+        val out = keep(words.join(enc.select("w", "n_bpe", "n_chars"), "w")
           .groupBy("doc_id")
           .agg(count(lit(1)).as("n_ws_tokens"),
             sum(col("n_bpe")).as("n_bpe_tokens"),
             sum(col("n_chars")).as("n_word_chars"))
-          .orderBy("doc_id")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .orderBy("doc_id"))
         out.count() // materialize through the vocab cache before release
         out
       } finally enc.unpersist()
@@ -334,7 +332,7 @@ object Bpe {
         }
         .select(col("w"), size(col("syms")).cast("long").as("n_bpe"),
           length(col("w")).cast("long").as("n_chars"))
-      val out = words.join(vocab, "w")
+      val out = keep(words.join(vocab, "w")
         .groupBy("lang")
         .agg(count(lit(1)).as("n_words"),
           sum(col("n_bpe")).as("n_pieces"),
@@ -342,8 +340,7 @@ object Bpe {
         .selectExpr("lang", "n_words", "n_pieces",
           "(1000000 * n_pieces) div n_words AS fertility_micro",
           "(1000000 * n_word_chars) div n_pieces AS chars_per_piece_micro")
-        .orderBy("lang")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .orderBy("lang"))
       val chk = out.agg(
         sum(when(col("fertility_micro") < 1000000L, 1L).otherwise(0L)).as("bad"),
         sum(when(col("chars_per_piece_micro") > 1000000L, 1L).otherwise(0L))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.CacheHandles.keep
 
 /** Quality-classifier TRAINING at corpus scale — the histogram
   * split-finder that is the inner loop of every distributed GBDT
@@ -480,14 +481,13 @@ object Classifier {
       // production scale this is the "materialize the design matrix
       // once" step of any distributed trainer. Released after the
       // 4-row result itself materializes (RecallAudit pattern).
-      val feats = t(s, dir, "documents").select(
+      val feats = keep(t(s, dir, "documents").select(
         lit(1L).as("x0"),
         (lit(50L) * size(filter(toks, tk => tk === "a" || tk === "the")).cast("long") -
           size(toks).cast("long")).as("x1"),
         size(toks).cast("long").as("x2"),
         when(lit(50L) * size(filter(toks, tk => tk === "a" || tk === "the")).cast("long") >=
-          size(toks).cast("long"), 1L).otherwise(0L).as("y"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          size(toks).cast("long"), 1L).otherwise(0L).as("y")))
       // Synchronous distributed GD: each iteration is ONE map-side-
       // combinable aggregate over the cached feature frame (the
       // allreduce), whose single 6-long row comes to the driver — the
@@ -908,10 +908,10 @@ object Classifier {
     * randomized level frames. */
   private[graft] def isotonicFit(g: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val p = g
+    // level-domain frame: interval ends + probe side
+    val p = keep(g
       .withColumn("cn", sum(col("n")).over(Window.orderBy("level")))
-      .withColumn("cpos", sum(col("n_pos")).over(Window.orderBy("level")))
-      .persist() // level-domain frame: interval ends + probe side
+      .withColumn("cpos", sum(col("n_pos")).over(Window.orderBy("level"))))
     val ivl = p.select(col("level").as("j"),
         (col("cn") - col("n")).as("cn0"), (col("cpos") - col("n_pos")).as("cpos0"))
       .join(p.select(col("level").as("k"), col("cn").as("cnk"),
@@ -1105,12 +1105,11 @@ object Classifier {
       val feats = featureFrame(docs)
         .join(docs.select(col("doc_id"),
           when(col("lang") === "en", 1L).otherwise(-1L).as("y2")), "doc_id")
-      val long = feats.select(col("doc_id"), col("y2").as("y"), explode(array(
+      val long = keep(feats.select(col("doc_id"), col("y2").as("y"), explode(array(
           Seq("stop_ratio_m", "rep_ratio_m", "mean_wlen_c", "n_tok").map(f =>
             struct(lit(f).as("feature"), col(f).as("v"))): _*)).as("fv"))
         .select(col("doc_id"), col("fv.feature").as("feature"),
-          col("fv.v").as("v"), col("y"))
-        .persist() // level-1 histogram + branch lookup + level-2 histogram
+          col("fv.v").as("v"), col("y"))) // level-1 histogram + branch lookup + level-2 histogram
       val rootRow = candidatesOf(scoredOf(long, Nil), Nil)
         .orderBy(col("correct").desc, col("feature"), col("pol"), col("v"))
         .limit(1).head()
@@ -1193,13 +1192,11 @@ object Classifier {
         .when(u16 < 60273, 2L).when(u16 < 64292, 3L)
         .when(u16 < 65296, 4L).when(u16 < 65497, 5L)
         .when(u16 < 65531, 6L).otherwise(7L)
-      // one (doc × bag) frame carries the in-bag weight; persisted —
-      // the histogram, the bag sizes and the OOB vote all read it
-      // (released by the harness clearCache, the treeDepth2 contract)
-      val bags = feats
+      // one (doc × bag) frame carries the in-bag weight; kept — the
+      // histogram, the bag sizes and the OOB vote all read it
+      val bags = keep(feats
         .withColumn("b", explode(sequence(lit(0L), lit(B - 1L))))
-        .withColumn("w", w)
-        .persist()
+        .withColumn("w", w))
       val fnames = Seq("mean_wlen_c", "n_tok", "rep_ratio_m", "stop_ratio_m")
       def melt(df: DataFrame, keep: Seq[String]): DataFrame =
         df.select(keep.map(col) :+ explode(array(
@@ -1231,11 +1228,10 @@ object Classifier {
           base :+ lit("le").as("pol") :+ col("c_le").as("correct"): _*))
       val wB = Window.partitionBy("b")
         .orderBy(col("correct").desc, col("feature"), col("pol"), col("v"))
-      val winners = cand.withColumn("rk", row_number().over(wB))
+      val winners = keep(cand.withColumn("rk", row_number().over(wB))
         .filter(col("rk") === 1)
         .select(col("b"), col("feature"), col("pol"), col("v").as("thr"),
-          col("correct"))
-        .persist() // 8 rows: the output join + the OOB vote both read it
+          col("correct"))) // 8 rows: the output join + the OOB vote both read it
       // OOB majority vote (bounded action: one 1-row aggregate)
       val oobVotes = melt(bags.filter(col("w") === 0L), Seq("doc_id", "b", "y"))
         .select(col("doc_id"), col("b"), col("y"),
@@ -1343,8 +1339,7 @@ object Classifier {
   val gbStep: Q = Q(
     "q_gb_step",
     (s, dir) => {
-      val long = enLongFrame(s, dir)
-        .persist() // root histogram + branch lookup + level-2 + leaf join
+      val long = keep(enLongFrame(s, dir)) // root histogram + branch lookup + level-2 + leaf join
       val rootRow = candidatesOf(scoredOf(long, Nil), Nil)
         .orderBy(col("correct").desc, col("feature"), col("pol"), col("v"))
         .limit(1).head()
@@ -1372,7 +1367,8 @@ object Classifier {
           sum(when(col("y") === 1L, 1L).otherwise(0L)).as("pos_tot")).head()
       val (nTot, posTot) = (gRow.getLong(0), gRow.getLong(1))
       val grate = 1000000L * posTot / nTot
-      val la = leaf.groupBy("node")
+      // ≤4 rows: the floor aggregate + the output read it
+      val la = keep(leaf.groupBy("node")
         .agg(count(lit(1)).as("n"),
           sum(when(col("y") === 1L, 1L).otherwise(0L)).as("n_pos"))
         .withColumn("leaf_rate_micro", expr("1000000 * n_pos div n"))
@@ -1380,8 +1376,7 @@ object Classifier {
         .withColumn("pred",
           when(col("score2_micro") >= 1000000L, 1L).otherwise(0L))
         .withColumn("n_correct",
-          when(col("pred") === 1L, col("n_pos")).otherwise(col("n") - col("n_pos")))
-        .persist() // ≤4 rows: the floor aggregate + the output read it
+          when(col("pred") === 1L, col("n_pos")).otherwise(col("n") - col("n_pos"))))
       val corr = la.agg(sum(col("n_correct"))).head().getLong(0)
       if (corr < math.max(posTot, nTot - posTot))
         throw new IllegalStateException(
@@ -1436,11 +1431,10 @@ object Classifier {
     "q_cv_stump",
     (s, dir) => {
       val K = 5
-      val long = enLongFrame(s, dir)
+      val long = keep(enLongFrame(s, dir)
         .withColumn("fold", expr(
           """((16807 * ((16807 * ((doc_id % 127773) * 167 + 11)) % 2147483647))
-            % 2147483647) % 5"""))
-        .persist() // train histogram + heldout scoring read it
+            % 2147483647) % 5"""))) // train histogram + heldout scoring read it
       val train = long
         .withColumn("fold_out", explode(sequence(lit(0L), lit(K - 1L))))
         .filter(col("fold_out") =!= col("fold"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.CacheHandles.{keep, scoped}
 
 /** Corpus-curation operators a training-data pipeline runs between raw
   * ingest and tokenization: boilerplate/stopword stripping, train/test
@@ -1352,14 +1353,13 @@ object Curation {
     val s = points.sparkSession
     import s.implicits._
     val micro = expr("cast(round(1000000 * sim) as bigint)")
-    val sym = pairs
+    val sym = keep(pairs
       .select(col("vec_a").as("v"), col("vec_b").as("c"), micro.as("sim_micro"))
       .unionAll(pairs
         .select(col("vec_b").as("v"), col("vec_a").as("c"), micro.as("sim_micro")))
       .unionAll(points
         .select(col("vec_id").as("v"), col("vec_id").as("c"),
-          lit(1000000L).as("sim_micro")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          lit(1000000L).as("sim_micro"))))
     var cur = points.select(col("vec_id").as("v"), lit(0L).as("cur_micro"))
     var objective = 0L
     var prevGain = Long.MaxValue
@@ -1511,21 +1511,18 @@ object Curation {
     * at sim 1.0 dominates any singleton. */
   val facilitySelect: Q = Q(
     "q_facility_select",
-    (s, dir) => {
+    (s, dir) => scoped {
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       val proto = emb.filter(col("vec_id") === 0).select(col("v")).limit(1)
       val plants = s.range(12)
         .select((col("id") + lit(2000000L)).as("vec_id"))
         .crossJoin(broadcast(proto))
-      val corpus = emb.unionByName(plants)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val handles = new graft.CacheHandles
+      val corpus = keep(emb.unionByName(plants))
       val pairs = graft.llm.Similarity.pairStoreMemo(s, s"$dir#dbscan90",
         0.90, corpus, graft.llm.Ivf.trainCentroidsMemo(s"$dir#dbscan", corpus))
       val picks = facilityGreedy(corpus, pairs, k = 8)
       val rows = picks.collect() // k-bounded by construction
-      corpus.unpersist(); handles.releaseAll()
       val blobPicks = rows.count(_.getLong(1) >= 2000000L)
       if (blobPicks > 1)
         throw new IllegalStateException(

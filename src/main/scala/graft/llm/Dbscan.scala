@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.CacheHandles.{keep, scoped}
 
 /** Density-based clustering (DBSCAN) over the embedding corpus —
   * the clustering complement of the near-dup family: near-dup keeps
@@ -55,9 +56,8 @@ object Dbscan {
     * (vec_a < vec_b, already sim-filtered). Returns one row per point:
     * (id, cluster, role) with role ∈ core/border/noise and cluster =
     * min vertex id of the component (NULL for noise). */
-  def dbscanFromPairs(points: DataFrame, pairs: DataFrame, minPts: Int,
-      handles: graft.CacheHandles = new graft.CacheHandles): DataFrame =
-    dbscanFromDegrees(points, pairs, pairDegrees(pairs), minPts, handles)
+  def dbscanFromPairs(points: DataFrame, pairs: DataFrame, minPts: Int): DataFrame =
+    dbscanFromDegrees(points, pairs, pairDegrees(pairs), minPts)
 
   /** [[dbscanFromPairs]] with an externally supplied degree frame —
     * the incremental entry point (state degrees + delta contributions
@@ -65,16 +65,11 @@ object Dbscan {
     * [[pairDegrees]] of `pairs` for DBSCAN semantics to hold; the
     * incremental query asserts exactly that in-query. */
   def dbscanFromDegrees(points: DataFrame, pairs: DataFrame,
-      degrees: DataFrame, minPts: Int,
-      handles: graft.CacheHandles = new graft.CacheHandles): DataFrame = {
-    val p = handles.track(pairs.select(col("vec_a"), col("vec_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      degrees: DataFrame, minPts: Int): DataFrame = {
+    val p = keep(pairs.select(col("vec_a"), col("vec_b")))
     val sym = p.select(col("vec_a").as("id"), col("vec_b").as("nb"))
       .unionAll(p.select(col("vec_b").as("id"), col("vec_a").as("nb")))
-    val core = handles.track(
-      degrees
-        .filter(col("deg") + lit(1) >= minPts).select("id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val core = keep(degrees.filter(col("deg") + lit(1) >= minPts).select("id"))
     val coreEdges = p
       .join(core.select(col("id").as("vec_a")), Seq("vec_a"), "left_semi")
       .join(core.select(col("id").as("vec_b")), Seq("vec_b"), "left_semi")
@@ -108,23 +103,20 @@ object Dbscan {
     * row (cluster NULL). */
   val dbscan: Q = Q(
     "q_dbscan",
-    (s, dir) => {
+    (s, dir) => scoped {
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       val proto = emb.filter(col("vec_id") === 0).select(col("v")).limit(1)
       val plants = s.range(12)
         .select((col("id") + lit(2000000L)).as("vec_id"))
         .crossJoin(broadcast(proto))
-      val corpus = emb.unionByName(plants)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val corpus = keep(emb.unionByName(plants))
       val centroids = Ivf.trainCentroidsMemo(s"$dir#dbscan", corpus)
-      val handles = new graft.CacheHandles
       // the shared 0.90 store filtered to this query's ε — identical
       // rows to a direct 0.95 compute (thinning is size-only)
       val pairs = Similarity.pairStoreMemo(s, s"$dir#dbscan90", 0.90,
         corpus, centroids).filter(col("sim") >= 0.95)
-      val perPoint =
-        dbscanFromPairs(corpus, pairs, minPts = 10, handles = handles)
+      val perPoint = dbscanFromPairs(corpus, pairs, minPts = 10)
       // ONE census pass carries the structural floor (every planted id
       // core, all in ONE cluster) alongside the output columns — the
       // previous persist + audit pass + census pass re-ran the whole
@@ -132,10 +124,7 @@ object Dbscan {
       // result; the floor values derive exactly from the planted
       // per-cluster tallies (countDistinct over planted rows ≡ number
       // of non-null census rows holding a planted member)
-      val census = censusWithBlobFloor(s, perPoint, minPlanted = 12)
-      corpus.unpersist()
-      handles.releaseAll()
-      census
+      censusWithBlobFloor(s, perPoint, minPlanted = 12)
     },
     None)
 
@@ -224,7 +213,7 @@ object Dbscan {
     * (trained centroids aren't SQL-expressible). */
   val dbscanIncremental: Q = Q(
     "q_dbscan_incremental",
-    (s, dir) => {
+    (s, dir) => scoped {
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       val cut = graft.Staging.historyCut(emb, "vec_id")
@@ -240,8 +229,7 @@ object Dbscan {
         val histA = hist.withColumn("block",
           Ivf.clusterOf(col("v"), centroids))
         histA.write.mode("overwrite").parquet(s"$stateDir/assign")
-        val histPairs = pairsAmongAssigned(histA, histA, 0.95)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val histPairs = keep(pairsAmongAssigned(histA, histA, 0.95))
         pairDegrees(histPairs).write.mode("overwrite")
           .parquet(s"$stateDir/deg")
         histPairs.write.mode("overwrite").parquet(s"$stateDir/pairs")
@@ -250,27 +238,21 @@ object Dbscan {
       val histA = s.read.parquet(s"$stateDir/assign")
       val statePairs = s.read.parquet(s"$stateDir/pairs")
       val stateDeg = s.read.parquet(s"$stateDir/deg")
-      val handles = new graft.CacheHandles
-      val deltaA = handles.track(
-        delta.withColumn("block", Ivf.clusterOf(col("v"), centroids))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val deltaA = keep(delta.withColumn("block", Ivf.clusterOf(col("v"), centroids)))
       // single consumer (the blocked join's right side): a persist
       // here only added a cache write+read around one pass
       val allA = histA.unionByName(deltaA)
       // the delta-sided blocked join: every new pair touches >= 1
       // delta point, so state pairs (hist-hist) and delta pairs
       // partition the union pair set
-      val deltaPairs = handles.track(
-        pairsAmongAssigned(deltaA, allA, 0.95)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val deltaPairs = keep(pairsAmongAssigned(deltaA, allA, 0.95))
       val allPairs = statePairs.unionByName(deltaPairs)
       // consumed twice (the maintained-degree proof AND the core
       // test); pair-domain — cache the merge instead of re-shuffling
       // the state+delta degree union per consumer
-      val incrDeg = handles.track(stateDeg
+      val incrDeg = keep(stateDeg
         .unionByName(pairDegrees(deltaPairs))
-        .groupBy("id").agg(sum(col("deg")).as("deg"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .groupBy("id").agg(sum(col("deg")).as("deg")))
       // in-query proof 1: maintained degrees == from-scratch recount
       val degMismatch = incrDeg
         .join(pairDegrees(allPairs).withColumnRenamed("deg", "deg_full"),
@@ -281,14 +263,11 @@ object Dbscan {
         throw new IllegalStateException(
           s"incremental degree table diverged on $degMismatch ids")
       val points = hist.unionByName(delta)
-      val perPoint = dbscanFromDegrees(points, allPairs, incrDeg,
-        minPts = 10, handles = handles)
+      val perPoint = dbscanFromDegrees(points, allPairs, incrDeg, minPts = 10)
       // fused census + planted floor — one pass, one collect (see
       // [[censusWithBlobFloor]]); the separate persist/audit/census
       // actions re-ran the per-point pipeline three times
-      val census = censusWithBlobFloor(s, perPoint, minPlanted = 12)
-      handles.releaseAll()
-      census
+      censusWithBlobFloor(s, perPoint, minPlanted = 12)
     },
     None)
 
@@ -340,20 +319,15 @@ object Dbscan {
     * [[dbscanFromPairs]] on the filtered pair list (DbscanSpec pins
     * the equivalence). */
   def levelDbscan(points: DataFrame, pairs: DataFrame, levels: Seq[Int],
-      minPts: Int,
-      handles: graft.CacheHandles = new graft.CacheHandles): DataFrame = {
+      minPts: Int): DataFrame = {
     val lvls = array(levels.map(lit): _*)
-    val pairsL = handles.track(
-      pairs.withColumn("lvl",
-          explode(filter(lvls, l => col("sim") >= l.cast("double") / 1000)))
-        .select(col("lvl"), col("vec_a"), col("vec_b"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val pairsL = keep(pairs.withColumn("lvl",
+        explode(filter(lvls, l => col("sim") >= l.cast("double") / 1000)))
+      .select(col("lvl"), col("vec_a"), col("vec_b")))
     val sym = pairsL.select(col("lvl"), col("vec_a").as("id"), col("vec_b").as("nb"))
       .unionAll(pairsL.select(col("lvl"), col("vec_b").as("id"), col("vec_a").as("nb")))
-    val core = handles.track(
-      sym.groupBy("lvl", "id").agg(count(lit(1)).as("deg"))
-        .filter(col("deg") + lit(1) >= minPts).select("lvl", "id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val core = keep(sym.groupBy("lvl", "id").agg(count(lit(1)).as("deg"))
+      .filter(col("deg") + lit(1) >= minPts).select("lvl", "id"))
     val coreEdges = pairsL
       .join(core.select(col("lvl"), col("id").as("vec_a")),
         Seq("lvl", "vec_a"), "left_semi")
@@ -420,23 +394,17 @@ object Dbscan {
     * [[levelDbscan]] are the floor. */
   val clusterStability: Q = Q(
     "q_cluster_stability",
-    (s, dir) => {
+    (s, dir) => scoped {
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       val proto = emb.filter(col("vec_id") === 0).select(col("v")).limit(1)
       val plants = s.range(12)
         .select((col("id") + lit(2000000L)).as("vec_id"))
         .crossJoin(broadcast(proto))
-      val corpus = emb.unionByName(plants)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val handles = new graft.CacheHandles
-      val pairs = handles.track(
-        Similarity.pairStoreMemo(s, s"$dir#dbscan90", Levels.min / 1000.0,
-            corpus, Ivf.trainCentroidsMemo(s"$dir#dbscan", corpus))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      val all3 = handles.track(
-        levelDbscan(corpus, pairs, Levels, minPts = 10, handles = handles)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val corpus = keep(emb.unionByName(plants))
+      val pairs = keep(Similarity.pairStoreMemo(s, s"$dir#dbscan90", Levels.min / 1000.0,
+        corpus, Ivf.trainCentroidsMemo(s"$dir#dbscan", corpus)))
+      val all3 = keep(levelDbscan(corpus, pairs, Levels, minPts = 10))
       // structural floor at EVERY level: blob all-core, one cluster
       val audits = all3.filter(col("id") >= 2000000L)
         .groupBy("lvl")
@@ -454,8 +422,6 @@ object Dbscan {
         .select("id", "cluster", "role"))
       val out = stabilityRollup(perLevel)
       val materialized = out.collect()
-      corpus.unpersist()
-      handles.releaseAll()
       s.createDataFrame(s.sparkContext.parallelize(
           materialized.toIndexedSeq, 1), out.schema)
         .orderBy("base_cluster", "level_permille")
@@ -593,7 +559,7 @@ object Dbscan {
     * bounded-matrix discipline as the PMI power iteration. */
   val hdbscanExtract: Q = Q(
     "q_hdbscan_extract",
-    (s, dir) => {
+    (s, dir) => scoped {
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       val proto = emb.filter(col("vec_id") === 0).select(col("v")).limit(1)
@@ -625,21 +591,15 @@ object Dbscan {
       val plantsB = s.range(12)
         .select((col("id") + lit(3000000L)).as("vec_id"),
           array(bProto.map(lit).toIndexedSeq: _*).cast("array<double>").as("v"))
-      val corpus = emb.unionByName(plantsA).unionByName(plantsB)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val corpus = keep(emb.unionByName(plantsA).unionByName(plantsB))
       // own memo key AND own pair store: this corpus carries blob B,
       // and sharing the dbscan-family key would make the trained
       // centroids (and pairs) depend on which query ran first
-      val handles = new graft.CacheHandles
-      val pairs = handles.track(
-        Similarity.pairStoreMemo(s, s"$dir#hdbscan90",
-            HdbLevels.min / 1000.0, corpus,
-            Ivf.trainCentroidsMemo(s"$dir#hdbscan", corpus))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val pairs = keep(Similarity.pairStoreMemo(s, s"$dir#hdbscan90",
+        HdbLevels.min / 1000.0, corpus,
+        Ivf.trainCentroidsMemo(s"$dir#hdbscan", corpus)))
       val minPts = 10
-      val lvlOut = handles.track(
-        levelDbscan(corpus, pairs, HdbLevels, minPts, handles = handles)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val lvlOut = keep(levelDbscan(corpus, pairs, HdbLevels, minPts))
       val cores = lvlOut.filter(col("role") === "core")
         .select(col("lvl"), col("id"), col("cluster"))
       // per-point death level (cores nest, so max = the last level)
@@ -676,7 +636,6 @@ object Dbscan {
             s"planted blob $blob degraded at level $lp: " +
               s"${r.getLong(2)}/12 core, ${r.getLong(3)} clusters")
       }
-      corpus.unpersist(); handles.releaseAll()
 
       // ---- driver-side condensed fold over the bounded tree ----
       val deaths: Map[(Int, Long), Map[Int, Long]] = nodeDeaths
@@ -769,21 +728,20 @@ object Dbscan {
           col("a.vec_id") < col("b.vec_id"))
         .filter(graft.llm.Similarity.cosine(col("a.v"), col("b.v")) >= 0.95)
         .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
-      val handles = new graft.CacheHandles
-      val out = dbscanFromPairs(corpus.select("vec_id"), pairs,
-          minPts = 10, handles = handles)
-        .orderBy("id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      out.count()
-      val audit = out.filter(col("id") >= offset || col("id") === 0L)
-        .agg(count(when(col("role") === "core", 1)).as("n_core"),
-          countDistinct(col("cluster")).as("n_clusters")).head()
-      corpus.unpersist(); handles.releaseAll()
-      if (audit.getLong(0) < 13 || audit.getLong(1) != 1L)
-        throw new IllegalStateException(
-          s"exact-DBSCAN blob degraded: ${audit.getLong(0)}/13 core, " +
-            s"${audit.getLong(1)} clusters (want 1)")
-      out
+      scoped {
+        val out = keep(dbscanFromPairs(corpus.select("vec_id"), pairs, minPts = 10)
+          .orderBy("id"))
+        out.count()
+        val audit = out.filter(col("id") >= offset || col("id") === 0L)
+          .agg(count(when(col("role") === "core", 1)).as("n_core"),
+            countDistinct(col("cluster")).as("n_clusters")).head()
+        corpus.unpersist()
+        if (audit.getLong(0) < 13 || audit.getLong(1) != 1L)
+          throw new IllegalStateException(
+            s"exact-DBSCAN blob degraded: ${audit.getLong(0)}/13 core, " +
+              s"${audit.getLong(1)} clusters (want 1)")
+        out
+      }
       }
     },
     Some(s"""

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.CacheHandles.{keep, scoped}
 
 /** Deduplication operators over `documents`: exact (hash group-by),
   * normalized-key, MinHash+LSH near-dup, and SimHash near-dup.
@@ -98,8 +99,7 @@ object Dedup {
     * the ScalaTest suite pins behavior on planted near-dups instead
     * (driver records the weaker rows-only check, per contract). */
   def minhashPairs(input: DataFrame, threshold: Double = 0.5,
-      bands: Int = 16, rows: Int = 4,
-      handles: graft.CacheHandles = new graft.CacheHandles): DataFrame = {
+      bands: Int = 16, rows: Int = 4): DataFrame = {
       val spark = input.sparkSession
       val par = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
       // Persisted: this (doc_id, shingle-hash) table is the single
@@ -107,11 +107,10 @@ object Dedup {
       // exact-Jaccard verify semi-joins it, so the shingling runs and
       // compiles exactly once. 24 bytes/shingle, no text column —
       // MEMORY_AND_DISK spills rather than OOMs at corpus scale.
-      // Tracked in `handles`: the returned plan still references it,
-      // so release belongs to whoever materializes the result.
-      val exploded = handles.track(shingleFrame(input, par)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      val banded = bandedSignatures(exploded, bands, rows, handles)
+      // The returned plan still references it, so release belongs to
+      // the scope that materializes the result.
+      val exploded = keep(shingleFrame(input, par))
+      val banded = bandedSignatures(exploded, bands, rows)
       val l = banded.alias("l")
       val r = banded.alias("r")
       val candidates = l.join(r,
@@ -171,11 +170,9 @@ object Dedup {
     * array-walk per band (16× the code volume, most of this stage's
     * JIT bill); scalar args stay primitive straight-line codegen. */
   private[graft] def bandedSignatures(exploded: DataFrame,
-      bands: Int, rows: Int,
-      handles: graft.CacheHandles = new graft.CacheHandles): DataFrame = {
-    val sigs = handles.track(exploded.groupBy("doc_id")
-      .agg(graft.functions.MinHashAgg(col("h1"), col("h2"), bands * rows).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      bands: Int, rows: Int): DataFrame = {
+    val sigs = keep(exploded.groupBy("doc_id")
+      .agg(graft.functions.MinHashAgg(col("h1"), col("h2"), bands * rows).as("sig")))
     sigs.select(
       col("doc_id"),
       explode(array((0 until bands).map(b =>
@@ -255,9 +252,8 @@ object Dedup {
     * on the store read, so a corrupt store still throws. Same
     * staleness contract as [[graft.Staging]]. */
   def plantedMinhashPairsMemo(s: SparkSession, dir: String): DataFrame =
-    graft.Staging.store(s, "graft_mhpairs", dir)(handles =>
-      minhashPairs(withPlanted(t(s, dir, "documents"), mutate = true),
-        handles = handles))
+    graft.Staging.store(s, "graft_mhpairs", dir)(
+      minhashPairs(withPlanted(t(s, dir, "documents"), mutate = true)))
 
   val minhashLsh: Q = Q(
     "q_dedup_minhash",
@@ -299,10 +295,9 @@ object Dedup {
   /** Per-doc 64-bit SimHash signatures (doc_id, simhash) — the stage
     * [[simhashPairs]] builds its index from, factored out so the
     * incremental path can persist it as state (8 bytes per doc —
-    * the cheapest possible dedup state). Persisted + tracked in
-    * `handles` (consumed from both sides of the band join). */
-  private[graft] def simhashSignatures(input: DataFrame,
-      handles: graft.CacheHandles): DataFrame = {
+    * the cheapest possible dedup state). Kept (consumed from both
+    * sides of the band join). */
+  private[graft] def simhashSignatures(input: DataFrame): DataFrame = {
       val spark = input.sparkSession
       val par = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
       val docs = input.repartition(par, col("doc_id"))
@@ -330,11 +325,10 @@ object Dedup {
       // the declarative 64-term when().reduce(bitwiseOR) form generated
       // hundreds of branches whose JIT compile dominated this
       // operator's cold-run cost (equivalence pinned in DedupSpec)
-      handles.track(voteSums.select(
+      keep(voteSums.select(
         col("doc_id"),
         graft.functions.SimhashFromVotes(
-          array((0 until 16).map(j => col(s"p$j")): _*), col("n")).as("simhash"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          array((0 until 16).map(j => col(s"p$j")): _*), col("n")).as("simhash")))
   }
 
   /** 4×16-bit band rows (doc_id, simhash, band, bh) from a signature
@@ -347,9 +341,8 @@ object Dedup {
           shiftright(col("simhash"), k * 16).bitwiseAND(0xFFFFL).as("bh"))): _*)).as("e"))
       .select(col("doc_id"), col("simhash"), col("e.band"), col("e.bh"))
 
-  def simhashPairs(input: DataFrame, maxHamming: Int = 3,
-      handles: graft.CacheHandles = new graft.CacheHandles): DataFrame = {
-      val sig = simhashSignatures(input, handles)
+  def simhashPairs(input: DataFrame, maxHamming: Int = 3): DataFrame = {
+      val sig = simhashSignatures(input)
       val banded = simhashBands(sig)
       val l = banded.alias("l")
       val r = banded.alias("r")
@@ -372,15 +365,9 @@ object Dedup {
     * DedupSpec pins signatures against a driver-side reference. */
   val simhash: Q = Q(
     "q_dedup_simhash",
-    (s, dir) => {
-      val handles = new graft.CacheHandles
-      val out = RecallAudit.assertPlantedPairs(
-        simhashPairs(withPlanted(t(s, dir, "documents"), mutate = false),
-          handles = handles),
-        "doc_a", "doc_b", plantN = 10, what = "SimHash")
-      handles.releaseAll()
-      out
-    },
+    (s, dir) => scoped(RecallAudit.assertPlantedPairs(
+      simhashPairs(withPlanted(t(s, dir, "documents"), mutate = false)),
+      "doc_a", "doc_b", plantN = 10, what = "SimHash")),
     None)
 
   /** Exact word-set Jaccard between consecutive doc_ids — the
@@ -441,9 +428,8 @@ object Dedup {
     * output is identical to [[minhashPairs]]' `doc_a < doc_b` form
     * regardless of id ordering between batches. */
   def deltaMinhashPairs(state: DataFrame, delta: DataFrame, histText: DataFrame,
-      threshold: Double = 0.5, bands: Int = 16, rows: Int = 4,
-      handles: graft.CacheHandles = new graft.CacheHandles): DataFrame =
-    deltaMinhashCore(state, delta, Left(histText), threshold, bands, rows, handles)
+      threshold: Double = 0.5, bands: Int = 16, rows: Int = 4): DataFrame =
+    deltaMinhashCore(state, delta, Left(histText), threshold, bands, rows)
 
   /** [[deltaMinhashPairs]] against a persisted SHINGLE-SET store
     * (doc_id, sh: array<long>) instead of the history text — the
@@ -456,32 +442,28 @@ object Dedup {
     * standard "persist the index's verification payload" trade. */
   def deltaMinhashPairsWithStore(state: DataFrame, delta: DataFrame,
       histShingleSets: DataFrame,
-      threshold: Double = 0.5, bands: Int = 16, rows: Int = 4,
-      handles: graft.CacheHandles = new graft.CacheHandles): DataFrame =
-    deltaMinhashCore(state, delta, Right(histShingleSets), threshold, bands, rows, handles)
+      threshold: Double = 0.5, bands: Int = 16, rows: Int = 4): DataFrame =
+    deltaMinhashCore(state, delta, Right(histShingleSets), threshold, bands, rows)
 
   private def deltaMinhashCore(state: DataFrame, delta: DataFrame,
       hist: Either[DataFrame, DataFrame],
-      threshold: Double, bands: Int, rows: Int,
-      handles: graft.CacheHandles): DataFrame = {
+      threshold: Double, bands: Int, rows: Int): DataFrame = {
     val spark = delta.sparkSession
     val par = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val deltaShingles = handles.track(shingleFrame(delta, par)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val deltaBands = bandedSignatures(deltaShingles, bands, rows, handles)
+    val deltaShingles = keep(shingleFrame(delta, par))
+    val deltaBands = bandedSignatures(deltaShingles, bands, rows)
     val allBands = state.select("doc_id", "band", "bh").unionByName(deltaBands)
     val l = allBands.alias("l")
     val r = deltaBands.alias("r")
     // persisted: three consumers (verify ids, the verify join, the
     // history-partner lookup) would each otherwise re-run the
     // state-scan + band join + distinct; the frame is candidate-sized
-    val candidates = handles.track(l.join(r,
+    val candidates = keep(l.join(r,
         col("l.band") === col("r.band") && col("l.bh") === col("r.bh") &&
           col("l.doc_id") =!= col("r.doc_id"))
       .select(least(col("l.doc_id"), col("r.doc_id")).as("doc_a"),
         greatest(col("l.doc_id"), col("r.doc_id")).as("doc_b"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .distinct())
     // no distinct: both consumers are semi/anti joins (dedup-free by
     // construction) — a distinct here is a pure extra shuffle
     val candIds = candidates
@@ -592,24 +574,20 @@ object Dedup {
         // appending each absorbed delta's rows.
         val hist = t(s, dir, "documents")
           .select(col("doc_id"), col("text")).filter(col("doc_id") <= cut)
-        val buildHandles = new graft.CacheHandles
-        val histSh = buildHandles.track(shingleFrame(hist, par)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        bandedSignatures(histSh, bands = 16, rows = 4, buildHandles)
-          .write.mode("overwrite").parquet(s"$stateDir/bands")
-        histSh.groupBy("doc_id").agg(collect_set(col("h1")).as("sh"))
-          .write.mode("overwrite").parquet(s"$stateDir/shingle_sets")
-        buildHandles.releaseAll()
+        scoped {
+          val histSh = keep(shingleFrame(hist, par))
+          bandedSignatures(histSh, bands = 16, rows = 4)
+            .write.mode("overwrite").parquet(s"$stateDir/bands")
+          histSh.groupBy("doc_id").agg(collect_set(col("h1")).as("sh"))
+            .write.mode("overwrite").parquet(s"$stateDir/shingle_sets")
+        }
       }
       val docs = withPlanted(t(s, dir, "documents"), mutate = true)
-      val handles = new graft.CacheHandles
-      val out = RecallAudit.assertPlantedPairs(
+      scoped(RecallAudit.assertPlantedPairs(
         deltaMinhashPairsWithStore(s.read.parquet(s"$stateDir/bands"),
           docs.filter(col("doc_id") > cut),
-          s.read.parquet(s"$stateDir/shingle_sets"), handles = handles),
-        "doc_a", "doc_b", plantN = 10, what = "incremental MinHash")
-      handles.releaseAll()
-      out
+          s.read.parquet(s"$stateDir/shingle_sets")),
+        "doc_a", "doc_b", plantN = 10, what = "incremental MinHash"))
     },
     None)
 
@@ -1008,14 +986,9 @@ object Dedup {
 
   val dedupCanonicalMinhash: Q = Q(
     "q_dedup_canonical_minhash",
-    (s, dir) => {
-      val handles = new graft.CacheHandles
-      val docs = handles.track(
-        withPlanted(t(s, dir, "documents"), mutate = true)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      val pairs = handles.track(
-        plantedMinhashPairsMemo(s, dir)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    (s, dir) => scoped {
+      val docs = keep(withPlanted(t(s, dir, "documents"), mutate = true))
+      val pairs = keep(plantedMinhashPairsMemo(s, dir))
       val verts = pairs
         .select(explode(array(col("doc_a"), col("doc_b"))).as("id")).distinct()
       val labels = connectedComponents(
@@ -1024,9 +997,8 @@ object Dedup {
         size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens"))
       val members = labels.join(toksz, col("id") === col("doc_id"))
         .select(col("label").as("cluster"), col("doc_id"), col("n_tokens"))
-      val out = electKeepers(members)
-        .orderBy("cluster", "doc_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val out = keep(electKeepers(members)
+        .orderBy("cluster", "doc_id"))
       out.count() // materialize before the audits read it twice
       // planted recall: each (i, 1M+i) pair must share a cluster
       val lab = out.select(col("cluster"), col("doc_id"))
@@ -1044,7 +1016,6 @@ object Dedup {
       if (badClusters > 0)
         throw new IllegalStateException(
           "canonicalization invariant violated: a cluster elected != 1 keeper")
-      handles.releaseAll()
       out
     },
     None)
@@ -1136,29 +1107,27 @@ object Dedup {
         s.sparkContext.applicationId + "|" + dir,
         graft.Staging.historyCut(t(s, dir, "documents"), "doc_id"))
       val state = graft.Staging.store(s, "graft_dedup_simhash_state", dir)(
-        buildHandles => simhashSignatures(t(s, dir, "documents")
-          .select(col("doc_id"), col("text")).filter(col("doc_id") <= cut),
-          buildHandles))
+        simhashSignatures(t(s, dir, "documents")
+          .select(col("doc_id"), col("text")).filter(col("doc_id") <= cut)))
       val docs = withPlanted(t(s, dir, "documents"), mutate = false)
-      val handles = new graft.CacheHandles
-      val deltaSig = simhashSignatures(docs.filter(col("doc_id") > cut), handles)
-      val allBands = simhashBands(
-        state.unionByName(deltaSig)).alias("l")
-      val deltaBands = simhashBands(deltaSig).alias("r")
-      val out = RecallAudit.assertPlantedPairs(
-        allBands.join(deltaBands,
-            col("l.band") === col("r.band") && col("l.bh") === col("r.bh") &&
-              col("l.doc_id") =!= col("r.doc_id"))
-          .select(least(col("l.doc_id"), col("r.doc_id")).as("doc_a"),
-            greatest(col("l.doc_id"), col("r.doc_id")).as("doc_b"),
-            bit_count(col("l.simhash").bitwiseXOR(col("r.simhash")))
-              .cast("long").as("hamming"))
-          .filter(col("hamming") <= 3)
-          .distinct()
-          .orderBy("doc_a", "doc_b"),
-        "doc_a", "doc_b", plantN = 10, what = "incremental SimHash")
-      handles.releaseAll()
-      out
+      scoped {
+        val deltaSig = simhashSignatures(docs.filter(col("doc_id") > cut))
+        val allBands = simhashBands(
+          state.unionByName(deltaSig)).alias("l")
+        val deltaBands = simhashBands(deltaSig).alias("r")
+        RecallAudit.assertPlantedPairs(
+          allBands.join(deltaBands,
+              col("l.band") === col("r.band") && col("l.bh") === col("r.bh") &&
+                col("l.doc_id") =!= col("r.doc_id"))
+            .select(least(col("l.doc_id"), col("r.doc_id")).as("doc_a"),
+              greatest(col("l.doc_id"), col("r.doc_id")).as("doc_b"),
+              bit_count(col("l.simhash").bitwiseXOR(col("r.simhash")))
+                .cast("long").as("hamming"))
+            .filter(col("hamming") <= 3)
+            .distinct()
+            .orderBy("doc_a", "doc_b"),
+          "doc_a", "doc_b", plantN = 10, what = "incremental SimHash")
+      }
     },
     None)
 
@@ -1193,11 +1162,10 @@ object Dedup {
       // transform+concat_ws+hash spelling ran on Catalyst's
       // CodegenFallback HOF path and dominated this query's runtime).
       // Persisted: both join sides read it.
-      val pos = docs
+      val pos = keep(docs
         .select(col("doc_id"),
           posexplode(graft.functions.ShingleHashesOrdered(col("text"), 5)))
-        .select(col("doc_id"), col("pos"), col("col").as("g"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select(col("doc_id"), col("pos"), col("col").as("g")))
       val ids = t(s, dir, "documents").select(col("doc_id"))
       val pairs = ids.as("x").join(ids.as("y"),
           col("y.doc_id") === col("x.doc_id") + 1)
@@ -1211,15 +1179,14 @@ object Dedup {
         .withColumn("diag", col("pos_a") - col("pos_b"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("doc_a", "doc_b", "diag").orderBy("pos_a")
-      val out = m.withColumn("grp", col("pos_a") - row_number().over(w))
+      val out = keep(m.withColumn("grp", col("pos_a") - row_number().over(w))
         .groupBy("doc_a", "doc_b", "diag", "grp")
         .agg(count(lit(1)).as("run"))
         .groupBy("doc_a", "doc_b")
         .agg((max(col("run")) + 4).as("longest_run_tokens"),
           sum(col("run")).as("n_matched_shingles"))
         .filter(col("longest_run_tokens") >= 10)
-        .orderBy("doc_a", "doc_b")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .orderBy("doc_a", "doc_b"))
       out.count() // materialize while pos is cached
       pos.unpersist()
       out
@@ -1575,15 +1542,14 @@ object Dedup {
           posexplode(split(trim(col("text")), "\\s+")).as(Seq("p0", "tok")))
         .select(col("doc_id"), (col("p0") + 1).cast("long").as("gpos"),
           col("tok"))
-      val sh = toks
+      val sh = keep(toks
         .withColumn("t2", lead(col("tok"), 1).over(byDoc))
         .withColumn("t3", lead(col("tok"), 2).over(byDoc))
         .filter(col("t3").isNotNull)
         .select(col("doc_id"),
           conv(substring(md5(concat_ws(" ", col("tok"), col("t2"), col("t3"))
             .cast("binary")), 1, 10), 16, 10).cast("long").as("x"))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .distinct())
       val sigs = sh.groupBy("doc_id").agg(
         bandedExactPerms.zipWithIndex.map { case ((a, b), i) =>
           min((col("x") * lit(a) + lit(b)) % lit(BandedExactM)).as(s"s$i")
@@ -1615,14 +1581,13 @@ object Dedup {
         .join(sh.as("sb"),
           col("doc_b") === col("sb.doc_id") && col("sa.x") === col("sb.x"))
         .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("i"))
-      val out = inter
+      val out = keep(inter
         .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
         .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
         .select(col("doc_a"), col("doc_b"),
           expr("(1000 * i) div (na + nb - i)").as("jaccard_permille"))
         .filter(col("jaccard_permille") >= 500)
-        .orderBy("doc_a", "doc_b")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .orderBy("doc_a", "doc_b"))
       val planted = out.filter(col("doc_b") >= offset &&
         col("doc_a") === col("doc_b") - offset).count()
       sh.unpersist()
@@ -1734,11 +1699,10 @@ object Dedup {
           sum(when(expr(s"(x div ${1L << b}) % 2") === 1L, 1L)
             .otherwise(-1L)).as(s"v$b")
         }: _*)
-      val fps = votes.select(col("doc_id"),
+      val fps = keep(votes.select(col("doc_id"),
         (0 until 40).map(b =>
           when(col(s"v$b") > 0L, lit(1L << b)).otherwise(lit(0L)))
-          .reduce(_ + _).as("fp"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .reduce(_ + _).as("fp")))
       // band-exploded single join instead of 4 unioned self-joins —
       // same candidate set (distinct'd; fa/fb are functions of the
       // doc ids) from ONE equi-join on (band, key); see the
@@ -1757,13 +1721,12 @@ object Dedup {
         .select(col("doc_id").as("doc_a"), col("doc_id_b").as("doc_b"),
           col("fp").as("fa"), col("fp_b").as("fb"))
         .distinct()
-      val out = cand
+      val out = keep(cand
         .withColumn("hamming", bit_count(col("fa").bitwiseXOR(col("fb")))
           .cast("long"))
         .filter(col("hamming") <= 3)
         .select(col("doc_a"), col("doc_b"), col("hamming"))
-        .orderBy("doc_a", "doc_b")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .orderBy("doc_a", "doc_b"))
       val planted = out.filter(col("doc_b") >= offset &&
         col("doc_a") === col("doc_b") - offset &&
         col("hamming") === 0L).count()

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.CacheHandles.keep
 
 /** Embedding-distribution drift monitoring — the check a production
   * pipeline runs when a new embedding batch lands (model swap, corpus
@@ -57,14 +58,12 @@ object Drift {
         .select(col("dim"), col("in_a"),
           least(lit(bins - 1), floor((col("x") - col("lo")) * bins /
             nullif(col("hi") - col("lo"), lit(0.0))).cast("int")).as("bin"))
-      // persisted: the totals aggregate AND the final join both read
-      // this dims×bins table — without the (tiny) cache each would
-      // re-run the full explode+count pipeline; the harness's
-      // per-query clearCache releases it (Bench/Verify discipline)
-      val counts = binned.groupBy("dim", "bin")
+      // kept: the totals aggregate AND the final join both read this
+      // dims×bins table — without the (tiny) cache each would re-run
+      // the full explode+count pipeline
+      val counts = keep(binned.groupBy("dim", "bin")
         .agg(count(when(col("in_a"), 1)).as("ca"),
-          count(when(!col("in_a"), 1)).as("cb"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          count(when(!col("in_a"), 1)).as("cb")))
       // per-dimension shard totals (each vector lands in exactly one
       // bin per dimension, so these equal the shard vector counts)
       val tot = counts.groupBy("dim")

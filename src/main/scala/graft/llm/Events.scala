@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.CacheHandles.{keep, seal}
 
 /** Semi-structured + event-time operators over the `events` table:
   * JSON property extraction (SURVEY.md §2h F12 generalized to a data
@@ -1014,7 +1015,7 @@ object Events {
     * lookups. */
   val bootstrapBc: Q = Q(
     "q_bootstrap_bc",
-    (s, dir) => {
+    (s, dir) => seal {
       import org.apache.spark.sql.expressions.Window
       val e = t(s, dir, "events")
         .select(col("event_id"), col("event_type"),
@@ -1026,13 +1027,12 @@ object Events {
         .when(u16 < 60273, 2L).when(u16 < 64292, 3L)
         .when(u16 < 65296, 4L).when(u16 < 65497, 5L)
         .when(u16 < 65531, 6L).otherwise(7L)
-      val means = e.withColumn("b", explode(sequence(lit(0), lit(99))))
+      val means = keep(e.withColumn("b", explode(sequence(lit(0), lit(99))))
         .withColumn("w", w)
         .groupBy("event_type", "b")
         .agg(sum(col("w") * col("c")).as("sc"), sum(col("w")).as("sw"))
         .select(col("event_type"), col("b"),
-          expr("(sc * 1000000) div nullif(sw, 0)").as("mean_micro"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          expr("(sc * 1000000) div nullif(sw, 0)").as("mean_micro")))
       val pt = e.groupBy("event_type")
         .agg(count(lit(1)).as("n_rows"),
           expr("(sum(c) * 1000000) div count(1)").as("point_mean_micro"))
@@ -1054,14 +1054,11 @@ object Events {
           .as("bc_lo_micro"),
           max(when(col("rn") === col("i_hi"), col("mean_micro")))
             .as("bc_hi_micro"))
-      val out = pt.join(idx, "event_type").join(bc, "event_type")
+      pt.join(idx, "event_type").join(bc, "event_type")
         .select(col("event_type"), col("n_rows"), col("point_mean_micro"),
           col("n_below"), col("i_lo"), col("i_hi"),
           col("bc_lo_micro"), col("bc_hi_micro"))
         .orderBy("event_type")
-      val mat = graft.CacheHandles.sealOutput(out)
-      means.unpersist()
-      mat
     },
     Some(s"""
       WITH e AS (
@@ -3390,9 +3387,8 @@ object Events {
           .as("r"))
       val spine = s.range(0, 7).select(col("id").as("st"))
         .crossJoin(UcbArms.toDF("a"))
-      val rGrid = spine.join(cells, Seq("st", "a"), "left")
-        .select(col("st"), col("a"), coalesce(col("r"), lit(0L)).as("r"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val rGrid = keep(spine.join(cells, Seq("st", "a"), "left")
+        .select(col("st"), col("a"), coalesce(col("r"), lit(0L)).as("r")))
       def backup(v: DataFrame): DataFrame = rGrid
         .join(v.select(((col("st") + 6) % 7).as("st"), col("v").as("vn")), Seq("st"))
         .groupBy("st")
@@ -3478,7 +3474,7 @@ object Events {
           col("event_type").as("a"),
           round(col("value") * 100, 0).cast("long").as("vc"))
       val spine = s.range(0, 31).select(col("id").as("d"))
-      val panel = spine.join(
+      val panel = keep(spine.join(
           ev.groupBy("d").agg(
             sum(when(col("a") === "purchase", col("vc")).otherwise(0L)).as("y"),
             sum(when(col("a") === "click", col("vc")).otherwise(0L)).as("c1"),
@@ -3488,8 +3484,7 @@ object Events {
         .select(col("d"), coalesce(col("y"), lit(0L)).as("y"),
           coalesce(col("c1"), lit(0L)).as("c1"),
           coalesce(col("c2"), lit(0L)).as("c2"),
-          coalesce(col("c3"), lit(0L)).as("c3"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          coalesce(col("c3"), lit(0L)).as("c3")))
       val grid = s.range(0, 21).select((col("id") * 50).as("w1"))
         .join(s.range(0, 21).select((col("id") * 50).as("w2")),
           col("w1") + col("w2") <= 1000)

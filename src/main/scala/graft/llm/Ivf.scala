@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
 import graft.functions.DotProduct
+import graft.CacheHandles.keep
 
 /** IVF (inverted-file) approximate nearest neighbor — the second
   * scale path next to sign-LSH ([[Similarity.annTopK]]).
@@ -79,9 +80,8 @@ object Ivf {
   /** Distributed Lloyd's k-means on a deterministic bounded sample. */
   def trainCentroids(emb: DataFrame, k: Int = 16, iters: Int = 5,
       sampleN: Int = 2000): Array[Array[Double]] = {
-    val sample = sampleSession(
-      trainingSample(emb.select(col("vec_id"), col("v")), sampleN), sampleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sample = keep(sampleSession(
+      trainingSample(emb.select(col("vec_id"), col("v")), sampleN), sampleN))
     try {
       val d = sample.select(size(col("v"))).head().getInt(0)
       // seeds = the first k sample vectors: k rows — the same bounded
@@ -225,7 +225,7 @@ object Ivf {
       val hist = emb.filter(col("vec_id") <= cut)
       val centroids = trainCentroidsMemo(s"$dir#annInc", hist)
       val postings = graft.Staging.store(s, "graft_ivf_postings", dir)(
-        _ => hist.repartition(par)
+        hist.repartition(par)
           .withColumn("cluster", clusterOf(col("v"), centroids))
           .select("vec_id", "cluster", "v"))
       val planted = q.select((col("query_id") + lit(1000000L)).as("vec_id"),
@@ -248,14 +248,12 @@ object Ivf {
       // baseline corpus (full embeddings + the 8 plants) is content-
       // identical to the other ANN audits', so the memoized exact
       // rows are shared across the whole family
-      val corpus = emb.repartition(par).unionByName(planted)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val corpus = keep(emb.repartition(par).unionByName(planted))
       val exact = RecallAudit.exactBaseline(s, dir, q, corpus)
-      val confirmed = ann
+      val confirmed = keep(ann
         .join(broadcast(exact), Seq("query_id", "neighbor_id"), "left_semi")
         .select("query_id", "rank", "neighbor_id")
-        .orderBy("query_id", "rank")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .orderBy("query_id", "rank"))
       val row = confirmed.agg(count(lit(1)),
         count(when(col("neighbor_id") === col("query_id") + 1000000L, 1))).head()
       val (n, plantedHits) = (row.getLong(0), row.getLong(1))

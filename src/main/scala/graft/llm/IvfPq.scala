@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.CacheHandles.keep
 
 /** IVF-PQ — the composed two-level ANN index every production vector
   * system ships (coarse inverted lists from [[Ivf]], product-quantized
@@ -47,11 +48,10 @@ object IvfPq {
       val centLit = typedLit(centroids.map(_.toSeq).toSeq)
       // residual frame: cluster assignment + within-cell displacement,
       // persisted because it feeds BOTH codebook training and indexing
-      val resid = corpus
+      val resid = keep(corpus
         .withColumn("cluster", Ivf.clusterOf(col("v"), centroids))
         .withColumn("res", zip_with(col("v"),
-          element_at(centLit, col("cluster") + 1), (a, b) => a - b))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          element_at(centLit, col("cluster") + 1), (a, b) => a - b)))
       try {
         val codebooks = Pq.trainCodebooksMemo(s"$dir#ann-resid",
           resid.select(col("vec_id"), col("res").as("v")))

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.CacheHandles.keep
 
 /** PCA over the embedding corpus — the dimensionality-reduction /
   * whitening front-end of embedding pipelines (decorrelate before
@@ -149,14 +150,13 @@ object Pca {
       if (top.sliding(2).exists(w => w.length == 2 && w(0)._1 < w(1)._1))
         throw new IllegalStateException("PCA degraded: spectrum not sorted")
       val vd = col("embedding").cast("array<double>")
-      val out = top.zipWithIndex.foldLeft(emb.select(col("vec_id"), vd.as("v"))) {
+      val out = keep(top.zipWithIndex.foldLeft(emb.select(col("vec_id"), vd.as("v"))) {
         case (df, ((_, vec), k)) =>
           val shift = (0 until d).map(j => mu(j) * vec(j)).sum
           df.withColumn(s"pc${k + 1}",
             round((graft.functions.DotProduct(col("v"), typedLit(vec.toSeq)) - lit(shift))
               * 1000000.0, 0).cast("long"))
-      }.drop("v").orderBy("vec_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      }.drop("v").orderBy("vec_id"))
       // self-check 2: projected variance tracks the eigenvalue (2%)
       val aggCols = (1 to p).flatMap(k => Seq(
         sum(col(s"pc$k")).as(s"s$k"),

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.CacheHandles.keep
 
 /** Product quantization (PQ) — the compressed-vector ANN path next to
   * sign-LSH ([[Similarity.annTopK]]) and IVF ([[Ivf]]).
@@ -41,9 +42,8 @@ object Pq {
     // same unbiased md5-bucket sample as the coarse quantizer's
     // ([[Ivf.trainingSample]]), iterated in the same sample-sized
     // cloned session ([[Ivf.sampleSession]])
-    val sample = Ivf.sampleSession(
-      Ivf.trainingSample(emb.select(col("vec_id"), col("v")), sampleN), sampleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sample = keep(Ivf.sampleSession(
+      Ivf.trainingSample(emb.select(col("vec_id"), col("v")), sampleN), sampleN))
     try {
       val d = sample.select(size(col("v"))).head().getInt(0)
       require(d % m == 0, s"dim $d not divisible by m=$m")

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.CacheHandles.keep
 
 /** Privacy-preserving release primitives — what sits between a
   * 100 TB events store and anything that leaves it: differentially
@@ -479,8 +480,7 @@ object Privacy {
         col("c_custkey").as("id"),
         col("c_nationkey").cast("long").as("d1"),
         expr("cast(round(c_acctbal * 100) as bigint) div 100000").as("d2"))
-      val out = mondrianOf(rows)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val out = keep(mondrianOf(rows))
       val tooSmall = out.filter(col("n") < MondrianK).count()
       if (tooSmall != 0L)
         throw new IllegalStateException(

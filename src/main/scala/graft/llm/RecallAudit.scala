@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.CacheHandles.keep
 
 /** Shared plant-and-confirm scaffolding for the approximate-index
   * recall audits ([[Similarity.annLsh]], [[Ivf.annIvf]], [[Pq.annPq]],
@@ -42,9 +43,9 @@ object RecallAudit {
     * queries in a run — recomputing it per audit doubled the family's
     * bench cost in round 9. 8 queries × k rows is ≤ 40 rows, so the
     * driver-side cache is trivially small, deterministic (pure
-    * function of the parquet input), and immune to the harness's
-    * per-query `clearCache()` (which would evict any shared cached
-    * FRAME between queries). */
+    * function of the parquet input), and outlives every query's cache
+    * scope (which would release any shared cached FRAME between
+    * queries). */
   private val exactCache =
     scala.collection.concurrent.TrieMap[(String, Int), Array[org.apache.spark.sql.Row]]()
 
@@ -66,12 +67,11 @@ object RecallAudit {
   }
 
   /** Materialize `df`, assert it carries at least `floor` rows, and
-    * return the persisted frame (the caller's write reuses the cache;
-    * Bench/Verify `clearCache()` after each query materializes).
+    * return the kept frame (the caller's write reuses the cache).
     * Throws `IllegalStateException` below the floor — the signal the
     * driver's `err` field records for rows-only queries. */
   def assertFloor(df: DataFrame, floor: Long, what: String): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val p = keep(df)
     val n = p.count()
     if (n < floor)
       throw new IllegalStateException(
@@ -87,7 +87,7 @@ object RecallAudit {
     * persisted frame unchanged. */
   def assertPlantedPairs(pairs: DataFrame, aCol: String, bCol: String,
       plantN: Long, what: String): DataFrame = {
-    val p = pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val p = keep(pairs)
     // one action materializes the cache AND measures plant recovery
     val recovered = p.agg(count(when(
       col(bCol) >= 1000000L && col(aCol) === col(bCol) - 1000000L, 1))).head().getLong(0)
@@ -135,14 +135,13 @@ object RecallAudit {
     val par = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val planted = q.select((col("query_id") + lit(1000000L)).as("vec_id"),
       col("qv").as("v"))
-    val corpus = emb.repartition(par).unionByName(planted)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val corpus = keep(emb.repartition(par).unionByName(planted))
     val ann = index(q, corpus)
     val exact = exactBaseline(s, dir, q, corpus)
     val confirmed = ann.join(broadcast(exact), Seq("query_id", "neighbor_id"), "left_semi")
       .select("query_id", "rank", "neighbor_id")
       .orderBy("query_id", "rank")
-    val out = confirmed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val out = keep(confirmed)
     // ONE action materializes the cached result and measures both
     // floors — the audit costs a single extra job over the un-floored
     // form, not one per assertion. The planted floor counts exact

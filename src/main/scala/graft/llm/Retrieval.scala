@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.CacheHandles.keep
 
 /** Sparse text retrieval — BM25 scoring over the documents corpus.
   *
@@ -236,14 +237,14 @@ object Retrieval {
   def lexRankedMemo(s: SparkSession, dir: String, k: Int): DataFrame = {
     require(k <= 20, s"ranking store is staged at k=20, asked $k")
     graft.Staging.store(s, "graft_rank_lex20", dir)(
-      _ => lexRanked(s, Tables.load(s, dir, "documents"), 20))
+      lexRanked(s, Tables.load(s, dir, "documents"), 20))
       .filter(col("lex_rank") <= k)
   }
 
   /** Store-backed [[denseRanked]] (k ≤ 20). */
   def denseRankedMemo(s: SparkSession, dir: String, k: Int): DataFrame = {
     require(k <= 20, s"ranking store is staged at k=20, asked $k")
-    graft.Staging.store(s, "graft_rank_dense20", dir)(_ => denseRanked(s, dir, 20))
+    graft.Staging.store(s, "graft_rank_dense20", dir)(denseRanked(s, dir, 20))
       .filter(col("dense_rank") <= k)
   }
 
@@ -621,11 +622,10 @@ object Retrieval {
     "q_phrase_search",
     (s, dir) => {
       val phrases = Seq("table hash", "customer join", "slow key filter")
-      val post = Tables.load(s, dir, "documents")
+      val post = keep(Tables.load(s, dir, "documents")
         .select(col("doc_id"),
           posexplode(split(trim(col("text")), "\\s+")).as(Seq("pos", "tok")))
-        .filter(col("tok") =!= "")
-        .persist() // probed once per phrase term
+        .filter(col("tok") =!= "")) // probed once per phrase term
       phrases.map(ph => phraseStats(post, ph))
         .reduce(_.unionByName(_)).orderBy("phrase")
     },
@@ -684,10 +684,9 @@ object Retrieval {
     (s, dir) => {
       import s.implicits._
       val docs = Tables.load(s, dir, "documents")
-      val post = docs.select(col("doc_id"),
+      val post = keep(docs.select(col("doc_id"),
           posexplode(split(trim(col("text")), "\\s+")).as(Seq("pos", "tok")))
-        .filter(col("tok") =!= "")
-        .persist() // probed by the phrase side (twice) and the tfidf tf side
+        .filter(col("tok") =!= "")) // probed by the phrase side (twice) and the tfidf tf side
       // source 1: BM25 top-20
       val bm = bm25TopK(s, docs, 20)
         .select(col("query_id"), col("doc_id"), col("rank"))

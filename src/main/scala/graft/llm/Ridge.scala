@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.CacheHandles.keep
 
 /** Ridge regression, closed form — the classifier-adjacent fitting
   * primitive a data pipeline runs to learn quality weights or probe
@@ -206,12 +207,11 @@ object Ridge {
             s"ridge degraded: system residual ${lhs - cv(i)} at row $i")
       }
       val slopes = beta.drop(1).toSeq
-      val out = emb.select(col("vec_id"), col("label"),
+      val out = keep(emb.select(col("vec_id"), col("label"),
           round((lit(beta(0)) + graft.functions.DotProduct(
             col("embedding").cast("array<double>"), typedLit(slopes)))
             * 1000000.0, 0).cast("long").as("pred_micro"))
-        .orderBy("vec_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .orderBy("vec_id"))
       // audit 2: SSE(ridge) ≤ SSE(mean predictor) — guaranteed because
       // λ does not penalize the intercept, so the mean predictor is a
       // feasible point of ridge's own objective
@@ -264,9 +264,8 @@ object Ridge {
         sum(col("x1") * col("y")).as("s1y"), sum(col("x2") * col("y")).as("s2y"))
       val b = m.select(expr(betaSql(0)).as("b0"), expr(betaSql(1)).as("b1"),
         expr(betaSql(2)).as("b2"))
-      val scored = f.crossJoin(broadcast(b))
-        .select(col("doc_id"), col("bucket"), expr(scoreSql).as("score"))
-        .persist()
+      val scored = keep(f.crossJoin(broadcast(b))
+        .select(col("doc_id"), col("bucket"), expr(scoreSql).as("score")))
       val nCal = scored.filter(col("bucket") === 1).count()
       val k = ((nCal + 1) * 9 + 9) / 10 // ⌈(n₂+1)·0.9⌉
       val qhat = scored.filter(col("bucket") === 1)
@@ -349,10 +348,9 @@ object Ridge {
         sum(col("x1") * col("y")).as("s1y"), sum(col("x2") * col("y")).as("s2y"))
       val b = m.select(expr(betaSql(0)).as("b0"), expr(betaSql(1)).as("b1"),
         expr(betaSql(2)).as("b2"))
-      val scored = f.crossJoin(broadcast(b))
+      val scored = keep(f.crossJoin(broadcast(b))
         .select(col("doc_id"), col("lang"), col("bucket"),
-          expr(scoreSql).as("score"))
-        .persist()
+          expr(scoreSql).as("score")))
       val cal = scored.filter(col("bucket") === 1)
       val kg = cal.groupBy("lang").agg(count(lit(1)).as("n_cal"))
         .withColumn("k", expr("((n_cal + 1) * 9 + 9) div 10"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.CacheHandles.keep
 
 /** Dataset-splitting and sampling operators for a training-data
   * pipeline: deterministic hash-based train/valid/test assignment and
@@ -538,9 +539,8 @@ object Sampling {
       val s = vecs.sparkSession
       val xm = transform(col("embedding"),
         x => round(x.cast("double") * 1e6, 0).cast("long"))
-      val base = vecs
-        .select(col("vec_id"), xm.as("xm"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val base = keep(vecs
+        .select(col("vec_id"), xm.as("xm")))
       try {
         val first = base.orderBy("vec_id").limit(1)
           .select("vec_id", "xm").head()
@@ -669,7 +669,7 @@ object Sampling {
       }
       val arrival = schedule("arrival", Seq(col("doc_id")))
       val sorted = schedule("length_sorted", Seq(col("n_tok"), col("doc_id")))
-      val out = arrival.unionByName(sorted).orderBy("schedule").persist()
+      val out = keep(arrival.unionByName(sorted).orderBy("schedule"))
       val w = out.collect().map(r =>
         r.getAs[String]("schedule") -> r.getAs[Long]("waste_tokens")).toMap
       if (w("length_sorted") > w("arrival"))
@@ -797,8 +797,7 @@ object Sampling {
     * candidate pool empties. Factored so SamplingAllocSpec can drive
     * a hand corpus against a brute-force reference. */
   def greedyCoverage(dtok0: DataFrame, k: Int): Seq[(Long, Long, Long, Long)] = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val dtok = dtok0.persist(MEMORY_AND_DISK)
+    val dtok = keep(dtok0)
     var picked = Vector.empty[Long]
     val trace = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
     var step = 1

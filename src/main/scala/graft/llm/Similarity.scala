@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.CacheHandles.{keep, scoped}
 
 /** Similarity search over the `embeddings` table (64-dim float
   * vectors): brute-force cosine top-k as the exact baseline, and a
@@ -178,14 +179,10 @@ object Similarity {
     * work per bucket at the cost of recall only inside pathological
     * buckets. The bucketed corpus frame is persisted (spill-safe) so
     * the size aggregate and the candidate join share ONE signature
-    * computation — the "materialize the sketch, then index it" shape;
-    * callers running multiple queries in a session should
-    * `clearCache()` between them (Bench/Verify do). */
-  def annTopK(q: DataFrame, base: DataFrame, k: Int = 5, maxBucket: Int = 4096,
-      handles: graft.CacheHandles = new graft.CacheHandles): DataFrame = {
+    * computation — the "materialize the sketch, then index it" shape. */
+  def annTopK(q: DataFrame, base: DataFrame, k: Int = 5, maxBucket: Int = 4096): DataFrame = {
     val qb = bucketedProbed(q, "query_id", "qv")
-    val bbAll = handles.track(bucketed(base, "vec_id", "v")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val bbAll = keep(bucketed(base, "vec_id", "v"))
     val sizes = bbAll.groupBy("tbl", "bucket").agg(count(lit(1)).as("bucket_n"))
     val keepEvery = greatest(lit(1L),
       ceil(col("bucket_n").cast("double") / maxBucket).cast("long"))
@@ -260,18 +257,11 @@ object Similarity {
     * catches silent degradation. */
   val annLsh: Q = Q(
     "q_ann_lsh",
-    (s, dir) => {
-      val handles = new graft.CacheHandles
-      // annAudit materializes the confirmed result before returning,
-      // so the bucketed-signature cache inside annTopK is releasable
-      // the moment it hands the frame back
-      val out = RecallAudit.annAudit(s, dir,
-        floor = RecallAudit.LshFloor, what = "LSH") {
-        (q, corpus) => annTopK(q, corpus, handles = handles)
-      }
-      handles.releaseAll()
-      out
-    },
+    // annAudit materializes the confirmed result before returning, so
+    // the bucketed-signature cache inside annTopK is releasable the
+    // moment it hands the frame back
+    (s, dir) => scoped(RecallAudit.annAudit(s, dir,
+      floor = RecallAudit.LshFloor, what = "LSH")(annTopK(_, _))),
     Some(s"""
       WITH qs AS MATERIALIZED (
         SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
@@ -416,11 +406,8 @@ object Similarity {
     * beyond the cap; SimilaritySpec pins the bound on a pathological
     * all-identical corpus). */
   def clusterNearDupPairs(emb: DataFrame, centroids: Array[Array[Double]],
-      minSim: Double, maxCluster: Int = 65536,
-      handles: graft.CacheHandles = new graft.CacheHandles): DataFrame = {
-    val assignedAll = handles.track(
-      emb.withColumn("cluster", Ivf.clusterOf(col("v"), centroids))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      minSim: Double, maxCluster: Int = 65536): DataFrame = {
+    val assignedAll = keep(emb.withColumn("cluster", Ivf.clusterOf(col("v"), centroids)))
     // skew guard, same shape as annTopK's maxBucket: within-cluster
     // pairing is quadratic, so one pathological cluster (a pile of
     // boilerplate duplicates at 100 TB) would own the stage wall-clock;
@@ -469,7 +456,7 @@ object Similarity {
     // carries the exact threshold in permille (thresholds here are
     // 2-decimal constants)
     graft.Staging.store(s, s"graft_pairs_s${math.round(minSim * 1000)}", tag)(
-      h => clusterNearDupPairs(corpus, centroids, minSim, handles = h))
+      clusterNearDupPairs(corpus, centroids, minSim))
 
   /** Driver query for [[clusterNearDupPairs]]: same planted-copy
     * scheme as [[embedDedup]] (5 exact duplicates at ids 1M+), so the
@@ -479,22 +466,17 @@ object Similarity {
     * (trained centroids aren't SQL-expressible). */
   val semanticDedup: Q = Q(
     "q_dedup_semantic",
-    (s, dir) => {
+    (s, dir) => scoped {
       val (_, base) = queriesAndBase(s, dir)
       val planted = base.filter(col("vec_id") < 5)
         .select((col("vec_id") + lit(1000000L)).as("vec_id"), col("v"))
-      val corpus = base.unionByName(planted)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val corpus = keep(base.unionByName(planted))
       val centroids = Ivf.trainCentroidsMemo(s"$dir#sem5", corpus)
-      val handles = new graft.CacheHandles
-      val out = RecallAudit.assertPlantedPairs(
-        clusterNearDupPairs(corpus, centroids, 0.95, handles = handles),
+      // the assert materializes the pair frame; the scope then drops
+      // the corpus and cluster-assignment caches as dead weight
+      RecallAudit.assertPlantedPairs(
+        clusterNearDupPairs(corpus, centroids, 0.95),
         "vec_a", "vec_b", plantN = 5, what = "semantic (cluster-blocked) dedup")
-      // the assert materialized the pair frame; both the corpus cache
-      // and the cluster-assignment cache are now dead weight
-      corpus.unpersist()
-      handles.releaseAll()
-      out
     },
     None)
 
@@ -573,8 +555,7 @@ object Similarity {
     "q_matryoshka_audit",
     (s, dir) => {
       val (q, base) = queriesAndBase(s, dir)
-      val corpus = base
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val corpus = keep(base)
       val full = exactTopK(q, corpus)
         .select(col("query_id"), col("neighbor_id"))
       val qTrunc = q.select(col("query_id"), slice(col("qv"), 1, 16).as("qv"))
@@ -590,7 +571,7 @@ object Similarity {
         .orderBy("query_id")
       // materialize the 8-row result (one per query — assertFloor also
       // checks that invariant), then drop the corpus cache both
-      // exactTopK passes shared rather than leaving it to clearCache
+      // exactTopK passes shared
       val checked = RecallAudit.assertFloor(out, 8, "matryoshka audit")
       corpus.unpersist()
       checked
@@ -720,7 +701,7 @@ object Similarity {
           .select(col("c.i").as("i"), col("c.j").as("j"),
             col("c.n").as("n"), col("c.s").as("s"))
       graft.Staging.store(s, "graft_gram_state", dir)(
-          _ => gramOf(emb.filter(col("vec_id") <= cut)))
+          gramOf(emb.filter(col("vec_id") <= cut)))
         .unionByName(gramOf(emb.filter(col("vec_id") > cut)))
         .groupBy("i", "j")
         .agg(sum(col("n")).as("n"), sum(col("s")).as("gram_micro2"))
@@ -767,11 +748,10 @@ object Similarity {
         .select(col("vec_id").as("a"), col("v").as("va"))
       val corpus = emb.filter(col("vec_id") % 2 === 1)
         .select(col("vec_id").as("b"), col("v").as("vb"))
-      val pairs = corpus.crossJoin(broadcast(probes))
+      val pairs = keep(corpus.crossJoin(broadcast(probes))
         .withColumn("cos_micro",
           round(cosine(col("va"), col("vb")) * 1000000.0, 0).cast("long"))
-        .select("a", "b", "cos_micro")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select("a", "b", "cos_micro"))
       val wA = Window.partitionBy("a").orderBy(col("cos_micro").desc, col("b").asc)
       val wB = Window.partitionBy("b").orderBy(col("cos_micro").desc, col("a").asc)
       val kA = pairs.withColumn("r", row_number().over(wA)).filter(col("r") <= 4)

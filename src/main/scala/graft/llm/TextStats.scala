@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.CacheHandles.keep
 
 /** Text-analysis operators for a training-data pipeline over the
   * `documents` table: token counting, quality scoring, language-ID
@@ -201,14 +202,13 @@ object TextStats {
     (s, dir) => {
       val docs = t(s, dir, "documents")
       val nDocs = docs.count()
-      val out = docs.select(col("doc_id"),
+      val out = keep(docs.select(col("doc_id"),
           graft.functions.RollingHash(col("text")).as("rhash64"))
-        .orderBy("doc_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .orderBy("doc_id"))
       // one action materializes the cache AND checks the exact-count
       // invariant in both directions (a drop OR a duplication throws);
       // the cached frame IS the returned result, so release belongs to
-      // the harness (Bench/Verify clearCache after materializing)
+      // the caller's scope
       val n = out.count()
       if (n != nDocs)
         throw new IllegalStateException(
@@ -317,7 +317,7 @@ object TextStats {
     * [[graft.Staging]]: one application = one corpus snapshot. */
   private def winnowStore(s: SparkSession, dir: String): DataFrame =
     graft.Staging.store(s, "graft_winnowfp", dir)(
-      _ => winnowSelect(t(s, dir, "documents").select(col("doc_id"), col("text")))
+      winnowSelect(t(s, dir, "documents").select(col("doc_id"), col("text")))
         .select(col("doc_id"), col("gpos").as("pos"), col("ghash")))
 
   /** Driver query: per-document winnowing census — gram count, window
@@ -617,7 +617,7 @@ object TextStats {
         .agg(countDistinct(col("pe")).as("matched_fp"))
       val etot = efp.groupBy(col("doc_id").as("ed"))
         .agg(count(lit(1)).as("total_fp"))
-      val out = etot
+      val out = keep(etot
         .join(mf, Seq("ed"), "left")
         .join(perDoc, Seq("ed"), "left")
         .select(col("ed").as("eval_doc"), col("total_fp"),
@@ -626,8 +626,7 @@ object TextStats {
           coalesce(col("longest_span_tokens"), lit(0L)).as("longest_span_tokens"))
         .withColumn("coverage_permille",
           expr("(1000 * matched_fp) div total_fp"))
-        .orderBy("eval_doc")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .orderBy("eval_doc"))
       // planted-leak audit: 1-row bounded collect
       val audit = out.filter(col("eval_doc") >= offset).collect()
       if (audit.length != 1)
@@ -778,7 +777,7 @@ object TextStats {
       val evalDocs = docs.filter(col("doc_id") % 17 === 0)
       val offset = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
       val store = winnowStore(s, dir)
-      val evalStore = graft.Staging.store(s, "graft_evalfp", dir) { _ =>
+      val evalStore = graft.Staging.store(s, "graft_evalfp", dir) {
         val evfp0 = store.filter(col("doc_id") % 17 === 0)
         val cap = math.max(10L,
           evfp0.agg(countDistinct(col("doc_id"))).head().getLong(0) / 10L)
@@ -824,7 +823,7 @@ object TextStats {
         .groupBy("bd")
         .agg(max(col("span_tokens")).as("longest_span_tokens"))
         .withColumnRenamed("bd", "doc_id")
-      val out = totals
+      val out = keep(totals
         .join(matched, Seq("doc_id"), "left")
         .join(spans, Seq("doc_id"), "left")
         .select(col("doc_id").as("batch_doc"), col("total_fp"),
@@ -835,8 +834,7 @@ object TextStats {
           expr("(1000 * matched_fp) div total_fp"))
         .withColumn("decision",
           when(col("coverage_permille") >= 500, "drop").otherwise("keep"))
-        .orderBy("batch_doc")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .orderBy("batch_doc"))
       val audit = out.filter(col("batch_doc") >= offset).collect()
       if (audit.length != 1)
         throw new IllegalStateException(
@@ -1462,7 +1460,7 @@ object TextStats {
       val planted = Seq(
         (2000000L, "spam " * 400),
         (2000001L, hexStream)).toDF("doc_id", "text")
-      val out = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      val out = keep(t(s, dir, "documents").select(col("doc_id"), col("text"))
         .unionByName(planted)
         .as[(Long, String)]
         .mapPartitions { it =>
@@ -1481,8 +1479,7 @@ object TextStats {
         }
         .toDF("doc_id", "raw_bytes", "comp_bytes", "ratio_permille")
         .withColumn("boilerplate_flag", col("ratio_permille") < 300)
-        .orderBy("doc_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .orderBy("doc_id"))
       val row = out.agg(
         max(when(col("doc_id") === 2000000L, col("ratio_permille"))),
         max(when(col("doc_id") === 2000001L, col("ratio_permille"))),
@@ -2891,20 +2888,18 @@ object TextStats {
     (s, dir) => {
       // ONE explode+distinct pass feeds both the df vocabulary and the
       // pair build (unpersisted it re-ran — measured 11 s → the fix)
-      val post = t(s, dir, "documents")
+      val post = keep(t(s, dir, "documents")
         .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
-        .filter(col("tok") =!= "").distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .filter(col("tok") =!= "").distinct())
       val nDocs = t(s, dir, "documents").agg(count(lit(1)).as("nd")).limit(1)
-      val vocab = post.groupBy("tok").agg(count(lit(1)).as("df"))
-        .orderBy(col("df").desc, col("tok").asc).limit(40)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val vocab = keep(post.groupBy("tok").agg(count(lit(1)).as("df"))
+        .orderBy(col("df").desc, col("tok").asc).limit(40))
       val vp = post.join(broadcast(vocab.select("tok")), "tok")
       val pairs = vp.as("a").join(vp.as("b"),
           col("a.doc_id") === col("b.doc_id") && col("a.tok") =!= col("b.tok"))
         .groupBy(col("a.tok").as("ti"), col("b.tok").as("tj"))
         .agg(count(lit(1)).as("cij"))
-      val m = pairs
+      val m = keep(pairs
         .join(broadcast(vocab.select(col("tok").as("ti"), col("df").as("ci"))), "ti")
         .join(broadcast(vocab.select(col("tok").as("tj"), col("df").as("cj"))), "tj")
         .crossJoin(broadcast(nDocs))
@@ -2912,8 +2907,7 @@ object TextStats {
           """greatest(CAST(0 AS BIGINT),
              CAST(round(1000000.0 * ln((CAST(cij AS DOUBLE) * nd)
                / (CAST(ci AS DOUBLE) * cj))) AS BIGINT)) AS m""")
-        .filter(col("m") > 0)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .filter(col("m") > 0))
       // the PPMI matrix is vocab²-bounded (≤1600 cells) — collect it
       // and fold the four power steps in the driver (the ucbReplay /
       // MMR bounded-fold discipline; the first spelling iterated with
@@ -3013,12 +3007,11 @@ object TextStats {
       val firstSeen = tok.groupBy("tok").agg(min(col("b")).as("b"))
         .groupBy("b").agg(count(lit(1)).as("new_types"))
       val wCum = Window.orderBy("b")
-      val curve = tokensPerB.join(firstSeen, Seq("b"), "left")
+      val curve = keep(tokensPerB.join(firstSeen, Seq("b"), "left")
         .select(col("b"), col("n_tok"),
           coalesce(col("new_types"), lit(0L)).as("new_types"))
         .withColumn("tokens_cum", sum(col("n_tok")).over(wCum))
-        .withColumn("types_cum", sum(col("new_types")).over(wCum))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .withColumn("types_cum", sum(col("new_types")).over(wCum)))
       val pts = curve.select(
         expr("CAST(round(1000.0 * ln(CAST(tokens_cum AS DOUBLE))) AS BIGINT)").as("x"),
         expr("CAST(round(1000.0 * ln(CAST(types_cum AS DOUBLE))) AS BIGINT)").as("y"))

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.CacheHandles.keep
 
 /** One EM step of the unigram-LM tokenizer (the SentencePiece
   * subword model, Kudo 2018) — the probabilistic alternative to
@@ -196,8 +197,7 @@ object UnigramLm {
   val unigramEm: Q = Q(
     "q_unigram_lm_em",
     (s, dir) => {
-      val words = wordCounts(t(s, dir, "documents"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val words = keep(wordCounts(t(s, dir, "documents")))
       val out = emStep(words, pieceCosts(words))
       val materialized = out.collect()
       words.unpersist()
@@ -265,13 +265,11 @@ object UnigramLm {
   val unigramEm2: Q = Q(
     "q_unigram_lm_em2",
     (s, dir) => {
-      val words = wordCounts(t(s, dir, "documents"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val words = keep(wordCounts(t(s, dir, "documents")))
       val costs1 = pieceCosts(words)
       val vit1 = viterbiPaths(words, costs1)
         .groupBy("piece").agg(sum(col("cnt")).as("vit_count"))
-      val costs2 = prunedCosts(costs1, vit1)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val costs2 = keep(prunedCosts(costs1, vit1))
       val vit2 = viterbiPaths(words, costs2)
         .groupBy("piece").agg(sum(col("cnt")).as("vit2"))
       val m2 = vit2.agg(sum(col("vit2")).as("m"))
@@ -371,12 +369,10 @@ object UnigramLm {
   val unigramEm3: Q = Q(
     "q_unigram_lm_em3",
     (s, dir) => {
-      val words = wordCounts(t(s, dir, "documents"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val words = keep(wordCounts(t(s, dir, "documents")))
       def vitOf(costs: DataFrame): DataFrame =
-        viterbiPaths(words, costs)
-          .groupBy("piece").agg(sum(col("cnt")).as("vit_count"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        keep(viterbiPaths(words, costs)
+          .groupBy("piece").agg(sum(col("cnt")).as("vit_count")))
       def statsOf(round: Int, vit: DataFrame, costs: DataFrame): DataFrame =
         vit.join(costs.select("piece", "cost"), Seq("piece"))
           .agg(count(lit(1)).as("n_pieces"),

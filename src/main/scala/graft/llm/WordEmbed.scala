@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.CacheHandles.keep
 
 /** Count-based word embeddings trained IN-ENGINE: symmetric window-1
   * co-occurrence → PPMI → truncated eigendecomposition, the classical
@@ -60,9 +61,8 @@ object WordEmbed {
     * Factored so WordEmbedSpec can feed planted-clique corpora. */
   private[graft] def embed(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
-    val pairs = symPairs(docs)
-      .groupBy("u", "v").agg(count(lit(1)).as("n_uv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pairs = keep(symPairs(docs)
+      .groupBy("u", "v").agg(count(lit(1)).as("n_uv")))
     val marg = pairs.groupBy(col("u")).agg(sum(col("n_uv")).as("n_u"))
     val totRow = marg.agg(sum(col("n_u")).as("n")).head()
     val nTot = totRow.getLong(0)
@@ -121,8 +121,7 @@ object WordEmbed {
     val eCols = (1 to D).map(k =>
       round(sum(when(col("k") === k, col("term")).otherwise(0.0)) * 1e6, 0)
         .cast("long").as(s"e$k"))
-    // `pairs` stays persisted until the harness's per-query
-    // clearCache (the Drift.psi discipline): the marginals, the
+    // `pairs` stays kept for the caller's scope: the marginals, the
     // pivot collect, and this projection all read it
     terms.groupBy("u").agg(eCols.head, eCols.tail: _*)
       .withColumnRenamed("u", "tok")

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.CacheHandles.{keep, seal}
 
 /** Iterative graph analytics over relational data. The reference has
   * no graph surface; this is north-star breadth alongside
@@ -151,7 +152,7 @@ object Graph {
 
   def coPairs(s: SparkSession, dir: String, window: String): DataFrame =
     graft.Staging.store(s, s"graft_coedges_$window", dir)(
-      _ => coPairsBuildPlan(s, dir, window))
+      coPairsBuildPlan(s, dir, window))
 
   /** Distinct canonical undirected co-purchase edges `(u, v)`, u < v,
     * from the staged store — the input shape most graph queries use. */
@@ -167,7 +168,7 @@ object Graph {
     * same device and staleness contract as [[coPairs]]. Consumers
     * apply their own vertex encodings (2k / 2k+1) on the store scan. */
   def csPairs(s: SparkSession, dir: String, window: String): DataFrame =
-    graft.Staging.store(s, s"graft_csedges_$window", dir) { _ =>
+    graft.Staging.store(s, s"graft_csedges_$window", dir) {
       val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
       val base = t(s, dir, "lineitem")
       val l = window match {
@@ -190,7 +191,7 @@ object Graph {
     * the same three-query rebuild argument applies to the temporal
     * family (reach / katz / motifs), so it gets its own store. */
   def temporalEdges(s: SparkSession, dir: String): DataFrame =
-    graft.Staging.store(s, "graft_tedges_2y", dir) { _ =>
+    graft.Staging.store(s, "graft_tedges_2y", dir) {
       val op = t(s, dir, "lineitem")
         .where(col("l_shipdate") >= lit("1995-01-01").cast("timestamp") &&
           col("l_shipdate") < lit("1997-01-01").cast("timestamp"))
@@ -430,7 +431,7 @@ object Graph {
   def triangleStats(edges: DataFrame): DataFrame = {
     // persisted: consumed by the degree count, the orientation join,
     // the closure broadcast, and the edge-count aggregate
-    val e = edges.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = keep(edges)
     val deg = e.select(explode(array(col("u"), col("v"))).as("x"))
       .groupBy("x").agg(count(lit(1)).as("d"))
     val withDeg = e
@@ -460,11 +461,10 @@ object Graph {
     val degStats = deg.agg(count(lit(1)).as("n_vertices"),
       sum(expr("(d * (d - 1)) div 2")).as("n_wedges"))
     val edgeStats = e.agg(count(lit(1)).as("n_edges"))
-    val out = degStats.crossJoin(broadcast(edgeStats)).crossJoin(broadcast(triStats))
+    val out = keep(degStats.crossJoin(broadcast(edgeStats)).crossJoin(broadcast(triStats))
       .select(col("n_vertices"), col("n_edges"), col("n_wedges"),
         col("n_triangles"),
-        expr("(3000 * n_triangles) div nullif(n_wedges, 0)").as("clustering_permille"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        expr("(3000 * n_triangles) div nullif(n_wedges, 0)").as("clustering_permille")))
     out.count() // materialize the 1-row stats while e is cached
     e.unpersist()
     out
@@ -486,7 +486,7 @@ object Graph {
     * wedge shuffle; the per-vertex rollup is vertex-sized. cc in
     * exact permille (nonnegative division). */
   def localClustering(edges: DataFrame): DataFrame = {
-    val e = edges.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = keep(edges)
     val deg = e.select(explode(array(col("u"), col("v"))).as("x"))
       .groupBy("x").agg(count(lit(1)).as("d"))
     val withDeg = e
@@ -504,15 +504,14 @@ object Graph {
     val tri = wedges.join(broadcast(e), Seq("u", "v"))
       .select(explode(array(col("w"), col("u"), col("v"))).as("vertex"))
       .groupBy("vertex").agg(count(lit(1)).as("triangles"))
-    val out = deg.filter(col("d") >= 2)
+    val out = keep(deg.filter(col("d") >= 2)
       .select(col("x").as("vertex"), col("d").as("degree"))
       .join(tri, Seq("vertex"), "left")
       .select(col("vertex"), col("degree"),
         coalesce(col("triangles"), lit(0L)).as("triangles"))
       .selectExpr("vertex", "degree", "triangles",
         "(2000 * triangles) div (degree * (degree - 1)) AS cc_permille")
-      .orderBy("vertex")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .orderBy("vertex"))
     out.count() // materialize while e is cached
     e.unpersist()
     out
@@ -1444,8 +1443,7 @@ object Graph {
   val kcore: Q = Q(
     "q_kcore",
     (s, dir) => {
-      val edges = coEdges(s, dir, "2y")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val edges = keep(coEdges(s, dir, "2y"))
       // k = exact 25th-PERCENTILE initial degree: a deterministic pure
       // function of the data that keeps the peel biting at every SF
       // (the windowed co-purchase degree distribution is
@@ -1459,9 +1457,8 @@ object Graph {
       val k = deg0.orderBy(col("d"), col("x")).limit((nV0 / 4 + 1).toInt)
         .agg(max(col("d"))).head().getLong(0).toInt
       val core = kCore(edges, k)
-      val deg = core.select(explode(array(col("u"), col("v"))).as("vertex"))
-        .groupBy("vertex").agg(count(lit(1)).as("core_deg"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val deg = keep(core.select(explode(array(col("u"), col("v"))).as("vertex"))
+        .groupBy("vertex").agg(count(lit(1)).as("core_deg")))
       val mn = deg.agg(min(col("core_deg"))).head()
       if (!mn.isNullAt(0) && mn.getLong(0) < k)
         throw new IllegalStateException(
@@ -1685,15 +1682,13 @@ object Graph {
       // half-year window (vs the 2-year triangle/kcore graph): Brandes
       // pays per-level rounds in BOTH directions, so the demo keeps
       // the same co-purchase semantics on the sparser seasonal slice
-      val edges = coEdges(s, dir, "h1")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val edges = keep(coEdges(s, dir, "h1"))
       val deg = edges.select(explode(array(col("u"), col("v"))).as("x"))
         .groupBy("x").agg(count(lit(1)).as("d"))
       val sources = deg.orderBy(col("d").desc, col("x")).limit(4)
         .collect().map(_.getLong(0)).toSeq
-      val out = betweenness(edges, sources)
-        .orderBy(col("btw_milli").desc, col("v")).limit(50)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val out = keep(betweenness(edges, sources)
+        .orderBy(col("btw_milli").desc, col("v")).limit(50))
       val neg = out.filter(col("btw_milli") < 0).count()
       if (neg > 0)
         throw new IllegalStateException(s"$neg negative dependency scores")
@@ -2027,9 +2022,8 @@ object Graph {
     * machinery). Envelope: counts ≤ seeds·deg³ — BIGINT-safe through
     * ~10⁵ average temporal degree. */
   def temporalWalkCounts(edges: DataFrame, sources: DataFrame,
-      rounds: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst"), col("t"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      rounds: Int): DataFrame = seal {
+    val e = keep(edges.select(col("src"), col("dst"), col("t")))
     var w = e.join(sources.withColumnRenamed("v", "src"), Seq("src"), "left_semi")
       .filter(col("t") >= 0)
       .groupBy(col("dst").as("v"), col("t")).agg(count(lit(1)).as("w"))
@@ -2041,15 +2035,13 @@ object Graph {
         .agg(sum(col("p.w")).as("w"))
       layers += w
     }
-    val out = layers.reduce(_.unionByName(_))
+    // per-vertex walk counts are data-scaled: sealed — materialized
+    // distributed (no driver round-trip) before the edge cache is
+    // released; the range sort on the unique key is deterministic at
+    // any partition count, so no single-partition funnel is needed
+    layers.reduce(_.unionByName(_))
       .groupBy("v").agg(sum(col("w")).as("walks"))
-    // per-vertex walk counts are data-scaled: materialize distributed
-    // (no driver round-trip) before releasing the edge cache; the
-    // range sort on the unique key is deterministic at any partition
-    // count, so no single-partition funnel is needed
-    val mat = graft.CacheHandles.sealOutput(out.orderBy("v"))
-    e.unpersist()
-    mat
+      .orderBy("v")
   }
 
   /** Driver query: ≤3-edge time-respecting walk counts over the
@@ -2620,8 +2612,7 @@ object Graph {
   val graphRobustness: Q = Q(
     "q_graph_robustness",
     (s, dir) => {
-      val und = coEdges(s, dir, "h1")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val und = keep(coEdges(s, dir, "h1"))
       val hubs = und.select(explode(array(col("u"), col("v"))).as("x"))
         .groupBy("x").agg(count(lit(1)).as("d"))
         .orderBy(col("d").desc, col("x").asc).limit(3)
@@ -2647,10 +2638,9 @@ object Graph {
         componentCensus(attacked).withColumn("phase", lit("2_attacked")))
       val full = Await.result(fullF, Duration.Inf)
       val after = Await.result(afterF, Duration.Inf)
-      val out = full.unionAll(after)
+      val out = keep(full.unionAll(after)
         .select("phase", "n_vertices", "n_edges", "largest_cc", "n_components")
-        .orderBy("phase")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .orderBy("phase"))
       val rows = out.collect() // 2-row audit table (bounded by construction)
       und.unpersist()
       def phase(p: String) = rows.find(_.getString(0) == p).getOrElse(
@@ -2743,8 +2733,7 @@ object Graph {
     * ecc, reached). Sweep-2 ecc is the diameter lower bound. */
   def doubleSweep(edges0: DataFrame, hops: Int = 6): DataFrame = {
     val s = edges0.sparkSession
-    val edges = edges0.select(col("src"), col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val edges = keep(edges0.select(col("src"), col("dst")))
     def sweep(sources: DataFrame, n: Long): (DataFrame, DataFrame) = {
       val d = bfs(edges, sources, hops)
       val far = d.orderBy(col("dist").desc, col("v").asc).limit(1)
@@ -3036,12 +3025,11 @@ object Graph {
     * scheduling and landmark selection. */
   val lubyMisQ: Q = Q(
     "q_luby_mis",
-    (s, dir) => {
+    (s, dir) => seal {
       val cs = csPairs(s, dir, "m1")
       val edges = cs.select((col("c") * 2).as("src"), (col("p") * 2 + 1).as("dst"))
         .unionAll(cs.select((col("p") * 2 + 1).as("src"), (col("c") * 2).as("dst")))
-      val raw = lubyMis(edges, MisRounds)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val raw = keep(lubyMis(edges, MisRounds))
       val unconverged = raw.filter(col("still_active") === 1L).count()
       if (unconverged != 0L)
         throw new IllegalStateException(
@@ -3058,12 +3046,11 @@ object Graph {
           .select(col("src").as("v")), Seq("v"), "left_anti").count()
       if (uncovered != 0L)
         throw new IllegalStateException(s"MIS not maximal: $uncovered uncovered")
-      // materialize distributed (vertex-linear output — no driver hop),
-      // then release the iterate cache; the range sort on the unique
-      // vertex key is deterministic at any partition count
-      val mat = graft.CacheHandles.sealOutput(out.orderBy("v"))
-      raw.unpersist()
-      mat
+      // sealed: materialized distributed (vertex-linear output — no
+      // driver hop), then the iterate cache is released; the range
+      // sort on the unique vertex key is deterministic at any
+      // partition count
+      out.orderBy("v")
     },
     Some(s"""
       WITH cs AS (

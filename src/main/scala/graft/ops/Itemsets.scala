@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.CacheHandles.{keep, seal}
 
 /** Frequent-itemset mining (a-priori, 1/2/3-itemsets) over per-order
   * brand baskets — the market-basket classic, shaped for a 100 TB
@@ -48,7 +49,7 @@ object Itemsets {
     * filtering staged baskets equals basket-building filtered rows.
     * Same staleness contract as [[graft.Staging]]. */
   def brandBaskets(s: SparkSession, dir: String): DataFrame =
-    graft.Staging.store(s, "graft_baskets", dir) { _ =>
+    graft.Staging.store(s, "graft_baskets", dir) {
       val part = t(s, dir, "part").select(col("p_partkey"), col("p_brand"))
       t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"))
@@ -73,13 +74,11 @@ object Itemsets {
   val frequentItemsets: Q = Q(
     "q_itemsets",
     (s, dir) => {
-      val baskets = brandBaskets(s, dir)
-        .persist() // read thrice: n, freq-1, candidate gen
+      val baskets = keep(brandBaskets(s, dir)) // read thrice: n, freq-1, candidate gen
       val nb = baskets.count()
-      val sup1 = baskets
+      val sup1 = keep(baskets
         .select(explode(col("items")).as("item"))
-        .groupBy("item").agg(count(lit(1)).as("support"))
-        .persist()
+        .groupBy("item").agg(count(lit(1)).as("support")))
       // lossless a-priori prunes: members of any ≥1% pair are ≥1%
       // items; members of any ≥2‰ triple are ≥2‰ items
       val f1pct = sup1.filter(col("support") * 100 >= nb)
@@ -194,11 +193,10 @@ object Itemsets {
       val stateDir = graft.Staging.dir(s, "graft_itemset_state")
       countsOf(baskets.filter(col("l_orderkey") <= cut))
         .write.mode("overwrite").parquet(stateDir)
-      val merged = s.read.parquet(stateDir)
+      val merged = keep(s.read.parquet(stateDir)
         .unionByName(countsOf(baskets.filter(col("l_orderkey") > cut)))
         .groupBy("k", "item1", "item2", "item3")
-        .agg(sum(col("support")).as("support"))
-        .persist()
+        .agg(sum(col("support")).as("support")))
       val nb = merged.filter(col("k") === 0).agg(sum(col("support")))
         .head().getLong(0)
       merged.filter(
@@ -235,10 +233,10 @@ object Itemsets {
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
     val byUser = Window.partitionBy("user_id")
       .orderBy(col("ts").asc, col("event_id").asc)
-    val pos = ev.withColumn("rn", row_number().over(byUser))
+    // both sides of the user-keyed pair join
+    val pos = keep(ev.withColumn("rn", row_number().over(byUser))
       .groupBy(col("user_id"), col("event_type"))
-      .agg(min(col("rn")).as("fp"), max(col("rn")).as("lp"))
-      .persist() // both sides of the user-keyed pair join
+      .agg(min(col("rn")).as("fp"), max(col("rn")).as("lp")))
     val nUsers = pos.select(col("user_id")).distinct().count()
     pos.select(col("user_id"), col("event_type").as("g1"), col("fp"))
       .join(pos.select(col("user_id"), col("event_type").as("g2"), col("lp")),
@@ -294,9 +292,8 @@ object Itemsets {
     * the rule join is ITEM-DOMAIN sized (frequent pairs × 2). */
   val assocRules: Q = Q(
     "q_assoc_rules",
-    (s, dir) => {
-      val baskets = brandBaskets(s, dir)
-        .persist()
+    (s, dir) => seal {
+      val baskets = keep(brandBaskets(s, dir))
       val nbF = baskets.agg(count(lit(1)).as("nb"))
       val s1 = baskets.select(explode(col("items")).as("item"))
         .groupBy("item").agg(count(lit(1)).as("s"))
@@ -309,7 +306,11 @@ object Itemsets {
           col("s_ab"), col("nb"))
         .unionByName(s2.select(col("i2").as("ante"), col("i1").as("cons"),
           col("s_ab"), col("nb")))
-      val out = directed
+      // rule table is support-thresholded but corpus-dependent:
+      // sealed — materialized distributed (no driver round-trip)
+      // before the basket cache is released; (ante, cons) is a unique
+      // key so the range sort is deterministic
+      directed
         .join(broadcast(s1.select(col("item").as("ante"), col("s").as("s_a"))),
           Seq("ante"))
         .join(broadcast(s1.select(col("item").as("cons"), col("s").as("s_b"))),
@@ -324,13 +325,6 @@ object Itemsets {
             " * (cast(s_b as double) / cast(nb as double)))) as bigint)")
             .as("leverage_micro"))
         .orderBy("ante", "cons")
-      // rule table is support-thresholded but corpus-dependent:
-      // materialize distributed (no driver round-trip) before
-      // releasing the basket cache; (ante, cons) is a unique key so
-      // the range sort already in `out` is deterministic
-      val mat = graft.CacheHandles.sealOutput(out)
-      baskets.unpersist()
-      mat
     },
     Some("""
       WITH basket AS (

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
 import graft.functions.ZOrderValue
+import graft.CacheHandles.keep
 
 /** Multi-dimensional data layout: Z-order clustering of a write so
   * 2-D box predicates prune row groups / files on either predicate
@@ -177,8 +178,7 @@ object Layout {
       val after = assign(ring(7, 8).unionByName(
         // the NEW shard's 8 vnodes: shard id 7
         ring(8, 8).filter(col("shard") === 7L)).limit(64), "shard_after")
-      val both = before.join(after, "user_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val both = keep(before.join(after, "user_id"))
       val badMoves = both.filter(col("shard_before") =!= col("shard_after") &&
         col("shard_after") =!= 7L).count()
       if (badMoves != 0L)
@@ -291,8 +291,7 @@ object Layout {
       }
       val before = assign(ring(WchCaps), "shard_before")
       val after = assign(ring(WchCaps :+ WchNewShard), "shard_after")
-      val both = before.join(after, "user_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val both = keep(before.join(after, "user_id"))
       val badMoves = both.filter(col("shard_before") =!= col("shard_after") &&
         col("shard_after") =!= WchNewShard._1).count()
       if (badMoves != 0L)

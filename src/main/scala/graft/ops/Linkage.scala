@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.CacheHandles.keep
 
 /** Probabilistic record linkage — the Fellegi–Sunter model (JASA
   * 1969), the standard framework behind every production entity-
@@ -199,10 +200,9 @@ object Linkage {
     (s, dir) => {
       val a = regA(s, dir)
       val b = regB(a)
-      val matches = a.as("a").join(b.as("b"), col("a.id") === col("b.id"))
+      val matches = keep(a.as("a").join(b.as("b"), col("a.id") === col("b.id"))
         .select(col("a.blk").as("blk_a"), col("b.blk").as("blk_b"),
-          col("a.nation").as("na"), col("b.nation").as("nb"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          col("a.nation").as("na"), col("b.nation").as("nb")))
       val nTotal = a.count()
       def scheme(name: String, keyA: DataFrame, keyB: DataFrame,
           covered: Long): (String, Long, Long, Long) = {

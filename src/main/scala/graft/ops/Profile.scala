@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.CacheHandles.{keep, seal}
 
 /** Dataset profiling — the "what is in this table" operators every
   * engine needs before any pipeline is trusted: per-column summary
@@ -813,7 +814,7 @@ object Profile {
     * from full-node stats, which one aggregate per level provides). */
   val isolationForest: Q = Q(
     "q_isolation_forest",
-    (s, dir) => {
+    (s, dir) => seal {
       val base = t(s, dir, "orders").select(
         col("o_orderkey").as("k"),
         round(col("o_totalprice") * 100, 0).cast("long").as("x1"),
@@ -831,7 +832,6 @@ object Profile {
       // is that only the projected 5-column routing frame rides the
       // cache (it does), and disk spill bounds memory at ψ-sampled
       // production sizes
-      val handles = new graft.CacheHandles
       var rows = base.crossJoin(broadcast(trees)).withColumn("node", lit(1L))
       for (_ <- 1 to 3) {
         val hex = md5(concat(col("tree").cast("string"), lit(":"),
@@ -848,12 +848,11 @@ object Profile {
                  THEN mn1 + (h2m * (mx1 - mn1)) div 1009
                  ELSE mn2 + (h2m * (mx2 - mn2)) div 1009
                END AS thr""")
-        rows = handles.track(rows.join(broadcast(splits), Seq("tree", "node"))
+        rows = keep(rows.join(broadcast(splits), Seq("tree", "node"))
           .withColumn("node", col("node") * 2 +
             when((col("dim") === 0 && col("x1") > col("thr")) ||
                  (col("dim") === 1 && col("x2") > col("thr")), 1L).otherwise(0L))
-          .select("k", "x1", "x2", "tree", "node")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .select("k", "x1", "x2", "tree", "node"))
       }
       val leafScore = rows.groupBy("tree", "node")
         .agg(count(lit(1)).as("n"))
@@ -864,15 +863,12 @@ object Profile {
                     - 2.0 * CAST(n - 1 AS DOUBLE) / CAST(n AS DOUBLE)))
                   AS BIGINT)
              END AS c_milli""")
-      val out = rows.join(broadcast(leafScore), Seq("tree", "node"))
+      rows.join(broadcast(leafScore), Seq("tree", "node"))
         .groupBy("k")
         .agg((lit(12000L) + sum(col("c_milli"))).as("score_milli"),
           min(col("n")).as("min_leaf"))
         .orderBy(col("score_milli").asc, col("k").asc)
         .limit(20)
-      val sealedOut = graft.CacheHandles.sealOutput(out)
-      handles.releaseAll()
-      sealedOut
     },
     Some(s"""
       WITH base AS (

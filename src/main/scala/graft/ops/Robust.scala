@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.CacheHandles.keep
 
 /** Robust/nonparametric series statistics over the daily event
   * aggregate — the estimators a metrics pipeline reaches for when OLS
@@ -43,7 +44,7 @@ object Robust {
   val theilSen: Q = Q(
     "q_theil_sen",
     (s, dir) => {
-      val dd = daily(s, dir).persist()
+      val dd = keep(daily(s, dir))
       val nd = dd.count()
       val pn = nd * (nd - 1) / 2
       val slopes = dd.select(col("d").as("da"), col("cents").as("ca"))
@@ -746,15 +747,14 @@ object Robust {
         .agg(min(to_date(col("ts"))).as("first_day"),
           max(to_date(col("ts"))).as("last_day"))
       val horizon = users.agg(max(col("last_day"))).head().getDate(0)
-      val pp = users.select(
+      val pp = keep(users.select(
           datediff(col("last_day"), col("first_day")).cast("long").as("life"),
           when(col("last_day") === lit(horizon), 0L).otherwise(1L).as("death"),
           (col("user_id") % 2).as("cohort"))
         .withColumn("j", explode(sequence(lit(0L), col("life"))))
         .select(lit(1L).as("x0"), col("j").as("x1"), col("cohort").as("x2"),
           when(col("j") === col("life") && col("death") === 1L, 1L)
-            .otherwise(0L).as("y"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            .otherwise(0L).as("y")))
       var w0 = 0L; var w1 = 0L; var w2 = 0L
       val stats = (1 to iters).map { it =>
         val z = lit(w0) * col("x0") + lit(w1) * col("x1") + lit(w2) * col("x2")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.CacheHandles.{keep, seal}
 
 /** Slowly-changing-dimension maintenance — the history side of the
   * warehouse surface [[Merge]] covers the latest-state side of. The
@@ -197,16 +198,14 @@ object Scd {
         .filter(col("valid_from") === 3L && coin < 20)
         .select(col("key"), col("valid_from"),
           lit(7L).as("tx_from"), (col("value") + 100000L).as("value"))
-      val bt = bitemporal(
+      val bt = keep(bitemporal(
         facts.select("key", "valid_from", "tx_from", "value")
-          .unionByName(corrections))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val out = asOf(bt, t = 4L, v = 3L).withColumnRenamed("value", "v_tx4")
+          .unionByName(corrections)))
+      val out = keep(asOf(bt, t = 4L, v = 3L).withColumnRenamed("value", "v_tx4")
         .join(asOf(bt, t = 8L, v = 3L).withColumnRenamed("value", "v_tx8"),
           "key")
         .withColumn("delta", col("v_tx8") - col("v_tx4"))
-        .withColumn("coin", coin.cast("long"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .withColumn("coin", coin.cast("long")))
       val bad = out.filter(col("delta") =!= 0L &&
         (col("delta") =!= 100000L || col("coin") >= 20L)).count()
       if (bad != 0L)
@@ -291,11 +290,10 @@ object Scd {
     * version ever recorded. Preconditions checked, not assumed: the
     * delta carries at most ONE version per (key, valid_from) cell and
     * strictly advances tx within its cell (counted in-plan; throws).
-    * The delta and touched frames are persisted into `handles`, which
-    * the caller releases once the result is materialized (or the
+    * The delta and touched frames are kept; the caller's scope
+    * releases them once the result is materialized (or the
     * precondition check has thrown). */
-  def absorbCorrections(store: DataFrame, delta: DataFrame,
-      handles: graft.CacheHandles): DataFrame = {
+  def absorbCorrections(store: DataFrame, delta: DataFrame): DataFrame = {
     // the delta is BATCH-sized and consumed five times (dup check,
     // touch join, reclose, anti-join key set, append); the touched
     // set is batch-sized too and consumed twice (stale check,
@@ -304,17 +302,15 @@ object Scd {
     // returned union joined the store against a re-derived delta
     // twice more (the delta derivation re-ran its whole upstream
     // scan per consumer).
-    val d = handles.track(delta.select(col("key"), col("valid_from"),
-        col("tx_from").as("d_tx"), col("value").as("d_value"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val d = keep(delta.select(col("key"), col("valid_from"),
+        col("tx_from").as("d_tx"), col("value").as("d_value")))
     val dup = d.groupBy("key", "valid_from").count()
       .filter(col("count") > 1L).count()
     if (dup != 0L)
       throw new IllegalArgumentException(
         s"correction batch carries $dup multi-version cells; absorb one " +
           "version per (key, valid_from) per batch")
-    val touched = handles.track(store.join(d, Seq("key", "valid_from"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val touched = keep(store.join(d, Seq("key", "valid_from")))
     val stale = touched.filter(col("d_tx") <= col("tx_from")).count()
     if (stale != 0L)
       throw new IllegalArgumentException(
@@ -354,7 +350,7 @@ object Scd {
     * re-certifies incremental ≡ rebuild every round. */
   val bitemporalIncremental: Q = Q(
     "q_bitemporal_incremental",
-    (s, dir) => {
+    (s, dir) => seal {
       def hexCoin(c: Column, p: Int): Column = {
         val hex = md5(c.cast("string").cast("binary"))
         (ascii(substring(hex, p, 1)) * 256 + ascii(substring(hex, p + 1, 1))) % 100
@@ -368,7 +364,7 @@ object Scd {
         .withColumn("tx_from", col("valid_from") + 1)
         .select("key", "valid_from", "tx_from", "value")
       val base = graft.Staging.store(s, "graft_bitemporal_store", dir)(
-        _ => bitemporal(facts))
+        bitemporal(facts))
       def corrections(m: Long, txAt: Long, addCents: Long,
           hexPos: Int, pct: Int) =
         facts.filter(col("valid_from") === m &&
@@ -377,17 +373,17 @@ object Scd {
             lit(txAt).as("tx_from"), (col("value") + addCents).as("value"))
       val d1 = corrections(3L, 7L, 100000L, hexPos = 9, pct = 20)
       val d2 = corrections(4L, 8L, 50000L, hexPos = 11, pct = 15)
-      val handles = new graft.CacheHandles
-      // persist the mid-chain store: batch 2's precondition count and
+      // keep the mid-chain store: batch 2's precondition count and
       // the final chain both consume it, and each consumption would
       // otherwise replay batch 1's whole absorb (two more store scans)
-      val s1 = handles.track(absorbCorrections(base, d1, handles)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      val incr = absorbCorrections(s1, d2, handles)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val s1 = keep(absorbCorrections(base, d1))
+      val incr = keep(absorbCorrections(s1, d2))
       def read(tAt: Long, v: Long, name: String) =
         asOf(incr, tAt, v).withColumnRenamed("value", name)
-      val out = read(4L, 3L, "mar_tx4")
+      // key-linear output: sealed — materialized distributed (no
+      // driver round-trip) before the absorbed-store caches are
+      // released; the range sort on the unique key is deterministic
+      read(4L, 3L, "mar_tx4")
         .join(read(8L, 3L, "mar_tx8"), "key")
         .join(read(5L, 4L, "apr_tx5"), "key")
         .join(read(9L, 4L, "apr_tx9"), "key")
@@ -396,12 +392,6 @@ object Scd {
           col("apr_tx5"), col("apr_tx9"),
           (col("apr_tx9") - col("apr_tx5")).as("apr_delta"))
         .orderBy("key")
-      // key-linear output: materialize distributed (no driver
-      // round-trip) before releasing the absorbed-store cache; the
-      // range sort on the unique key is deterministic
-      val mat = graft.CacheHandles.sealOutput(out)
-      incr.unpersist(); handles.releaseAll()
-      mat
     },
     Some("""
       WITH facts AS MATERIALIZED (
@@ -491,10 +481,10 @@ object Scd {
     * chain window (key-hash shuffles), reads are snapshot filters +
     * one key window each, the FK join hashes on the key every frame
     * already shuffles on. Output is key-linear → [[graft.CacheHandles
-    * .sealOutput]], never a driver hop. */
+    * .seal]], never a driver hop. */
   val bitemporalFk: Q = Q(
     "q_bitemporal_fk",
-    (s, dir) => {
+    (s, dir) => seal {
       def hexCoin(c: Column, p: Int): Column = {
         val hex = md5(c.cast("string").cast("binary"))
         (ascii(substring(hex, p, 1)) * 256 + ascii(substring(hex, p + 1, 1))) % 100
@@ -515,29 +505,26 @@ object Scd {
         .filter(col("valid_from") === 4L && hexCoin(col("key"), 11) < 15)
         .select(col("key"), col("valid_from"), lit(8L).as("tx_from"),
           (col("value") + 50000L).as("value"))
-      val factBt = bitemporal(
-        facts.unionByName(factCorr3).unionByName(factCorr4))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val factBt = keep(bitemporal(
+        facts.unionByName(factCorr3).unionByName(factCorr4)))
       val cust = t(s, dir, "customer")
         .select(col("c_custkey").as("key"),
           (round(col("c_acctbal") * 100, 0).cast("long") + 1000000L)
             .as("lim"))
-      val dimBt = bitemporal(
+      val dimBt = keep(bitemporal(
         cust.select(col("key"), lit(1L).as("valid_from"),
             lit(2L).as("tx_from"), col("lim").as("value"))
           .unionByName(cust.select(col("key"), lit(4L).as("valid_from"),
             lit(5L).as("tx_from"), (col("lim") + 500000L).as("value")))
           .unionByName(cust.filter(hexCoin(col("key"), 5) < 30)
             .select(col("key"), lit(4L).as("valid_from"),
-              lit(8L).as("tx_from"), (col("lim") + 525000L).as("value"))))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+              lit(8L).as("tx_from"), (col("lim") + 525000L).as("value")))))
       def read(bt: DataFrame, tAt: Long, v: Long, name: String) =
         asOf(bt, tAt, v).withColumnRenamed("value", name)
-      val joined = read(factBt, 6L, 4L, "fact_t6")
+      val joined = keep(read(factBt, 6L, 4L, "fact_t6")
         .join(read(factBt, 9L, 4L, "fact_t9"), "key")
         .join(read(dimBt, 6L, 4L, "lim_t6"), "key")
-        .join(read(dimBt, 9L, 4L, "lim_t9"), "key")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .join(read(dimBt, 9L, 4L, "lim_t9"), "key"))
       val audit = joined.agg(
         sum(when(!(col("fact_t9") - col("fact_t6")).isin(0L, 50000L, 100000L),
           1L).otherwise(0L)).as("bad_fact"),
@@ -547,15 +534,12 @@ object Scd {
         throw new IllegalStateException(
           s"bitemporal FK deltas off the planted grid: " +
             s"${audit.getLong(0)} fact, ${audit.getLong(1)} dim")
-      val out = joined.select(col("key"),
+      joined.select(col("key"),
           col("fact_t6"), col("lim_t6"),
           expr("(1000 * fact_t6) div lim_t6").as("util_t6_permille"),
           col("fact_t9"), col("lim_t9"),
           expr("(1000 * fact_t9) div lim_t9").as("util_t9_permille"))
         .orderBy("key")
-      val mat = graft.CacheHandles.sealOutput(out)
-      factBt.unpersist(); dimBt.unpersist(); joined.unpersist()
-      mat
     },
     Some("""
       WITH facts AS MATERIALIZED (

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.CacheHandles.keep
 
 /** Mergeable-sketch operators — the pre-aggregation pattern that makes
   * interactive analytics on 100 TB affordable: build small sketches
@@ -180,26 +181,21 @@ object Sketches {
       // corpus contract, so the union coerces nothing and xxhash64
       // sees the same physical longs. Null keys → null hash → skipped
       // by the aggregate, matching COUNT(DISTINCT).
-      // both persists are tracked, so the harness's scoped collector
-      // releases them once the result is materialized
-      val handles = new graft.CacheHandles
-      val dd = handles.track(ev.select(col("event_type"), lit(0).as("side"),
+      // kept: read for the per-shard aggregate AND the global exact row
+      val dd = keep(ev.select(col("event_type"), lit(0).as("side"),
           col("user_id").as("k"))
         .unionAll(ev.select(col("event_type"), lit(1).as("side"),
           col("event_id").as("k")))
-        .distinct()
-        // read for the per-shard aggregate AND the global exact row
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .distinct())
       def h(side: Int) =
         when(col("side") === side && col("k").isNotNull, xxhash64(col("k")))
-      val shards = handles.track(dd.groupBy("event_type")
+      // the materialized sketch table: read for per-shard rows AND the union row
+      val shards = keep(dd.groupBy("event_type")
         .agg(
           graft.functions.HllAgg.build(h(0), p).as("u_regs"),
           graft.functions.HllAgg.build(h(1), p).as("e_regs"),
           count(when(col("side") === 0, col("k"))).as("exact_users"),
-          count(when(col("side") === 1, col("k"))).as("exact_events"))
-        // the materialized sketch table: read for per-shard rows AND the union row
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          count(when(col("side") === 1, col("k"))).as("exact_events")))
       def ok(regs: org.apache.spark.sql.Column,
              exact: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
         val est = graft.functions.HllAgg.estimate(regs, p)
@@ -260,9 +256,9 @@ object Sketches {
     (s, dir) => {
       val bits = 24; val k = 1024
       val phis = Seq(250, 500, 750, 900, 990)
-      val li = t(s, dir, "lineitem")
-        .select(round(col("l_extendedprice") * 100, 0).cast("long").as("cents"))
-        .persist() // sketch pass + exact-cum pass + rank-audit pass
+      // sketch pass + exact-cum pass + rank-audit pass
+      val li = keep(t(s, dir, "lineitem")
+        .select(round(col("l_extendedprice") * 100, 0).cast("long").as("cents")))
       val head = li.agg(
         graft.functions.QDigestAgg.build(col("cents"), bits, k).as("d"),
         count(lit(1)).as("n")).head()
@@ -338,9 +334,9 @@ object Sketches {
       val p = 10
       val env3 = 3 * graft.functions.HllAgg.stdError(p)
       val ev = t(s, dir, "events")
-      val du = ev.filter(col("user_id").isNotNull)
-        .select(col("event_type"), col("user_id")).distinct()
-        .persist() // read for per-cohort sketches AND the exact overlap join
+      // read for per-cohort sketches AND the exact overlap join
+      val du = keep(ev.filter(col("user_id").isNotNull)
+        .select(col("event_type"), col("user_id")).distinct())
       val sk = du.groupBy("event_type")
         .agg(graft.functions.HllAgg.build(xxhash64(col("user_id")), p).as("regs"),
           count(lit(1)).as("exact"))
@@ -474,10 +470,9 @@ object Sketches {
     (s, dir) => {
       val bits = 24; val k = 1024
       val phis = Seq(250, 500, 750, 900, 990)
-      val li = t(s, dir, "lineitem")
+      val li = keep(t(s, dir, "lineitem")
         .select((col("l_suppkey") % 8).as("src"),
-          round(col("l_extendedprice") * 100, 0).cast("long").as("cents"))
-        .persist()
+          round(col("l_extendedprice") * 100, 0).cast("long").as("cents")))
       val perSrc = li.groupBy("src")
         .agg(graft.functions.QDigestAgg.build(col("cents"), bits, k).as("d"),
           count(lit(1)).as("n"))
@@ -657,16 +652,14 @@ object Sketches {
     "q_kmv_difference",
     (s, dir) => {
       val ev = t(s, dir, "events").filter(col("user_id").isNotNull)
-      val membership = ev.groupBy("user_id")
+      val membership = keep(ev.groupBy("user_id")
         .agg(max(when(col("event_type") === "click", 1L).otherwise(0L)).as("in_a"),
           max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("in_b"))
         .filter(col("in_a") === 1L || col("in_b") === 1L)
         .withColumn("h", conv(substring(md5(
           col("user_id").cast("string").cast("binary")), 1, 12), 16, 10)
-          .cast("long"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val sketch = membership.orderBy("h").limit(KmvK)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .cast("long")))
+      val sketch = keep(membership.orderBy("h").limit(KmvK))
       // exact mode: a union smaller than k IS the whole set, so the
       // scale factor is 1 (theta = 2^48) and est == n_sample exactly
       val skRow = sketch.agg(count(lit(1)), max(col("h"))).head()

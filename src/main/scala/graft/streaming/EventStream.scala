@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import graft.{Q, Tables}
+import graft.CacheHandles.keep
 
 /** Structured Streaming surface of the engine.
   *
@@ -1472,9 +1473,8 @@ object EventStream {
         .trigger(Trigger.AvailableNow())
         .start()
       sq.awaitTermination()
-      val degs = local.table(sink).groupBy("vertex")
-        .agg(max(col("deg_so_far")).as("degree"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val degs = keep(local.table(sink).groupBy("vertex")
+        .agg(max(col("deg_so_far")).as("degree")))
       val staged = local.read.parquet(stage)
       val batchDeg = staged
         .select(explode(array(col("u"), col("v"))).as("vertex"))

@@ -88,17 +88,13 @@ class ScdSpec extends SparkSpec {
       .toDF("key", "valid_from", "tx_from", "value")
     val d2 = Seq((1L, 1L, 6L, 160L), (2L, 1L, 6L, 550L))
       .toDF("key", "valid_from", "tx_from", "value")
-    // every call owns its handles and releases them, thrown or not:
-    // no frame it persisted outlives the call
+    // every call runs in a scope that releases what it kept, thrown
+    // or not: no frame it persisted outlives the call
     def persisted = spark.sparkContext.getPersistentRDDs.keySet
     val persistedBefore = persisted
-    def absorbing[A](body: CacheHandles => A): A = {
-      val handles = new CacheHandles
-      try body(handles) finally handles.releaseAll()
-    }
-    absorbing { h =>
+    CacheHandles.scoped {
       val incr = ops.Scd.absorbCorrections(
-        ops.Scd.absorbCorrections(base, d1, h), d2, h)
+        ops.Scd.absorbCorrections(base, d1), d2)
       val full = ops.Scd.bitemporal(
         facts.unionByName(d1).unionByName(d2))
       assert(incr.exceptAll(full).count() == 0 &&
@@ -109,13 +105,13 @@ class ScdSpec extends SparkSpec {
     val dup = Seq((1L, 1L, 7L, 1L), (1L, 1L, 8L, 2L))
       .toDF("key", "valid_from", "tx_from", "value")
     intercept[IllegalArgumentException] {
-      absorbing(ops.Scd.absorbCorrections(base, dup, _))
+      CacheHandles.scoped(ops.Scd.absorbCorrections(base, dup))
     }
     // a correction that does not advance tx within its cell is rejected
     val stale = Seq((1L, 1L, 2L, 1L))
       .toDF("key", "valid_from", "tx_from", "value")
     intercept[IllegalArgumentException] {
-      absorbing(ops.Scd.absorbCorrections(base, stale, _))
+      CacheHandles.scoped(ops.Scd.absorbCorrections(base, stale))
     }
     assert(persisted === persistedBefore)
   }

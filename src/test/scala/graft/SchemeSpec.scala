@@ -123,7 +123,7 @@ class SchemeSpec extends SparkSpec {
       // the write job fails on its last row: tasks may have written
       // part files, and the store directory exists, but no _SUCCESS
       val err = intercept[Exception] {
-        Staging.store(spark, "graft_spec_half", "k") { _ =>
+        Staging.store(spark, "graft_spec_half", "k") {
           builds += 1
           spark.range(0, 100, 1, 4).select(
             when(col("id") === 99, raise_error(lit("build died")))
@@ -135,7 +135,7 @@ class SchemeSpec extends SparkSpec {
       assert(p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p),
         "the failed write must leave the store directory behind")
       assert(!Staging.ready(spark, path))
-      val back = Staging.store(spark, "graft_spec_half", "k") { _ =>
+      val back = Staging.store(spark, "graft_spec_half", "k") {
         builds += 1
         spark.range(0, 100, 1, 4).toDF("id")
       }
@@ -151,8 +151,8 @@ class SchemeSpec extends SparkSpec {
       val (k1, k2) = ("/x/sf0.1", "/x/sf0_1")
       assert(Staging.keyed(spark, "graft_spec_keyed", k1) !=
         Staging.keyed(spark, "graft_spec_keyed", k2))
-      val a = Staging.store(spark, "graft_spec_keyed", k1)(_ => spark.range(0, 3).toDF("id"))
-      val b = Staging.store(spark, "graft_spec_keyed", k2)(_ => spark.range(10, 12).toDF("id"))
+      val a = Staging.store(spark, "graft_spec_keyed", k1)(spark.range(0, 3).toDF("id"))
+      val b = Staging.store(spark, "graft_spec_keyed", k2)(spark.range(10, 12).toDF("id"))
       assert(ids(a) === Seq(0L, 1L, 2L))
       assert(ids(b) === Seq(10L, 11L))
     }
@@ -166,7 +166,7 @@ class SchemeSpec extends SparkSpec {
       val threads = (1 to 2).map { _ =>
         new Thread(() => {
           start.await()
-          rows.add(ids(Staging.store(spark, "graft_spec_race", "k") { _ =>
+          rows.add(ids(Staging.store(spark, "graft_spec_race", "k") {
             builds.incrementAndGet()
             // hold the build open so the other thread arrives mid-build
             Thread.sleep(300)
