@@ -156,7 +156,7 @@ object Bench {
     val shufMb = results.map(_._3).sum / (1024 * 1024)
     val spillMb = results.map(_._4).sum / (1024 * 1024)
     // The harness captures only the ~2 kB TAIL of the run output and
-    // parses the last line as JSON, so the full 132-query dict (~2.8 kB
+    // parses the last line as JSON, so the full 410-query dict (~8.7 kB
     // at 1 decimal) cannot fit. Emit the failed and then the SLOWEST
     // queries first — the ones per-query visibility is for — under a
     // hard size budget, and fold the remainder (all sub-threshold) into

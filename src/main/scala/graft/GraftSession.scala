@@ -2,7 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one harness session: `local[cpus]` with the settings every
-  * harness main (Bench, Verify, Probe, ProbePlan) runs the registry under. */
+  * harness main (Bench, Verify, ProbePlan) runs the registry under. */
 object GraftSession {
   def apply(cpus: String): SparkSession =
     SparkSession.builder()

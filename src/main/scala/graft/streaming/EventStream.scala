@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import graft.{Q, Tables}
@@ -23,24 +23,88 @@ import graft.CacheHandles.keep
   * RocksDB/HDFS-backed state store per shuffle partition, so the
   * 100 TB/day form is the same plan with more partitions.
   *
-  * Each run plans in a cloned session ([[graft.Checkpoints.Scope]])
-  * with 4 state partitions. Stateful operators fix their state-store
-  * partition count from `spark.sql.shuffle.partitions` at query START,
-  * and every store partition pays a snapshot/commit per micro-batch —
-  * at the harness's stream volumes a cpu-count default is pure
-  * bookkeeping (measured 2-4× of some queries' wall-clock). On a real
-  * deployment this is the knob sized to stream volume, independently
-  * of the batch default. The clone also gives each run its own
-  * StreamingQueryManager + catalog, so memory-sink names can't collide
-  * across overlapping runs.
+  * Every driver query but [[streamMerge]] runs through [[replay]],
+  * which states the run contract.
   */
 object EventStream {
 
-  /** Per-application staging dir for a streaming source: the file
-    * stream source lists directories, so the harness table is staged
-    * once per run ([[graft.Staging]] isolates concurrent runs). */
-  private def stagePath(s: org.apache.spark.sql.SparkSession, name: String): String =
-    graft.Staging.dir(s, name)
+  /** The clone a stream plans in, with 4 state partitions. Stateful
+    * operators fix their state-store partition count from
+    * `spark.sql.shuffle.partitions` at query START, and every store
+    * partition pays a snapshot/commit per micro-batch — at the
+    * harness's stream volumes a cpu-count default is pure bookkeeping
+    * (measured 2-4× of some queries' wall-clock). On a real deployment
+    * this is the knob sized to stream volume, independently of the
+    * batch default. The clone ([[graft.Checkpoints.Scope]]) also gives
+    * each run its own StreamingQueryManager + catalog, so memory-sink
+    * names can't collide across overlapping runs. */
+  private def streamSession(s: SparkSession): SparkSession =
+    graft.Checkpoints.Scope(s, 4).session
+
+  /** Land `df` as parquet in the staging directory `name` and return
+    * its path. The file stream source lists directories while a
+    * harness table is a single file; on a real deployment the
+    * directory is the landing zone and this step disappears. */
+  private[graft] def land(s: SparkSession, name: String, df: DataFrame): String = {
+    val stage = graft.Staging.dir(s, name)
+    df.write.mode("overwrite").parquet(stage)
+    stage
+  }
+
+  /** Land `df` as the single file `<stage>/<name>.parquet` with its
+    * modification time pinned to `mtime`: the file source admits files
+    * in modification-time order, so the pins fix a replay's arrival
+    * order. */
+  private def landOne(stage: String, df: DataFrame, name: String, mtime: Long): Unit = {
+    import org.apache.hadoop.fs.Path
+    val fs = new Path(stage).getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val tmp = new Path(s"$stage/_tmp_$name")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val part = fs.globStatus(new Path(tmp, "part-*"))(0).getPath
+    val dst = new Path(s"$stage/$name.parquet")
+    if (fs.exists(dst)) fs.delete(dst, false)
+    fs.rename(part, dst)
+    fs.delete(tmp, true)
+    fs.setTimes(dst, mtime, -1)
+  }
+
+  /** The memory sink [[replay]] writes; each run's clone has its own. */
+  private[graft] val SinkTable = "graft_replay"
+
+  /** The one streaming run: landing zone → 4-partition clone
+    * ([[streamSession]]) → `Trigger.AvailableNow` → memory sink →
+    * micro-batch floor.
+    *
+    * The caller lands its input first ([[land]]); `plan` builds the
+    * streaming frame in the clone, and the run writes it to the
+    * [[SinkTable]] memory sink in `mode`, drains the backlog and
+    * returns the clone's sink table. AvailableNow processes everything
+    * present at start, in as many micro-batches as the source's
+    * admission control asks for, then stops — so a run is a replay of
+    * the landing zone, and its result can be hash-checked against the
+    * batch twin. Complete mode suits aggregates over a finite backlog
+    * (append would withhold every window still inside the watermark at
+    * end of input); append and update modes leave the final fold to
+    * the caller's batch-side read of the sink.
+    *
+    * `minBatches` is the floor on data micro-batches (batches that read
+    * a row) for replays whose evidence is state absorbing several
+    * batches; a run below it throws with the measured count and the
+    * floor. A failing batch propagates, and the query is stopped on
+    * every exit, so no run leaves a live stream behind. */
+  private[graft] def replay(s: SparkSession, mode: OutputMode, minBatches: Int = 0)(
+      plan: SparkSession => DataFrame): DataFrame = {
+    val local = streamSession(s)
+    val sq = plan(local).writeStream.format("memory").queryName(SinkTable)
+      .outputMode(mode)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    try sq.awaitTermination() finally sq.stop()
+    val dataBatches = sq.recentProgress.count(_.numInputRows > 0)
+    require(dataBatches >= minBatches,
+      s"streaming replay ran $dataBatches data micro-batches, below its floor of $minBatches")
+    local.table(SinkTable)
+  }
 
   /** Streaming twin of q_time_window (hourly tumbling window ×
     * event_type), late data admitted up to 2 hours. */
@@ -93,24 +157,16 @@ object EventStream {
   }
 
   /** Driver-visible streaming entry (SURVEY.md §2i): [[hourlyCounts]]
-    * executed as an actual StreamingQuery — file source →
-    * `Trigger.AvailableNow` → in-memory table sink — then compared by
-    * the driver against the SAME oracle SQL as the batch
+    * executed as an actual StreamingQuery ([[replay]]), then compared
+    * by the driver against the SAME oracle SQL as the batch
     * `q_time_window`. That promotes the streaming≡batch claim from a
     * ScalaTest assertion to a driver-hash-checked record.
     *
-    * Complete output mode because AvailableNow drains a finite
-    * backlog: append mode would withhold every window still inside
-    * the 2-hour watermark at end-of-input, which is backfill-wrong.
-    * On an unbounded production stream the same aggregation runs in
-    * append/update mode with the watermark bounding state; here the
-    * result set (hours × event types) is small by construction, which
-    * is what complete mode requires.
-    *
-    * The events table is staged to a parquet DIRECTORY first because
-    * the file stream source lists directories (the harness table is a
-    * single file); on a real deployment the directory is the landing
-    * zone and the batch stage disappears. */
+    * Complete output mode (see [[replay]]). On an unbounded production
+    * stream the same aggregation runs in append/update mode with the
+    * watermark bounding state; here the result set (hours × event
+    * types) is small by construction, which is what complete mode
+    * requires. */
   val streamWindow: Q = Q(
     "q_stream_window",
     (s, dir) => {
@@ -119,18 +175,10 @@ object EventStream {
       // and writing the full events table tripled the staging cost
       val ev = Tables.load(s, dir, "events")
         .select("ts", "event_type", "value")
-      val stage = stagePath(s, "graft_stream_events")
-      ev.write.mode("overwrite").parquet(stage)
-      val local = graft.Checkpoints.Scope(s, 4).session
-      val stream = local.readStream.schema(ev.schema).parquet(stage)
-      val sink = "graft_stream_window"
-      val sq = hourlyCounts(stream)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Complete)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      local.table(sink).orderBy("window_start", "event_type")
+      val stage = land(s, "graft_stream_events", ev)
+      replay(s, OutputMode.Complete)(local =>
+        hourlyCounts(local.readStream.schema(ev.schema).parquet(stage)))
+        .orderBy("window_start", "event_type")
     },
     Some("""
       SELECT date_trunc('hour', ts) AS window_start, event_type,
@@ -158,18 +206,9 @@ object EventStream {
     (s, dir) => {
       val ev = Tables.load(s, dir, "events")
         .select("event_id", "ts", "event_type")
-      val stage = stagePath(s, "graft_stream_dedup")
-      ev.unionAll(ev).write.mode("overwrite").parquet(stage)
-      val local = graft.Checkpoints.Scope(s, 4).session
-      val stream = local.readStream.schema(ev.schema).parquet(stage)
-      val sink = "graft_stream_dedup_sink"
-      val sq = dedupEvents(stream)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      local.table(sink)
+      val stage = land(s, "graft_stream_dedup", ev.unionAll(ev))
+      replay(s, OutputMode.Append)(local =>
+        dedupEvents(local.readStream.schema(ev.schema).parquet(stage)))
         .groupBy("event_type")
         .agg(count(lit(1)).as("cnt"),
           countDistinct(col("event_id")).as("n_ids"))
@@ -198,24 +237,16 @@ object EventStream {
     "q_stream_sessions",
     (s, dir) => {
       val ev = Tables.load(s, dir, "events").select("ts", "user_id")
-      val stage = stagePath(s, "graft_stream_sessions")
-      ev.write.mode("overwrite").parquet(stage)
-      val local = graft.Checkpoints.Scope(s, 4).session
-      val stream = local.readStream.schema(ev.schema).parquet(stage)
-      val sink = "graft_stream_sessions_sink"
-      val sq = stream
-        .withWatermark("ts", "2 hours")
-        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("session_window.start").as("session_start"),
-          col("session_window.end").as("session_end"),
-          col("user_id"), col("n_events"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Complete)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      local.table(sink).orderBy("user_id", "session_start")
+      val stage = land(s, "graft_stream_sessions", ev)
+      replay(s, OutputMode.Complete)(local =>
+        local.readStream.schema(ev.schema).parquet(stage)
+          .withWatermark("ts", "2 hours")
+          .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+          .agg(count(lit(1)).as("n_events"))
+          .select(col("session_window.start").as("session_start"),
+            col("session_window.end").as("session_end"),
+            col("user_id"), col("n_events")))
+        .orderBy("user_id", "session_start")
     },
     Some("""
       SELECT min(ts) AS session_start,
@@ -238,6 +269,26 @@ object EventStream {
             FROM events)))
       GROUP BY user_id, g ORDER BY user_id, session_start"""))
 
+  /** The click→purchase stream-stream join of [[streamJoin]] and its
+    * outer variants, as join type `how`. */
+  private def clickPurchaseJoin(local: SparkSession,
+      schema: org.apache.spark.sql.types.StructType, stage: String, how: String): DataFrame = {
+    def src() = local.readStream.schema(schema).parquet(stage)
+    val clicks = src().filter(col("event_type") === "click")
+      .select(col("event_id").as("click_id"), col("user_id"),
+        col("ts").as("click_ts"))
+      .withWatermark("click_ts", "2 hours")
+    val purchases = src().filter(col("event_type") === "purchase")
+      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
+        col("ts").as("purchase_ts"))
+      .withWatermark("purchase_ts", "2 hours")
+    clicks.join(purchases,
+      col("user_id") === col("p_user") &&
+        col("purchase_ts") >= col("click_ts") &&
+        col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"),
+      how)
+  }
+
   /** Driver-visible STREAM-STREAM join: click→purchase attribution
     * within a 1-hour window — two live streams (filtered views of the
     * same staged landing zone), watermarked on both sides, joined on
@@ -256,35 +307,17 @@ object EventStream {
     (s, dir) => {
       val ev = Tables.load(s, dir, "events")
         .select("event_id", "ts", "user_id", "event_type")
-      val stage = stagePath(s, "graft_stream_join")
-      ev.write.mode("overwrite").parquet(stage)
-      val local = graft.Checkpoints.Scope(s, 4).session
-      def src() = local.readStream.schema(ev.schema).parquet(stage)
-      val clicks = src().filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"),
-          col("ts").as("click_ts"))
-        .withWatermark("click_ts", "2 hours")
-      val purchases = src().filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-          col("ts").as("purchase_ts"))
-        .withWatermark("purchase_ts", "2 hours")
-      val sink = "graft_stream_join_sink"
+      val stage = land(s, "graft_stream_join", ev)
       // A stream-stream join keeps FOUR state stores per shuffle
       // partition (keyToNumValues + keyWithIndexToValue per side) —
-      // the heaviest case for narrowing state partitions (object doc)
-      // (~9s of pure store-commit bookkeeping measured at 32).
-      val sq = clicks.join(purchases,
-          col("user_id") === col("p_user") &&
-            col("purchase_ts") >= col("click_ts") &&
-            col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"))
-        .select(col("click_id"), col("purchase_id"), col("user_id"),
-          col("click_ts"), col("purchase_ts"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      local.table(sink).orderBy("click_id", "purchase_id")
+      // the heaviest case for narrowing state partitions
+      // ([[streamSession]]; ~9s of pure store-commit bookkeeping
+      // measured at 32).
+      replay(s, OutputMode.Append)(local =>
+        clickPurchaseJoin(local, ev.schema, stage, "inner")
+          .select(col("click_id"), col("purchase_id"), col("user_id"),
+            col("click_ts"), col("purchase_ts")))
+        .orderBy("click_id", "purchase_id")
     },
     Some("""
       SELECT a.event_id AS click_id, b.event_id AS purchase_id,
@@ -315,33 +348,12 @@ object EventStream {
     (s, dir) => {
       val ev = Tables.load(s, dir, "events")
         .select("event_id", "ts", "user_id", "event_type")
-      val stage = stagePath(s, "graft_stream_join_outer")
-      ev.write.mode("overwrite").parquet(stage)
-      val local = graft.Checkpoints.Scope(s, 4).session
-      def src() = local.readStream.schema(ev.schema).parquet(stage)
-      val clicks = src().filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"),
-          col("ts").as("click_ts"))
-        .withWatermark("click_ts", "2 hours")
-      val purchases = src().filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-          col("ts").as("purchase_ts"))
-        .withWatermark("purchase_ts", "2 hours")
-      val sink = "graft_stream_join_outer_sink"
-      val sq = clicks.join(purchases,
-          col("user_id") === col("p_user") &&
-            col("purchase_ts") >= col("click_ts") &&
-            col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"),
-          "left_outer")
-        .select(col("click_id"), col("purchase_id"), col("user_id"),
-          col("click_ts"), col("purchase_ts"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      local.table(sink).orderBy(col("click_id"),
-        asc_nulls_first("purchase_id"))
+      val stage = land(s, "graft_stream_join_outer", ev)
+      replay(s, OutputMode.Append)(local =>
+        clickPurchaseJoin(local, ev.schema, stage, "left_outer")
+          .select(col("click_id"), col("purchase_id"), col("user_id"),
+            col("click_ts"), col("purchase_ts")))
+        .orderBy(col("click_id"), asc_nulls_first("purchase_id"))
     },
     Some("""
       WITH m AS (
@@ -385,34 +397,13 @@ object EventStream {
     (s, dir) => {
       val ev = Tables.load(s, dir, "events")
         .select("event_id", "ts", "user_id", "event_type")
-      val stage = stagePath(s, "graft_stream_join_full")
-      ev.write.mode("overwrite").parquet(stage)
-      val local = graft.Checkpoints.Scope(s, 4).session
-      def src() = local.readStream.schema(ev.schema).parquet(stage)
-      val clicks = src().filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"),
-          col("ts").as("click_ts"))
-        .withWatermark("click_ts", "2 hours")
-      val purchases = src().filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-          col("ts").as("purchase_ts"))
-        .withWatermark("purchase_ts", "2 hours")
-      val sink = "graft_stream_join_full_sink"
-      val sq = clicks.join(purchases,
-          col("user_id") === col("p_user") &&
-            col("purchase_ts") >= col("click_ts") &&
-            col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"),
-          "full_outer")
-        .select(col("click_id"), col("purchase_id"),
-          coalesce(col("user_id"), col("p_user")).as("user_id"),
-          col("click_ts"), col("purchase_ts"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      local.table(sink).orderBy(asc_nulls_last("click_id"),
-        asc_nulls_first("purchase_id"))
+      val stage = land(s, "graft_stream_join_full", ev)
+      replay(s, OutputMode.Append)(local =>
+        clickPurchaseJoin(local, ev.schema, stage, "full_outer")
+          .select(col("click_id"), col("purchase_id"),
+            coalesce(col("user_id"), col("p_user")).as("user_id"),
+            col("click_ts"), col("purchase_ts")))
+        .orderBy(asc_nulls_last("click_id"), asc_nulls_first("purchase_id"))
     },
     Some("""
       WITH m AS (
@@ -457,17 +448,17 @@ object EventStream {
     * line-aligned partitions by the same single driver planning pass
     * as the batch side. The demo lands SAM-shaped records derived
     * from `orders` (noticeId ← 'N'+orderkey, naicsCode ←
-    * orderstatus), streams them through a Complete-mode grouped
-    * count, and REQUIRES ≥3 non-empty micro-batches in-query — a
-    * single-gulp run (admission control broken) aborts into the
-    * driver's err rather than shipping a vacuous pass. Oracled: the
+    * orderstatus) and streams them through a Complete-mode grouped
+    * count with a floor of 3 data micro-batches — a single-gulp run
+    * (admission control broken) aborts into the driver's err rather
+    * than shipping a vacuous pass. Oracled: the
     * final counts must equal DuckDB's batch GROUP BY over orders,
     * proving no record was split, dropped, or double-read across
     * batch boundaries. */
   val streamRestPager: Q = Q(
     "q_stream_rest_pager",
     (s, dir) => {
-      val stageDir = stagePath(s, "graft_stream_pager")
+      val stageDir = graft.Staging.dir(s, "graft_stream_pager")
       val o = Tables.load(s, dir, "orders")
         .select(to_json(struct(
           concat(lit("N"), col("o_orderkey")).as("noticeId"),
@@ -477,29 +468,20 @@ object EventStream {
       o.coalesce(1).write.mode("overwrite").text(s"$stageDir/jsonl")
       val part = new java.io.File(s"$stageDir/jsonl").listFiles()
         .filter(_.getName.startsWith("part-")).head
-      val local = graft.Checkpoints.Scope(s, 4).session
-      // no .schema(): the source declares the explicit SAM schema
-      // itself (a user-supplied one would need supportsExternalMetadata)
-      val stream = local.readStream.format("graft.sources.PagedJsonSource")
-        .option("path", part.toString)
-        .option("page_size", 2000)
-        // ~¼ of the backlog per batch at ANY corpus scale (an 8 KiB
-        // floor keeps partitions sane; sf0.001's file is ~120 KiB, so
-        // a larger floor would collapse the multi-batch proof there)
-        .option("stream_batch_bytes", math.max(8L * 1024, part.length() / 4))
-        .load()
-      val sink = "graft_stream_pager_sink"
-      val sq = stream.groupBy(col("naicsCode").as("status"))
-        .agg(count(lit(1)).as("n"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Complete)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      val dataBatches = sq.recentProgress.count(_.numInputRows > 0)
-      require(dataBatches >= 3,
-        s"admission control must split the backlog into micro-batches, got $dataBatches")
-      local.table(sink).orderBy("status")
+      replay(s, OutputMode.Complete, minBatches = 3)(local =>
+        // no .schema(): the source declares the explicit SAM schema
+        // itself (a user-supplied one would need supportsExternalMetadata)
+        local.readStream.format("graft.sources.PagedJsonSource")
+          .option("path", part.toString)
+          .option("page_size", 2000)
+          // ~¼ of the backlog per batch at ANY corpus scale (an 8 KiB
+          // floor keeps partitions sane; sf0.001's file is ~120 KiB, so
+          // a larger floor would collapse the multi-batch proof there)
+          .option("stream_batch_bytes", math.max(8L * 1024, part.length() / 4))
+          .load()
+          .groupBy(col("naicsCode").as("status"))
+          .agg(count(lit(1)).as("n")))
+        .orderBy("status")
     },
     Some("""
       SELECT o_orderstatus AS status, CAST(count(*) AS BIGINT) AS n
@@ -575,21 +557,13 @@ object EventStream {
     (s, dir) => {
       import s.implicits._
       val ev = Tables.load(s, dir, "events").select("user_id", "ts")
-      val stage = stagePath(s, "graft_stream_tmo_sessions")
-      ev.write.mode("overwrite").parquet(stage)
-      val local = graft.Checkpoints.Scope(s, 4).session
-      val stream = local.readStream.schema(ev.schema).parquet(stage)
-        .withWatermark("ts", "2 hours")
-        .as[(Long, java.sql.Timestamp)]
-      val sink = "graft_stream_tmo_sessions_sink"
-      val sq = timeoutSessions(stream, gapUs = 1800L * 1000000L)
-        .toDF()
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      local.table(sink).orderBy("user_id", "session_start")
+      val stage = land(s, "graft_stream_tmo_sessions", ev)
+      replay(s, OutputMode.Append) { local =>
+        val stream = local.readStream.schema(ev.schema).parquet(stage)
+          .withWatermark("ts", "2 hours")
+          .as[(Long, java.sql.Timestamp)]
+        timeoutSessions(stream, gapUs = 1800L * 1000000L).toDF()
+      }.orderBy("user_id", "session_start")
     },
     Some("""
       WITH m AS (
@@ -634,20 +608,11 @@ object EventStream {
     (s, dir) => {
       import s.implicits._
       val ev = Tables.load(s, dir, "events").select("user_id", "ts")
-      val stage = stagePath(s, "graft_stream_state")
-      ev.write.mode("overwrite").parquet(stage)
-      val local = graft.Checkpoints.Scope(s, 4).session
-      val stream = local.readStream.schema(ev.schema).parquet(stage)
-        .as[(Long, java.sql.Timestamp)]
-      val sink = "graft_stream_state_sink"
-      val sq = runningUserCounts(stream)
-        .toDF("user_id", "events_so_far")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Update)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      local.table(sink)
+      val stage = land(s, "graft_stream_state", ev)
+      replay(s, OutputMode.Update)(local =>
+        runningUserCounts(local.readStream.schema(ev.schema).parquet(stage)
+          .as[(Long, java.sql.Timestamp)])
+          .toDF("user_id", "events_so_far"))
         .groupBy("user_id")
         .agg(max(col("events_so_far")).as("n_events"))
         .orderBy("user_id")
@@ -733,20 +698,11 @@ object EventStream {
       val ev = Tables.load(s, dir, "events")
         .filter(col("event_type").isin("view", "click", "purchase"))
         .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"))
-      val stage = stagePath(s, "graft_stream_funnel")
-      ev.write.mode("overwrite").parquet(stage)
-      val local = graft.Checkpoints.Scope(s, 4).session
-      val stream = local.readStream.schema(ev.schema).parquet(stage)
-        .as[(Long, String, Long)]
-      val sink = "graft_stream_funnel_sink"
-      val sq = funnelStates(stream)
-        .toDF("user_id", "n_seen", "has_v", "has_c", "has_p", "secs")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Update)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      local.table(sink)
+      val stage = land(s, "graft_stream_funnel", ev)
+      replay(s, OutputMode.Update)(local =>
+        funnelStates(local.readStream.schema(ev.schema).parquet(stage)
+          .as[(Long, String, Long)])
+          .toDF("user_id", "n_seen", "has_v", "has_c", "has_p", "secs"))
         .groupBy("user_id")
         .agg(max_by(struct(col("has_v"), col("has_c"), col("has_p"), col("secs")),
           col("n_seen")).as("last"))
@@ -787,12 +743,14 @@ object EventStream {
       val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
           round(col("value") * 100, 0).cast("long").as("cents"))
-      val stage = stagePath(s, "graft_stream_merge_src")
-      val target = stagePath(s, "graft_stream_merge_tgt")
-      val ckpt = stagePath(s, "graft_stream_merge_ckpt")
+      val stage = graft.Staging.dir(s, "graft_stream_merge_src")
+      val target = graft.Staging.dir(s, "graft_stream_merge_tgt")
+      val ckpt = graft.Staging.dir(s, "graft_stream_merge_ckpt")
       graft.Staging.once(s, stage)(
         ev.repartition(8).write.mode("overwrite").parquet(stage))
-      val local = graft.Checkpoints.Scope(s, 4).session
+      // the one run outside [[replay]]: a foreachBatch sink with a
+      // checkpoint, started twice
+      val local = streamSession(s)
       val writeBatch: (DataFrame, Long) => Unit =
         (batch, id) => batch.write.mode("overwrite").parquet(s"$target/batch=$id")
       def run(): Unit = {
@@ -843,29 +801,23 @@ object EventStream {
   val streamQuarantine: Q = Q(
     "q_stream_quarantine",
     (s, dir) => {
-      val stage = stagePath(s, "graft_stream_quarantine")
+      val stage = graft.Staging.dir(s, "graft_stream_quarantine")
       Tables.load(s, dir, "customer")
         .select("c_custkey", "c_mktsegment", "c_acctbal")
         .write.mode("overwrite").json(stage)
       s.range(25)
         .select(concat(lit("{corrupt json line #"), col("id")).as("value"))
         .write.mode("append").text(stage)
-      val local = graft.Checkpoints.Scope(s, 4).session
-      val sink = "graft_stream_quarantine_sink"
-      val sq = local.readStream
-        .schema("c_custkey BIGINT, c_mktsegment STRING, c_acctbal DOUBLE, _corrupt_record STRING")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(stage)
-        .groupBy(col("c_mktsegment").as("segment"))
-        .agg(count(lit(1)).as("n_rows"),
-          count(col("_corrupt_record")).as("n_corrupt"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Complete)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      local.table(sink).orderBy(asc_nulls_first("segment"))
+      replay(s, OutputMode.Complete)(local =>
+        local.readStream
+          .schema("c_custkey BIGINT, c_mktsegment STRING, c_acctbal DOUBLE, _corrupt_record STRING")
+          .option("mode", "PERMISSIVE")
+          .option("columnNameOfCorruptRecord", "_corrupt_record")
+          .json(stage)
+          .groupBy(col("c_mktsegment").as("segment"))
+          .agg(count(lit(1)).as("n_rows"),
+            count(col("_corrupt_record")).as("n_corrupt")))
+        .orderBy(asc_nulls_first("segment"))
     },
     graft.ops.Ingest.badRecords.oracle)
 
@@ -888,19 +840,11 @@ object EventStream {
       val ev = Tables.load(s, dir, "events")
         .select(col("ts").cast("timestamp_ntz").as("ts"),
           col("event_type"), col("value"))
-      val stage = stagePath(s, "graft_stream_ntz")
-      ev.write.mode("overwrite").parquet(stage)
-      val local = graft.Checkpoints.Scope(s, 4).session
-      val stream = local.readStream.schema(ev.schema).parquet(stage)
-        .withColumn("ts", col("ts").cast("timestamp"))
-      val sink = "graft_stream_ntz_window"
-      val sq = hourlyCounts(stream)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Complete)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      local.table(sink).orderBy("window_start", "event_type")
+      val stage = land(s, "graft_stream_ntz", ev)
+      replay(s, OutputMode.Complete)(local =>
+        hourlyCounts(local.readStream.schema(ev.schema).parquet(stage)
+          .withColumn("ts", col("ts").cast("timestamp"))))
+        .orderBy("window_start", "event_type")
     },
     streamWindow.oracle)
 
@@ -923,24 +867,15 @@ object EventStream {
     (s, dir) => {
       val ev = Tables.load(s, dir, "events")
         .select("ts", "event_type", "value")
-      val stage = stagePath(s, "graft_stream_enrich_ev")
-      ev.write.mode("overwrite").parquet(stage)
-      val local = graft.Checkpoints.Scope(s, 4).session
-      val dim = local.createDataFrame(
-        ev.select(col("event_type")).distinct()
-          .collect().map(r => r.getString(0))
-          .sorted.map(t => (t, t.length.toLong)).toSeq)
-        .toDF("event_type", "weight")
-      val stream = local.readStream.schema(ev.schema).parquet(stage)
-      val sink = "graft_stream_enrich"
-      val sq = enrichWithDim(stream, dim, "event_type")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      local.table(sink)
-        .groupBy("event_type")
+      val stage = land(s, "graft_stream_enrich_ev", ev)
+      replay(s, OutputMode.Append) { local =>
+        val dim = local.createDataFrame(
+          ev.select(col("event_type")).distinct()
+            .collect().map(r => r.getString(0))
+            .sorted.map(t => (t, t.length.toLong)).toSeq)
+          .toDF("event_type", "weight")
+        enrichWithDim(local.readStream.schema(ev.schema).parquet(stage), dim, "event_type")
+      }.groupBy("event_type")
         .agg(max(col("weight")).as("weight"), count(lit(1)).as("cnt"),
           sum(round(col("value") * 100, 0).cast("long") * col("weight"))
             .as("weighted_cents"))
@@ -999,55 +934,36 @@ object EventStream {
       val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
       val lateCut = new java.sql.Timestamp(maxTs.getTime - 2L * 3600 * 1000)
       val isLate = col("event_id") % 5 === 0 && col("ts") < lit(lateCut)
-      val stage = stagePath(s, "graft_stream_late")
-      val fs = new org.apache.hadoop.fs.Path(stage)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      def stageOne(df: DataFrame, name: String, mtime: Long): Unit = {
-        val tmp = new org.apache.hadoop.fs.Path(s"$stage/_tmp_$name")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = fs.globStatus(new org.apache.hadoop.fs.Path(tmp, "part-*"))(0).getPath
-        val dst = new org.apache.hadoop.fs.Path(s"$stage/$name.parquet")
-        if (fs.exists(dst)) fs.delete(dst, false)
-        fs.rename(part, dst)
-        fs.delete(tmp, true)
-        fs.setTimes(dst, mtime, -1) // pinned arrival order IS the semantics
-      }
+      val stage = graft.Staging.dir(s, "graft_stream_late")
       val horizon = ev.sparkSession.range(1).select(
         lit(-1L).as("event_id"),
         lit(new java.sql.Timestamp(maxTs.getTime + 10L * 24 * 3600 * 1000)).as("ts"),
         lit("zz_horizon").as("event_type"), lit(0L).as("cents"))
-      stageOne(ev.filter(!isLate).select("ts", "event_type", "cents"), "b1_ontime", 1000000L)
-      stageOne(ev.filter(isLate).select("ts", "event_type", "cents"), "b2_straggler", 2000000L)
-      stageOne(horizon.select("ts", "event_type", "cents"), "b3_horizon", 3000000L)
-      val local = graft.Checkpoints.Scope(s, 4).session
-      val sink = "graft_stream_late_sink"
-      val schema = "ts TIMESTAMP, event_type STRING, cents BIGINT"
-      val sq = local.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(stage)
-        .withWatermark("ts", "0 seconds")
-        .as[(java.sql.Timestamp, String, Long)]
-        .groupByKey(_._2)
-        .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-          (typ: String, batch: Iterator[(java.sql.Timestamp, String, Long)],
-           gs: GroupState[(Long, Long, Long)]) =>
-            val wm = gs.getCurrentWatermarkMs()
-            var (onTime, late, cents) = gs.getOption.getOrElse((0L, 0L, 0L))
-            batch.foreach { case (ts, _, c) =>
-              if (ts.getTime < wm) late += 1 // quarantined, never counted
-              else { onTime += 1; cents += c }
-            }
-            gs.update((onTime, late, cents))
-            (typ, onTime, late, cents)
-        }
-        .toDF("event_type", "n_ontime", "n_late_dropped", "cents_ontime")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Update)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      // per-batch snapshots collapse to the latest: total row counter
-      // is strictly monotone per key
-      local.table(sink)
+      // pinned arrival order IS the semantics
+      landOne(stage, ev.filter(!isLate).select("ts", "event_type", "cents"), "b1_ontime", 1000000L)
+      landOne(stage, ev.filter(isLate).select("ts", "event_type", "cents"), "b2_straggler", 2000000L)
+      landOne(stage, horizon.select("ts", "event_type", "cents"), "b3_horizon", 3000000L)
+      replay(s, OutputMode.Update)(local =>
+        local.readStream.schema("ts TIMESTAMP, event_type STRING, cents BIGINT")
+          .option("maxFilesPerTrigger", "1").parquet(stage)
+          .withWatermark("ts", "0 seconds")
+          .as[(java.sql.Timestamp, String, Long)]
+          .groupByKey(_._2)
+          .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
+            (typ: String, batch: Iterator[(java.sql.Timestamp, String, Long)],
+             gs: GroupState[(Long, Long, Long)]) =>
+              val wm = gs.getCurrentWatermarkMs()
+              var (onTime, late, cents) = gs.getOption.getOrElse((0L, 0L, 0L))
+              batch.foreach { case (ts, _, c) =>
+                if (ts.getTime < wm) late += 1 // quarantined, never counted
+                else { onTime += 1; cents += c }
+              }
+              gs.update((onTime, late, cents))
+              (typ, onTime, late, cents)
+          }
+          .toDF("event_type", "n_ontime", "n_late_dropped", "cents_ontime"))
+        // per-batch snapshots collapse to the latest: total row counter
+        // is strictly monotone per key
         .filter(col("event_type") =!= "zz_horizon")
         .groupBy("event_type")
         .agg(max_by(
@@ -1117,32 +1033,24 @@ object EventStream {
         (col("id") + 5000000L).as("event_id"),
         lit(java.sql.Timestamp.valueOf("2024-01-15 12:00:00")).as("ts"),
         lit(hotUser).as("user_id"))
-      val stage = stagePath(s, "graft_stream_hh")
-      ev.unionByName(hot).write.mode("overwrite").parquet(stage)
-      val local = graft.Checkpoints.Scope(s, 4).session
-      val sink = "graft_stream_hh_sink"
+      val stage = land(s, "graft_stream_hh", ev.unionByName(hot))
       val k = 64
-      val sq = local.readStream.schema(ev.schema).parquet(stage)
-        .as[(Long, java.sql.Timestamp, Long)]
-        .groupByKey(r => java.lang.Math.floorMod(r._3, 32L))
-        .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-          (shard: Long, batch: Iterator[(Long, java.sql.Timestamp, Long)],
-           gs: GroupState[(Map[Long, Long], Long)]) =>
-            var (m, np) = gs.getOption.getOrElse((Map.empty[Long, Long], 0L))
-            batch.toSeq.sortBy(r => (r._2.getTime, r._1)).foreach { r =>
-              m = mgAdd(m, r._3, k); np += 1L
-            }
-            gs.update((m, np))
-            val users = m.keys.toSeq.sorted
-            (shard, np, users, users.map(m))
-        }
-        .toDF("shard", "n_proc", "users", "ests")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Update)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      val latest = local.table(sink)
+      val latest = replay(s, OutputMode.Update)(local =>
+        local.readStream.schema(ev.schema).parquet(stage)
+          .as[(Long, java.sql.Timestamp, Long)]
+          .groupByKey(r => java.lang.Math.floorMod(r._3, 32L))
+          .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
+            (shard: Long, batch: Iterator[(Long, java.sql.Timestamp, Long)],
+             gs: GroupState[(Map[Long, Long], Long)]) =>
+              var (m, np) = gs.getOption.getOrElse((Map.empty[Long, Long], 0L))
+              batch.toSeq.sortBy(r => (r._2.getTime, r._1)).foreach { r =>
+                m = mgAdd(m, r._3, k); np += 1L
+              }
+              gs.update((m, np))
+              val users = m.keys.toSeq.sorted
+              (shard, np, users, users.map(m))
+          }
+          .toDF("shard", "n_proc", "users", "ests"))
         .groupBy("shard")
         .agg(max_by(struct(col("n_proc"), col("users"), col("ests")), col("n_proc"))
           .as("z"))
@@ -1182,8 +1090,8 @@ object EventStream {
     * exact per-type quantiles from the staged table, and only exact
     * values + bound booleans reach the driver hash (sketch bytes are
     * merge-order-dependent; the bound is not). Complete output mode:
-    * AvailableNow drains a finite backlog and the result is
-    * |types| rows of sketch state. */
+    * the result is |types| rows of sketch state. Floor: 3 data
+    * micro-batches. */
   val streamQuantile: Q = Q(
     "q_stream_quantile",
     (s, dir) => {
@@ -1192,28 +1100,18 @@ object EventStream {
       val ev = Tables.load(s, dir, "events")
         .select(col("event_type"),
           round(col("value") * 100, 0).cast("long").as("cents"))
-      val stage = stagePath(s, "graft_stream_quant")
       // 4 files + maxFilesPerTrigger(1): the digest state MUST absorb
       // several micro-batches, not swallow the backlog in one
-      ev.repartition(4).write.mode("overwrite").parquet(stage)
-      val local = graft.Checkpoints.Scope(s, 4).session
-      val stream = local.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(stage)
-      val sink = "graft_stream_quantile"
-      val sq = stream.groupBy("event_type")
-        .agg(graft.functions.QDigestAgg.build(col("cents"), bits, k).as("d"),
-          count(lit(1)).as("n"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Complete)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      val dataBatches = sq.recentProgress.count(_.numInputRows > 0)
-      require(dataBatches >= 3,
-        s"streaming-quantile replay degenerated to $dataBatches data micro-batches")
+      val stage = land(s, "graft_stream_quant", ev.repartition(4))
+      val digests = replay(s, OutputMode.Complete, minBatches = 3)(local =>
+        local.readStream.schema(ev.schema)
+          .option("maxFilesPerTrigger", "1").parquet(stage)
+          .groupBy("event_type")
+          .agg(graft.functions.QDigestAgg.build(col("cents"), bits, k).as("d"),
+            count(lit(1)).as("n")))
       // |types| sketch rows leave the stream; everything below is
       // driver math on sketch bytes + one exact batch pass
-      val sketches = local.table(sink).collect().map { r =>
+      val sketches = digests.collect().map { r =>
         val entries = r.getSeq[org.apache.spark.sql.Row](1)
           .map(e => (e.getLong(0), e.getLong(1)))
         (r.getString(0), entries, r.getLong(2))
@@ -1341,8 +1239,8 @@ object EventStream {
     * everything, the oracle is simply the FULL DuckDB ASOF LEFT
     * JOIN — the identical twin of `q_asof_exec`'s, completing the
     * as-of triangle: window composition ≡ custom physical operator ≡
-    * streaming state sweep, all three against one oracle. ≥4 data
-    * batches REQUIRED in-query. */
+    * streaming state sweep, all three against one oracle. Floor: 4
+    * data micro-batches. */
   val streamAsof: Q = Q(
     "q_stream_asof",
     (s, dir) => {
@@ -1352,7 +1250,7 @@ object EventStream {
         .select(col("user_id"), col("ts"), col("event_type"),
           col("event_id"), col("value"))
       val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
-      val stage = stagePath(s, "graft_stream_asof")
+      val stage = graft.Staging.dir(s, "graft_stream_asof")
       val fs = new org.apache.hadoop.fs.Path(stage)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(stage), true)
@@ -1372,41 +1270,24 @@ object EventStream {
       // all pending purchases emit on the plain data path — no
       // reliance on the runtime's timeout scheduling. The waves are
       // far-future clicks on real users; no purchase follows them, so
-      // they can never become an as-of answer.
-      def sentinel(name: String, hoursAhead: Long, mtime: Long): Unit = {
-        val rows = ev.select(col("user_id")).distinct().select(
+      // they can never become an as-of answer. Both are pinned to
+      // arrive AFTER the slices.
+      def sentinel(name: String, hoursAhead: Long, mtime: Long): Unit =
+        landOne(stage, ev.select(col("user_id")).distinct().select(
           col("user_id"),
           lit(new java.sql.Timestamp(maxTs.getTime + hoursAhead * 3600 * 1000))
             .as("ts"),
           lit("click").as("event_type"), lit(-1L).as("event_id"),
-          lit(0.0).as("value"))
-        val tmp = new org.apache.hadoop.fs.Path(s"$stage/_tmp_$name")
-        rows.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = fs.globStatus(new org.apache.hadoop.fs.Path(tmp, "part-*"))(0).getPath
-        val dst = new org.apache.hadoop.fs.Path(s"$stage/$name.parquet")
-        fs.rename(part, dst)
-        fs.delete(tmp, true)
-        fs.setTimes(dst, mtime, -1) // pinned to arrive AFTER the slices
-      }
+          lit(0.0).as("value")), name, mtime)
       sentinel("z1_flush", 4, System.currentTimeMillis() + 3600000L)
       sentinel("z2_flush", 5, System.currentTimeMillis() + 7200000L)
-      val local = graft.Checkpoints.Scope(s, 4).session
-      val stream = local.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(stage)
-        .withWatermark("ts", "2 hours")
-        .as[(Long, java.sql.Timestamp, String, Long, Double)]
-      val sink = "graft_stream_asof_sink"
-      val sq = asofStream(stream)
-        .toDF()
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      val dataBatches = sq.recentProgress.count(_.numInputRows > 0)
-      require(dataBatches >= 4,
-        s"stream-asof replay degenerated to $dataBatches data micro-batches")
-      local.table(sink).orderBy("purchase_id")
+      replay(s, OutputMode.Append, minBatches = 4) { local =>
+        val stream = local.readStream.schema(ev.schema)
+          .option("maxFilesPerTrigger", "1").parquet(stage)
+          .withWatermark("ts", "2 hours")
+          .as[(Long, java.sql.Timestamp, String, Long, Double)]
+        asofStream(stream).toDF()
+      }.orderBy("purchase_id")
     },
     Some("""
       SELECT p.event_id AS purchase_id, p.user_id, c.value AS last_click_value
@@ -1451,31 +1332,24 @@ object EventStream {
       val edges = op.as("a").join(op.as("b"),
           col("a.o") === col("b.o") && col("a.p") < col("b.p"))
         .select(col("a.p").as("u"), col("b.p").as("v")).distinct()
-      val stage = stagePath(s, "graft_stream_kcore")
-      edges.repartition(3).write.mode("overwrite").parquet(stage)
-      val local = graft.Checkpoints.Scope(s, 4).session
-      import local.implicits._
-      val stream = local.readStream.schema(edges.schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-      val touches = stream
-        .select(explode(array(col("u"), col("v"))).as("vertex")).as[Long]
-      val sink = "graft_stream_kcore_sink"
-      val sq = touches.groupByKey(identity)
-        .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-          (v: Long, batch: Iterator[Long], st: GroupState[Long]) =>
-            val d = st.getOption.getOrElse(0L) + batch.size
-            st.update(d)
-            (v, d)
-        }
-        .toDF("vertex", "deg_so_far")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Update)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      val degs = keep(local.table(sink).groupBy("vertex")
+      val stage = land(s, "graft_stream_kcore", edges.repartition(3))
+      val sink = replay(s, OutputMode.Update) { local =>
+        import local.implicits._
+        local.readStream.schema(edges.schema)
+          .option("maxFilesPerTrigger", 1).parquet(stage)
+          .select(explode(array(col("u"), col("v"))).as("vertex")).as[Long]
+          .groupByKey(identity)
+          .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
+            (v: Long, batch: Iterator[Long], st: GroupState[Long]) =>
+              val d = st.getOption.getOrElse(0L) + batch.size
+              st.update(d)
+              (v, d)
+          }
+          .toDF("vertex", "deg_so_far")
+      }
+      val degs = keep(sink.groupBy("vertex")
         .agg(max(col("deg_so_far")).as("degree")))
-      val staged = local.read.parquet(stage)
+      val staged = sink.sparkSession.read.parquet(stage)
       val batchDeg = staged
         .select(explode(array(col("u"), col("v"))).as("vertex"))
         .groupBy("vertex").agg(count(lit(1)).as("bd"))
@@ -1510,8 +1384,8 @@ object EventStream {
       FROM touch GROUP BY vertex ORDER BY vertex"""))
 
   /** STREAMING count-min — [[graft.functions.CountMinAgg]] as
-    * streaming-aggregation state across ≥ 3 REQUIRED micro-batches
-    * (the [[streamQuantile]] replay harness). Unlike the q-digest,
+    * streaming-aggregation state with a floor of 3 data micro-batches
+    * (the [[streamQuantile]] replay). Unlike the q-digest,
     * the CMS has NO merge-order freedom: additive counters make the
     * streamed sketch BYTE-IDENTICAL to the batch build, so this query
     * carries `q_count_min`'s FULL hash oracle — every one of the
@@ -1525,23 +1399,12 @@ object EventStream {
     (s, dir) => {
       val ev = Tables.load(s, dir, "events")
         .filter(col("user_id").isNotNull).select(col("user_id"))
-      val stage = stagePath(s, "graft_stream_cms")
-      ev.repartition(4).write.mode("overwrite").parquet(stage)
-      val local = graft.Checkpoints.Scope(s, 4).session
-      val stream = local.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(stage)
-      val sink = "graft_stream_cms_sink"
-      val sq = stream
-        .agg(graft.functions.CountMinAgg.build(col("user_id")).as("sk"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Complete)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      val dataBatches = sq.recentProgress.count(_.numInputRows > 0)
-      require(dataBatches >= 3,
-        s"streaming-CMS replay degenerated to $dataBatches data micro-batches")
-      val cells = local.table(sink).head().getSeq[Long](0).toIndexedSeq
+      val stage = land(s, "graft_stream_cms", ev.repartition(4))
+      val cells = replay(s, OutputMode.Complete, minBatches = 3)(local =>
+        local.readStream.schema(ev.schema)
+          .option("maxFilesPerTrigger", "1").parquet(stage)
+          .agg(graft.functions.CountMinAgg.build(col("user_id")).as("sk")))
+        .head().getSeq[Long](0).toIndexedSeq
       val top = ev.groupBy("user_id").agg(count(lit(1)).as("exact_cnt"))
         .orderBy(desc("exact_cnt"), col("user_id"))
         .limit(10).collect()
@@ -1631,23 +1494,14 @@ object EventStream {
         col("o_orderkey").as("seq"),
         round(col("o_totalprice") * 100, 0).cast("long").as("vc"),
         (col("o_orderkey") % 7 === 0).as("del"))
-      val stage = stagePath(s, "graft_stream_cdc")
-      log.repartition(3).write.mode("overwrite").parquet(stage)
-      val local = graft.Checkpoints.Scope(s, 4).session
-      val stream = local.readStream.schema(log.schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-        .as[(Long, Long, Long, Boolean)]
-      val sink = "graft_stream_cdc_sink"
-      val sq = cdcStates(stream)
-        .toDF("key", "last_seq", "value_cents", "del", "n_seen")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Update)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      // the winning seq only grows across emissions, so the final
-      // materialization is each key's max_by(·, n_seen) snapshot
-      local.table(sink)
+      val stage = land(s, "graft_stream_cdc", log.repartition(3))
+      replay(s, OutputMode.Update)(local =>
+        cdcStates(local.readStream.schema(log.schema)
+          .option("maxFilesPerTrigger", 1).parquet(stage)
+          .as[(Long, Long, Long, Boolean)])
+          .toDF("key", "last_seq", "value_cents", "del", "n_seen"))
+        // the winning seq only grows across emissions, so the final
+        // materialization is each key's max_by(·, n_seen) snapshot
         .groupBy("key")
         .agg(expr("max_by(last_seq, n_seen)").as("last_seq"),
           expr("max_by(value_cents, n_seen)").as("value_cents"),

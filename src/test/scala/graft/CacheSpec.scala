@@ -1,9 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftbridge.cachedPlans
@@ -71,7 +67,7 @@ class CacheSpec extends SparkSpec {
   test("registry queries leave no cached plan behind their scope (sf0.001)") {
     val byName = SparkEntry.registry.map(q => q.name -> q).toMap
     spark.catalog.clearCache()
-    for (name <- Seq("q_hll_intersect", "q_itemsets", "q_dedup_minhash")) {
+    for (name <- Seq("q_hll_intersect", "q_itemsets", "q_dedup_minhash", "q_stream_kcore_deg")) {
       val rows = scoped(byName(name).fn(spark, sf001).collect().length)
       assert(rows > 0, s"$name returned no rows")
       assert(cachedPlans(spark) === 0, s"$name left a cached plan behind its scope")
@@ -79,19 +75,12 @@ class CacheSpec extends SparkSpec {
   }
 
   test("nothing outside the cache module persists a frame") {
-    // target/scala-2.13/test-classes → the project root
-    val root = Paths.get(getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
-      .getParent.getParent.getParent
-    val src = root.resolve("src/main/scala")
-    assert(Files.isDirectory(src), s"no source tree at $src")
-    val files = Files.walk(src).iterator.asScala
-      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "CacheHandles.scala")
-      .toSeq
+    val files = MainSources.files.filter(_._1.getFileName.toString != "CacheHandles.scala")
     assert(files.size > 40)
-    val offenders = files.flatMap { (p: Path) =>
-      Files.readAllLines(p).asScala.zipWithIndex.collect {
-        case (line, i) if line.contains(".persist(") || line.contains(".cache()") =>
-          s"${root.relativize(p)}:${i + 1}"
+    val offenders = files.flatMap { case (p, lines) =>
+      lines.indices.collect {
+        case i if lines(i).contains(".persist(") || lines(i).contains(".cache()") =>
+          MainSources.at(p, i)
       }
     }
     assert(offenders.isEmpty, offenders.mkString("persist outside the cache module: ", ", ", ""))

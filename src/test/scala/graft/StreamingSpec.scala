@@ -1,8 +1,10 @@
 package graft
 
 import java.sql.Timestamp
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryException}
 import graft.streaming.EventStream
 
 /** Streaming-vs-batch equivalence: the same declarative aggregation
@@ -291,5 +293,82 @@ class StreamingSpec extends SparkSpec {
       assert(fin(2L) == ((20L, 222L, true)), s"tombstone must survive older upsert: $fin")
       assert(fin(3L) == ((6L, 0L, true)), s"late tombstone must erase the key: $fin")
     } finally q.stop()
+  }
+
+  /** Three single-file batches under `maxFilesPerTrigger = 1`: ids
+    * 0-29 range-split in id order, arrival pinned to that order. */
+  private def threeBatchStage(name: String): String = {
+    val stage = EventStream.land(spark, name, spark.range(0, 30).toDF().repartitionByRange(3, col("id")))
+    val path = new org.apache.hadoop.fs.Path(stage)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val parts = fs.globStatus(new org.apache.hadoop.fs.Path(path, "part-*")).sortBy(_.getPath.getName)
+    assert(parts.length == 3)
+    parts.zipWithIndex.foreach { case (f, i) => fs.setTimes(f.getPath, 1000000L * (i + 1), -1) }
+    stage
+  }
+
+  private def readIds(local: SparkSession, stage: String) =
+    local.readStream.schema("id BIGINT").option("maxFilesPerTrigger", 1).parquet(stage)
+
+  test("replay drains the whole backlog and leaves no active stream in its clone") {
+    val stage = threeBatchStage("graft_replay_spec")
+    val out = EventStream.replay(spark, OutputMode.Complete, minBatches = 3)(local =>
+      readIds(local, stage).groupBy((col("id") % 3).as("k")).count())
+    val got = out.orderBy("k").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(got == Seq((0L, 10L), (1L, 10L), (2L, 10L)))
+    assert(out.sparkSession ne spark, "the run plans in a clone")
+    assert(out.sparkSession.streams.active.isEmpty)
+  }
+
+  test("replay propagates a batch failure partway through and leaves no active stream") {
+    val stage = threeBatchStage("graft_replay_fail_spec")
+    var clone: SparkSession = null
+    val e = intercept[StreamingQueryException] {
+      EventStream.replay(spark, OutputMode.Append) { local =>
+        clone = local
+        readIds(local, stage).select(
+          when(col("id") === 29L, raise_error(lit("planted batch failure")))
+            .otherwise(col("id")).as("id"))
+      }
+    }
+    assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("planted batch failure")))
+    assert(clone.streams.active.isEmpty)
+    // the batches before the failing one were committed to the sink
+    val kept = clone.table(EventStream.SinkTable).count()
+    assert(kept > 0 && kept < 30, s"expected a partial sink, got $kept rows")
+  }
+
+  test("replay below its micro-batch floor throws with the count and the floor") {
+    val stage = threeBatchStage("graft_replay_floor_spec")
+    val e = intercept[IllegalArgumentException] {
+      EventStream.replay(spark, OutputMode.Complete, minBatches = 4)(local =>
+        readIds(local, stage).groupBy().count())
+    }
+    assert(e.getMessage.contains("ran 3 data micro-batches"), e.getMessage)
+    assert(e.getMessage.contains("floor of 4"), e.getMessage)
+  }
+
+  test("only replay and the merge run start a stream in src/main/scala") {
+    // the no-argument wait is a stream's; an executor pool's takes a timeout
+    val starts = Seq(".writeStream", "awaitTermination()", "format(\"memory\")")
+    // a block opened by a def line ends at the next line of the same indent
+    def block(lines: IndexedSeq[String], opener: String): Range = {
+      val from = lines.indexWhere(_.contains(opener))
+      assert(from >= 0, s"no `$opener` in EventStream.scala")
+      val indent = lines(from).takeWhile(_ == ' ').length
+      from to lines.indexWhere(l => l.trim.nonEmpty && l.takeWhile(_ == ' ').length == indent, from + 1)
+    }
+    val hits = MainSources.files.flatMap { case (p, lines) =>
+      val allowed =
+        if (p.getFileName.toString != "EventStream.scala") Set.empty[Int]
+        else (block(lines, "def replay(") ++ block(lines, "def run(): Unit")).toSet
+      lines.indices.collect {
+        case i if starts.exists(lines(i).contains) => (MainSources.at(p, i), allowed(i))
+      }
+    }
+    assert(hits.count(_._2) >= 4, s"the scan must see replay's and the merge run's starts: $hits")
+    val offenders = hits.filterNot(_._2).map(_._1)
+    assert(offenders.isEmpty, offenders.mkString("stream started outside replay: ", ", ", ""))
   }
 }
