@@ -37,9 +37,24 @@ object EventStream {
     * this is the knob sized to stream volume, independently of the
     * batch default. The clone ([[graft.Checkpoints.Scope]]) also gives
     * each run its own StreamingQueryManager + catalog, so memory-sink
-    * names can't collide across overlapping runs. */
-  private def streamSession(s: SparkSession): SparkSession =
-    graft.Checkpoints.Scope(s, 4).session
+    * names can't collide across overlapping runs.
+    *
+    * The clone also binds the `file` scheme's FileContext to
+    * [[graft.ForkFreeLocalFs]]. Without libhadoop, Hadoop's local file
+    * system starts a `chmod` subprocess for every file it creates and
+    * `readlink` ones for every rename, on the stream thread and the
+    * state-store commit path. The offset, commit and metadata logs and
+    * the state stores all write through FileContext with the clone's
+    * Hadoop conf, so they pick the binding up. Checksum files are
+    * written and checked as under Hadoop's `LocalFs`. FileSystem-API
+    * writes (parquet, ORC, `foreachBatch` sinks) and other schemes keep
+    * Hadoop's defaults: that path shares the JVM-wide cached `file`
+    * FileSystem with the caller's session. */
+  private def streamSession(s: SparkSession): SparkSession = {
+    val local = graft.Checkpoints.Scope(s, 4).session
+    local.conf.set(graft.ForkFreeLocalFs.ImplKey, classOf[graft.ForkFreeLocalFs].getName)
+    local
+  }
 
   /** Land `df` as parquet in the staging directory `name` and return
     * its path. The file stream source lists directories while a

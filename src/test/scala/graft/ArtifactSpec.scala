@@ -16,7 +16,7 @@ class ArtifactSpec extends SparkSpec {
   test("BPE merge list round-trips through parquet; encoding through it is unchanged") {
     val docs = Tables.load(spark, sf001, "documents")
     val trained = Bpe.trainMerges(docs, k = 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft_bpe_artifact").toString
+    val dir = TestSpark.tempDir("graft_bpe_artifact")
     trained.zipWithIndex
       .map { case ((l, r, pc), i) => (i + 1L, l, r, pc) }
       .toDF("rank", "l", "r", "pc")
@@ -40,7 +40,7 @@ class ArtifactSpec extends SparkSpec {
     val emb = Tables.load(spark, sf001, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val trained = Ivf.trainCentroids(emb, k = 8, iters = 3, sampleN = 400)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_artifact").toString
+    val dir = TestSpark.tempDir("graft_ivf_artifact")
     trained.zipWithIndex.flatMap { case (c, ci) =>
       c.zipWithIndex.map { case (v, di) => (ci.toLong, di.toLong, v) }
     }.toSeq.toDF("cluster", "dim", "v").write.mode("overwrite").parquet(dir)

@@ -100,6 +100,7 @@ class CheckpointSpec extends SparkSpec {
     val threshold = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
     val width = spark.conf.get("spark.sql.shuffle.partitions")
     val thresholdBefore = spark.conf.getOption(threshold)
+    val stagingBefore = spark.conf.getOption("spark.graft.staging.dir")
     spark.conf.set(Checkpoints.ReliableKey, "true")
     spark.conf.set(Checkpoints.DirKey, "/tmp/graft_ckpt_probe")
     spark.conf.set("spark.graft.staging.dir", "/tmp/graft_stage_probe")
@@ -133,7 +134,8 @@ class CheckpointSpec extends SparkSpec {
     } finally {
       spark.conf.unset(Checkpoints.ReliableKey)
       spark.conf.unset(Checkpoints.DirKey)
-      spark.conf.unset("spark.graft.staging.dir")
+      stagingBefore.fold(spark.conf.unset("spark.graft.staging.dir"))(
+        spark.conf.set("spark.graft.staging.dir", _))
       thresholdBefore.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
     }
   }

@@ -15,7 +15,7 @@ class IncrementalDedupSpec extends SparkSpec {
     .select(col("doc_id"), col("text"))
 
   private def stage(name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_incdedup_spec_$name"
+    s"${TestSpark.root}/graft_incdedup_spec_$name"
 
   private def cutOf(df: DataFrame): Long = df.agg(expr(
     "max(doc_id) - (max(doc_id) - min(doc_id) + 1) div 8").as("c"))

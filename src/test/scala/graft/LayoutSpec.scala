@@ -45,7 +45,7 @@ class LayoutSpec extends SparkSpec {
     // each file covers ~a quarter of it per dimension.
     val grid = (for (x <- 0 until 64; y <- 0 until 64) yield (x.toLong, y.toLong))
       .toDF("x", "y")
-    val tmp = System.getProperty("java.io.tmpdir")
+    val tmp = TestSpark.root.toString
     val zPath = s"$tmp/graft_layout_z"
     val linPath = s"$tmp/graft_layout_lin"
     ops.Layout.zorderWrite(grid, col("x"), col("y"), zPath, 16)
@@ -70,7 +70,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("compaction collapses a fragmented directory, content-preserving") {
-    val tmp = System.getProperty("java.io.tmpdir")
+    val tmp = TestSpark.root.toString
     val fragged = s"$tmp/graft_spec_fragmented"
     val compacted = s"$tmp/graft_spec_compacted"
     val src = Tables.load(spark, sf001, "events").select("event_id", "value")
@@ -92,7 +92,7 @@ class LayoutSpec extends SparkSpec {
   test("compaction sizing is scheme-independent (explicit file:// URI input)") {
     // java.io.File(URI) chokes on authority-qualified URIs; the
     // Hadoop FileSystem path must size any scheme the reader accepts
-    val tmp = System.getProperty("java.io.tmpdir")
+    val tmp = TestSpark.root.toString
     val fragged = s"file://$tmp/graft_spec_fragged_uri"
     val compacted = s"$tmp/graft_spec_compacted_uri"
     Tables.load(spark, sf001, "events").select("event_id", "value")

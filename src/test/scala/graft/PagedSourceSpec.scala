@@ -448,7 +448,7 @@ class PagedSourceSpec extends SparkSpec {
     import graft.sources.{PagedJsonBatchWrite, StagedFileMessage}
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.unsafe.types.UTF8String
-    val dir = java.nio.file.Files.createTempDirectory("graft_w").toString
+    val dir = TestSpark.tempDir("graft_w")
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("noticeId",
         org.apache.spark.sql.types.StringType)))
@@ -493,7 +493,7 @@ class PagedSourceSpec extends SparkSpec {
 
   test("write -> read roundtrip preserves tricky JSON content exactly") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_rt").toString
+    val dir = TestSpark.tempDir("graft_rt")
     val tricky = Seq(
       ("""q"uote""", "back\\slash"), ("new\nline", "tab\there"),
       ("unicode é中", "plain")).zipWithIndex

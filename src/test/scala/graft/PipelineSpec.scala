@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.ops.Pipeline
 
 /** E1 end-to-end: DSv2 source → filter/transform → parquet →
@@ -8,7 +7,7 @@ import graft.ops.Pipeline
 class PipelineSpec extends SparkSpec {
 
   test("full lambda_handler-equivalent run produces the scored, ranked result") {
-    val out = Files.createTempDirectory("graft_pipeline").toString
+    val out = TestSpark.tempDir("graft_pipeline")
     val result = Pipeline.run(spark, out).collect()
     // fixture: 5 veterans survive, 4 have recencyScore >= 4? (N007=5,
     // N001=4 qualify; N008=3, N002=2, N006=1 do not)

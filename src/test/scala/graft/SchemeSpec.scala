@@ -18,7 +18,7 @@ class SchemeSpec extends SparkSpec {
   private def withGraftFs[A](body: String => A): A = {
     spark.sparkContext.hadoopConfiguration
       .set("fs.graftfs.impl", classOf[GraftTestFs].getName)
-    val base = java.nio.file.Files.createTempDirectory("graft_scheme").toString
+    val base = TestSpark.tempDir("graft_scheme")
     body(s"graftfs://$base")
   }
 
@@ -85,6 +85,7 @@ class SchemeSpec extends SparkSpec {
       // cluster knob (VERDICT r16 item 6): on a real cluster staged
       // stores must live on shared storage; the session conf reroutes
       // every Staging.dir caller without touching the operators
+      val before = spark.conf.getOption("spark.graft.staging.dir")
       spark.conf.set("spark.graft.staging.dir", s"$base/staged")
       try {
         val path = Staging.dir(spark, "graft_scheme_probe")
@@ -96,12 +97,12 @@ class SchemeSpec extends SparkSpec {
         assert(Staging.ready(spark, path),
           "_SUCCESS through the custom scheme must mark the store ready")
         assert(spark.read.parquet(path).count() === 25)
-      } finally spark.conf.unset("spark.graft.staging.dir")
-      // default base is restored the moment the conf is gone — unless
-      // the environment override (next in precedence) is exported in
-      // this process, in which case THAT is the documented default
-      val expectedBase = sys.env.getOrElse("GRAFT_STAGING_DIR",
-        System.getProperty("java.io.tmpdir")).stripSuffix("/")
+      } finally restoreStaging(before)
+      // the previous base is back the moment the override is gone; with
+      // no conf, the environment override (next in precedence) or the
+      // local tmpdir is the documented default
+      val expectedBase = before.orElse(sys.env.get("GRAFT_STAGING_DIR"))
+        .getOrElse(System.getProperty("java.io.tmpdir")).stripSuffix("/")
       assert(Staging.dir(spark, "x").startsWith(expectedBase))
     }
   }
@@ -109,9 +110,14 @@ class SchemeSpec extends SparkSpec {
   /** Runs `body` with the staging base on a fresh graftfs directory, so
     * every store path is new to this application. */
   private def withFreshStaging[A](body: => A): A = withGraftFs { base =>
+    val before = spark.conf.getOption("spark.graft.staging.dir")
     spark.conf.set("spark.graft.staging.dir", s"$base/staged")
-    try body finally spark.conf.unset("spark.graft.staging.dir")
+    try body finally restoreStaging(before)
   }
+
+  private def restoreStaging(before: Option[String]): Unit =
+    before.fold(spark.conf.unset("spark.graft.staging.dir"))(
+      spark.conf.set("spark.graft.staging.dir", _))
 
   private def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
     df.collect().map(_.getLong(0)).toSeq.sorted

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.ops.Sinks
 
@@ -8,7 +7,7 @@ import graft.ops.Sinks
 class SinksSpec extends SparkSpec {
 
   private def tmp(): String =
-    Files.createTempDirectory("graft_sink").toString
+    TestSpark.tempDir("graft_sink")
 
   test("parquet snapshot round-trip preserves rows and schema") {
     val dir = tmp()

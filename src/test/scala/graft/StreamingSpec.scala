@@ -121,7 +121,7 @@ class StreamingSpec extends SparkSpec {
 
   test("checkpoint restart resumes keyed state exactly once (no reprocessing, no loss)") {
     import org.apache.spark.sql.streaming.Trigger
-    val tmp = System.getProperty("java.io.tmpdir")
+    val tmp = TestSpark.root.toString
     val dir = s"$tmp/graft_ckpt_events"
     val ck = s"$tmp/graft_ckpt_state"
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
@@ -170,7 +170,7 @@ class StreamingSpec extends SparkSpec {
     // views + one valid click, ZERO purchases: the final funnel stage
     // is empty, so an uncoalesced SUM would diverge (NULL on the
     // scalar-subquery oracle side, 0 on the streaming side)
-    val dir = java.nio.file.Files.createTempDirectory("graft_funnel_fix").toString
+    val dir = TestSpark.tempDir("graft_funnel_fix")
     val rows = Seq(
       (1L, ts("2024-03-01 00:00:00"), 10L, "view", 1.0, "{}"),
       (2L, ts("2024-03-01 00:30:00"), 10L, "click", 1.0, "{}"),
@@ -347,6 +347,28 @@ class StreamingSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("ran 3 data micro-batches"), e.getMessage)
     assert(e.getMessage.contains("floor of 4"), e.getMessage)
+  }
+
+  test("a stateful replay starts no chmod or readlink subprocess") {
+    import scala.jdk.CollectionConverters._
+    val stage = threeBatchStage("graft_replay_fork_spec")
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    val out =
+      try EventStream.replay(spark, OutputMode.Append, minBatches = 3)(local =>
+        readIds(local, stage).dropDuplicates("id"))
+      finally rec.stop()
+    val file = java.nio.file.Paths.get(TestSpark.tempDir("graft_jfr"), "forks.jfr")
+    val commands =
+      try {
+        rec.dump(file)
+        jdk.jfr.consumer.RecordingFile.readAllEvents(file).asScala.map(_.getString("command"))
+      } finally rec.close()
+    assert(out.count() == 30)
+    // the one allowed start is Spark's `rm -rf` of the temp checkpoint
+    val forks = commands.filter(c => c.startsWith("chmod") || c.startsWith("readlink"))
+    assert(forks.isEmpty, s"${forks.size} subprocesses: ${forks.take(5).mkString("; ")}")
   }
 
   test("only replay and the merge run start a stream in src/main/scala") {

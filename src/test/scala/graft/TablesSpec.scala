@@ -15,7 +15,7 @@ class TablesSpec extends SparkSpec {
   import spark.implicits._
 
   private def fixtureDir(): String =
-    Files.createTempDirectory("graft_tables_fixture").toString
+    TestSpark.tempDir("graft_tables_fixture")
 
   // One known instant, expressed per-encoding below. UTC session is
   // forced by TestSpark, so NTZ wall clock == UTC instant.

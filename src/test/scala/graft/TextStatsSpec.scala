@@ -34,7 +34,7 @@ class TextStatsSpec extends SparkSpec {
       when(col("doc_id") === docId,
         concat_ws(" ", reverse(split(trim(col("text")), "\\s+"))))
         .otherwise(col("text")).as("text"))
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_bigram_rev").toString
+    val dir2 = TestSpark.tempDir("graft_bigram_rev")
     reversed.write.mode("overwrite").parquet(s"$dir2/documents.parquet")
     val revTot = TextStats.bigramPerplexity.fn(spark, dir2)
       .where(col("doc_id") === docId)
