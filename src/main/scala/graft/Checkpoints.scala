@@ -64,6 +64,10 @@ object Checkpoints {
       df.checkpoint(eager)
     } else df.localCheckpoint(eager)
 
+  /** The shuffle width `s` plans with: its `spark.sql.shuffle.partitions`
+    * (Spark's default when a session leaves the key unset). */
+  def width(s: SparkSession): Int = s.conf.get("spark.sql.shuffle.partitions").toInt
+
   /** The one rebind: `df`'s computed rows as a frame bound to `to`.
     * Row order within and across partitions is kept, so a sorted
     * result stays sorted. */
@@ -156,6 +160,6 @@ object Checkpoints {
       * self-join over it plans as a CartesianProduct whose task count
       * is the PRODUCT of the input partition counts). */
     def ferry(clone: SparkSession, df: DataFrame): DataFrame =
-      cut(rebind(clone, df.coalesce(clone.conf.get("spark.sql.shuffle.partitions").toInt)))
+      cut(rebind(clone, df.coalesce(width(clone))))
   }
 }

@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Audit, Q, Tables}
 import graft.CacheHandles.keep
 
 /** One full ALS round (k = 2) on the customer×part implicit-feedback
@@ -217,9 +217,7 @@ object Als {
       val materialized = row.collect()
       val h = materialized(0)
       val (jb, ja) = (h.getLong(3), h.getLong(6))
-      if (ja > jb + jb / 1000L)
-        throw new IllegalStateException(
-          s"ALS item step did not descend: J $jb -> $ja")
+      Audit.atMost(s"ALS item-step objective J (bound: J before $jb + 0.1%)", ja, jb + jb / 1000L)
       r.unpersist(); u.unpersist(); qj.unpersist()
       s.createDataFrame(s.sparkContext.parallelize(
         materialized.toIndexedSeq, 1), row.schema)

@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Audit, Q, Tables}
 import graft.CacheHandles.keep
 
 /** Distributed BPE (byte-pair-encoding) merge training — the
@@ -202,13 +202,9 @@ object Bpe {
     (s, dir) => {
       val k = 8
       val merges = trainMergesMemo(dir, t(s, dir, "documents"), k)
-      if (merges.size != k)
-        throw new IllegalStateException(
-          s"BPE training degraded: ${merges.size} of $k merges learned")
-      if (merges.map(m => (m._1, m._2)).distinct.size != k)
-        throw new IllegalStateException("BPE merge list contains duplicates")
-      if (merges.exists(_._3 <= 0))
-        throw new IllegalStateException("BPE merge with non-positive support")
+      Audit.equal("BPE merges learned", merges.size, k)
+      Audit.equal("BPE duplicate merges", k - merges.map(m => (m._1, m._2)).distinct.size, 0)
+      Audit.equal("BPE merges with non-positive support", merges.count(_._3 <= 0), 0)
       import s.implicits._
       merges.zipWithIndex
         .map { case ((l, r, pc), i) => (i + 1L, l, r, pc) }
@@ -258,19 +254,13 @@ object Bpe {
           length(col("w")).cast("long").as("n_chars"),
           (concat_ws("", col("syms")) === col("w")).as("roundtrip_ok")))
       try {
-        val chk = enc.agg(
-          sum(when(!col("roundtrip_ok")
-            || col("n_bpe") < 1L || col("n_bpe") > col("n_chars"), 1L)
-            .otherwise(0L)).as("bad"),
-          sum(when(col("n_bpe") < col("n_chars"), 1L).otherwise(0L)).as("merged"))
-          .head()
-        if (chk.getLong(0) > 0)
-          throw new IllegalStateException(
-            s"BPE encode degraded: ${chk.getLong(0)} vocabulary words fail " +
-              "round-trip or token-count bounds")
-        if (chk.getLong(1) == 0)
-          throw new IllegalStateException(
-            "BPE encode degraded: no vocabulary word was compressed by any merge")
+        Audit.frame(enc,
+          Audit.Check("BPE vocabulary words failing round-trip or token-count bounds",
+            sum(when(!col("roundtrip_ok")
+              || col("n_bpe") < 1L || col("n_bpe") > col("n_chars"), 1L)
+              .otherwise(0L)), Audit.atMost(0)),
+          Audit.Check("BPE vocabulary words compressed by a merge",
+            sum(when(col("n_bpe") < col("n_chars"), 1L).otherwise(0L)), Audit.atLeast(1)))
         val out = keep(words.join(enc.select("w", "n_bpe", "n_chars"), "w")
           .groupBy("doc_id")
           .agg(count(lit(1)).as("n_ws_tokens"),
@@ -341,16 +331,12 @@ object Bpe {
           "(1000000 * n_pieces) div n_words AS fertility_micro",
           "(1000000 * n_word_chars) div n_pieces AS chars_per_piece_micro")
         .orderBy("lang"))
-      val chk = out.agg(
-        sum(when(col("fertility_micro") < 1000000L, 1L).otherwise(0L)).as("bad"),
-        sum(when(col("chars_per_piece_micro") > 1000000L, 1L).otherwise(0L))
-          .as("compressed")).head()
-      if (chk.getLong(0) > 0)
-        throw new IllegalStateException(
-          s"fertility audit degraded: ${chk.getLong(0)} languages below 1 piece/word")
-      if (chk.getLong(1) == 0)
-        throw new IllegalStateException(
-          "fertility audit degraded: no language compressed below raw characters")
+      Audit.frame(out,
+        Audit.Check("fertility languages below 1 piece per word",
+          sum(when(col("fertility_micro") < 1000000L, 1L).otherwise(0L)), Audit.atMost(0)),
+        Audit.Check("fertility languages compressed below raw characters",
+          sum(when(col("chars_per_piece_micro") > 1000000L, 1L).otherwise(0L)),
+          Audit.atLeast(1)))
       out
     },
     Some(bpeOraclePrefix(8) + """,

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Audit, Q, Tables}
 import graft.CacheHandles.keep
 
 /** Quality-classifier TRAINING at corpus scale — the histogram
@@ -1253,9 +1253,8 @@ object Classifier {
       val (ok, npos, nOob) = (accRow.getLong(0), accRow.getLong(1), accRow.getLong(2))
       val basePm = 1000L * math.max(npos, nOob - npos) / math.max(nOob, 1L)
       val accPm = 1000L * ok / math.max(nOob, 1L)
-      if (accPm < basePm + 30L)
-        throw new IllegalStateException(
-          s"random-forest OOB accuracy degraded: ${accPm}‰ vs majority ${basePm}‰")
+      Audit.atLeast(s"random-forest OOB accuracy permille (bound: majority ${basePm} + 30)",
+        accPm, basePm + 30L)
       val sizes = bags.groupBy("b").agg(sum(col("w")).as("n_inbag"))
       winners.join(sizes, "b")
         .select(col("b"), col("feature"), col("pol"), col("thr"),
@@ -1378,10 +1377,8 @@ object Classifier {
         .withColumn("n_correct",
           when(col("pred") === 1L, col("n_pos")).otherwise(col("n") - col("n_pos"))))
       val corr = la.agg(sum(col("n_correct"))).head().getLong(0)
-      if (corr < math.max(posTot, nTot - posTot))
-        throw new IllegalStateException(
-          s"boosted train accuracy $corr undercuts majority baseline " +
-            s"${math.max(posTot, nTot - posTot)} / $nTot")
+      Audit.atLeast(s"boosted train correct predictions of $nTot (bound: majority baseline)",
+        corr, math.max(posTot, nTot - posTot))
       la.orderBy("node")
     },
     Some(s"""

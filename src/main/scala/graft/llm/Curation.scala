@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Audit, Q, Tables}
 import graft.CacheHandles.{keep, scoped}
 
 /** Corpus-curation operators a training-data pipeline runs between raw
@@ -1374,12 +1374,9 @@ object Curation {
           else !col("c").isInCollection(chosen))
         .orderBy(col("gain").desc, col("c").asc)
         .limit(1).collect()
-      if (top.isEmpty)
-        throw new IllegalStateException(s"facility greedy ran dry at step $step")
+      Audit.atLeast(s"facility greedy candidates at step $step", top.length, 1)
       val (c, g) = (top(0).getLong(0), top(0).getLong(1))
-      if (g > prevGain)
-        throw new IllegalStateException(
-          s"submodularity violated: step $step gain $g after $prevGain")
+      Audit.atMost(s"facility greedy gain at step $step (submodular: the previous gain)", g, prevGain)
       prevGain = g
       objective += g
       chosen += c
@@ -1523,16 +1520,12 @@ object Curation {
         0.90, corpus, graft.llm.Ivf.trainCentroidsMemo(s"$dir#dbscan", corpus))
       val picks = facilityGreedy(corpus, pairs, k = 8)
       val rows = picks.collect() // k-bounded by construction
-      val blobPicks = rows.count(_.getLong(1) >= 2000000L)
-      if (blobPicks > 1)
-        throw new IllegalStateException(
-          s"facility greedy picked $blobPicks identical blob members")
+      Audit.atMost("facility greedy picks of identical blob members",
+        rows.count(_.getLong(1) >= 2000000L), 1)
       // vec 0 IS the blob prototype, so "the blob got a rep" means
       // either a planted id or vector 0 itself
-      if (!rows.take(3).exists(r =>
-          r.getLong(1) >= 2000000L || r.getLong(1) == 0L))
-        throw new IllegalStateException(
-          "planted blob missing from the first three representatives")
+      Audit.atLeast("planted blob picks among the first three representatives",
+        rows.take(3).count(r => r.getLong(1) >= 2000000L || r.getLong(1) == 0L), 1)
       import s.implicits._
       rows.toIndexedSeq
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))

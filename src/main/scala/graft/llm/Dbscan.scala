@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Audit, Q, Tables}
 import graft.CacheHandles.{keep, scoped}
 
 /** Density-based clustering (DBSCAN) over the embedding corpus —
@@ -149,10 +149,8 @@ object Dbscan {
     val materialized = census.collect()
     val nCore = materialized.map(_.getLong(4)).sum
     val nClusters = materialized.count(r => !r.isNullAt(0) && r.getLong(5) > 0)
-    if (nCore < minPlanted || nClusters != 1)
-      throw new IllegalStateException(
-        s"planted DBSCAN blob degraded: $nCore/$minPlanted core, " +
-          s"$nClusters clusters (want 1)")
+    Audit.atLeast("planted DBSCAN blob core points", nCore, minPlanted)
+    Audit.equal("planted DBSCAN blob clusters", nClusters, 1)
     val out = materialized.map(r => org.apache.spark.sql.Row(
       if (r.isNullAt(0)) null else r.getLong(0),
       r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -259,9 +257,7 @@ object Dbscan {
           Seq("id"), "full_outer")
         .filter(col("deg").isNull || col("deg_full").isNull ||
           col("deg") =!= col("deg_full")).count()
-      if (degMismatch != 0L)
-        throw new IllegalStateException(
-          s"incremental degree table diverged on $degMismatch ids")
+      Audit.equal("incremental degree table ids diverging from a recount", degMismatch, 0)
       val points = hist.unionByName(delta)
       val perPoint = dbscanFromDegrees(points, allPairs, incrDeg, minPts = 10)
       // fused census + planted floor — one pass, one collect (see
@@ -413,10 +409,8 @@ object Dbscan {
         .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
       Levels.foreach { lp =>
         val (nCore, nClusters) = audits.getOrElse(lp, (0L, 0L))
-        if (nCore < 12 || nClusters != 1L)
-          throw new IllegalStateException(
-            s"planted blob degraded at level $lp: " +
-              s"$nCore/12 core, $nClusters clusters")
+        Audit.atLeast(s"planted blob core points at level $lp", nCore, 12)
+        Audit.equal(s"planted blob clusters at level $lp", nClusters, 1)
       }
       val perLevel = Levels.map(lp => lp -> all3.filter(col("lvl") === lp)
         .select("id", "cluster", "role"))
@@ -569,8 +563,7 @@ object Dbscan {
       // orthogonal to v0, so ⟨b, ê0⟩ = T by construction
       val v01 = emb.filter(col("vec_id") <= 1).orderBy("vec_id")
         .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
-      if (v01.length != 2)
-        throw new IllegalStateException("corpus lost vectors 0/1")
+      Audit.equal("corpus vectors 0/1 present", v01.length, 2)
       val bProto: Array[Double] = {
         val T = 0.91
         def unit(a: Array[Double]) = {
@@ -578,9 +571,7 @@ object Dbscan {
         }
         val e0 = unit(v01(0)); val e1 = unit(v01(1))
         val c = e0.zip(e1).map { case (x, y) => x * y }.sum
-        if (math.abs(c) > 0.99)
-          throw new IllegalStateException(
-            s"vectors 0/1 near-parallel (cos=$c), cannot build blob B")
+        Audit.atMost("|cos| of vectors 0/1 (blob B needs them apart)", math.abs(c), 0.99)
         val u = unit(e1.zip(e0).map { case (y, x) => y - c * x })
         val w = math.sqrt(1 - T * T)
         e0.zip(u).map { case (x, y) => T * x + w * y }
@@ -628,13 +619,11 @@ object Dbscan {
           min(col("cluster")).as("c"))
         .collect().map(r => (r.getInt(0), r.getString(1)) -> r).toMap
       for (lp <- HdbLevels; blob <- Seq("A", "B")) {
-        val r = blobStats.getOrElse((lp, blob),
-          throw new IllegalStateException(
-            s"planted blob $blob vanished at level $lp"))
-        if (r.getLong(2) < 12 || r.getLong(3) != 1L)
-          throw new IllegalStateException(
-            s"planted blob $blob degraded at level $lp: " +
-              s"${r.getLong(2)}/12 core, ${r.getLong(3)} clusters")
+        Audit.equal(s"planted blob $blob census rows at level $lp",
+          blobStats.get((lp, blob)).size, 1)
+        val r = blobStats((lp, blob))
+        Audit.atLeast(s"planted blob $blob core points at level $lp", r.getLong(2), 12)
+        Audit.equal(s"planted blob $blob clusters at level $lp", r.getLong(3), 1)
       }
 
       // ---- driver-side condensed fold over the bounded tree ----
@@ -642,12 +631,9 @@ object Dbscan {
         .groupBy(r => (r.getInt(0), r.getLong(1)))
         .map { case (k, rs) =>
           k -> rs.map(r => r.getInt(2) -> r.getLong(3)).toMap }
-      parentRows.foreach { r =>
-        if (r.getLong(2) != r.getLong(3))
-          throw new IllegalStateException(
-            s"hierarchy not nested at (${r.getInt(0)}, ${r.getLong(1)}): " +
-              s"parents ${r.getLong(2)}..${r.getLong(3)}")
-      }
+      parentRows.foreach(r => Audit.equal(
+        s"hierarchy max parent label at (${r.getInt(0)}, ${r.getLong(1)})",
+        r.getLong(3), r.getLong(2)))
       val selected = condensedCut(deaths,
         parentRows.map(r => ((r.getInt(0), r.getLong(1)), r.getLong(2))),
         HdbLevels, minPts)
@@ -657,9 +643,7 @@ object Dbscan {
         val chainNodes = HdbLevels
           .map(l => (l, blobStats((l, blob)).getLong(4))).toSet
         val homes = selected.count { case (n, _, _) => chainNodes(n) }
-        if (homes != 1)
-          throw new IllegalStateException(
-            s"flat cut gave planted blob $blob $homes homes (want 1)")
+        Audit.equal(s"flat-cut homes of planted blob $blob", homes, 1)
       }
       import s.implicits._
       selected
@@ -732,14 +716,12 @@ object Dbscan {
         val out = keep(dbscanFromPairs(corpus.select("vec_id"), pairs, minPts = 10)
           .orderBy("id"))
         out.count()
-        val audit = out.filter(col("id") >= offset || col("id") === 0L)
-          .agg(count(when(col("role") === "core", 1)).as("n_core"),
-            countDistinct(col("cluster")).as("n_clusters")).head()
         corpus.unpersist()
-        if (audit.getLong(0) < 13 || audit.getLong(1) != 1L)
-          throw new IllegalStateException(
-            s"exact-DBSCAN blob degraded: ${audit.getLong(0)}/13 core, " +
-              s"${audit.getLong(1)} clusters (want 1)")
+        Audit.frame(out.filter(col("id") >= offset || col("id") === 0L),
+          Audit.Check("exact-DBSCAN blob core points",
+            count(when(col("role") === "core", 1)), Audit.atLeast(13)),
+          Audit.Check("exact-DBSCAN blob clusters",
+            countDistinct(col("cluster")), Audit.equal(1)))
         out
       }
       }

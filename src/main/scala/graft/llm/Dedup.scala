@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Audit, Q, Tables}
 import graft.CacheHandles.{keep, scoped}
 
 /** Deduplication operators over `documents`: exact (hash group-by),
@@ -101,7 +101,7 @@ object Dedup {
   def minhashPairs(input: DataFrame, threshold: Double = 0.5,
       bands: Int = 16, rows: Int = 4): DataFrame = {
       val spark = input.sparkSession
-      val par = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val par = graft.Checkpoints.width(spark)
       // Persisted: this (doc_id, shingle-hash) table is the single
       // materialization of the text — signatures aggregate it AND the
       // exact-Jaccard verify semi-joins it, so the shingling runs and
@@ -299,7 +299,7 @@ object Dedup {
     * sides of the band join). */
   private[graft] def simhashSignatures(input: DataFrame): DataFrame = {
       val spark = input.sparkSession
-      val par = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val par = graft.Checkpoints.width(spark)
       val docs = input.repartition(par, col("doc_id"))
         // slice = the lane-overflow guard: ≤ 32 767 distinct tokens
         // per doc keeps every 16-bit vote counter below 2¹⁵ (see
@@ -449,7 +449,7 @@ object Dedup {
       hist: Either[DataFrame, DataFrame],
       threshold: Double, bands: Int, rows: Int): DataFrame = {
     val spark = delta.sparkSession
-    val par = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val par = graft.Checkpoints.width(spark)
     val deltaShingles = keep(shingleFrame(delta, par))
     val deltaBands = bandedSignatures(deltaShingles, bands, rows)
     val allBands = state.select("doc_id", "band", "bh").unionByName(deltaBands)
@@ -564,7 +564,7 @@ object Dedup {
       val cut = cutCache.getOrElseUpdate(
         s.sparkContext.applicationId + "|" + dir,
         graft.Staging.historyCut(t(s, dir, "documents"), "doc_id"))
-      val par = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val par = graft.Checkpoints.width(s)
       val stateDir = graft.Staging.keyed(s, "graft_dedup_band_state", dir)
       graft.Staging.once(s, s"$stateDir/shingle_sets") {
         // first touch per application+corpus: build BOTH state
@@ -1002,20 +1002,15 @@ object Dedup {
       out.count() // materialize before the audits read it twice
       // planted recall: each (i, 1M+i) pair must share a cluster
       val lab = out.select(col("cluster"), col("doc_id"))
-      val plantedOk = lab.as("a").join(lab.as("b"),
-          col("b.doc_id") === col("a.doc_id") + 1000000L &&
-            col("a.cluster") === col("b.cluster"))
-        .filter(col("a.doc_id") < 10).count()
-      if (plantedOk < 10)
-        throw new IllegalStateException(
-          s"canonicalization recall degraded: $plantedOk of 10 planted " +
-            "near-copies clustered with their source")
+      Audit.atLeast("canonicalization planted near-copies clustered with their source",
+        lab.as("a").join(lab.as("b"),
+            col("b.doc_id") === col("a.doc_id") + 1000000L &&
+              col("a.cluster") === col("b.cluster"))
+          .filter(col("a.doc_id") < 10).count(), 10)
       // structural: exactly one elected keeper per cluster
-      val badClusters = out.groupBy("cluster").agg(sum(col("kept")).as("k"))
-        .filter(col("k") =!= 1L).limit(1).count()
-      if (badClusters > 0)
-        throw new IllegalStateException(
-          "canonicalization invariant violated: a cluster elected != 1 keeper")
+      Audit.atMost("canonicalization clusters electing != 1 keeper (counted up to 1)",
+        out.groupBy("cluster").agg(sum(col("kept")).as("k"))
+          .filter(col("k") =!= 1L).limit(1).count(), 0)
       out
     },
     None)
@@ -1364,7 +1359,7 @@ object Dedup {
   def suffixLcpPairs(docs: DataFrame, block: Int = 30, minLcp: Int = 15): DataFrame = {
       import org.apache.spark.sql.expressions.Window
       val s = docs.sparkSession
-      val par = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val par = graft.Checkpoints.width(s)
       // the token array IS the sort key (Spark and DuckDB both order
       // arrays element-wise lexicographically) — carrying a joined
       // string copy would double every shuffled row's width
@@ -1591,10 +1586,7 @@ object Dedup {
       val planted = out.filter(col("doc_b") >= offset &&
         col("doc_a") === col("doc_b") - offset).count()
       sh.unpersist()
-      if (planted < 10)
-        throw new IllegalStateException(
-          s"banded-exact recall degraded: $planted of 10 planted near-copy " +
-            "pairs survived banding + verify")
+      Audit.atLeast("banded-exact planted near-copy pairs surviving banding + verify", planted, 10)
       out
       }
     },
@@ -1731,10 +1723,7 @@ object Dedup {
         col("doc_a") === col("doc_b") - offset &&
         col("hamming") === 0L).count()
       fps.unpersist()
-      if (planted < 10)
-        throw new IllegalStateException(
-          s"simhash-exact plumbing broken: $planted of 10 planted exact " +
-            "copies retrieved at hamming 0")
+      Audit.atLeast("simhash-exact planted exact copies retrieved at hamming 0", planted, 10)
       out
       }
     },

@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Audit, Q, Tables}
 import graft.CacheHandles.{keep, seal}
 
 /** Semi-structured + event-time operators over the `events` table:
@@ -1783,12 +1783,11 @@ object Events {
         }
       }
       val pFull = pConv(channels.toSet)
-      if (!(pFull > 0.0 && pFull <= 1.0 + 1e-12))
-        throw new IllegalStateException(s"degenerate chain: P(conv) = $pFull")
+      Audit.within("Markov chain P(conv) (bound: least double above 0, 1 + 1e-12)",
+        pFull, Math.nextUp(0.0), 1.0 + 1e-12)
       val removals = channels.map { c =>
         val r = 1.0 - pConv(channels.toSet - c) / pFull
-        if (r < -1e-9 || r > 1.0 + 1e-9)
-          throw new IllegalStateException(s"removal effect out of [0,1] for $c: $r")
+        Audit.within(s"removal effect of $c", r, -1e-9, 1.0 + 1e-9)
         c -> math.max(0.0, r)
       }
       val totalMicro = removals.map(r => math.round(r._2 * 1e6)).sum

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Audit, Q, Tables}
 import graft.functions.DotProduct
 import graft.CacheHandles.keep
 
@@ -220,7 +220,7 @@ object Ivf {
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       val q = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), col("v").as("qv"))
-      val par = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val par = graft.Checkpoints.width(s)
       val cut = graft.Staging.historyCut(emb, "vec_id")
       val hist = emb.filter(col("vec_id") <= cut)
       val centroids = trainCentroidsMemo(s"$dir#annInc", hist)
@@ -254,15 +254,11 @@ object Ivf {
         .join(broadcast(exact), Seq("query_id", "neighbor_id"), "left_semi")
         .select("query_id", "rank", "neighbor_id")
         .orderBy("query_id", "rank"))
-      val row = confirmed.agg(count(lit(1)),
-        count(when(col("neighbor_id") === col("query_id") + 1000000L, 1))).head()
-      val (n, plantedHits) = (row.getLong(0), row.getLong(1))
-      if (n < RecallAudit.IvfIncFloor)
-        throw new IllegalStateException(
-          s"incremental IVF recall degraded: $n confirmed rows < pinned floor ${RecallAudit.IvfIncFloor}")
-      if (plantedHits < 8)
-        throw new IllegalStateException(
-          s"incremental IVF delta-ingest broken: $plantedHits of 8 delta-planted copies retrieved")
+      Audit.frame(confirmed,
+        Audit.Check("incremental IVF confirmed rows", count(lit(1)),
+          Audit.atLeast(RecallAudit.IvfIncFloor)),
+        Audit.Check("incremental IVF delta-planted copies retrieved",
+          count(when(col("neighbor_id") === col("query_id") + 1000000L, 1)), Audit.atLeast(8)))
       corpus.unpersist()
       confirmed
     },

@@ -480,7 +480,7 @@ object Multimodal {
       // across every core BEFORE synthesis/decode (one tiny shuffle
       // buys full-width parallelism for the expensive stage — the
       // standard shape for decode fan-out at 100 TB too)
-      val par = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val par = graft.Checkpoints.width(s)
       val ids = Tables.load(s, dir, "documents").select(col("doc_id")).as[Long]
         .repartition(par)
       val sigs = ids

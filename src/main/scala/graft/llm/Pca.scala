@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Audit, Q, Tables}
 import graft.CacheHandles.keep
 
 /** PCA over the embedding corpus — the dimensionality-reduction /
@@ -143,12 +143,10 @@ object Pca {
       for (a <- top.indices; b <- a until top.length) {
         val dot = (0 until d).map(j => top(a)._2(j) * top(b)._2(j)).sum
         val want = if (a == b) 1.0 else 0.0
-        if (math.abs(dot - want) > 1e-9)
-          throw new IllegalStateException(
-            s"PCA degraded: eigenvectors not orthonormal (v$a . v$b = $dot)")
+        Audit.atMost(s"PCA eigenvectors |v$a . v$b - $want|", math.abs(dot - want), 1e-9)
       }
-      if (top.sliding(2).exists(w => w.length == 2 && w(0)._1 < w(1)._1))
-        throw new IllegalStateException("PCA degraded: spectrum not sorted")
+      Audit.equal("PCA spectrum inversions",
+        top.sliding(2).count(w => w.length == 2 && w(0)._1 < w(1)._1), 0)
       val vd = col("embedding").cast("array<double>")
       val out = keep(top.zipWithIndex.foldLeft(emb.select(col("vec_id"), vd.as("v"))) {
         case (df, ((_, vec), k)) =>
@@ -166,9 +164,9 @@ object Pca {
         val sm = sums.getLong(2 * (k - 1)); val ss = sums.getLong(2 * k - 1)
         val varMicro2 = (ss.toDouble - sm.toDouble * sm / n) / n
         val lamMicro2 = top(k - 1)._1 * 1e12
-        if (lamMicro2 > 1e6 && math.abs(varMicro2 - lamMicro2) > 0.02 * lamMicro2)
-          throw new IllegalStateException(
-            s"PCA degraded: pc$k variance $varMicro2 != eigenvalue $lamMicro2")
+        if (lamMicro2 > 1e6)
+          Audit.atMost(s"PCA pc$k |variance - eigenvalue $lamMicro2| (bound: 2% of it)",
+            math.abs(varMicro2 - lamMicro2), 0.02 * lamMicro2)
       }
       out
     },

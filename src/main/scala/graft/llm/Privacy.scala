@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Audit, Q, Tables}
 import graft.CacheHandles.keep
 
 /** Privacy-preserving release primitives — what sits between a
@@ -317,9 +317,7 @@ object Privacy {
       // condition-less join side) — truncation can never silently
       // engage past the throw
       val nBuckets = buckets.count()
-      if (nBuckets > 64)
-        throw new IllegalStateException(
-          s"sensitive-bucket domain exploded to $nBuckets (grid bound 64)")
+      Audit.atMost("sensitive-bucket domain size (grid bound)", nBuckets, 64)
       val grid = classes.select("segment", "nation", "class_n")
         .crossJoin(broadcast(buckets.limit(64)))
       val cellc = rows.groupBy("segment", "nation", "balb")
@@ -482,9 +480,7 @@ object Privacy {
         expr("cast(round(c_acctbal * 100) as bigint) div 100000").as("d2"))
       val out = keep(mondrianOf(rows))
       val tooSmall = out.filter(col("n") < MondrianK).count()
-      if (tooSmall != 0L)
-        throw new IllegalStateException(
-          s"$tooSmall Mondrian leaves violate k=$MondrianK")
+      Audit.equal(s"Mondrian leaves below k=$MondrianK", tooSmall, 0)
       val rows2 = out.collect()
       out.unpersist()
       s.createDataFrame(s.sparkContext.parallelize(rows2.toIndexedSeq, 1),

@@ -2,7 +2,8 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Audit, Checkpoints, Tables}
+import graft.Audit.{Check, atLeast}
 import graft.CacheHandles.keep
 
 /** Shared plant-and-confirm scaffolding for the approximate-index
@@ -72,10 +73,7 @@ object RecallAudit {
     * driver's `err` field records for rows-only queries. */
   def assertFloor(df: DataFrame, floor: Long, what: String): DataFrame = {
     val p = keep(df)
-    val n = p.count()
-    if (n < floor)
-      throw new IllegalStateException(
-        s"$what recall degraded: $n confirmed rows < pinned floor $floor")
+    Audit.atLeast(s"$what confirmed rows", p.count(), floor)
     p
   }
 
@@ -89,11 +87,8 @@ object RecallAudit {
       plantN: Long, what: String): DataFrame = {
     val p = keep(pairs)
     // one action materializes the cache AND measures plant recovery
-    val recovered = p.agg(count(when(
-      col(bCol) >= 1000000L && col(aCol) === col(bCol) - 1000000L, 1))).head().getLong(0)
-    if (recovered < plantN)
-      throw new IllegalStateException(
-        s"$what planted-duplicate recall degraded: $recovered of $plantN planted pairs recovered")
+    Audit.frame(p, Check(s"$what planted pairs recovered", count(when(
+      col(bCol) >= 1000000L && col(aCol) === col(bCol) - 1000000L, 1)), atLeast(plantN)))
     p
   }
 
@@ -132,7 +127,7 @@ object RecallAudit {
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
     // round-robin repartition: the harness parquet is a single row
     // group (one scan task); every downstream stage should use all cores
-    val par = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val par = Checkpoints.width(s)
     val planted = q.select((col("query_id") + lit(1000000L)).as("vec_id"),
       col("qv").as("v"))
     val corpus = keep(emb.repartition(par).unionByName(planted))
@@ -148,15 +143,10 @@ object RecallAudit {
     // SELF-retrievals (query i finding its own copy at 1e6+i): a
     // near-identical OTHER query's plant surfacing in this query's
     // top-k must not mask a missed own-plant.
-    val row = out.agg(count(lit(1)),
-      count(when(col("neighbor_id") === col("query_id") + 1000000L, 1))).head()
-    val (n, plantedHits) = (row.getLong(0), row.getLong(1))
-    if (n < floor)
-      throw new IllegalStateException(
-        s"$what recall degraded: $n confirmed rows < pinned floor $floor")
-    if (plantedHits < plantedFloor)
-      throw new IllegalStateException(
-        s"$what index plumbing broken: $plantedHits of $plantedFloor planted exact copies retrieved")
+    Audit.frame(out,
+      Check(s"$what confirmed rows", count(lit(1)), atLeast(floor)),
+      Check(s"$what planted exact copies retrieved",
+        count(when(col("neighbor_id") === col("query_id") + 1000000L, 1)), atLeast(plantedFloor)))
     // the materialized confirmed result is cached, so the corpus-sized
     // cache is dead weight from here — release it rather than pinning
     // one corpus per invocation in a long-lived app

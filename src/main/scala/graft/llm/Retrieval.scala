@@ -256,7 +256,7 @@ object Retrieval {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val q = emb.filter(col("vec_id").isInCollection(queryDocIds))
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val par = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val par = graft.Checkpoints.width(s)
     Similarity.exactTopK(q, emb.repartition(par), k)
       .select(col("query_id"), col("neighbor_id").as("doc_id"),
         col("rank").as("dense_rank"))

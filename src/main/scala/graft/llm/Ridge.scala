@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Audit, Q, Tables}
 import graft.CacheHandles.keep
 
 /** Ridge regression, closed form — the classifier-adjacent fitting
@@ -202,9 +202,7 @@ object Ridge {
       for (i <- 0 to d) {
         val lhs = (0 to d).map(j => a(i)(j) * beta(j)).sum
         val scale = math.max(1.0, math.abs(cv(i)))
-        if (math.abs(lhs - cv(i)) > 1e-9 * scale)
-          throw new IllegalStateException(
-            s"ridge degraded: system residual ${lhs - cv(i)} at row $i")
+        Audit.atMost(s"ridge system |residual| at row $i", math.abs(lhs - cv(i)), 1e-9 * scale)
       }
       val slopes = beta.drop(1).toSeq
       val out = keep(emb.select(col("vec_id"), col("label"),
@@ -221,9 +219,8 @@ object Ridge {
         .head().getDouble(0)
       val sy = sM(0)(d + 1); val syy = sM(d + 1)(d + 1)
       val sseMean = syy - sy * sy / n
-      if (r2 > sseMean * (1.0 + 1e-9) + 1e-6)
-        throw new IllegalStateException(
-          s"ridge degraded: SSE $r2 exceeds mean-baseline $sseMean")
+      Audit.atMost(s"ridge SSE (bound: mean-baseline SSE $sseMean + slack)",
+        r2, sseMean * (1.0 + 1e-9) + 1e-6)
       out
     },
     None)

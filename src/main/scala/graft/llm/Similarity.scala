@@ -43,7 +43,7 @@ object Similarity {
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
     // round-robin repartition: the harness parquet is a single row
     // group (one scan task); the dot-product stage should use every core
-    val par = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val par = graft.Checkpoints.width(s)
     (q, emb.repartition(par))
   }
 
@@ -339,7 +339,7 @@ object Similarity {
         when(dotLit(v, planes(table * bits + p)) > 0, shiftleft(lit(1), p))
           .otherwise(lit(0))
       }.reduce((a, b) => a.bitwiseOR(b))
-    val par = emb.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val par = graft.Checkpoints.width(emb.sparkSession)
     val embP = emb.repartition(par)
     val banded = embP.select(
       col("vec_id"), col("v"),

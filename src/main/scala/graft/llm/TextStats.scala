@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Audit, Q, Tables}
 import graft.CacheHandles.keep
 
 /** Text-analysis operators for a training-data pipeline over the
@@ -209,10 +209,7 @@ object TextStats {
       // invariant in both directions (a drop OR a duplication throws);
       // the cached frame IS the returned result, so release belongs to
       // the caller's scope
-      val n = out.count()
-      if (n != nDocs)
-        throw new IllegalStateException(
-          s"rolling fingerprint produced $n rows for $nDocs documents")
+      Audit.equal("rolling fingerprint rows (bound: one per document)", out.count(), nDocs)
       out
     },
     Some("""
@@ -629,15 +626,11 @@ object TextStats {
         .orderBy("eval_doc"))
       // planted-leak audit: 1-row bounded collect
       val audit = out.filter(col("eval_doc") >= offset).collect()
-      if (audit.length != 1)
-        throw new IllegalStateException(
-          s"contamination audit: expected exactly 1 planted eval doc, got ${audit.length}")
-      val (cov, span) = (audit(0).getAs[Long]("coverage_permille"),
-        audit(0).getAs[Long]("longest_span_tokens"))
-      if (cov < 900L || span < 50L)
-        throw new IllegalStateException(
-          s"contamination recall degraded: planted verbatim leak reported " +
-            s"coverage ${cov}‰ (floor 900) / span $span tokens (floor 50)")
+      Audit.equal("contamination audit planted eval docs", audit.length, 1)
+      Audit.atLeast("contamination planted leak coverage permille",
+        audit(0).getAs[Long]("coverage_permille"), 900)
+      Audit.atLeast("contamination planted leak span tokens",
+        audit(0).getAs[Long]("longest_span_tokens"), 50)
       out
     },
     Some("""
@@ -836,17 +829,13 @@ object TextStats {
           when(col("coverage_permille") >= 500, "drop").otherwise("keep"))
         .orderBy("batch_doc"))
       val audit = out.filter(col("batch_doc") >= offset).collect()
-      if (audit.length != 1)
-        throw new IllegalStateException(
-          s"decontamination audit: expected 1 planted batch doc, got ${audit.length}")
-      val (cov, span, dec) = (audit(0).getAs[Long]("coverage_permille"),
-        audit(0).getAs[Long]("longest_span_tokens"),
-        audit(0).getAs[String]("decision"))
-      if (cov < 900L || span < 50L || dec != "drop")
-        throw new IllegalStateException(
-          s"decontamination recall degraded: planted verbatim eval leak " +
-            s"reported ${cov}‰ / span $span tokens / '$dec' " +
-            s"(floor 900‰ / 50 / 'drop')")
+      Audit.equal("decontamination audit planted batch docs", audit.length, 1)
+      Audit.atLeast("decontamination planted leak coverage permille",
+        audit(0).getAs[Long]("coverage_permille"), 900)
+      Audit.atLeast("decontamination planted leak span tokens",
+        audit(0).getAs[Long]("longest_span_tokens"), 50)
+      Audit.equal("decontamination planted leak decisions other than drop",
+        Seq(audit(0).getAs[String]("decision")).count(_ != "drop"), 0)
       out
     },
     Some("""
@@ -1480,21 +1469,14 @@ object TextStats {
         .toDF("doc_id", "raw_bytes", "comp_bytes", "ratio_permille")
         .withColumn("boilerplate_flag", col("ratio_permille") < 300)
         .orderBy("doc_id"))
-      val row = out.agg(
-        max(when(col("doc_id") === 2000000L, col("ratio_permille"))),
-        max(when(col("doc_id") === 2000001L, col("ratio_permille"))),
-        count(when(col("ratio_permille") <= 0 ||
-          col("comp_bytes") > col("raw_bytes") + 64, 1))).head()
-      if (row.getLong(0) >= 150)
-        throw new IllegalStateException(
-          s"deflate floor broken: repetitive plant compressed to ${row.getLong(0)}‰ (≥150)")
-      if (row.getLong(1) <= 400)
-        throw new IllegalStateException(
-          s"deflate ceiling broken: noise plant compressed to ${row.getLong(1)}‰ (≤400)")
-      if (row.getLong(2) != 0)
-        throw new IllegalStateException(
-          s"${row.getLong(2)} docs outside the sane envelope " +
-            "(positive ratio, compressed ≤ raw + 64B stored-block overhead)")
+      Audit.frame(out,
+        Audit.Check("deflate ratio permille of the repetitive plant",
+          max(when(col("doc_id") === 2000000L, col("ratio_permille"))), Audit.atMost(149)),
+        Audit.Check("deflate ratio permille of the noise plant",
+          max(when(col("doc_id") === 2000001L, col("ratio_permille"))), Audit.atLeast(401)),
+        Audit.Check("deflate docs outside (0, raw + 64B stored-block overhead]",
+          count(when(col("ratio_permille") <= 0 ||
+            col("comp_bytes") > col("raw_bytes") + 64, 1)), Audit.equal(0)))
       out
     },
     None)

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Audit, Q, Tables}
 import graft.CacheHandles.keep
 
 /** Count-based word embeddings trained IN-ENGINE: symmetric window-1
@@ -94,14 +94,12 @@ object WordEmbed {
     for (a <- top.indices; b <- a until top.length) {
       val dot = (0 until pEff).map(j => top(a)._2(j) * top(b)._2(j)).sum
       val want = if (a == b) 1.0 else 0.0
-      if (math.abs(dot - want) > 1e-9)
-        throw new IllegalStateException(
-          s"word-embed degraded: basis not orthonormal (v$a . v$b = $dot)")
+      Audit.atMost(s"word-embed basis |v$a . v$b - $want|", math.abs(dot - want), 1e-9)
     }
-    if (top.sliding(2).exists(w => w.length == 2 && w(0)._1 < w(1)._1))
-      throw new IllegalStateException("word-embed degraded: spectrum not sorted")
-    if (top.head._1 <= 0.0)
-      throw new IllegalStateException("word-embed degraded: no positive spectrum")
+    Audit.equal("word-embed spectrum inversions",
+      top.sliding(2).count(w => w.length == 2 && w(0)._1 < w(1)._1), 0)
+    Audit.atLeast("word-embed leading eigenvalue (bound: least double above 0)",
+      top.head._1, Math.nextUp(0.0))
     // Nyström projection of EVERY word: e_u[k] = Σ_j ppmi(u, j) ·
     // U_k(j) / √λ_k over pivot columns j — a broadcast P·D basis
     // frame joined to the (word, pivot) pair slice, then one

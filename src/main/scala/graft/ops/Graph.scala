@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Audit, Q, Tables}
 import graft.CacheHandles.{keep, seal}
 
 /** Iterative graph analytics over relational data. The reference has
@@ -76,12 +76,10 @@ object Graph {
     * frame once per `dir|window` key, then returns `op` unguarded. */
   def checkedBasket(op: DataFrame, memoKey: String): DataFrame = {
     if (!basketAudited.contains(memoKey)) {
-      val over = op.groupBy(col("o")).agg(count(lit(1)).as("_bsz"))
+      op.groupBy(col("o")).agg(count(lit(1)).as("_bsz"))
         .filter(col("_bsz") > BasketCap).limit(1).collect()
-      if (over.nonEmpty)
-        throw new IllegalStateException(
-          s"basket over cap $BasketCap: order ${over(0).get(0)} has " +
-            s"${over(0).get(1)} distinct items ($memoKey)")
+        .foreach(r => Audit.atMost(
+          s"distinct items in the basket of order ${r.get(0)} ($memoKey)", r.getLong(1), BasketCap))
       basketAudited.add(memoKey)
     }
     op
@@ -1382,8 +1380,8 @@ object Graph {
     var e = graft.Checkpoints.cut(scope.in(edges0.select(col("u"), col("v"))))
     var n = e.count()
     var round = 0
-    var changed = n > 0
-    while (changed && round < maxRounds) {
+    var peeled = n // edges the last round removed
+    while (peeled > 0 && round < maxRounds) {
       val deg = e.select(explode(array(col("u"), col("v"))).as("x"))
         .groupBy("x").agg(count(lit(1)).as("d"))
       val keep = deg.filter(col("d") >= k).select(col("x"))
@@ -1392,12 +1390,10 @@ object Graph {
           .join(keep.withColumnRenamed("x", "v"), Seq("v"), "left_semi")
           .select(col("u"), col("v")))
       val n2 = e2.count()
-      changed = n2 < n
+      peeled = n - n2
       e = e2; n = n2; round += 1
     }
-    if (changed)
-      throw new IllegalStateException(
-        s"k-core peeling still shrinking after $maxRounds rounds")
+    Audit.atMost(s"k-core edges peeled in round $round of at most $maxRounds", peeled, 0)
     scope.out(e)
   }
 
@@ -1460,9 +1456,7 @@ object Graph {
       val deg = keep(core.select(explode(array(col("u"), col("v"))).as("vertex"))
         .groupBy("vertex").agg(count(lit(1)).as("core_deg")))
       val mn = deg.agg(min(col("core_deg"))).head()
-      if (!mn.isNullAt(0) && mn.getLong(0) < k)
-        throw new IllegalStateException(
-          s"k-core property violated: min within-core degree ${mn.getLong(0)} < $k")
+      if (!mn.isNullAt(0)) Audit.atLeast("k-core min within-core degree", mn.getLong(0), k)
       deg.select(col("vertex"), col("core_deg"), lit(k.toLong).as("k"))
         .orderBy("vertex")
     },
@@ -1526,7 +1520,7 @@ object Graph {
     // never above the parent's width; the probe count() is ~free —
     // `e` was just eagerly lineage-cut, so the frame is materialized.
     val m = e.count()
-    val parentWidth = scope.origin.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val parentWidth = graft.Checkpoints.width(scope.origin)
     val width = math.max(8L, math.min(parentWidth.toLong,
       sources.length.toLong * m / 1000000L)).toInt
     scope.partitions(width)
@@ -1689,9 +1683,8 @@ object Graph {
         .collect().map(_.getLong(0)).toSeq
       val out = keep(betweenness(edges, sources)
         .orderBy(col("btw_milli").desc, col("v")).limit(50))
-      val neg = out.filter(col("btw_milli") < 0).count()
-      if (neg > 0)
-        throw new IllegalStateException(s"$neg negative dependency scores")
+      Audit.atMost("negative dependency scores in the top 50",
+        out.filter(col("btw_milli") < 0).count(), 0)
       edges.unpersist()
       out
     },
@@ -2643,14 +2636,15 @@ object Graph {
         .orderBy("phase"))
       val rows = out.collect() // 2-row audit table (bounded by construction)
       und.unpersist()
-      def phase(p: String) = rows.find(_.getString(0) == p).getOrElse(
-        throw new IllegalStateException(s"robustness census lost phase $p"))
+      def phase(p: String) = {
+        Audit.atLeast(s"robustness census rows of phase $p", rows.count(_.getString(0) == p), 1)
+        rows.find(_.getString(0) == p).get
+      }
       val f = phase("1_full")
       val a = phase("2_attacked")
-      if (a.getLong(1) > f.getLong(1) || a.getLong(2) > f.getLong(2) ||
-          a.getLong(3) > f.getLong(3))
-        throw new IllegalStateException(
-          s"robustness audit violated monotonicity: full=$f attacked=$a")
+      Seq("n_vertices", "n_edges", "largest_cc").zip(1 to 3).foreach { case (c, i) =>
+        Audit.atMost(s"robustness attacked $c (bound: the full graph's)", a.getLong(i), f.getLong(i))
+      }
       out
     },
     Some(s"""
@@ -3030,22 +3024,16 @@ object Graph {
       val edges = cs.select((col("c") * 2).as("src"), (col("p") * 2 + 1).as("dst"))
         .unionAll(cs.select((col("p") * 2 + 1).as("src"), (col("c") * 2).as("dst")))
       val raw = keep(lubyMis(edges, MisRounds))
-      val unconverged = raw.filter(col("still_active") === 1L).count()
-      if (unconverged != 0L)
-        throw new IllegalStateException(
-          s"Luby MIS did not converge in $MisRounds rounds: $unconverged active")
+      Audit.equal(s"Luby MIS vertices still active after $MisRounds rounds",
+        raw.filter(col("still_active") === 1L).count(), 0)
       val out = raw.select("v", "in_mis", "round_joined")
       val m = out.filter(col("in_mis") === 1L).select(col("v"))
-      val conflicts = edges
+      Audit.equal("MIS edges with both ends inside", edges
         .join(m.withColumnRenamed("v", "src"), Seq("src"), "left_semi")
-        .join(m.withColumnRenamed("v", "dst"), Seq("dst"), "left_semi").count()
-      if (conflicts != 0L)
-        throw new IllegalStateException(s"MIS not independent: $conflicts edges inside")
-      val uncovered = out.filter(col("in_mis") === 0L)
+        .join(m.withColumnRenamed("v", "dst"), Seq("dst"), "left_semi").count(), 0)
+      Audit.equal("MIS-excluded vertices with no MIS neighbor", out.filter(col("in_mis") === 0L)
         .join(edges.join(m.withColumnRenamed("v", "dst"), Seq("dst"), "left_semi")
-          .select(col("src").as("v")), Seq("v"), "left_anti").count()
-      if (uncovered != 0L)
-        throw new IllegalStateException(s"MIS not maximal: $uncovered uncovered")
+          .select(col("src").as("v")), Seq("v"), "left_anti").count(), 0)
       // sealed: materialized distributed (vertex-linear output — no
       // driver hop), then the iterate cache is released; the range
       // sort on the unique vertex key is deterministic at any

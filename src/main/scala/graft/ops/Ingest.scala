@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Q
+import graft.{Audit, Q}
 
 /** SAM-shaped ingest fidelity: the reference's full E1/E2 chain
   * (fetch → veteran filter `:57-63` → flatten/trim `:67-81` → dropna
@@ -285,15 +285,13 @@ object Ingest {
         .mode("append").option("path", out).save()
       val nWritten = sam.count()
       val manifest = java.nio.file.Paths.get(out, "_SUCCESS")
-      if (!java.nio.file.Files.exists(manifest))
-        throw new IllegalStateException("commit left no _SUCCESS manifest")
+      Audit.equal("_SUCCESS manifests the commit left",
+        Seq(manifest).count(java.nio.file.Files.exists(_)), 1)
       val manifestRows = new String(
         java.nio.file.Files.readAllBytes(manifest), "UTF-8").trim.toLong
-      if (manifestRows != nWritten)
-        throw new IllegalStateException(
-          s"manifest rows $manifestRows != written $nWritten")
-      if (d.listFiles().exists(_.getName.startsWith("_staging")))
-        throw new IllegalStateException("commit left the staging dir behind")
+      Audit.equal("manifest rows (bound: rows written)", manifestRows, nWritten)
+      Audit.equal("staging dirs the commit left behind",
+        d.listFiles().count(_.getName.startsWith("_staging")), 0)
       val back = s.read.format("graft.sources.PagedJsonSource")
         .option("path", s"$out/records.jsonl")
         .option("page_size", 7).option("max_records", Int.MaxValue)

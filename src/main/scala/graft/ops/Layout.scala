@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Audit, Q, Tables}
 import graft.functions.ZOrderValue
 import graft.CacheHandles.keep
 
@@ -181,9 +181,7 @@ object Layout {
       val both = keep(before.join(after, "user_id"))
       val badMoves = both.filter(col("shard_before") =!= col("shard_after") &&
         col("shard_after") =!= 7L).count()
-      if (badMoves != 0L)
-        throw new IllegalStateException(
-          s"consistent hashing moved $badMoves keys between OLD shards")
+      Audit.equal("consistent hashing keys moved between OLD shards", badMoves, 0)
       val out = both.groupBy(col("shard_after").as("shard"))
         .agg(count(lit(1)).as("n_after"),
           sum(when(col("shard_before") =!= col("shard_after"), 1L)
@@ -294,9 +292,7 @@ object Layout {
       val both = keep(before.join(after, "user_id"))
       val badMoves = both.filter(col("shard_before") =!= col("shard_after") &&
         col("shard_after") =!= WchNewShard._1).count()
-      if (badMoves != 0L)
-        throw new IllegalStateException(
-          s"weighted consistent hashing moved $badMoves keys between OLD shards")
+      Audit.equal("weighted consistent hashing keys moved between OLD shards", badMoves, 0)
       val caps = (WchCaps :+ WchNewShard).toDF("shard", "capacity")
       val out = both.groupBy(col("shard_after").as("shard"))
         .agg(count(lit(1)).as("n_after"),

@@ -40,7 +40,7 @@ object Ranks {
   def globalOrder(df: DataFrame, order: Seq[Column], rankCol: String,
       runningSum: Option[(Column, String)] = None): DataFrame = {
     val s = df.sparkSession
-    val par = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val par = graft.Checkpoints.width(s)
     // MATERIALIZE the ranged frame once (lineage cut) before fanning
     // out to the offsets branch and the join branch. Both branches
     // embed this subtree; RangePartitioner samples boundaries with an

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Audit, Q, Tables}
 import graft.CacheHandles.{keep, seal}
 
 /** Slowly-changing-dimension maintenance — the history side of the
@@ -208,9 +208,7 @@ object Scd {
         .withColumn("coin", coin.cast("long")))
       val bad = out.filter(col("delta") =!= 0L &&
         (col("delta") =!= 100000L || col("coin") >= 20L)).count()
-      if (bad != 0L)
-        throw new IllegalStateException(
-          s"$bad keys corrected outside the planted set/amount")
+      Audit.equal("keys corrected outside the planted set/amount", bad, 0)
       val rows = out.select("key", "v_tx4", "v_tx8", "delta")
         .orderBy("key").collect()
       bt.unpersist(); out.unpersist()
@@ -525,15 +523,13 @@ object Scd {
         .join(read(factBt, 9L, 4L, "fact_t9"), "key")
         .join(read(dimBt, 6L, 4L, "lim_t6"), "key")
         .join(read(dimBt, 9L, 4L, "lim_t9"), "key"))
-      val audit = joined.agg(
-        sum(when(!(col("fact_t9") - col("fact_t6")).isin(0L, 50000L, 100000L),
-          1L).otherwise(0L)).as("bad_fact"),
-        sum(when(!(col("lim_t9") - col("lim_t6")).isin(0L, 25000L), 1L)
-          .otherwise(0L)).as("bad_dim")).head()
-      if (audit.getLong(0) != 0L || audit.getLong(1) != 0L)
-        throw new IllegalStateException(
-          s"bitemporal FK deltas off the planted grid: " +
-            s"${audit.getLong(0)} fact, ${audit.getLong(1)} dim")
+      Audit.frame(joined,
+        Audit.Check("bitemporal fact deltas off the planted grid",
+          sum(when(!(col("fact_t9") - col("fact_t6")).isin(0L, 50000L, 100000L),
+            1L).otherwise(0L)), Audit.equal(0)),
+        Audit.Check("bitemporal dim deltas off the planted grid",
+          sum(when(!(col("lim_t9") - col("lim_t6")).isin(0L, 25000L), 1L)
+            .otherwise(0L)), Audit.equal(0)))
       joined.select(col("key"),
           col("fact_t6"), col("lim_t6"),
           expr("(1000 * fact_t6) div lim_t6").as("util_t6_permille"),

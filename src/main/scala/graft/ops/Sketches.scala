@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Audit, Q, Tables}
 import graft.CacheHandles.keep
 
 /** Mergeable-sketch operators — the pre-aggregation pattern that makes
@@ -414,9 +414,7 @@ object Sketches {
       val rows = top.map { r =>
         val key = r.getLong(0); val exact = r.getLong(1)
         val est = graft.functions.CountMinAgg.estimate(cells, key)
-        if (est < exact)
-          throw new IllegalStateException(
-            s"count-min undercounted key $key: $est < $exact")
+        Audit.atLeast(s"count-min estimate of key $key (bound: its exact count)", est, exact)
         (key, exact, est, est - exact)
       }
       s.createDataFrame(rows.toSeq)
@@ -577,9 +575,7 @@ object Sketches {
         .join(b.groupBy("user_id").agg(count(lit(1)).as("p")), "user_id")
         .agg(coalesce(sum(col("c") * col("p")), lit(0L))).head().getLong(0)
       dots.foreach { case (i, d) =>
-        if (d < exact)
-          throw new IllegalStateException(
-            s"CMS join estimate undercounted on row $i: $d < $exact")
+        Audit.atLeast(s"CMS join estimate on row $i (bound: the exact join size)", d, exact)
       }
       import s.implicits._
       dots.map { case (i, d) => (i, d, exact, est, est - exact) }

@@ -37,8 +37,7 @@ object Skyline {
     * branch read the SAME partitioning. */
   def strictPrefixMin(df: DataFrame, order: Column, value: Column,
       outCol: String): DataFrame = {
-    val par = df.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "32").toInt
+    val par = graft.Checkpoints.width(df.sparkSession)
     val parted = graft.Checkpoints.cut(
       df.repartitionByRange(par, order)
         .withColumn("__pid", spark_partition_id().cast("long")))

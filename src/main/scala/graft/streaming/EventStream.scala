@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-import graft.{Q, Tables}
+import graft.{Audit, Q, Tables}
 import graft.CacheHandles.keep
 
 /** Structured Streaming surface of the engine.
@@ -116,8 +116,7 @@ object EventStream {
       .start()
     try sq.awaitTermination() finally sq.stop()
     val dataBatches = sq.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= minBatches,
-      s"streaming replay ran $dataBatches data micro-batches, below its floor of $minBatches")
+    Audit.atLeast("streaming replay data micro-batches", dataBatches, minBatches)
     local.table(SinkTable)
   }
 
@@ -1082,11 +1081,9 @@ object EventStream {
       // MG envelope floor on the planted hot user: rank 1, estimate
       // within [true − bound, true]
       val head = top.head()
-      require(head.getLong(0) == hotUser,
-        s"planted heavy hitter not at rank 1: got ${head.getLong(0)}")
-      val est = head.getLong(1)
-      require(est <= hotN && est >= hotN - errBound,
-        s"MG envelope violated: est=$est true=$hotN bound=$errBound")
+      Audit.equal("rank-1 heavy hitter user (bound: the planted one)", head.getLong(0), hotUser)
+      Audit.within("planted heavy hitter MG estimate (bound: true count - MG error, true count)",
+        head.getLong(1), hotN - errBound, hotN)
       top
     },
     None)
@@ -1370,9 +1367,7 @@ object EventStream {
         .groupBy("vertex").agg(count(lit(1)).as("bd"))
       val mismatches = degs.join(batchDeg, Seq("vertex"), "full")
         .filter(!(col("degree") <=> col("bd"))).count()
-      if (mismatches != 0)
-        throw new IllegalStateException(
-          s"maintained degree state diverges from batch on $mismatches vertices")
+      Audit.equal("maintained degree vertices diverging from the batch recount", mismatches, 0)
       val nV = degs.count()
       val k = degs.orderBy(col("degree"), col("vertex"))
         .limit((nV / 4 + 1).toInt).agg(max(col("degree"))).head().getLong(0).toInt
@@ -1381,9 +1376,8 @@ object EventStream {
         .groupBy("vertex").agg(count(lit(1)).as("core_deg"))
       val bad = coreDeg.join(degs, "vertex")
         .filter(col("core_deg") < k || col("core_deg") > col("degree")).count()
-      if (bad != 0)
-        throw new IllegalStateException(
-          s"peel from maintained state violates the core property on $bad vertices")
+      Audit.equal("vertices violating the core property after a peel from maintained state",
+        bad, 0)
       degs.orderBy("vertex")
     },
     Some("""
@@ -1426,9 +1420,8 @@ object EventStream {
       val rows = top.map { r =>
         val key = r.getLong(0); val exact = r.getLong(1)
         val est = graft.functions.CountMinAgg.estimate(cells, key)
-        if (est < exact)
-          throw new IllegalStateException(
-            s"streamed count-min undercounted key $key: $est < $exact")
+        Audit.atLeast(s"streamed count-min estimate of key $key (bound: its exact count)",
+          est, exact)
         (key, exact, est, est - exact)
       }
       s.createDataFrame(rows.toSeq)

@@ -23,14 +23,16 @@ class RecallAuditSpec extends SparkSpec {
       RecallAudit.assertFloor(df, floor = 5, what = "degraded-test")
     }
     assert(e.getMessage.contains("degraded-test"))
-    assert(e.getMessage.contains("1 confirmed rows < pinned floor 5"))
+    assert(e.getMessage.contains("confirmed rows: measured 1, bound >= 5"), e.getMessage)
   }
 
   test("assertFloor throws on a fully-empty result (zero-row degradation)") {
     val df = Seq.empty[(Long, Long, Long)].toDF("query_id", "rank", "neighbor_id")
-    intercept[IllegalStateException] {
+    val e = intercept[IllegalStateException] {
       RecallAudit.assertFloor(df, floor = 1, what = "empty-test")
     }
+    assert(e.getMessage.contains("empty-test confirmed rows: measured 0, bound >= 1"),
+      e.getMessage)
   }
 
   test("assertPlantedPairs passes when every planted pair is recovered") {
@@ -49,13 +51,14 @@ class RecallAuditSpec extends SparkSpec {
       RecallAudit.assertPlantedPairs(df, "doc_a", "doc_b",
         plantN = 2, what = "planted-test")
     }
-    assert(e.getMessage.contains("1 of 2 planted pairs recovered"))
+    assert(e.getMessage.contains("planted pairs recovered: measured 1, bound >= 2"),
+      e.getMessage)
   }
 
   test("annAudit trips the floor for a deliberately broken index") {
     // an "index" that always returns an empty result — the strongest
     // silent-degradation shape (no rows, no error, previously green)
-    intercept[IllegalStateException] {
+    val e = intercept[IllegalStateException] {
       RecallAudit.annAudit(spark, sf001, floor = 38, what = "broken") {
         (q, corpus) =>
           corpus.filter(lit(false))
@@ -63,6 +66,7 @@ class RecallAuditSpec extends SparkSpec {
               lit(1L).as("rank"), col("vec_id").as("neighbor_id"))
       }
     }
+    assert(e.getMessage == "broken confirmed rows: measured 0, bound >= 38", e.getMessage)
   }
 
   test("annAudit trips the planted-copy floor when plants are missed") {
@@ -74,7 +78,8 @@ class RecallAuditSpec extends SparkSpec {
           graft.llm.Similarity.exactTopK(q, corpus.filter(col("vec_id") < 1000000L))
       }
     }
-    assert(e.getMessage.contains("planted exact copies"))
+    assert(e.getMessage.contains("planted exact copies retrieved: measured 0, bound >= 8"),
+      e.getMessage)
   }
 
   test("floor margins: every ANN audit measures ≥ floor+1 at sf0.001 AND sf0.01") {

@@ -341,12 +341,12 @@ class StreamingSpec extends SparkSpec {
 
   test("replay below its micro-batch floor throws with the count and the floor") {
     val stage = threeBatchStage("graft_replay_floor_spec")
-    val e = intercept[IllegalArgumentException] {
+    val e = intercept[IllegalStateException] {
       EventStream.replay(spark, OutputMode.Complete, minBatches = 4)(local =>
         readIds(local, stage).groupBy().count())
     }
-    assert(e.getMessage.contains("ran 3 data micro-batches"), e.getMessage)
-    assert(e.getMessage.contains("floor of 4"), e.getMessage)
+    assert(e.getMessage == "streaming replay data micro-batches: measured 3, bound >= 4",
+      e.getMessage)
   }
 
   test("a stateful replay starts no chmod or readlink subprocess") {
