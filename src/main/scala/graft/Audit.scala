@@ -9,15 +9,15 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
   * `err` field as an `IllegalStateException` that reads
   * `<check>: measured X, bound <op> Y`.
   *
-  * Measured values and bounds are Long/Int/Short/Byte, Double/Float or
-  * `java.math.BigDecimal`, compared exactly (as decimals, so a Long
-  * count against a Double bound loses nothing). A null or non-finite
-  * measured value, or a non-finite bound, fails the check.
+  * Measured values and bounds are Int, Long or Double, compared
+  * exactly (as decimals, so a Long count against a Double bound loses
+  * nothing). A null or non-finite measured value, or a non-finite
+  * bound, fails the check.
   *
   * A check that is not numeric is stated as a count: duplicates are
   * k − distinct, an unsorted sequence counts its inversions, a lost
   * row counts the rows present. A strict Double bound `x > b` is
-  * `atLeast(x, Math.nextUp(b))`, which is the same set of doubles. */
+  * `atLeast(Math.nextUp(b))`, which is the same set of doubles. */
 object Audit {
 
   /** The comparison a check makes; a failure prints it after `bound`. */
@@ -32,14 +32,9 @@ object Audit {
   def within(lo: Number, hi: Number): Bound = new Bound(s"in [$lo, $hi]",
     x => sign(x, lo).exists(_ >= 0) && sign(x, hi).exists(_ <= 0))
 
-  def atLeast(check: String, measured: Number, bound: Number): Unit =
-    verify(check, measured, atLeast(bound))
-  def atMost(check: String, measured: Number, bound: Number): Unit =
-    verify(check, measured, atMost(bound))
-  def equal(check: String, measured: Number, bound: Number): Unit =
-    verify(check, measured, equal(bound))
-  def within(check: String, measured: Number, lo: Number, hi: Number): Unit =
-    verify(check, measured, within(lo, hi))
+  /** Fails the query unless `measured` keeps `bound`. */
+  def check(name: String, measured: Number, bound: Bound): Unit =
+    verify(name, measured, bound)
 
   /** One named aggregate of [[frame]] and the bound its value keeps. */
   final case class Check(name: String, value: Column, bound: Bound)
@@ -53,9 +48,9 @@ object Audit {
     row
   }
 
-  private def verify(check: String, measured: Any, bound: Bound): Unit =
+  private def verify(name: String, measured: Any, bound: Bound): Unit =
     if (!bound.admits(measured))
-      throw new IllegalStateException(s"$check: measured $measured, bound $bound")
+      throw new IllegalStateException(s"$name: measured $measured, bound $bound")
 
   private def compare(shown: String, bound: Number)(ok: Int => Boolean): Bound =
     new Bound(shown, x => sign(x, bound).exists(ok))
@@ -65,16 +60,10 @@ object Audit {
     for (x <- exact(measured); y <- exact(bound)) yield x.compareTo(y)
 
   private def exact(x: Any): Option[java.math.BigDecimal] = x match {
-    case d: java.math.BigDecimal => Some(d)
-    case d: java.lang.Double => finite(d.doubleValue)
-    case f: java.lang.Float => finite(f.doubleValue)
+    case d: java.lang.Double =>
+      Option.when(java.lang.Double.isFinite(d))(new java.math.BigDecimal(d.doubleValue))
     case n: java.lang.Long => Some(java.math.BigDecimal.valueOf(n.longValue))
     case n: java.lang.Integer => Some(java.math.BigDecimal.valueOf(n.longValue))
-    case n: java.lang.Short => Some(java.math.BigDecimal.valueOf(n.longValue))
-    case n: java.lang.Byte => Some(java.math.BigDecimal.valueOf(n.longValue))
     case _ => None
   }
-
-  private def finite(d: Double): Option[java.math.BigDecimal] =
-    Option.when(java.lang.Double.isFinite(d))(new java.math.BigDecimal(d))
 }

@@ -217,7 +217,8 @@ object Als {
       val materialized = row.collect()
       val h = materialized(0)
       val (jb, ja) = (h.getLong(3), h.getLong(6))
-      Audit.atMost(s"ALS item-step objective J (bound: J before $jb + 0.1%)", ja, jb + jb / 1000L)
+      Audit.check(s"ALS item-step objective J (bound: J before $jb + 0.1%)", ja,
+        Audit.atMost(jb + jb / 1000L))
       r.unpersist(); u.unpersist(); qj.unpersist()
       s.createDataFrame(s.sparkContext.parallelize(
         materialized.toIndexedSeq, 1), row.schema)

@@ -202,9 +202,10 @@ object Bpe {
     (s, dir) => {
       val k = 8
       val merges = trainMergesMemo(dir, t(s, dir, "documents"), k)
-      Audit.equal("BPE merges learned", merges.size, k)
-      Audit.equal("BPE duplicate merges", k - merges.map(m => (m._1, m._2)).distinct.size, 0)
-      Audit.equal("BPE merges with non-positive support", merges.count(_._3 <= 0), 0)
+      Audit.check("BPE merges learned", merges.size, Audit.equal(k))
+      Audit.check("BPE duplicate merges", k - merges.map(m => (m._1, m._2)).distinct.size,
+        Audit.equal(0))
+      Audit.check("BPE merges with non-positive support", merges.count(_._3 <= 0), Audit.equal(0))
       import s.implicits._
       merges.zipWithIndex
         .map { case ((l, r, pc), i) => (i + 1L, l, r, pc) }

@@ -1253,8 +1253,8 @@ object Classifier {
       val (ok, npos, nOob) = (accRow.getLong(0), accRow.getLong(1), accRow.getLong(2))
       val basePm = 1000L * math.max(npos, nOob - npos) / math.max(nOob, 1L)
       val accPm = 1000L * ok / math.max(nOob, 1L)
-      Audit.atLeast(s"random-forest OOB accuracy permille (bound: majority ${basePm} + 30)",
-        accPm, basePm + 30L)
+      Audit.check(s"random-forest OOB accuracy permille (bound: majority ${basePm} + 30)",
+        accPm, Audit.atLeast(basePm + 30L))
       val sizes = bags.groupBy("b").agg(sum(col("w")).as("n_inbag"))
       winners.join(sizes, "b")
         .select(col("b"), col("feature"), col("pol"), col("thr"),
@@ -1377,8 +1377,8 @@ object Classifier {
         .withColumn("n_correct",
           when(col("pred") === 1L, col("n_pos")).otherwise(col("n") - col("n_pos"))))
       val corr = la.agg(sum(col("n_correct"))).head().getLong(0)
-      Audit.atLeast(s"boosted train correct predictions of $nTot (bound: majority baseline)",
-        corr, math.max(posTot, nTot - posTot))
+      Audit.check(s"boosted train correct predictions of $nTot (bound: majority baseline)",
+        corr, Audit.atLeast(math.max(posTot, nTot - posTot)))
       la.orderBy("node")
     },
     Some(s"""

@@ -1374,9 +1374,10 @@ object Curation {
           else !col("c").isInCollection(chosen))
         .orderBy(col("gain").desc, col("c").asc)
         .limit(1).collect()
-      Audit.atLeast(s"facility greedy candidates at step $step", top.length, 1)
+      Audit.check(s"facility greedy candidates at step $step", top.length, Audit.atLeast(1))
       val (c, g) = (top(0).getLong(0), top(0).getLong(1))
-      Audit.atMost(s"facility greedy gain at step $step (submodular: the previous gain)", g, prevGain)
+      Audit.check(s"facility greedy gain at step $step (submodular: the previous gain)", g,
+        Audit.atMost(prevGain))
       prevGain = g
       objective += g
       chosen += c
@@ -1520,12 +1521,12 @@ object Curation {
         0.90, corpus, graft.llm.Ivf.trainCentroidsMemo(s"$dir#dbscan", corpus))
       val picks = facilityGreedy(corpus, pairs, k = 8)
       val rows = picks.collect() // k-bounded by construction
-      Audit.atMost("facility greedy picks of identical blob members",
-        rows.count(_.getLong(1) >= 2000000L), 1)
+      Audit.check("facility greedy picks of identical blob members",
+        rows.count(_.getLong(1) >= 2000000L), Audit.atMost(1))
       // vec 0 IS the blob prototype, so "the blob got a rep" means
       // either a planted id or vector 0 itself
-      Audit.atLeast("planted blob picks among the first three representatives",
-        rows.take(3).count(r => r.getLong(1) >= 2000000L || r.getLong(1) == 0L), 1)
+      Audit.check("planted blob picks among the first three representatives",
+        rows.take(3).count(r => r.getLong(1) >= 2000000L || r.getLong(1) == 0L), Audit.atLeast(1))
       import s.implicits._
       rows.toIndexedSeq
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))

@@ -149,8 +149,8 @@ object Dbscan {
     val materialized = census.collect()
     val nCore = materialized.map(_.getLong(4)).sum
     val nClusters = materialized.count(r => !r.isNullAt(0) && r.getLong(5) > 0)
-    Audit.atLeast("planted DBSCAN blob core points", nCore, minPlanted)
-    Audit.equal("planted DBSCAN blob clusters", nClusters, 1)
+    Audit.check("planted DBSCAN blob core points", nCore, Audit.atLeast(minPlanted))
+    Audit.check("planted DBSCAN blob clusters", nClusters, Audit.equal(1))
     val out = materialized.map(r => org.apache.spark.sql.Row(
       if (r.isNullAt(0)) null else r.getLong(0),
       r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -257,7 +257,8 @@ object Dbscan {
           Seq("id"), "full_outer")
         .filter(col("deg").isNull || col("deg_full").isNull ||
           col("deg") =!= col("deg_full")).count()
-      Audit.equal("incremental degree table ids diverging from a recount", degMismatch, 0)
+      Audit.check("incremental degree table ids diverging from a recount", degMismatch,
+        Audit.equal(0))
       val points = hist.unionByName(delta)
       val perPoint = dbscanFromDegrees(points, allPairs, incrDeg, minPts = 10)
       // fused census + planted floor — one pass, one collect (see
@@ -409,8 +410,8 @@ object Dbscan {
         .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
       Levels.foreach { lp =>
         val (nCore, nClusters) = audits.getOrElse(lp, (0L, 0L))
-        Audit.atLeast(s"planted blob core points at level $lp", nCore, 12)
-        Audit.equal(s"planted blob clusters at level $lp", nClusters, 1)
+        Audit.check(s"planted blob core points at level $lp", nCore, Audit.atLeast(12))
+        Audit.check(s"planted blob clusters at level $lp", nClusters, Audit.equal(1))
       }
       val perLevel = Levels.map(lp => lp -> all3.filter(col("lvl") === lp)
         .select("id", "cluster", "role"))
@@ -563,7 +564,7 @@ object Dbscan {
       // orthogonal to v0, so ⟨b, ê0⟩ = T by construction
       val v01 = emb.filter(col("vec_id") <= 1).orderBy("vec_id")
         .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
-      Audit.equal("corpus vectors 0/1 present", v01.length, 2)
+      Audit.check("corpus vectors 0/1 present", v01.length, Audit.equal(2))
       val bProto: Array[Double] = {
         val T = 0.91
         def unit(a: Array[Double]) = {
@@ -571,7 +572,8 @@ object Dbscan {
         }
         val e0 = unit(v01(0)); val e1 = unit(v01(1))
         val c = e0.zip(e1).map { case (x, y) => x * y }.sum
-        Audit.atMost("|cos| of vectors 0/1 (blob B needs them apart)", math.abs(c), 0.99)
+        Audit.check("|cos| of vectors 0/1 (blob B needs them apart)", math.abs(c),
+          Audit.atMost(0.99))
         val u = unit(e1.zip(e0).map { case (y, x) => y - c * x })
         val w = math.sqrt(1 - T * T)
         e0.zip(u).map { case (x, y) => T * x + w * y }
@@ -619,11 +621,11 @@ object Dbscan {
           min(col("cluster")).as("c"))
         .collect().map(r => (r.getInt(0), r.getString(1)) -> r).toMap
       for (lp <- HdbLevels; blob <- Seq("A", "B")) {
-        Audit.equal(s"planted blob $blob census rows at level $lp",
-          blobStats.get((lp, blob)).size, 1)
-        val r = blobStats((lp, blob))
-        Audit.atLeast(s"planted blob $blob core points at level $lp", r.getLong(2), 12)
-        Audit.equal(s"planted blob $blob clusters at level $lp", r.getLong(3), 1)
+        val r = blobStats.get((lp, blob))
+        Audit.check(s"planted blob $blob census rows at level $lp", r.size, Audit.equal(1))
+        Audit.check(s"planted blob $blob core points at level $lp", r.get.getLong(2),
+          Audit.atLeast(12))
+        Audit.check(s"planted blob $blob clusters at level $lp", r.get.getLong(3), Audit.equal(1))
       }
 
       // ---- driver-side condensed fold over the bounded tree ----
@@ -631,9 +633,9 @@ object Dbscan {
         .groupBy(r => (r.getInt(0), r.getLong(1)))
         .map { case (k, rs) =>
           k -> rs.map(r => r.getInt(2) -> r.getLong(3)).toMap }
-      parentRows.foreach(r => Audit.equal(
+      parentRows.foreach(r => Audit.check(
         s"hierarchy max parent label at (${r.getInt(0)}, ${r.getLong(1)})",
-        r.getLong(3), r.getLong(2)))
+        r.getLong(3), Audit.equal(r.getLong(2))))
       val selected = condensedCut(deaths,
         parentRows.map(r => ((r.getInt(0), r.getLong(1)), r.getLong(2))),
         HdbLevels, minPts)
@@ -643,7 +645,7 @@ object Dbscan {
         val chainNodes = HdbLevels
           .map(l => (l, blobStats((l, blob)).getLong(4))).toSet
         val homes = selected.count { case (n, _, _) => chainNodes(n) }
-        Audit.equal(s"flat-cut homes of planted blob $blob", homes, 1)
+        Audit.check(s"flat-cut homes of planted blob $blob", homes, Audit.equal(1))
       }
       import s.implicits._
       selected

@@ -1002,15 +1002,15 @@ object Dedup {
       out.count() // materialize before the audits read it twice
       // planted recall: each (i, 1M+i) pair must share a cluster
       val lab = out.select(col("cluster"), col("doc_id"))
-      Audit.atLeast("canonicalization planted near-copies clustered with their source",
+      Audit.check("canonicalization planted near-copies clustered with their source",
         lab.as("a").join(lab.as("b"),
             col("b.doc_id") === col("a.doc_id") + 1000000L &&
               col("a.cluster") === col("b.cluster"))
-          .filter(col("a.doc_id") < 10).count(), 10)
+          .filter(col("a.doc_id") < 10).count(), Audit.atLeast(10))
       // structural: exactly one elected keeper per cluster
-      Audit.atMost("canonicalization clusters electing != 1 keeper (counted up to 1)",
+      Audit.check("canonicalization clusters electing != 1 keeper (counted up to 1)",
         out.groupBy("cluster").agg(sum(col("kept")).as("k"))
-          .filter(col("k") =!= 1L).limit(1).count(), 0)
+          .filter(col("k") =!= 1L).limit(1).count(), Audit.atMost(0))
       out
     },
     None)
@@ -1586,7 +1586,8 @@ object Dedup {
       val planted = out.filter(col("doc_b") >= offset &&
         col("doc_a") === col("doc_b") - offset).count()
       sh.unpersist()
-      Audit.atLeast("banded-exact planted near-copy pairs surviving banding + verify", planted, 10)
+      Audit.check("banded-exact planted near-copy pairs surviving banding + verify", planted,
+        Audit.atLeast(10))
       out
       }
     },
@@ -1723,7 +1724,8 @@ object Dedup {
         col("doc_a") === col("doc_b") - offset &&
         col("hamming") === 0L).count()
       fps.unpersist()
-      Audit.atLeast("simhash-exact planted exact copies retrieved at hamming 0", planted, 10)
+      Audit.check("simhash-exact planted exact copies retrieved at hamming 0", planted,
+        Audit.atLeast(10))
       out
       }
     },

@@ -1783,11 +1783,11 @@ object Events {
         }
       }
       val pFull = pConv(channels.toSet)
-      Audit.within("Markov chain P(conv) (bound: least double above 0, 1 + 1e-12)",
-        pFull, Math.nextUp(0.0), 1.0 + 1e-12)
+      Audit.check("Markov chain P(conv) (bound: least double above 0, 1 + 1e-12)",
+        pFull, Audit.within(Math.nextUp(0.0), 1.0 + 1e-12))
       val removals = channels.map { c =>
         val r = 1.0 - pConv(channels.toSet - c) / pFull
-        Audit.within(s"removal effect of $c", r, -1e-9, 1.0 + 1e-9)
+        Audit.check(s"removal effect of $c", r, Audit.within(-1e-9, 1.0 + 1e-9))
         c -> math.max(0.0, r)
       }
       val totalMicro = removals.map(r => math.round(r._2 * 1e6)).sum

@@ -143,10 +143,11 @@ object Pca {
       for (a <- top.indices; b <- a until top.length) {
         val dot = (0 until d).map(j => top(a)._2(j) * top(b)._2(j)).sum
         val want = if (a == b) 1.0 else 0.0
-        Audit.atMost(s"PCA eigenvectors |v$a . v$b - $want|", math.abs(dot - want), 1e-9)
+        Audit.check(s"PCA eigenvectors |v$a . v$b - $want|", math.abs(dot - want),
+          Audit.atMost(1e-9))
       }
-      Audit.equal("PCA spectrum inversions",
-        top.sliding(2).count(w => w.length == 2 && w(0)._1 < w(1)._1), 0)
+      Audit.check("PCA spectrum inversions",
+        top.sliding(2).count(w => w.length == 2 && w(0)._1 < w(1)._1), Audit.equal(0))
       val vd = col("embedding").cast("array<double>")
       val out = keep(top.zipWithIndex.foldLeft(emb.select(col("vec_id"), vd.as("v"))) {
         case (df, ((_, vec), k)) =>
@@ -165,8 +166,8 @@ object Pca {
         val varMicro2 = (ss.toDouble - sm.toDouble * sm / n) / n
         val lamMicro2 = top(k - 1)._1 * 1e12
         if (lamMicro2 > 1e6)
-          Audit.atMost(s"PCA pc$k |variance - eigenvalue $lamMicro2| (bound: 2% of it)",
-            math.abs(varMicro2 - lamMicro2), 0.02 * lamMicro2)
+          Audit.check(s"PCA pc$k |variance - eigenvalue $lamMicro2| (bound: 2% of it)",
+            math.abs(varMicro2 - lamMicro2), Audit.atMost(0.02 * lamMicro2))
       }
       out
     },

@@ -317,7 +317,7 @@ object Privacy {
       // condition-less join side) — truncation can never silently
       // engage past the throw
       val nBuckets = buckets.count()
-      Audit.atMost("sensitive-bucket domain size (grid bound)", nBuckets, 64)
+      Audit.check("sensitive-bucket domain size (grid bound)", nBuckets, Audit.atMost(64))
       val grid = classes.select("segment", "nation", "class_n")
         .crossJoin(broadcast(buckets.limit(64)))
       val cellc = rows.groupBy("segment", "nation", "balb")
@@ -480,7 +480,7 @@ object Privacy {
         expr("cast(round(c_acctbal * 100) as bigint) div 100000").as("d2"))
       val out = keep(mondrianOf(rows))
       val tooSmall = out.filter(col("n") < MondrianK).count()
-      Audit.equal(s"Mondrian leaves below k=$MondrianK", tooSmall, 0)
+      Audit.check(s"Mondrian leaves below k=$MondrianK", tooSmall, Audit.equal(0))
       val rows2 = out.collect()
       out.unpersist()
       s.createDataFrame(s.sparkContext.parallelize(rows2.toIndexedSeq, 1),

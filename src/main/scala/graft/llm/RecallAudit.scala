@@ -73,7 +73,7 @@ object RecallAudit {
     * driver's `err` field records for rows-only queries. */
   def assertFloor(df: DataFrame, floor: Long, what: String): DataFrame = {
     val p = keep(df)
-    Audit.atLeast(s"$what confirmed rows", p.count(), floor)
+    Audit.check(s"$what confirmed rows", p.count(), Audit.atLeast(floor))
     p
   }
 

@@ -202,7 +202,8 @@ object Ridge {
       for (i <- 0 to d) {
         val lhs = (0 to d).map(j => a(i)(j) * beta(j)).sum
         val scale = math.max(1.0, math.abs(cv(i)))
-        Audit.atMost(s"ridge system |residual| at row $i", math.abs(lhs - cv(i)), 1e-9 * scale)
+        Audit.check(s"ridge system |residual| at row $i", math.abs(lhs - cv(i)),
+          Audit.atMost(1e-9 * scale))
       }
       val slopes = beta.drop(1).toSeq
       val out = keep(emb.select(col("vec_id"), col("label"),
@@ -219,8 +220,8 @@ object Ridge {
         .head().getDouble(0)
       val sy = sM(0)(d + 1); val syy = sM(d + 1)(d + 1)
       val sseMean = syy - sy * sy / n
-      Audit.atMost(s"ridge SSE (bound: mean-baseline SSE $sseMean + slack)",
-        r2, sseMean * (1.0 + 1e-9) + 1e-6)
+      Audit.check(s"ridge SSE (bound: mean-baseline SSE $sseMean + slack)",
+        r2, Audit.atMost(sseMean * (1.0 + 1e-9) + 1e-6))
       out
     },
     None)

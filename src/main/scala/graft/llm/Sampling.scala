@@ -672,8 +672,8 @@ object Sampling {
       val out = keep(arrival.unionByName(sorted).orderBy("schedule"))
       val w = out.collect().map(r =>
         r.getAs[String]("schedule") -> r.getAs[Long]("waste_tokens")).toMap
-      Audit.atMost("length-sorted batching waste tokens (bound: arrival order's)",
-        w("length_sorted"), w("arrival"))
+      Audit.check("length-sorted batching waste tokens (bound: arrival order's)",
+        w("length_sorted"), Audit.atMost(w("arrival")))
       out
     },
     Some("""

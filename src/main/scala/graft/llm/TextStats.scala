@@ -209,7 +209,8 @@ object TextStats {
       // invariant in both directions (a drop OR a duplication throws);
       // the cached frame IS the returned result, so release belongs to
       // the caller's scope
-      Audit.equal("rolling fingerprint rows (bound: one per document)", out.count(), nDocs)
+      Audit.check("rolling fingerprint rows (bound: one per document)", out.count(),
+        Audit.equal(nDocs))
       out
     },
     Some("""
@@ -626,11 +627,11 @@ object TextStats {
         .orderBy("eval_doc"))
       // planted-leak audit: 1-row bounded collect
       val audit = out.filter(col("eval_doc") >= offset).collect()
-      Audit.equal("contamination audit planted eval docs", audit.length, 1)
-      Audit.atLeast("contamination planted leak coverage permille",
-        audit(0).getAs[Long]("coverage_permille"), 900)
-      Audit.atLeast("contamination planted leak span tokens",
-        audit(0).getAs[Long]("longest_span_tokens"), 50)
+      Audit.check("contamination audit planted eval docs", audit.length, Audit.equal(1))
+      Audit.check("contamination planted leak coverage permille",
+        audit(0).getAs[Long]("coverage_permille"), Audit.atLeast(900))
+      Audit.check("contamination planted leak span tokens",
+        audit(0).getAs[Long]("longest_span_tokens"), Audit.atLeast(50))
       out
     },
     Some("""
@@ -829,13 +830,13 @@ object TextStats {
           when(col("coverage_permille") >= 500, "drop").otherwise("keep"))
         .orderBy("batch_doc"))
       val audit = out.filter(col("batch_doc") >= offset).collect()
-      Audit.equal("decontamination audit planted batch docs", audit.length, 1)
-      Audit.atLeast("decontamination planted leak coverage permille",
-        audit(0).getAs[Long]("coverage_permille"), 900)
-      Audit.atLeast("decontamination planted leak span tokens",
-        audit(0).getAs[Long]("longest_span_tokens"), 50)
-      Audit.equal("decontamination planted leak decisions other than drop",
-        Seq(audit(0).getAs[String]("decision")).count(_ != "drop"), 0)
+      Audit.check("decontamination audit planted batch docs", audit.length, Audit.equal(1))
+      Audit.check("decontamination planted leak coverage permille",
+        audit(0).getAs[Long]("coverage_permille"), Audit.atLeast(900))
+      Audit.check("decontamination planted leak span tokens",
+        audit(0).getAs[Long]("longest_span_tokens"), Audit.atLeast(50))
+      Audit.check("decontamination planted leak decisions other than drop",
+        if (audit(0).getAs[String]("decision") != "drop") 1 else 0, Audit.equal(0))
       out
     },
     Some("""

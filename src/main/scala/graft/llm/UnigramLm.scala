@@ -394,9 +394,9 @@ object UnigramLm {
       words.unpersist(); vit1.unpersist(); vit2.unpersist(); vit3.unpersist()
       // hard-EM monotonicity abort: cost must not rise past rounding slack
       rows.sliding(2).foreach { case Array(a, b) =>
-        Audit.atMost(s"hard-EM cost of round ${b.getLong(0)} " +
+        Audit.check(s"hard-EM cost of round ${b.getLong(0)} " +
           s"(bound: round ${a.getLong(0)} cost + rounding slack)",
-          b.getLong(3), a.getLong(3) + a.getLong(2) + b.getLong(2))
+          b.getLong(3), Audit.atMost(a.getLong(3) + a.getLong(2) + b.getLong(2)))
       }
       s.createDataFrame(s.sparkContext.parallelize(
           rows.toIndexedSeq, 1), out.schema)

@@ -94,12 +94,12 @@ object WordEmbed {
     for (a <- top.indices; b <- a until top.length) {
       val dot = (0 until pEff).map(j => top(a)._2(j) * top(b)._2(j)).sum
       val want = if (a == b) 1.0 else 0.0
-      Audit.atMost(s"word-embed basis |v$a . v$b - $want|", math.abs(dot - want), 1e-9)
+      Audit.check(s"word-embed basis |v$a . v$b - $want|", math.abs(dot - want), Audit.atMost(1e-9))
     }
-    Audit.equal("word-embed spectrum inversions",
-      top.sliding(2).count(w => w.length == 2 && w(0)._1 < w(1)._1), 0)
-    Audit.atLeast("word-embed leading eigenvalue (bound: least double above 0)",
-      top.head._1, Math.nextUp(0.0))
+    Audit.check("word-embed spectrum inversions",
+      top.sliding(2).count(w => w.length == 2 && w(0)._1 < w(1)._1), Audit.equal(0))
+    Audit.check("word-embed leading eigenvalue (bound: least double above 0)",
+      top.head._1, Audit.atLeast(Math.nextUp(0.0)))
     // Nyström projection of EVERY word: e_u[k] = Σ_j ppmi(u, j) ·
     // U_k(j) / √λ_k over pivot columns j — a broadcast P·D basis
     // frame joined to the (word, pivot) pair slice, then one

@@ -76,10 +76,11 @@ object Graph {
     * frame once per `dir|window` key, then returns `op` unguarded. */
   def checkedBasket(op: DataFrame, memoKey: String): DataFrame = {
     if (!basketAudited.contains(memoKey)) {
-      op.groupBy(col("o")).agg(count(lit(1)).as("_bsz"))
+      val over = op.groupBy(col("o")).agg(count(lit(1)).as("_bsz"))
         .filter(col("_bsz") > BasketCap).limit(1).collect()
-        .foreach(r => Audit.atMost(
-          s"distinct items in the basket of order ${r.get(0)} ($memoKey)", r.getLong(1), BasketCap))
+        .map(r => s"order ${r.get(0)}: ${r.getLong(1)} items")
+      Audit.check(s"baskets over $BasketCap distinct items, counted up to 1 ($memoKey) " +
+        over.mkString("[", "", "]"), over.length, Audit.equal(0))
       basketAudited.add(memoKey)
     }
     op
@@ -1393,7 +1394,8 @@ object Graph {
       peeled = n - n2
       e = e2; n = n2; round += 1
     }
-    Audit.atMost(s"k-core edges peeled in round $round of at most $maxRounds", peeled, 0)
+    Audit.check(s"k-core edges peeled in round $round of at most $maxRounds", peeled,
+      Audit.atMost(0))
     scope.out(e)
   }
 
@@ -1456,7 +1458,8 @@ object Graph {
       val deg = keep(core.select(explode(array(col("u"), col("v"))).as("vertex"))
         .groupBy("vertex").agg(count(lit(1)).as("core_deg")))
       val mn = deg.agg(min(col("core_deg"))).head()
-      if (!mn.isNullAt(0)) Audit.atLeast("k-core min within-core degree", mn.getLong(0), k)
+      if (!mn.isNullAt(0)) Audit.check("k-core min within-core degree", mn.getLong(0),
+        Audit.atLeast(k))
       deg.select(col("vertex"), col("core_deg"), lit(k.toLong).as("k"))
         .orderBy("vertex")
     },
@@ -1683,8 +1686,8 @@ object Graph {
         .collect().map(_.getLong(0)).toSeq
       val out = keep(betweenness(edges, sources)
         .orderBy(col("btw_milli").desc, col("v")).limit(50))
-      Audit.atMost("negative dependency scores in the top 50",
-        out.filter(col("btw_milli") < 0).count(), 0)
+      Audit.check("negative dependency scores in the top 50",
+        out.filter(col("btw_milli") < 0).count(), Audit.atMost(0))
       edges.unpersist()
       out
     },
@@ -2637,13 +2640,15 @@ object Graph {
       val rows = out.collect() // 2-row audit table (bounded by construction)
       und.unpersist()
       def phase(p: String) = {
-        Audit.atLeast(s"robustness census rows of phase $p", rows.count(_.getString(0) == p), 1)
-        rows.find(_.getString(0) == p).get
+        val r = rows.find(_.getString(0) == p)
+        Audit.check(s"robustness census rows of phase $p", r.size, Audit.atLeast(1))
+        r.get
       }
       val f = phase("1_full")
       val a = phase("2_attacked")
       Seq("n_vertices", "n_edges", "largest_cc").zip(1 to 3).foreach { case (c, i) =>
-        Audit.atMost(s"robustness attacked $c (bound: the full graph's)", a.getLong(i), f.getLong(i))
+        Audit.check(s"robustness attacked $c (bound: the full graph's)", a.getLong(i),
+          Audit.atMost(f.getLong(i)))
       }
       out
     },
@@ -3024,16 +3029,16 @@ object Graph {
       val edges = cs.select((col("c") * 2).as("src"), (col("p") * 2 + 1).as("dst"))
         .unionAll(cs.select((col("p") * 2 + 1).as("src"), (col("c") * 2).as("dst")))
       val raw = keep(lubyMis(edges, MisRounds))
-      Audit.equal(s"Luby MIS vertices still active after $MisRounds rounds",
-        raw.filter(col("still_active") === 1L).count(), 0)
+      Audit.check(s"Luby MIS vertices still active after $MisRounds rounds",
+        raw.filter(col("still_active") === 1L).count(), Audit.equal(0))
       val out = raw.select("v", "in_mis", "round_joined")
       val m = out.filter(col("in_mis") === 1L).select(col("v"))
-      Audit.equal("MIS edges with both ends inside", edges
+      Audit.check("MIS edges with both ends inside", edges
         .join(m.withColumnRenamed("v", "src"), Seq("src"), "left_semi")
-        .join(m.withColumnRenamed("v", "dst"), Seq("dst"), "left_semi").count(), 0)
-      Audit.equal("MIS-excluded vertices with no MIS neighbor", out.filter(col("in_mis") === 0L)
+        .join(m.withColumnRenamed("v", "dst"), Seq("dst"), "left_semi").count(), Audit.equal(0))
+      Audit.check("MIS-excluded vertices with no MIS neighbor", out.filter(col("in_mis") === 0L)
         .join(edges.join(m.withColumnRenamed("v", "dst"), Seq("dst"), "left_semi")
-          .select(col("src").as("v")), Seq("v"), "left_anti").count(), 0)
+          .select(col("src").as("v")), Seq("v"), "left_anti").count(), Audit.equal(0))
       // sealed: materialized distributed (vertex-linear output — no
       // driver hop), then the iterate cache is released; the range
       // sort on the unique vertex key is deterministic at any

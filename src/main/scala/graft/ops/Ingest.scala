@@ -285,13 +285,13 @@ object Ingest {
         .mode("append").option("path", out).save()
       val nWritten = sam.count()
       val manifest = java.nio.file.Paths.get(out, "_SUCCESS")
-      Audit.equal("_SUCCESS manifests the commit left",
-        Seq(manifest).count(java.nio.file.Files.exists(_)), 1)
+      Audit.check("_SUCCESS manifests the commit left",
+        if (java.nio.file.Files.exists(manifest)) 1 else 0, Audit.equal(1))
       val manifestRows = new String(
         java.nio.file.Files.readAllBytes(manifest), "UTF-8").trim.toLong
-      Audit.equal("manifest rows (bound: rows written)", manifestRows, nWritten)
-      Audit.equal("staging dirs the commit left behind",
-        d.listFiles().count(_.getName.startsWith("_staging")), 0)
+      Audit.check("manifest rows (bound: rows written)", manifestRows, Audit.equal(nWritten))
+      Audit.check("staging dirs the commit left behind",
+        d.listFiles().count(_.getName.startsWith("_staging")), Audit.equal(0))
       val back = s.read.format("graft.sources.PagedJsonSource")
         .option("path", s"$out/records.jsonl")
         .option("page_size", 7).option("max_records", Int.MaxValue)

@@ -181,7 +181,7 @@ object Layout {
       val both = keep(before.join(after, "user_id"))
       val badMoves = both.filter(col("shard_before") =!= col("shard_after") &&
         col("shard_after") =!= 7L).count()
-      Audit.equal("consistent hashing keys moved between OLD shards", badMoves, 0)
+      Audit.check("consistent hashing keys moved between OLD shards", badMoves, Audit.equal(0))
       val out = both.groupBy(col("shard_after").as("shard"))
         .agg(count(lit(1)).as("n_after"),
           sum(when(col("shard_before") =!= col("shard_after"), 1L)
@@ -292,7 +292,8 @@ object Layout {
       val both = keep(before.join(after, "user_id"))
       val badMoves = both.filter(col("shard_before") =!= col("shard_after") &&
         col("shard_after") =!= WchNewShard._1).count()
-      Audit.equal("weighted consistent hashing keys moved between OLD shards", badMoves, 0)
+      Audit.check("weighted consistent hashing keys moved between OLD shards", badMoves,
+        Audit.equal(0))
       val caps = (WchCaps :+ WchNewShard).toDF("shard", "capacity")
       val out = both.groupBy(col("shard_after").as("shard"))
         .agg(count(lit(1)).as("n_after"),

@@ -208,7 +208,7 @@ object Scd {
         .withColumn("coin", coin.cast("long")))
       val bad = out.filter(col("delta") =!= 0L &&
         (col("delta") =!= 100000L || col("coin") >= 20L)).count()
-      Audit.equal("keys corrected outside the planted set/amount", bad, 0)
+      Audit.check("keys corrected outside the planted set/amount", bad, Audit.equal(0))
       val rows = out.select("key", "v_tx4", "v_tx8", "delta")
         .orderBy("key").collect()
       bt.unpersist(); out.unpersist()

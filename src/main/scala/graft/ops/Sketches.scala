@@ -414,7 +414,8 @@ object Sketches {
       val rows = top.map { r =>
         val key = r.getLong(0); val exact = r.getLong(1)
         val est = graft.functions.CountMinAgg.estimate(cells, key)
-        Audit.atLeast(s"count-min estimate of key $key (bound: its exact count)", est, exact)
+        Audit.check(s"count-min estimate of key $key (bound: its exact count)", est,
+          Audit.atLeast(exact))
         (key, exact, est, est - exact)
       }
       s.createDataFrame(rows.toSeq)
@@ -575,7 +576,8 @@ object Sketches {
         .join(b.groupBy("user_id").agg(count(lit(1)).as("p")), "user_id")
         .agg(coalesce(sum(col("c") * col("p")), lit(0L))).head().getLong(0)
       dots.foreach { case (i, d) =>
-        Audit.atLeast(s"CMS join estimate on row $i (bound: the exact join size)", d, exact)
+        Audit.check(s"CMS join estimate on row $i (bound: the exact join size)", d,
+          Audit.atLeast(exact))
       }
       import s.implicits._
       dots.map { case (i, d) => (i, d, exact, est, est - exact) }

@@ -116,7 +116,7 @@ object EventStream {
       .start()
     try sq.awaitTermination() finally sq.stop()
     val dataBatches = sq.recentProgress.count(_.numInputRows > 0)
-    Audit.atLeast("streaming replay data micro-batches", dataBatches, minBatches)
+    Audit.check("streaming replay data micro-batches", dataBatches, Audit.atLeast(minBatches))
     local.table(SinkTable)
   }
 
@@ -1081,9 +1081,10 @@ object EventStream {
       // MG envelope floor on the planted hot user: rank 1, estimate
       // within [true − bound, true]
       val head = top.head()
-      Audit.equal("rank-1 heavy hitter user (bound: the planted one)", head.getLong(0), hotUser)
-      Audit.within("planted heavy hitter MG estimate (bound: true count - MG error, true count)",
-        head.getLong(1), hotN - errBound, hotN)
+      Audit.check("rank-1 heavy hitter user (bound: the planted one)", head.getLong(0),
+        Audit.equal(hotUser))
+      Audit.check("planted heavy hitter MG estimate (bound: true count - MG error, true count)",
+        head.getLong(1), Audit.within(hotN - errBound, hotN))
       top
     },
     None)
@@ -1367,7 +1368,8 @@ object EventStream {
         .groupBy("vertex").agg(count(lit(1)).as("bd"))
       val mismatches = degs.join(batchDeg, Seq("vertex"), "full")
         .filter(!(col("degree") <=> col("bd"))).count()
-      Audit.equal("maintained degree vertices diverging from the batch recount", mismatches, 0)
+      Audit.check("maintained degree vertices diverging from the batch recount", mismatches,
+        Audit.equal(0))
       val nV = degs.count()
       val k = degs.orderBy(col("degree"), col("vertex"))
         .limit((nV / 4 + 1).toInt).agg(max(col("degree"))).head().getLong(0).toInt
@@ -1376,8 +1378,8 @@ object EventStream {
         .groupBy("vertex").agg(count(lit(1)).as("core_deg"))
       val bad = coreDeg.join(degs, "vertex")
         .filter(col("core_deg") < k || col("core_deg") > col("degree")).count()
-      Audit.equal("vertices violating the core property after a peel from maintained state",
-        bad, 0)
+      Audit.check("vertices violating the core property after a peel from maintained state",
+        bad, Audit.equal(0))
       degs.orderBy("vertex")
     },
     Some("""
@@ -1420,8 +1422,8 @@ object EventStream {
       val rows = top.map { r =>
         val key = r.getLong(0); val exact = r.getLong(1)
         val est = graft.functions.CountMinAgg.estimate(cells, key)
-        Audit.atLeast(s"streamed count-min estimate of key $key (bound: its exact count)",
-          est, exact)
+        Audit.check(s"streamed count-min estimate of key $key (bound: its exact count)",
+          est, Audit.atLeast(exact))
         (key, exact, est, est - exact)
       }
       s.createDataFrame(rows.toSeq)

@@ -15,44 +15,50 @@ class AuditPolicySpec extends SparkSpec {
   private def failure(body: => Unit): String =
     intercept[IllegalStateException](body).getMessage
 
+  private def check(measured: Number, bound: Audit.Bound): Unit =
+    Audit.check("x", measured, bound)
+
   test("atLeast: passes at the bound, fails one step below with both numbers") {
-    Audit.atLeast("rows", 5L, 5)
-    assert(failure(Audit.atLeast("rows", 4L, 5)) == "rows: measured 4, bound >= 5")
-    Audit.atLeast("recall", 0.5, 0.5)
-    assert(failure(Audit.atLeast("recall", Math.nextDown(0.5), 0.5)) ==
-      s"recall: measured ${Math.nextDown(0.5)}, bound >= 0.5")
+    check(5L, Audit.atLeast(5))
+    assert(failure(check(4L, Audit.atLeast(5))) == "x: measured 4, bound >= 5")
+    check(0.5, Audit.atLeast(0.5))
+    assert(failure(check(Math.nextDown(0.5), Audit.atLeast(0.5))) ==
+      s"x: measured ${Math.nextDown(0.5)}, bound >= 0.5")
   }
 
   test("atMost: passes at the bound, fails one step above with both numbers") {
-    Audit.atMost("negatives", 0L, 0)
-    assert(failure(Audit.atMost("negatives", 1L, 0)) == "negatives: measured 1, bound <= 0")
-    Audit.atMost("residual", 1e-9, 1e-9)
-    assert(failure(Audit.atMost("residual", Math.nextUp(1e-9), 1e-9)) ==
-      s"residual: measured ${Math.nextUp(1e-9)}, bound <= 1.0E-9")
+    check(0L, Audit.atMost(0))
+    assert(failure(check(1L, Audit.atMost(0))) == "x: measured 1, bound <= 0")
+    check(1e-9, Audit.atMost(1e-9))
+    assert(failure(check(Math.nextUp(1e-9), Audit.atMost(1e-9))) ==
+      s"x: measured ${Math.nextUp(1e-9)}, bound <= 1.0E-9")
   }
 
   test("equal: passes on the bound, fails one step to either side") {
-    Audit.equal("clusters", 1L, 1)
-    assert(failure(Audit.equal("clusters", 2L, 1)) == "clusters: measured 2, bound == 1")
-    assert(failure(Audit.equal("clusters", 0, 1L)) == "clusters: measured 0, bound == 1")
+    check(1L, Audit.equal(1))
+    assert(failure(check(2L, Audit.equal(1))) == "x: measured 2, bound == 1")
+    assert(failure(check(0, Audit.equal(1L))) == "x: measured 0, bound == 1")
   }
 
   test("within: passes at both ends, fails one step outside either") {
-    Audit.within("estimate", 90L, 90L, 100L)
-    Audit.within("estimate", 100L, 90L, 100L)
-    assert(failure(Audit.within("estimate", 89L, 90L, 100L)) ==
-      "estimate: measured 89, bound in [90, 100]")
-    assert(failure(Audit.within("estimate", 101L, 90L, 100L)) ==
-      "estimate: measured 101, bound in [90, 100]")
-    Audit.within("effect", -1e-9, -1e-9, 1.0)
-    assert(failure(Audit.within("effect", Math.nextDown(-1e-9), -1e-9, 1.0)) ==
-      s"effect: measured ${Math.nextDown(-1e-9)}, bound in [-1.0E-9, 1.0]")
+    check(90L, Audit.within(90L, 100L))
+    check(100L, Audit.within(90L, 100L))
+    assert(failure(check(89L, Audit.within(90L, 100L))) == "x: measured 89, bound in [90, 100]")
+    assert(failure(check(101L, Audit.within(90L, 100L))) == "x: measured 101, bound in [90, 100]")
+    check(-1e-9, Audit.within(-1e-9, 1.0))
+    assert(failure(check(Math.nextDown(-1e-9), Audit.within(-1e-9, 1.0))) ==
+      s"x: measured ${Math.nextDown(-1e-9)}, bound in [-1.0E-9, 1.0]")
+  }
+
+  test("the check name leads the message") {
+    assert(failure(Audit.check("planted pairs recovered", 1L, Audit.atLeast(2))) ==
+      "planted pairs recovered: measured 1, bound >= 2")
   }
 
   test("a Long count against a Double bound compares exactly; NaN and null fail") {
-    Audit.atMost("count", 3L, 3.0)
-    assert(failure(Audit.atMost("count", 4L, 3.5)) == "count: measured 4, bound <= 3.5")
-    assert(failure(Audit.atLeast("ratio", Double.NaN, 0.0)) == "ratio: measured NaN, bound >= 0.0")
+    check(3L, Audit.atMost(3.0))
+    assert(failure(check(4L, Audit.atMost(3.5))) == "x: measured 4, bound <= 3.5")
+    assert(failure(check(Double.NaN, Audit.atLeast(0.0))) == "x: measured NaN, bound >= 0.0")
     val df = spark.range(0, 3, 1, 1).toDF().filter(col("id") > 10)
     assert(failure(Audit.frame(df, Audit.Check("max id", max(col("id")), Audit.atLeast(0)))) ==
       "max id: measured null, bound >= 0")
@@ -92,28 +98,53 @@ class AuditPolicySpec extends SparkSpec {
     assert(e.getMessage == "min id: measured 0, bound >= 1")
   }
 
+  /** Each `(file, fragment)` hit whose line (or the next two) carries
+    * a fragment of its file is allowed; the rest are offenders. */
+  private def scan(pattern: String, allowed: Set[(String, String)],
+      exempt: java.nio.file.Path => Boolean): Seq[(String, Option[(String, String)])] =
+    MainSources.files.filterNot { case (p, _) => exempt(p) }.flatMap { case (p, lines) =>
+      val name = p.getFileName.toString
+      lines.indices.collect {
+        case i if pattern.r.findFirstIn(lines(i)).isDefined =>
+          // the message may open on the call's line or one of the next two
+          val text = lines.slice(i, i + 3).mkString(" ")
+          (MainSources.at(p, i), allowed.find { case (f, m) => f == name && text.contains(m) })
+      }
+    }
+
   test("no hand-rolled invariant throw outside Audit (named non-audit throws excepted)") {
     // safety code, not in-query invariants: each is (file, message prefix)
     val allowed = Set(
-      "Audit.scala" -> "s\"$check: measured",
+      "Audit.scala" -> "s\"$name: measured",
       "Dbscan.scala" -> "\"unreachable\"",
       "LongLongOpenMap.scala" -> "\"unreachable\"",
       "Ridge.scala" -> "s\"ridge system singular",
       "PagedJsonSource.scala" -> "s\"unpushable filter leaked",
       "Checkpoints.scala" -> "s\"$ReliableKey=true on a non-local master")
-    val hits = MainSources.files.flatMap { case (p, lines) =>
-      val name = p.getFileName.toString
-      lines.indices.collect {
-        case i if lines(i).contains("throw new IllegalStateException") =>
-          // the message may open on the throw's line or the next one
-          val text = (lines(i) + " " + lines.lift(i + 1).getOrElse("")).trim
-          (MainSources.at(p, i),
-            allowed.exists { case (f, m) => f == name && text.contains(m) })
-      }
-    }
-    assert(hits.count(_._2) == allowed.size, s"the scan must see every named throw: $hits")
-    val offenders = hits.filterNot(_._2).map(_._1)
+    val hits = scan("throw new IllegalStateException", allowed, _ => false)
+    assert(hits.flatMap(_._2).toSet == allowed, s"the scan must see every named throw: $hits")
+    assert(hits.count(_._2.isDefined) == allowed.size, s"one hit per named throw: $hits")
+    val offenders = hits.filter(_._2.isEmpty).map(_._1)
     assert(offenders.isEmpty,
       offenders.mkString("invariant thrown outside graft.Audit: ", ", ", ""))
+  }
+
+  test("no in-query require: only argument, decoder and input-precondition requires") {
+    // the UDF/UDAF argument checks of graft.functions run per row, not per query
+    val functions = (p: java.nio.file.Path) => p.toString.contains("/graft/functions/")
+    val allowed = Set(
+      "AsofJoinExec.scala" -> "as-of time column",
+      "Graph.scala" -> "\"empty history state\"",
+      "Graph.scala" -> "requires a settled vertex set",
+      "Retrieval.scala" -> "ranking store is staged at k=20",
+      "Pq.scala" -> "not divisible by m=",
+      "Multimodal.scala" -> "undecodable payload",
+      "Multimodal.scala" -> "s\"doc $id: ",
+      "Multimodal.scala" -> "s\"pHash: image too small")
+    val hits = scan("\\brequire\\(", allowed, functions)
+    assert(hits.flatMap(_._2).toSet == allowed, s"the scan must see every named require: $hits")
+    val offenders = hits.filter(_._2.isEmpty).map(_._1)
+    assert(offenders.isEmpty,
+      offenders.mkString("in-query require outside graft.Audit: ", ", ", ""))
   }
 }
